@@ -93,6 +93,38 @@ def _min_hash_exprs(n_hashes: int):
     ]
 
 
+def _band_keys(n_hashes: int, bands: int):
+    """The LSH band-key array over the ``__mh*`` signature columns: band b
+    is ``xxhash64(b, __mh{b*rows} .. __mh{b*rows + rows-1})``. This is the
+    layout persisted in every ``__near_bands`` index, so every writer and
+    probe builds it here. Pure column arithmetic over plan-time constants
+    (stays in whole-stage codegen), parsed server-side in one call."""
+    rows = n_hashes // bands
+    return F.expr(
+        "array("
+        + ", ".join(
+            "xxhash64(%d, %s)"
+            % (b, ", ".join(f"__mh{b * rows + r}" for r in range(rows)))
+            for b in range(bands)
+        )
+        + ")"
+    )
+
+
+def _cap_buckets(band_entries: DataFrame, max_bucket_size: int | None) -> DataFrame:
+    """Drop (band_idx, band_key) buckets holding more than
+    ``max_bucket_size`` rows; None keeps every bucket. One window count
+    over the banding shuffle key — no extra shuffle."""
+    if max_bucket_size is None:
+        return band_entries
+    wb = Window.partitionBy("band_idx", "band_key")
+    return (
+        band_entries.withColumn("__bn", F.count("*").over(wb))
+        .filter(F.col("__bn") <= max_bucket_size)
+        .drop("__bn")
+    )
+
+
 def minhash_signatures_with_sets(
     df: DataFrame, id_col: str, text_col: str, n_hashes: int = 64, shingle: int = 3
 ) -> DataFrame:
@@ -183,7 +215,6 @@ def minhash_lsh_pairs(
     bands, so a generous cap (10³–10⁴) loses ~nothing. Default None keeps
     exact recall for the oracle corpus.
     """
-    rows = n_hashes // bands
     # Small inputs often arrive as one parquet split; signature work is
     # CPU-bound, so spread it across the cluster explicitly — but only when
     # actually needed: re-keying an already-parallel input is a wasted
@@ -203,28 +234,13 @@ def minhash_lsh_pairs(
         _minhash_signature_agg(spread, id_col, text_col, n_hashes, shingle),
         "minhash_lsh_pairs/agg",
     )
-    # Band keys are pure column arithmetic over the __mh columns (bands and
-    # rows are plan-time constants) — stays in whole-stage codegen.
-    band_keys = F.expr(
-        "array("
-        + ", ".join(
-            "xxhash64(%d, %s)"
-            % (b, ", ".join(f"__mh{b * rows + r}" for r in range(rows)))
-            for b in range(bands)
-        )
-        + ")"
+    band_entries = _cap_buckets(
+        agg.select(
+            "__id",
+            F.posexplode(_band_keys(n_hashes, bands)).alias("band_idx", "band_key"),
+        ),
+        max_bucket_size,
     )
-    band_entries = agg.select(
-        "__id", F.posexplode(band_keys).alias("band_idx", "band_key")
-    )
-    if max_bucket_size is not None:
-        # one window count over the banding shuffle key — no extra shuffle
-        wb = Window.partitionBy("band_idx", "band_key")
-        band_entries = (
-            band_entries.withColumn("__bn", F.count("*").over(wb))
-            .filter(F.col("__bn") <= max_bucket_size)
-            .drop("__bn")
-        )
     left = band_entries.select("band_idx", "band_key", F.col("__id").alias("id_a"))
     right = band_entries.select("band_idx", "band_key", F.col("__id").alias("id_b"))
     cand = (
@@ -1027,23 +1043,15 @@ def incremental_dedup_minhash(
     corpus×corpus — candidate generation scales with the batch, not the
     corpus squared. Returns the surviving rows of ``new_df``.
     """
-    rows = n_hashes // bands
-
     def prep(df, prefix):
         spread = df.repartition(df.sparkSession.sparkContext.defaultParallelism, id_col)
         agg = scratch_persist(
             minhash_signatures_with_sets(spread, id_col, text_col, n_hashes, shingle),
             f"incremental_dedup_minhash/{prefix}",
         )
-        band_keys = F.array(
-            *[
-                F.xxhash64(F.lit(b), *[F.col(f"__mh{b * rows + r}") for r in range(rows)])
-                for b in range(bands)
-            ]
-        )
         bands_tbl = agg.select(
             F.col("__id").alias(f"{prefix}_id"),
-            F.posexplode(band_keys).alias("band_idx", "band_key"),
+            F.posexplode(_band_keys(n_hashes, bands)).alias("band_idx", "band_key"),
         )
         sh_tbl = agg.select(
             F.col("__id").alias(f"{prefix}_id"), F.col("__shset").alias(f"{prefix}_sh")
@@ -1052,13 +1060,7 @@ def incremental_dedup_minhash(
 
     new_bands, new_sh = prep(new_df, "new")
     cor_bands, cor_sh = prep(corpus_df, "cor")
-    if max_bucket_size is not None:
-        wb = Window.partitionBy("band_idx", "band_key")
-        cor_bands = (
-            cor_bands.withColumn("__bn", F.count("*").over(wb))
-            .filter(F.col("__bn") <= max_bucket_size)
-            .drop("__bn")
-        )
+    cor_bands = _cap_buckets(cor_bands, max_bucket_size)
     cand = (
         new_bands.join(cor_bands, ["band_idx", "band_key"])
         .select("new_id", "cor_id")

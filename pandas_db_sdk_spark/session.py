@@ -45,11 +45,20 @@ def apply_runtime_confs(spark: SparkSession) -> SparkSession:
     return spark
 
 
+def _driver_memory(phys_bytes: int) -> str:
+    """Default ``spark.driver.memory``: half of physical RAM in whole GiB,
+    at least 1g and at most 48g. In local mode the driver JVM is the whole
+    engine, but the Python workers and the OS need the other half; a fixed
+    48g gets the JVM OOM-killed on a small host."""
+    return f"{min(max(phys_bytes // 2 // 2**30, 1), 48)}g"
+
+
 def get_spark(app_name: str = "pandas-db-sdk-spark") -> SparkSession:
     """Build (or reuse) a local session sized from ``SPARK_GRAFT_CPUS``.
 
     Local mode: one JVM, N threads; ``spark.driver.memory`` is the only
-    memory knob. On a real cluster the same code runs unchanged — nothing
+    memory knob (``SPARK_DRIVER_MEM``, else ``_driver_memory`` of this
+    host's RAM). On a real cluster the same code runs unchanged — nothing
     here assumes single-node except the master URL.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
@@ -57,7 +66,11 @@ def get_spark(app_name: str = "pandas-db-sdk-spark") -> SparkSession:
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
         .config("spark.sql.shuffle.partitions", str(max(int(cpus), 8)))
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "48g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEM")
+            or _driver_memory(os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")),
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.files.maxPartitionBytes", "134217728")
     )

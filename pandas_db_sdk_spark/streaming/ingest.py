@@ -4,10 +4,32 @@ The reference's write path is batch-only (`load_dataframe`, reference
 client.py:66-137). A 100 TB/day pipeline ingests continuously, so the
 engine's analogue is a Structured Streaming sink: each micro-batch becomes
 one version of a named dataset via ``foreachBatch`` → ``DataFrameEngine
-.save``. Version labels are ``<prefix><epoch_id>`` — monotonic, replayable
-(a restarted query re-writes the same epoch id into the same version, so
-at-least-once delivery converges to the same catalog state rather than
-duplicating data under fresh timestamps).
+.save``.
+
+The epoch contract, shared by every streaming sink in this module:
+
+* Drain: each query runs under the available-now trigger — it
+  processes everything available at start (respecting the source's
+  per-trigger limits) and then stops, so ``awaitTermination()`` returns
+  once the input is drained. A checkpoint dir makes the next run resume
+  where this one stopped.
+* Empty micro-batches are skipped before the sink runs: they land no
+  version and touch no index.
+* Labels: a micro-batch lands as version ``<prefix><epoch_id>`` with
+  ``overwrite_version=True`` (``live_rollup_into_engine`` MERGEs instead,
+  and ``stream_into_ann_index`` appends to a parquet tree). Labels are
+  monotonic and replayable: ``foreachBatch`` is at-least-once, and a
+  crash between the data write and the checkpoint commit re-runs the
+  epoch under the same id, so the retry replaces that version's
+  partitions and converges to exactly one copy of the batch rather than
+  duplicating data under a fresh label.
+  Every side index a sink maintains is written under the same label, so
+  data and index versions travel together.
+* Replay guard: a sink that checks a batch against what earlier epochs
+  ingested reads that state through ``_prior_epochs``, which drops the
+  current epoch's own version. A batch killed after its saves committed
+  but before the checkpoint commit therefore recomputes from exactly the
+  pre-batch state on replay, instead of matching (and rejecting) itself.
 """
 
 from __future__ import annotations
@@ -15,9 +37,56 @@ from __future__ import annotations
 from typing import Optional
 
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 
-from ..engine import DataFrameEngine
+from ..engine import DataFrameEngine, DatasetNotFound, _id_bucket_label
 from .._localrel import local_rows_df
+
+
+def _start(frame: DataFrame, sink, checkpoint_dir: Optional[str], output_mode: str = "append"):
+    """Run ``sink(batch_df, epoch_id)`` on every non-empty micro-batch of
+    ``frame`` until the available input is drained (the module's epoch
+    contract). Returns the StreamingQuery handle."""
+
+    def run(batch_df: DataFrame, epoch_id: int) -> None:
+        if not batch_df.isEmpty():
+            sink(batch_df, epoch_id)
+
+    writer = frame.writeStream.foreachBatch(run).outputMode(output_mode)
+    if checkpoint_dir:
+        writer = writer.option("checkpointLocation", checkpoint_dir)
+    return writer.trigger(availableNow=True).start()
+
+
+def _prior_epochs(engine: DataFrameEngine, name: str, label: Optional[str]) -> Optional[DataFrame]:
+    """The replay guard: dataset ``name`` with its internal columns and
+    without version ``label`` (None keeps every version), or None when the
+    dataset does not exist yet (first epoch)."""
+    from ..engine import VERSION_COL
+
+    try:
+        df = engine.load(name, drop_internal=False)
+    except DatasetNotFound:
+        return None
+    if label is None:
+        return df
+    return df.filter(F.col(VERSION_COL) != F.lit(label))
+
+
+def _hash_prefix(h, n_pfx: int, width: int):
+    """Hash-prefix partition key: ``h`` modulo ``n_pfx`` (non-negative),
+    pre-scaled to the engine's ID-bucket width, so each prefix value owns
+    exactly one ``from_<lo>_to_<hi>`` partition directory."""
+    return F.pmod(h, F.lit(n_pfx)).cast("long") * width
+
+
+def _prefix_filter(prefixes: DataFrame, col: str, width: int):
+    """Literal ``__p_<col>`` directory filter for the distinct
+    ``_hash_prefix`` values in ``prefixes[col]`` — static partition pruning
+    of an index scan to a batch's colliding slice. The distinct values are
+    collected to the driver (at most ``n_pfx`` of them)."""
+    pfx = sorted(int(r[0]) for r in prefixes.select(col).distinct().collect())
+    return F.col(f"__p_{col}").isin([_id_bucket_label(v, width) for v in pfx])
 
 
 def stream_into_engine(
@@ -27,7 +96,6 @@ def stream_into_engine(
     columns_keys: Optional[dict] = None,
     version_prefix: str = "epoch_",
     checkpoint_dir: Optional[str] = None,
-    trigger_available_now: bool = True,
     dedup_on: Optional[str] = None,
 ):
     """Start a streaming query that lands each micro-batch as a version of
@@ -43,18 +111,13 @@ def stream_into_engine(
     """
 
     def sink(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
+        label = f"{version_prefix}{epoch_id}"
         out = batch_df
         if dedup_on is not None:
             from .. import dedup as _dedup
-            from ..engine import DatasetNotFound
 
             out = _dedup.exact_dedup(out, dedup_on, out.columns[0])
-            try:
-                existing = engine.load(dataframe_name)
-            except DatasetNotFound:
-                existing = None  # first batch: nothing ingested yet
+            existing = _prior_epochs(engine, dataframe_name, label)
             if existing is not None:
                 out = _dedup.incremental_exact_dedup(out, existing, dedup_on)
             if out.isEmpty():
@@ -63,20 +126,11 @@ def stream_into_engine(
             out,
             dataframe_name,
             columns_keys=columns_keys,
-            external_key=f"{version_prefix}{epoch_id}",
-            # foreachBatch is at-least-once: a crash between the data write
-            # and the checkpoint commit re-runs this epoch. Replacing the
-            # version's partitions (instead of appending) makes the retry
-            # converge to exactly one copy of the batch.
+            external_key=label,
             overwrite_version=True,
         )
 
-    writer = stream.writeStream.foreachBatch(sink).outputMode("append")
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(stream, sink, checkpoint_dir)
 
 
 def rollup_into_engine(
@@ -87,7 +141,6 @@ def rollup_into_engine(
     watermark: str = "10 minutes",
     version_prefix: str = "epoch_",
     checkpoint_dir: Optional[str] = None,
-    trigger_available_now: bool = True,
     transform=None,
 ):
     """Continuous aggregate: maintain a tumbling-window rollup of the stream
@@ -103,9 +156,9 @@ def rollup_into_engine(
     Append output mode means a window row reaches the sink exactly once,
     when the watermark passes its end and the window FINALIZES; each
     micro-batch therefore carries only newly-final windows, and landing
-    them as epoch versions (replay-idempotent ``overwrite_version``) makes
-    ``engine.load(name)`` — the union of all versions — the continuous
-    aggregate, with no window ever duplicated or partially updated.
+    them as epoch versions makes ``engine.load(name)`` — the union of all
+    versions — the continuous aggregate, with no window ever duplicated or
+    partially updated.
 
     State is O(open windows × group keys) and the watermark evicts it;
     the landed table grows by finalized windows only, so a 100 TB/day
@@ -121,8 +174,6 @@ def rollup_into_engine(
         agg = tumbling_counts(stream, width=width, watermark=watermark)
 
     def sink(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         engine.save(
             batch_df,
             dataframe_name,
@@ -130,12 +181,7 @@ def rollup_into_engine(
             overwrite_version=True,
         )
 
-    writer = agg.writeStream.foreachBatch(sink).outputMode("append")
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(agg, sink, checkpoint_dir)
 
 
 def live_rollup_into_engine(
@@ -145,7 +191,6 @@ def live_rollup_into_engine(
     width: str = "5 minutes",
     watermark: str = "10 minutes",
     checkpoint_dir: Optional[str] = None,
-    trigger_available_now: bool = True,
     transform=None,
     key_cols=None,
 ):
@@ -170,7 +215,6 @@ def live_rollup_into_engine(
     instead of updating it in place. The default transform's keys are
     known statically (``window_start_us``, ``event_type``).
     """
-    from ..engine import DatasetNotFound
     from .windows import tumbling_counts
 
     if transform is not None:
@@ -192,8 +236,6 @@ def live_rollup_into_engine(
         group_cols = ["window_start_us", "event_type"]  # tumbling_counts keys
 
     def sink(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         try:
             engine.merge(
                 batch_df,
@@ -205,12 +247,7 @@ def live_rollup_into_engine(
         except DatasetNotFound:
             engine.save(batch_df, dataframe_name, keep_last=True)
 
-    writer = agg.writeStream.foreachBatch(sink).outputMode("update")
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(agg, sink, checkpoint_dir, "update")
 
 
 def stream_into_ann_index(
@@ -221,7 +258,6 @@ def stream_into_ann_index(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     checkpoint_dir: Optional[str] = None,
-    trigger_available_now: bool = True,
 ):
     """Continuously-maintained ANN index: every micro-batch of new vectors
     is PQ-encoded against the FROZEN coarse quantizer + codebooks
@@ -244,19 +280,12 @@ def stream_into_ann_index(
     from .. import similarity
 
     def sink(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         delta = similarity.ivf_pq_index_append(
             batch_df, centroids, codebooks, id_col, vec_col
         )
         similarity.write_ivf_pq_index(delta, index_path, mode="append")
 
-    writer = stream.writeStream.foreachBatch(sink).outputMode("append")
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(stream, sink, checkpoint_dir)
 
 
 NEAR_BAND_PFX = 64  # distinct band-key-prefix partitions of the near-dup index
@@ -285,26 +314,16 @@ def near_band_rows(
     the price of a partition-prunable verify side with no second
     corpus-wide join to fetch sets for candidates).
     """
-    from pyspark.sql import functions as F
-
     from .. import dedup as _dedup
 
-    rows = n_hashes // bands
     sigs = _dedup.minhash_signatures_with_sets(df, id_col, text_col, n_hashes, shingle)
-    keys = F.array(
-        *[
-            F.xxhash64(
-                F.lit(b), *[F.col(f"__mh{b * rows + r}") for r in range(rows)]
-            )
-            for b in range(bands)
-        ]
-    )
-    w = engine.id_bucket_width
     return sigs.select(
         F.col("__id").alias("sig_id"),
         F.col("__shset").alias("sh"),
-        F.posexplode(keys).alias("band_idx", "band_key"),
-    ).withColumn("band_pfx", F.pmod(F.col("band_key"), F.lit(n_pfx)).cast("long") * w)
+        F.posexplode(_dedup._band_keys(n_hashes, bands)).alias("band_idx", "band_key"),
+    ).withColumn(
+        "band_pfx", _hash_prefix(F.col("band_key"), n_pfx, engine.id_bucket_width)
+    )
 
 
 def near_dup_probe(
@@ -330,23 +349,12 @@ def near_dup_probe(
     the index version its own first attempt committed — otherwise every
     batch doc would match itself and be rejected on replay.
     """
-    from pyspark.sql import functions as F
-
-    from ..engine import VERSION_COL, _id_bucket_label
-
-    w = engine.id_bucket_width
-    pfx = sorted(
-        int(r.band_pfx)
-        for r in batch_bands.select("band_pfx").distinct().collect()
-    )
-    # band_pfx is pre-scaled to the bucket's lo value
-    dirs = [_id_bucket_label(v, w) for v in pfx]
-    idx = engine.load(band_name, drop_internal=False)
-    if exclude_version is not None:
-        idx = idx.filter(F.col(VERSION_COL) != F.lit(exclude_version))
+    idx = _prior_epochs(engine, band_name, exclude_version)
+    if idx is None:
+        raise DatasetNotFound(band_name)
     idx = (
         idx
-        .filter(F.col("__p_band_pfx").isin(dirs))
+        .filter(_prefix_filter(batch_bands, "band_pfx", engine.id_bucket_width))
         .select(
             F.col("sig_id").alias("cor_id"),
             F.col("sh").alias("cor_sh"),
@@ -377,7 +385,6 @@ def stream_into_engine_near_dedup(
     columns_keys: Optional[dict] = None,
     version_prefix: str = "epoch_",
     checkpoint_dir: Optional[str] = None,
-    trigger_available_now: bool = True,
     jaccard_threshold: float = 0.5,
     n_hashes: int = 32,
     bands: int = 8,
@@ -408,24 +415,18 @@ def stream_into_engine_near_dedup(
     3. exact-Jaccard verify on the stored shingle sets; verified matches
        drop the batch doc;
     4. survivors land in the dataset AND their band rows append to the
-       index, both under the epoch's ``overwrite_version=True`` label,
-       so a replayed batch converges (same docs, same signatures — the
-       data version and index version travel together).
+       index, both under the epoch label (same docs, same signatures on
+       replay).
 
     At 100 TB the index is corpus-sized but hash-typed (8-byte shingle
     hashes ≈ the text re-expressed, × bands for the inline verify sets),
     and each batch's work is batch × collision volume.
     """
-    from pyspark.sql import functions as F
-
     from .. import dedup as _dedup
-    from ..engine import DatasetNotFound
 
     band_name = f"{dataframe_name}/__near_bands"
 
     def sink(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         if prepare is not None:
             # per-batch transform hook (r10): the crawl wrapper runs its
             # gate stages + cross-batch seen-URL probe here, under the
@@ -479,12 +480,7 @@ def stream_into_engine_near_dedup(
             # append here, under the same epoch label
             on_admitted(out, epoch_id)
 
-    writer = stream.writeStream.foreachBatch(sink).outputMode("append")
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(stream, sink, checkpoint_dir)
 
 
 def drift_monitor_into_engine(
@@ -497,7 +493,6 @@ def drift_monitor_into_engine(
     psi_threshold: float = 0.2,
     ks_threshold: float = 0.1,
     checkpoint_dir: Optional[str] = None,
-    trigger_available_now: bool = True,
 ):
     """Streaming distribution-drift alarm: every micro-batch's
     ``value_col`` distribution is compared against a FROZEN reference
@@ -513,11 +508,8 @@ def drift_monitor_into_engine(
     is one bucket-count groupBy (≤ n_buckets result rows; bucket index
     is a codegen sum of edge comparisons, no UDF); PSI/KS arithmetic
     happens on that n_buckets-bounded frame driver-side. Alarm rows are
-    versioned ``epoch_<id>`` with overwrite, so an at-least-once replay
-    converges instead of duplicating epochs.
+    versioned ``epoch_<id>``.
     """
-    from pyspark.sql import functions as F
-
     fracs = [i / n_buckets for i in range(1, n_buckets)]
     edges_row = reference.agg(
         F.percentile(F.col(value_col), F.array(*[F.lit(f) for f in fracs])).alias(
@@ -594,12 +586,7 @@ def drift_monitor_into_engine(
             overwrite_version=True,
         )
 
-    writer = stream.writeStream.foreachBatch(sink).outputMode("append")
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(stream, sink, checkpoint_dir)
 
 
 def stream_crawl_into_engine(
@@ -614,7 +601,6 @@ def stream_crawl_into_engine(
     body_col: str = "body",
     version_prefix: str = "epoch_",
     checkpoint_dir: Optional[str] = None,
-    trigger_available_now: bool = True,
     jaccard_threshold: float = 0.5,
     n_hashes: int = 32,
     bands: int = 8,
@@ -629,20 +615,14 @@ def stream_crawl_into_engine(
     * a persisted SEEN-URL index (``<name>/__seen_urls``, canonical
       URLs partitioned by key hash) drops re-fetches of pages any
       earlier epoch admitted — the crawl frontier's "don't refetch"
-      contract; survivors' URLs append under the epoch label, so a
-      replayed batch converges;
+      contract; survivors' URLs append under the epoch label;
     * the persisted MinHash band index (``stream_into_engine_near_dedup``
       unchanged) drops near-duplicates of everything ever ingested.
 
-    Admitted docs land as engine versions per epoch, exactly-once under
-    kill/replay (the overwrite_version discipline both indexes share).
-    Scale: per-batch gate work is batch-sized; the URL probe is a
+    Admitted docs land as engine versions per epoch. Scale: per-batch gate work is batch-sized; the URL probe is a
     left-anti against a key-hash index; near-dup admission reads only
     the colliding band slice."""
-    from pyspark.sql import functions as F
-
     from .. import pipeline as _pipeline
-    from ..engine import VERSION_COL, DatasetNotFound
 
     url_name = f"{dataframe_name}/__seen_urls"
 
@@ -653,22 +633,9 @@ def stream_crawl_into_engine(
             agent=agent, languages=languages, persist=False,
         )
         out = stages["gopher_kept"]
-        try:
-            # replay guard: exclude this epoch's own committed URL
-            # version so a killed-and-replayed batch recomputes from the
-            # pre-batch frontier state (same discipline as the line and
-            # band indexes)
-            seen = (
-                engine.load(url_name, drop_internal=False)
-                .filter(
-                    F.col(VERSION_COL) != F.lit(f"{version_prefix}{epoch_id}")
-                )
-                .select("canonical_url")
-            )
-        except DatasetNotFound:
-            seen = None
+        seen = _prior_epochs(engine, url_name, f"{version_prefix}{epoch_id}")
         if seen is not None:
-            out = out.join(seen, "canonical_url", "left_anti")
+            out = out.join(seen.select("canonical_url"), "canonical_url", "left_anti")
         # bounded per-batch materialization: the gate result feeds both
         # the near-dedup admission and (via on_admitted) the URL append
         return out.localCheckpoint(eager=True)
@@ -679,8 +646,7 @@ def stream_crawl_into_engine(
         # on the same "grow only by admitted docs" contract
         new_urls = out.select("canonical_url").withColumn(
             "url_pfx",
-            F.pmod(F.xxhash64("canonical_url"), F.lit(16))
-            * engine.id_bucket_width,
+            _hash_prefix(F.xxhash64("canonical_url"), 16, engine.id_bucket_width),
         )
         engine.save(
             new_urls, url_name, columns_keys={"url_pfx": "ID"},
@@ -692,7 +658,6 @@ def stream_crawl_into_engine(
         stream, engine, dataframe_name, id_col, "text",
         version_prefix=version_prefix,
         checkpoint_dir=checkpoint_dir,
-        trigger_available_now=trigger_available_now,
         jaccard_threshold=jaccard_threshold,
         n_hashes=n_hashes, bands=bands,
         prepare=prepare,
@@ -709,7 +674,6 @@ def stream_lines_dedup_into_engine(
     sep: str = "\n",
     version_prefix: str = "epoch_",
     checkpoint_dir: Optional[str] = None,
-    trigger_available_now: bool = True,
     n_pfx: int = NEAR_BAND_PFX,
 ):
     """Streaming CORPUS-WIDE line dedup — ``text.dedup_lines_corpus``'s
@@ -728,9 +692,7 @@ def stream_lines_dedup_into_engine(
     sha2-256 (the d01 content-key convention), so the shuffle and the
     state both carry 64-hex keys, never line text.
 
-    Per micro-batch, under ONE epoch label with
-    ``overwrite_version=True`` (data and index versions travel
-    together, so a killed-and-replayed batch converges):
+    Per micro-batch, under ONE epoch label:
 
     1. explode lines, key by sha2;
     2. anti-join the pruned seen-line slice (cross-batch kill);
@@ -739,25 +701,17 @@ def stream_lines_dedup_into_engine(
     4. reassemble every batch doc; append the batch's newly-admitted
        line keys to the index.
 
-    Replay safety: the membership probe EXCLUDES the current epoch's own
-    version label.  Without that, a batch killed after both engine.save
-    commits but before the streaming checkpoint commits would, on
-    replay, probe a seen index that already contains its own lines —
+    The membership probe is replay-guarded. Without the guard, a replayed
+    batch would probe a seen index that already contains its own lines —
     the anti-join would kill every line and ``overwrite_version`` would
     rewrite the epoch as all-hollow docs plus an empty index version
-    (silent data loss).  Excluding the label makes replay recompute from
-    exactly the pre-batch state, so the rewrite reproduces the original
+    (silent data loss). With it, the rewrite reproduces the original
     commit byte-for-byte."""
-    from pyspark.sql import functions as F
-
-    from ..engine import VERSION_COL, DatasetNotFound, _id_bucket_label
 
     seen_name = f"{dataframe_name}/__seen_lines"
     w = engine.id_bucket_width
 
     def sink(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         label = f"{version_prefix}{epoch_id}"
         from .._scratch import scratch_persist
 
@@ -770,26 +724,14 @@ def stream_lines_dedup_into_engine(
             ).withColumn("line_sha", F.sha2("line", 256)),
             "stream_lines/batch_lines",
         )
-        pfx_col = (
-            F.pmod(F.xxhash64("line_sha"), F.lit(n_pfx)).cast("long") * w
-        )
-        try:
-            pfx = sorted(
-                int(r.p)
-                for r in lines.select(pfx_col.alias("p")).distinct().collect()
+        fresh = lines
+        seen = _prior_epochs(engine, seen_name, label)
+        if seen is not None:
+            pfx = lines.select(
+                _hash_prefix(F.xxhash64("line_sha"), n_pfx, w).alias("line_pfx")
             )
-            dirs = [_id_bucket_label(v, w) for v in pfx]
-            seen = (
-                engine.load(seen_name, drop_internal=False)
-                # replay guard: never probe this epoch's own committed
-                # index version (see docstring)
-                .filter(F.col(VERSION_COL) != F.lit(label))
-                .filter(F.col("__p_line_pfx").isin(dirs))
-                .select("line_sha")
-            )
+            seen = seen.filter(_prefix_filter(pfx, "line_pfx", w)).select("line_sha")
             fresh = lines.join(seen, "line_sha", "left_anti")
-        except DatasetNotFound:
-            fresh = lines
         winners = (
             fresh.groupBy("line_sha")
             .agg(F.min(F.struct(F.col(id_col), F.col("line_no"))).alias("__w"))
@@ -834,12 +776,7 @@ def stream_lines_dedup_into_engine(
         engine.save(
             winners.select(
                 F.col("__wsha").alias("line_sha"),
-                (
-                    F.pmod(F.xxhash64(F.col("__wsha")), F.lit(n_pfx)).cast(
-                        "long"
-                    )
-                    * w
-                ).alias("line_pfx"),
+                _hash_prefix(F.xxhash64("__wsha"), n_pfx, w).alias("line_pfx"),
             ),
             seen_name,
             columns_keys={"line_pfx": "ID"},
@@ -847,12 +784,7 @@ def stream_lines_dedup_into_engine(
             overwrite_version=True,
         )
 
-    writer = stream.writeStream.foreachBatch(sink).outputMode("append")
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(stream, sink, checkpoint_dir)
 
 
 def stream_wet_index_into_engine(
@@ -864,15 +796,13 @@ def stream_wet_index_into_engine(
     id_col: str = "doc_id",
     version_prefix: str = "epoch_",
     checkpoint_dir: Optional[str] = None,
-    trigger_available_now: bool = True,
 ):
     """STREAMING form of x43's fetch tail — fetched pages arrive as a
     stream of (id, html, uri) and each micro-batch runs the same lazy
     program the batch composite certifies: WARC container build →
     CDX index write (``multimodal.warc_gz_cdx_index``) → indexed-fetch
     verify → WET conversion with byte-exact roundtrip
-    (``multimodal.parse_wet``).  Per epoch, under ONE
-    ``overwrite_version=True`` label:
+    (``multimodal.parse_wet``).  Per epoch, under ONE label:
 
     * the WET documents land as the dataset (id, target_uri,
       content_length, text, roundtrip_ok);
@@ -881,40 +811,27 @@ def stream_wet_index_into_engine(
     * newly-ingested URIs append to ``<name>/__seen_uris`` and gate
       later epochs (the frontier's "don't refetch" contract).
 
-    Replay safety: the seen-URI probe excludes the current epoch's own
-    version label (the ``stream_lines_dedup_into_engine`` guard), so a
-    batch killed after its saves but before the checkpoint commit
-    recomputes from pre-batch state and rewrites the identical epoch.
-    Scale: WARC/WET/CDX work is pure Arrow mapInPandas over the batch;
+    The seen-URI probe is replay-guarded. Scale: WARC/WET/CDX work is pure Arrow mapInPandas over the batch;
     the only cross-batch state is the URI key index (hash keys, never
     bodies)."""
-    from pyspark.sql import functions as F
-
     from .. import multimodal
     from .. import text as _text
-    from ..engine import VERSION_COL, DatasetNotFound
 
     seen_name = f"{dataframe_name}/__seen_uris"
 
     def sink(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         from .._scratch import scratch_persist
 
         label = f"{version_prefix}{epoch_id}"
-        try:
-            seen = (
-                engine.load(seen_name, drop_internal=False)
-                .filter(F.col(VERSION_COL) != F.lit(label))
-                .select(F.col("uri_sha"))
-            )
+        fresh = batch_df
+        seen = _prior_epochs(engine, seen_name, label)
+        if seen is not None:
+            seen = seen.select("uri_sha")
             fresh = batch_df.join(
                 seen,
                 F.sha2(F.col(uri_col), 256) == seen["uri_sha"],
                 "left_anti",
             )
-        except DatasetNotFound:
-            fresh = batch_df
         fresh = scratch_persist(fresh, "stream_wet/fresh")
         if fresh.isEmpty():
             return
@@ -968,12 +885,7 @@ def stream_wet_index_into_engine(
             overwrite_version=True,
         )
 
-    writer = stream.writeStream.foreachBatch(sink).outputMode("append")
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(stream, sink, checkpoint_dir)
 
 
 def stream_embeddings_into_ivf(
@@ -985,7 +897,6 @@ def stream_embeddings_into_ivf(
     vec_col: str = "embedding",
     version_prefix: str = "epoch_",
     checkpoint_dir: Optional[str] = None,
-    trigger_available_now: bool = True,
 ):
     """INCREMENTAL IVF maintenance (VERDICT r12 #4): every micro-batch
     of new embeddings routes against a FROZEN centroid table
@@ -995,35 +906,27 @@ def stream_embeddings_into_ivf(
     (id, cell, dist) rows — the inverted-file membership the drift
     card and cell-probed search read.
 
-    Replay guards (the r12 cross-batch-index class, both directions):
+    Duplicate guards (the r12 cross-batch-index class):
 
     * a vec_id already committed by an EARLIER epoch is skipped
       (at-least-once sources redeliver; the index must not grow
       duplicate rows), and duplicate vec_ids WITHIN one micro-batch
       collapse to a deterministic keep-first (the lines-dedup sink's
       skew-safe ``min(struct(vec))`` per id — never a window over the
-      id) before assignment — and the membership probe EXCLUDES the current
-      epoch's label, so a batch killed after its engine.save but
-      before the checkpoint commit does not anti-join itself into an
-      empty rewrite on replay;
-    * the replayed batch re-saves under the SAME epoch label with
-      ``overwrite_version=True``, so the index converges
-      byte-identically (pinned: stream-built index == the batch
-      assignment of the same vectors).
+      id) before assignment;
+    * the membership probe is replay-guarded, so a replayed batch does
+      not anti-join itself into an empty rewrite, and the index
+      converges byte-identically (pinned: stream-built index == the
+      batch assignment of the same vectors).
 
     Centroid DRIFT — the rebuild trigger — is queried offline with
     ``similarity.ivf_drift_card`` over the index snapshot vs the live
     vectors.  Scale: assignment is one broadcast O(cells × dim) pass
     per batch; the membership probe is an id anti-join against the
     index (id-typed, never vectors)."""
-    from pyspark.sql import functions as F
-
     from .. import similarity as _sim
-    from ..engine import VERSION_COL, DatasetNotFound
 
     def sink(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         label = f"{version_prefix}{epoch_id}"
         # within-batch keep-first: duplicate ids in ONE micro-batch
         # (at-least-once sources batch redeliveries together) must not
@@ -1034,15 +937,9 @@ def stream_embeddings_into_ivf(
             .agg(F.min(F.struct(F.col(vec_col))).alias("__first"))
             .select(id_col, F.col(f"__first.{vec_col}").alias(vec_col))
         )
-        try:
-            idx = engine.load(index_name, drop_internal=False)
-            seen = (
-                idx.filter(F.col(VERSION_COL) != F.lit(label))
-                .select(F.col(id_col))
-            )
-            new = new.join(seen, id_col, "left_anti")
-        except DatasetNotFound:
-            pass
+        seen = _prior_epochs(engine, index_name, label)
+        if seen is not None:
+            new = new.join(seen.select(id_col), id_col, "left_anti")
         if new.isEmpty():
             return
         assigned = _sim.assign_to_centroid_table(
@@ -1057,9 +954,4 @@ def stream_embeddings_into_ivf(
             rows, index_name, external_key=label, overwrite_version=True
         )
 
-    writer = stream.writeStream.foreachBatch(sink).outputMode("append")
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(stream, sink, checkpoint_dir)

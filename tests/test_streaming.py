@@ -1253,3 +1253,155 @@ def test_stream_embeddings_into_ivf_batch_parity_and_replay(spark, tmp_path):
         r.vec_id: (r.cell, r.dist) for r in eng.load("ivf").collect()
     }
     assert got2 == want
+
+
+def _drop_last_commit(ck):
+    """Simulate a crash after a batch's saves committed but before its
+    checkpoint commit: delete the last commit marker (numeric order) so
+    the next run replays that batch under the same epoch id. Returns the
+    marker's path."""
+    commits = sorted(
+        (c for c in os.listdir(os.path.join(ck, "commits")) if not c.startswith(".")),
+        key=int,
+    )
+    last = os.path.join(ck, "commits", commits[-1])
+    os.remove(last)
+    crc = os.path.join(ck, "commits", f".{commits[-1]}.crc")
+    if os.path.exists(crc):
+        os.remove(crc)
+    return last
+
+
+def test_stream_near_dedup_replay_after_commit_converges(spark, tmp_path):
+    """Kill/replay of the near-dup sink: after the last epoch is replayed,
+    the dataset and the ``__near_bands`` index hold exactly what one clean
+    run wrote — the replayed epoch's new doc (12) still lands (its probe
+    must not match the index rows its own first attempt committed, so the
+    replay re-admits it and ``on_admitted`` sees it again), and neither
+    the docs nor their band rows are duplicated."""
+    from pandas_db_sdk_spark.engine import DataFrameEngine
+    from pandas_db_sdk_spark.streaming.ingest import stream_into_engine_near_dedup
+
+    base = (
+        "the quick brown fox jumps over the lazy dog again and again "
+        "while the cat watches from the warm windowsill every single day"
+    )
+    b1 = [(1, base), (2, "completely different text about spark shuffles and "
+                         "partition pruning at terabyte scale for analytics")]
+    b2 = [
+        (10, base),                                # exact dup of 1
+        (11, base.replace("lazy", "sleepy")),      # near-dup of 1
+        (12, "an entirely novel document mentioning suffix arrays bloom "
+             "filters and quantile sketches in one breath tonight"),
+    ]
+    src = str(tmp_path / "docs")
+    ck = str(tmp_path / "ckpt")
+    schema = "doc_id long, text string"
+    spark.createDataFrame(b1, schema).coalesce(1).write.mode("append").parquet(src)
+    spark.createDataFrame(b2, schema).coalesce(1).write.mode("append").parquet(src)
+
+    eng = DataFrameEngine(spark, str(tmp_path / "wh"))
+    admitted = []
+
+    def on_admitted(out, epoch_id):
+        admitted.append((epoch_id, sorted(r.doc_id for r in out.select("doc_id").collect())))
+
+    def run():
+        stream = spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(src)
+        q = stream_into_engine_near_dedup(
+            stream, eng, "docs", "doc_id", "text", checkpoint_dir=ck,
+            on_admitted=on_admitted,
+        )
+        q.awaitTermination()
+
+    def snapshot():
+        docs = sorted(r.doc_id for r in eng.load("docs").select("doc_id").collect())
+        bands = sorted(
+            tuple(r)
+            for r in eng.load("docs/__near_bands")
+            .select("sig_id", "band_idx", "band_key", "band_pfx")
+            .collect()
+        )
+        return docs, bands
+
+    run()
+    docs, bands = snapshot()
+    assert docs == [1, 2, 12], docs
+    assert len(bands) == 3 * 8
+    assert admitted == [(0, [1, 2]), (1, [12])]
+
+    marker = _drop_last_commit(ck)
+    run()
+    assert os.path.exists(marker)  # the batch really re-ran and committed
+    assert admitted[2:] == [(1, [12])]
+    assert snapshot() == (docs, bands)
+    versions = eng.list_datasets()["dataframes"]
+    assert sorted(versions["docs"]["versions"]) == ["epoch_0", "epoch_1"]
+    assert sorted(versions["docs/__near_bands"]["versions"]) == ["epoch_0", "epoch_1"]
+
+
+def test_stream_ingest_dedup_on_replay_after_commit_converges(spark, tmp_path):
+    """Kill/replay of ``stream_into_engine(dedup_on=...)``: the replayed
+    epoch dedups against the EARLIER epochs only, so its new row (11)
+    still lands once and its cross-batch duplicate (10) stays out."""
+    from pandas_db_sdk_spark.engine import DataFrameEngine
+    from pandas_db_sdk_spark.streaming.ingest import stream_into_engine
+
+    b1 = [(1, "alpha body"), (2, "beta body")]
+    b2 = [(10, "alpha body"), (11, "gamma body")]
+    src = str(tmp_path / "docs")
+    ck = str(tmp_path / "ckpt")
+    schema = "doc_id long, text string"
+    spark.createDataFrame(b1, schema).coalesce(1).write.mode("append").parquet(src)
+    spark.createDataFrame(b2, schema).coalesce(1).write.mode("append").parquet(src)
+
+    eng = DataFrameEngine(spark, str(tmp_path / "wh"))
+
+    def run():
+        stream = spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(src)
+        q = stream_into_engine(stream, eng, "docs", checkpoint_dir=ck, dedup_on="text")
+        q.awaitTermination()
+
+    def snapshot():
+        return sorted(tuple(r) for r in eng.load("docs").select("doc_id", "text").collect())
+
+    run()
+    want = [(1, "alpha body"), (2, "beta body"), (11, "gamma body")]
+    assert snapshot() == want
+
+    marker = _drop_last_commit(ck)
+    run()
+    assert os.path.exists(marker)
+    assert snapshot() == want
+    info = eng.list_datasets()["dataframes"]["docs"]
+    assert sorted(info["versions"]) == ["epoch_0", "epoch_1"]
+
+
+def test_near_band_rows_layout_is_pinned(spark, tmp_path):
+    """Golden band layout: ``__near_bands`` indexes already on disk are
+    probed with band keys computed by today's code, so (band_idx,
+    band_key, band_pfx) for a fixed document must never drift."""
+    from pandas_db_sdk_spark.engine import DataFrameEngine
+    from pandas_db_sdk_spark.streaming.ingest import near_band_rows
+
+    eng = DataFrameEngine(spark, str(tmp_path / "wh"))
+    doc = spark.createDataFrame(
+        [(7, "the quick brown fox jumps over the lazy dog again and again")],
+        "doc_id long, text string",
+    )
+    got = sorted(
+        tuple(r)
+        for r in near_band_rows(eng, doc, "doc_id", "text")
+        .select("band_idx", "band_key", "band_pfx")
+        .collect()
+    )
+    assert got == [
+        (0, 1102839148355895994, 58000),
+        (1, 2721343120708288499, 51000),
+        (2, 493003382764588064, 32000),
+        (3, 3289932396310326319, 47000),
+        (4, 5469404485276677814, 54000),
+        (5, -5414559301173160439, 9000),
+        (6, 2105323557188904130, 2000),
+        (7, 543425433378120920, 24000),
+    ]
