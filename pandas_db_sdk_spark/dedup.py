@@ -755,13 +755,7 @@ def hamming_near_pairs(
             )
         ).alias("band_idx", "band_key"),
     )
-    if max_bucket_size is not None:
-        wb = Window.partitionBy("band_idx", "band_key")
-        bands = (
-            bands.withColumn("__bn", F.count("*").over(wb))
-            .filter(F.col("__bn") <= max_bucket_size)
-            .drop("__bn")
-        )
+    bands = _cap_buckets(bands, max_bucket_size)
     left = bands.select("band_idx", "band_key", F.col("__id").alias("id_a"), F.col("__sig").alias("sig_a"))
     right = bands.select("band_idx", "band_key", F.col("__id").alias("id_b"), F.col("__sig").alias("sig_b"))
     pairs = (

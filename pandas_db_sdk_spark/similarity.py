@@ -1,18 +1,37 @@
 """Vector similarity search — SURVEY §2 D3/D4.
 
-Embeddings are `array<float>` columns; all arithmetic runs as JVM
-higher-order functions (zip_with / aggregate) in double precision — no
-Python, no UDF in the scoring path.
+Embeddings are `array<float>` columns. Cosine scoring runs as JVM
+higher-order functions (zip_with / aggregate) in double precision; the
+only Python in a search path is a vectorized pandas_udf mapping vectors
+to signatures, cells or codes (one numpy matmul per Arrow batch).
 
-Two tiers, same results contract:
+Five tiers, one results contract — per-query top-k rows
+(query_id, neighbor_id, score, rank):
 
-* brute-force top-k — broadcast the (small) query set, score every corpus
-  row, per-query window top-k. Linear in corpus size, embarrassingly
-  parallel: correct baseline at any scale where queries are few.
-* LSH-bucketed ANN — random-hyperplane signatures (seeded, hash-derived, so
-  they're deterministic WITHOUT shipping plane matrices), equi-join on
-  signature buckets, exact rerank inside buckets. The bucket join replaces
-  the corpus-wide scoring: cost ∝ bucket collisions, not corpus size.
+* brute force (:func:`cosine_topk_bruteforce`) — broadcast the small
+  query set, score every corpus row. The exact baseline.
+* hyperplane LSH (:func:`cosine_topk_lsh`) — seeded random-hyperplane
+  signatures, equi-join on (table, bucket), exact rerank inside buckets.
+  No training; cost ∝ bucket collisions, not corpus size.
+* IVF (:func:`cosine_topk_ivf`) — k-means cells, probe the nearest cells
+  per query, exact rerank inside the probed cells.
+* PQ (:func:`pq_train` / :func:`pq_encode` / :func:`pq_topk`) —
+  per-subspace codebooks, asymmetric-distance (ADC) top-k over m-byte
+  codes.
+* IVF-PQ (:func:`ivf_pq_index` / :func:`ivf_pq_topk`) — IVF cells
+  restrict the candidates, PQ codes score them.
+
+Every decision the tiers share has one home:
+
+* :func:`_sq_dists` — the squared-L2 expansion ‖x‖² − 2x·c + ‖c‖².
+* :func:`_nearest_cells` — the vector → cell pandas_udf (argmin, or the
+  n nearest cells in argsort order).
+* :func:`_lloyd` — the Lloyd k-means loop over m subspaces (IVF: m = 1,
+  PQ: m = m_subspaces).
+* :func:`_rerank_side` / :func:`_cos_topk` — the per-row-norm projection
+  and the rounded-cosine rerank with its (cos desc, neighbor_id) top-k.
+* :func:`_lsh_candidates` — the hyperplane bucket equi-join.
+* :func:`_pq_lut` / :func:`_adc_topk` — the ADC lookup table and top-k.
 """
 
 from __future__ import annotations
@@ -53,6 +72,60 @@ def cosine(a, b):
     return dot(a, b) / (l2_norm(a) * l2_norm(b))
 
 
+def _sq_dists(x, c):
+    """(rows × cells) squared L2 via the expansion trick — one matmul."""
+    return (x * x).sum(1)[:, None] - 2 * (x @ c.T) + (c * c).sum(1)[None, :]
+
+
+def _nearest_cells(centroids, n_probes: int | None = None):
+    """pandas_udf: array<double> vector → its nearest centroid (``int``),
+    or with ``n_probes`` its n nearest (``array<int>``, argsort order, so
+    ties keep numpy's order). The centroid matrix rides the closure."""
+    from pyspark.sql.pandas.functions import pandas_udf
+
+    cent = np.asarray(centroids)
+
+    @pandas_udf("int" if n_probes is None else "array<int>")
+    def cells(vecs: pd.Series) -> pd.Series:
+        d = _sq_dists(np.stack(vecs.to_numpy()), cent)
+        if n_probes is None:
+            return pd.Series(d.argmin(1).astype("int32"))
+        return pd.Series(list(np.argsort(d, 1)[:, :n_probes].astype("int32")))
+
+    return cells
+
+
+def _rerank_side(df: DataFrame, id_col: str, vec_col: str, side: str, *extra) -> DataFrame:
+    """One side of a cosine rerank: (query_id, __qv, __qn) for side "q",
+    (neighbor_id, __cv, __cn) for "c", plus ``extra`` columns. Norms are
+    per-ROW quantities — computed once here, not once per (query, corpus)
+    pair inside the scoring join: at Q queries that's 2Q× fewer
+    aggregate() passes over every corpus vector."""
+    v = F.col(vec_col)
+    return df.select(
+        F.col(id_col).alias("query_id" if side == "q" else "neighbor_id"),
+        v.alias(f"__{side}v"),
+        l2_norm(v).alias(f"__{side}n"),
+        *extra,
+    )
+
+
+def _cos_topk(pairs: DataFrame, k: int) -> DataFrame:
+    """Exact rerank of joined :func:`_rerank_side` pairs: cosine rounded
+    to 6 dp, per-query top-k by (cos desc, neighbor_id) →
+    (query_id, neighbor_id, cos, rank)."""
+    scored = pairs.withColumn(
+        "cos",
+        F.round(dot(F.col("__qv"), F.col("__cv")) / (F.col("__qn") * F.col("__cn")), 6),
+    )
+    w = Window.partitionBy("query_id").orderBy(F.col("cos").desc(), "neighbor_id")
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select("query_id", "neighbor_id", "cos", "rank")
+    )
+
+
 def cosine_topk_bruteforce(
     queries: DataFrame,
     corpus: DataFrame,
@@ -64,25 +137,9 @@ def cosine_topk_bruteforce(
     """D3 baseline: exact top-k by cosine. Queries are broadcast (they must be
     small — that's the contract of this tier); the corpus never shuffles
     until the final per-query top-k, which moves k·partitions rows."""
-    # Norms are per-ROW quantities — compute them once here, not once per
-    # (query, corpus) pair inside the scoring join: at Q queries that's 2Q×
-    # fewer aggregate() passes over every corpus vector.
-    qs = queries.select(
-        F.col(query_id).alias("query_id"), F.col(vec_col).alias("__qv")
-    ).withColumn("__qn", l2_norm(F.col("__qv")))
-    cs = corpus.select(
-        F.col(corpus_id).alias("neighbor_id"), F.col(vec_col).alias("__cv")
-    ).withColumn("__cn", l2_norm(F.col("__cv")))
-    scored = cs.join(F.broadcast(qs)).withColumn(
-        "cos",
-        F.round(dot(F.col("__qv"), F.col("__cv")) / (F.col("__qn") * F.col("__cn")), 6),
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("cos").desc(), "neighbor_id")
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cos", "rank")
-    )
+    qs = _rerank_side(queries, query_id, vec_col, "q")
+    cs = _rerank_side(corpus, corpus_id, vec_col, "c")
+    return _cos_topk(cs.join(F.broadcast(qs)), k)
 
 
 def ivf_nprobe_recall_sweep(
@@ -220,7 +277,6 @@ def hard_negatives(
     vec_col: str = "embedding",
     k: int = 5,
     max_broadcast_queries: int = 4096,
-    dim: int = 64,
 ) -> DataFrame:
     """Contrastive-training hard-negative mining: for each query vector,
     the top-k most-similar corpus vectors with a DIFFERENT label (the
@@ -244,89 +300,17 @@ def hard_negatives(
     know their side can pin the tier by setting ``max_broadcast_queries``
     to 0 (always LSH) or a large value (always exact).
     """
+    qs = _rerank_side(queries, query_id, vec_col, "q", F.col(label_col).alias("__ql"))
+    cs = _rerank_side(corpus, corpus_id, vec_col, "c", F.col(label_col).alias("__cl"))
+    differ = F.col("__ql") != F.col("__cl")
     if queries.count() > max_broadcast_queries:
-        return _hard_negatives_lsh(
-            queries, corpus, query_id, corpus_id, label_col, vec_col, k, dim
-        )
-    qs = queries.select(
-        F.col(query_id).alias("query_id"),
-        F.col(label_col).alias("__ql"),
-        F.col(vec_col).alias("__qv"),
-    ).withColumn("__qn", l2_norm(F.col("__qv")))
-    cs = corpus.select(
-        F.col(corpus_id).alias("neighbor_id"),
-        F.col(label_col).alias("__cl"),
-        F.col(vec_col).alias("__cv"),
-    ).withColumn("__cn", l2_norm(F.col("__cv")))
-    scored = cs.join(
-        F.broadcast(qs), F.col("__ql") != F.col("__cl")
-    ).withColumn(
-        "cos",
-        F.round(dot(F.col("__qv"), F.col("__cv")) / (F.col("__qn") * F.col("__cn")), 6),
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("cos").desc(), "neighbor_id")
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cos", "rank")
-    )
+        pairs = _lsh_candidates(qs, cs, n_planes=12, n_tables=4, where=differ)
+    else:
+        pairs = cs.join(F.broadcast(qs), differ)
+    return _cos_topk(pairs, k)
 
 
-def _hard_negatives_lsh(
-    queries: DataFrame,
-    corpus: DataFrame,
-    query_id: str,
-    corpus_id: str,
-    label_col: str,
-    vec_col: str,
-    k: int,
-    dim: int,
-    n_planes: int = 12,
-    n_tables: int = 4,
-) -> DataFrame:
-    """The 100 TB tier of :func:`hard_negatives`: hyperplane-LSH bucket
-    equi-join (never a BNLJ/cartesian — Σ bucket² pair work), label
-    inequality applied post-probe, exact cosine rerank inside buckets."""
-    sig_udf = hyperplane_signatures(n_planes, dim, n_tables, seed=101)
-
-    def with_buckets(df, id_col, id_alias):
-        sigs = sig_udf(F.col(vec_col).cast("array<double>"))
-        return df.select(
-            F.col(id_col).alias(id_alias),
-            F.col(label_col).alias(f"__{id_alias}_l"),
-            F.col(vec_col).alias(f"__{id_alias}_v"),
-            l2_norm(F.col(vec_col)).alias(f"__{id_alias}_n"),
-            F.posexplode(sigs).alias("__table", "__bucket"),
-        )
-
-    qb = with_buckets(queries, query_id, "query_id")
-    cb = with_buckets(corpus, corpus_id, "neighbor_id")
-    cand = (
-        qb.join(cb, ["__table", "__bucket"])
-        .filter(F.col("__query_id_l") != F.col("__neighbor_id_l"))
-        .select(
-            "query_id", "neighbor_id", "__query_id_v", "__neighbor_id_v",
-            "__query_id_n", "__neighbor_id_n",
-        )
-        .dropDuplicates(["query_id", "neighbor_id"])
-    )
-    scored = cand.withColumn(
-        "cos",
-        F.round(
-            dot(F.col("__query_id_v"), F.col("__neighbor_id_v"))
-            / (F.col("__query_id_n") * F.col("__neighbor_id_n")),
-            6,
-        ),
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("cos").desc(), "neighbor_id")
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cos", "rank")
-    )
-
-
-def hyperplane_signatures(n_planes: int = 16, dim: int = 64, n_tables: int = 4, seed: int = 7):
+def hyperplane_signatures(n_planes: int = 16, n_tables: int = 4, seed: int = 7):
     """Column expression: embedding → array<long> of n_tables bucket keys,
     via random-hyperplane signatures.
 
@@ -337,22 +321,45 @@ def hyperplane_signatures(n_planes: int = 16, dim: int = 64, n_tables: int = 4, 
     element (measured 5.0s vs 0.9s at sf0.1 for 6 tables × 10 planes), and
     a literal plane matrix bloats the plan past analyzer budgets. Planes
     are derived from the seed inside the UDF on every executor — nothing
-    is shipped, signatures are deterministic across the cluster.
+    is shipped, signatures are deterministic across the cluster; the plane
+    width is the batch's embedding width.
     """
     from pyspark.sql.pandas.functions import pandas_udf
 
     @pandas_udf("array<long>")
     def _sig(vecs: pd.Series) -> pd.Series:
+        mat = np.stack(vecs.to_numpy())  # (batch, dim)
         rng = np.random.default_rng(seed)
         # ±1 planes, one matrix for all tables: (tables·planes, dim)
-        planes = rng.integers(0, 2, size=(n_tables * n_planes, dim)) * 2.0 - 1.0
-        mat = np.stack(vecs.to_numpy())  # (batch, dim)
+        planes = rng.integers(0, 2, size=(n_tables * n_planes, mat.shape[1])) * 2.0 - 1.0
         bits = (mat @ planes.T) >= 0  # (batch, tables·planes)
         weights = 1 << np.arange(n_planes - 1, -1, -1, dtype=np.int64)
         keys = bits.reshape(len(mat), n_tables, n_planes) @ weights  # (batch, tables)
         return pd.Series(list(keys.astype(np.int64)))
 
     return _sig
+
+
+def _lsh_candidates(
+    qs: DataFrame, cs: DataFrame, n_planes: int, n_tables: int, where=None
+) -> DataFrame:
+    """Candidate pairs for :func:`_cos_topk` from multi-table hyperplane
+    LSH over two :func:`_rerank_side` frames: both sides posexplode their
+    (table, bucket) keys and equi-join on them — at 100 TB a plain
+    shuffled equi-join Catalyst/AQE can plan, never a crossJoin.
+    ``where`` filters pairs before multi-table collisions are deduped."""
+    sig_udf = hyperplane_signatures(n_planes, n_tables, seed=101)
+
+    def with_buckets(side, vec):
+        sigs = sig_udf(F.col(vec).cast("array<double>"))
+        return side.select("*", F.posexplode(sigs).alias("__table", "__bucket"))
+
+    cand = with_buckets(qs, "__qv").join(with_buckets(cs, "__cv"), ["__table", "__bucket"])
+    if where is not None:
+        cand = cand.filter(where)
+    return cand.select(
+        "query_id", "neighbor_id", "__qv", "__qn", "__cv", "__cn"
+    ).dropDuplicates(["query_id", "neighbor_id"])
 
 
 def cosine_topk_lsh(
@@ -363,123 +370,106 @@ def cosine_topk_lsh(
     vec_col: str = "embedding",
     k: int = 5,
     n_planes: int = 12,
-    dim: int = 64,
     n_tables: int = 4,
 ) -> DataFrame:
     """D3 scale path: multi-table hyperplane LSH → bucket equi-join → exact
     cosine rerank inside buckets → per-query top-k.
 
     Recall < 1.0 by construction (ANN); raise n_tables for recall, n_planes
-    for selectivity. The join is on (table, bucket) keys — at 100 TB this is
-    a plain shuffled equi-join Catalyst/AQE can plan, never a crossJoin.
+    for selectivity.
     """
-    sig_udf = hyperplane_signatures(n_planes, dim, n_tables, seed=101)
-
-    def with_buckets(df, id_alias):
-        sigs = sig_udf(F.col(vec_col).cast("array<double>"))
-        return df.select(
-            F.col("*"),
-            F.posexplode(sigs).alias("__table", "__bucket"),
-        ).select(
-            F.col(query_id if id_alias == "query_id" else corpus_id).alias(id_alias),
-            F.col(vec_col).alias(f"__{id_alias}_v"),
-            l2_norm(F.col(vec_col)).alias(f"__{id_alias}_n"),
-            "__table",
-            "__bucket",
-        )
-
-    qb = with_buckets(queries, "query_id")
-    cb = with_buckets(corpus, "neighbor_id")
-    cand = (
-        qb.join(cb, ["__table", "__bucket"])
-        .select(
-            "query_id", "neighbor_id", "__query_id_v", "__neighbor_id_v",
-            "__query_id_n", "__neighbor_id_n",
-        )
-        .dropDuplicates(["query_id", "neighbor_id"])
-    )
-    scored = cand.withColumn(
-        "cos",
-        F.round(
-            dot(F.col("__query_id_v"), F.col("__neighbor_id_v"))
-            / (F.col("__query_id_n") * F.col("__neighbor_id_n")),
-            6,
-        ),
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("cos").desc(), "neighbor_id")
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cos", "rank")
-    )
+    qs = _rerank_side(queries, query_id, vec_col, "q")
+    cs = _rerank_side(corpus, corpus_id, vec_col, "c")
+    return _cos_topk(_lsh_candidates(qs, cs, n_planes, n_tables), k)
 
 
 def _kmeans_centroids(
     corpus: DataFrame, vec_col: str, n_centroids: int, max_iter: int, seed: int
 ):
-    """Coarse k-means quantizer trained distributed (Lloyd's iterations).
+    """Coarse k-means quantizer: :func:`_lloyd` over the whole vector (one
+    subspace) → (n_centroids × dim). Only the centroid matrix ever lands
+    on the driver; that's the IVF contract (the coarse quantizer is small
+    by definition)."""
+    return _lloyd(corpus.select(vec_col), n_centroids, max_iter, seed, 1)[0]
 
-    Assignment is one numpy matmul per Arrow batch; the mean update is a
-    posexplode → groupBy(cid, pos) partial aggregate, so each iteration is
-    one map-side-combined shuffle of (n_centroids × dim) cells — never a
-    driver-side pass over the data. Only the centroid matrix itself
-    (n_centroids × dim doubles) ever lands on the driver; that's the IVF
-    contract (the coarse quantizer is small by definition).
 
-    Deterministic: init picks the n_centroids rows with the smallest
-    xxhash64(seed, vec) — a seeded pseudo-random sample with no RNG state.
-    """
+def _lloyd(vecs: DataFrame, k: int, max_iter: int, seed: int, m: int):
+    """Lloyd's k-means over the single vector column of ``vecs``, split
+    into ``m`` contiguous subspaces with ``k`` centroids each → an
+    (m × k × dim/m) array. ALL subspaces train in the SAME loop: one
+    assignment pass and one (subspace, cell, pos) update aggregation per
+    iteration instead of m separate k-means runs — the per-iteration job
+    count is constant in m (a naive per-subspace loop was 8× slower
+    wall-clock at sf0.1, pure job-scheduling overhead).
+
+    Deterministic: init picks the k rows with the smallest
+    xxhash64(seed, vec) — a seeded pseudo-random sample with no RNG
+    state. A cell no row reaches keeps its previous centroid."""
     from pyspark import StorageLevel
-    from pyspark.sql.pandas.functions import pandas_udf
 
-    v = F.col(vec_col).cast("array<double>")
-    # The training loop reads the vectors max_iter+1 times (init sample +
-    # one assignment pass per Lloyd iteration); persist the projected column
-    # so that's one corpus scan total, not one per iteration.
-    vecs = corpus.select(v.alias("v")).persist(StorageLevel.MEMORY_AND_DISK)
+    # The loop reads the vectors max_iter+1 times (init sample + one
+    # assignment pass per iteration); persist the projected column so
+    # that's one corpus scan total, not one per iteration.
+    vecs = vecs.select(
+        F.col(vecs.columns[0]).cast("array<double>").alias("v")
+    ).persist(StorageLevel.MEMORY_AND_DISK)
     try:
-        return _lloyd(vecs, n_centroids, max_iter, seed, pandas_udf)
-    finally:
-        vecs.unpersist()
-
-
-def _lloyd(vecs: DataFrame, n_centroids: int, max_iter: int, seed: int, pandas_udf):
-    init = (
-        vecs.withColumn("__r", F.xxhash64(F.lit(seed), F.col("v")))
-        .orderBy("__r")
-        .limit(n_centroids)
-        .collect()
-    )
-    centroids = np.stack([np.asarray(r.v) for r in init])
-    v = F.col("v")
-
-    for _ in range(max_iter):
-        cmat = centroids  # close over this iteration's matrix
-
-        @pandas_udf("int")
-        def assign(vecs: pd.Series) -> pd.Series:
-            mat = np.stack(vecs.to_numpy())
-            # squared euclidean via the expansion trick; one matmul per batch
-            d = (mat * mat).sum(1)[:, None] - 2 * (mat @ cmat.T) + (cmat * cmat).sum(1)[None, :]
-            return pd.Series(d.argmin(1).astype("int32"))
-
-        cells = (
-            vecs.select(assign(v).alias("cid"), F.posexplode(v).alias("pos", "x"))
-            .groupBy("cid", "pos")
-            .agg(F.sum("x").alias("s"), F.count("*").alias("n"))
+        init = (
+            vecs.withColumn("__r", F.xxhash64(F.lit(seed), F.col("v")))
+            .orderBy("__r")
+            .limit(k)
             .collect()
         )
-        new = centroids.copy()
-        by_cid: dict = {}
-        for r in cells:
-            by_cid.setdefault(r.cid, {})[r.pos] = r.s / r.n
-        for cid, dims in by_cid.items():
-            for pos, mean in dims.items():
-                new[cid, pos] = mean
-        if np.allclose(new, centroids):
-            break
-        centroids = new
-    return centroids
+        full = np.stack([np.asarray(r.v) for r in init])  # (k, dim)
+        sub = full.shape[1] // m
+        books = np.stack(
+            [full[:, s * sub : (s + 1) * sub] for s in range(m)]
+        )  # (m, k, sub)
+
+        for _ in range(max_iter):
+            cur = books  # close over this iteration's centroids
+
+            def assign_and_partial(batches):
+                # assignment AND the mean-update partial aggregation in one
+                # worker pass: each batch emits at most m × k × sub
+                # (sum, n) cells — the map-side combine that keeps the
+                # shuffle O(cells), never O(rows × dim)
+                for pdf in batches:
+                    mat = np.stack(pdf["v"].to_numpy())
+                    sums = np.zeros((m, k, sub))
+                    cnts = np.zeros((m, k), dtype=np.int64)
+                    for si in range(m):
+                        x = mat[:, si * sub : (si + 1) * sub]
+                        codes = _sq_dists(x, cur[si]).argmin(1)
+                        np.add.at(sums[si], codes, x)
+                        np.add.at(cnts[si], codes, 1)
+                    si_idx, c_idx = np.nonzero(cnts)
+                    rows = {
+                        "s": np.repeat(si_idx, sub).astype("int32"),
+                        "cid": np.repeat(c_idx, sub).astype("int32"),
+                        "sp": np.tile(np.arange(sub, dtype="int32"), len(si_idx)),
+                        "sum": sums[si_idx, c_idx].ravel(),
+                        "n": np.repeat(cnts[si_idx, c_idx], sub),
+                    }
+                    yield pd.DataFrame(rows)
+
+            cells = (
+                vecs.mapInPandas(
+                    assign_and_partial, "s int, cid int, sp int, sum double, n long"
+                )
+                .groupBy("s", "cid", "sp")
+                .agg(F.sum("sum").alias("sum"), F.sum("n").alias("n"))
+                .collect()
+            )
+            new = books.copy()
+            for r in cells:
+                new[r.s, r.cid, r.sp] = r.sum / r.n
+            if np.allclose(new, books):
+                break
+            books = new
+    finally:
+        vecs.unpersist()
+    return books
 
 
 def cosine_topk_ivf(
@@ -507,47 +497,16 @@ def cosine_topk_ivf(
     is partitioned by cid (an inverted file), queries touch only their
     probed cells, and nothing is ever a crossJoin.
     """
-    from pyspark.sql.pandas.functions import pandas_udf
-
     centroids = _kmeans_centroids(corpus, vec_col, n_centroids, max_iter, seed)
-    n_probes = min(n_probes, len(centroids))
-
-    @pandas_udf("int")
-    def cell_of(vecs: pd.Series) -> pd.Series:
-        mat = np.stack(vecs.to_numpy())
-        d = (mat * mat).sum(1)[:, None] - 2 * (mat @ centroids.T) + (centroids * centroids).sum(1)[None, :]
-        return pd.Series(d.argmin(1).astype("int32"))
-
-    @pandas_udf("array<int>")
-    def probes_of(vecs: pd.Series) -> pd.Series:
-        mat = np.stack(vecs.to_numpy())
-        d = (mat * mat).sum(1)[:, None] - 2 * (mat @ centroids.T) + (centroids * centroids).sum(1)[None, :]
-        order = np.argsort(d, 1)[:, :n_probes].astype("int32")
-        return pd.Series(list(order))
-
     v = F.col(vec_col).cast("array<double>")
-    inverted = corpus.select(
-        F.col(corpus_id).alias("neighbor_id"),
-        v.alias("__cv"),
-        l2_norm(v).alias("__cn"),
-        cell_of(v).alias("__cell"),
+    inverted = _rerank_side(
+        corpus, corpus_id, vec_col, "c", _nearest_cells(centroids)(v).alias("__cell")
     )
-    probed = queries.select(
-        F.col(query_id).alias("query_id"),
-        v.alias("__qv"),
-        l2_norm(v).alias("__qn"),
-        F.explode(probes_of(v)).alias("__cell"),
+    probed = _rerank_side(
+        queries, query_id, vec_col, "q",
+        F.explode(_nearest_cells(centroids, n_probes)(v)).alias("__cell"),
     )
-    scored = probed.join(inverted, "__cell").withColumn(
-        "cos",
-        F.round(dot(F.col("__qv"), F.col("__cv")) / (F.col("__qn") * F.col("__cn")), 6),
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("cos").desc(), "neighbor_id")
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cos", "rank")
-    )
+    return _cos_topk(probed.join(inverted, "__cell"), k)
 
 
 def dedup_corpus_by_embedding(
@@ -612,8 +571,8 @@ def pq_train(
 ):
     """D3 scale path #3 (train): per-subspace k-means codebooks for product
     quantization. The D-dim space splits into ``m_subspaces`` contiguous
-    slices; each slice gets its own ``n_codes``-centroid quantizer (the
-    same bounded-driver Lloyd loop as IVF — only m × n_codes × D/m doubles
+    slices; each slice gets its own ``n_codes``-centroid quantizer, all
+    trained by one :func:`_lloyd` loop (only m × n_codes × D/m doubles
     ever reach the driver).
 
     Returns ``[codebook_0, …]`` — one (n_codes × sub_dim) numpy array per
@@ -624,79 +583,10 @@ def pq_train(
     even IVF's probed cells are too much float traffic — PQ codes are
     m bytes per vector instead of D floats (32× smaller at D=64, m=8).
     """
-    from pyspark import StorageLevel
-    from pyspark.sql.pandas.functions import pandas_udf
-
     dim = len(corpus.select(vec_col).first()[0])
     if dim % m_subspaces:
         raise ValueError(f"dim {dim} not divisible by m_subspaces {m_subspaces}")
-    sub = dim // m_subspaces
-    m = m_subspaces
-    v = F.col(vec_col).cast("array<double>")
-    # ALL subspaces train in the SAME Lloyd loop: one assignment pass and
-    # one (subspace, code, pos) update aggregation per iteration instead of
-    # m separate k-means runs — the per-iteration job count is constant in
-    # m (a naive per-subspace loop was 8× slower wall-clock at sf0.1, pure
-    # job-scheduling overhead). One corpus scan total via persist.
-    vecs = corpus.select(v.alias("v")).persist(StorageLevel.MEMORY_AND_DISK)
-    try:
-        init = (
-            vecs.withColumn("__r", F.xxhash64(F.lit(seed), F.col("v")))
-            .orderBy("__r")
-            .limit(n_codes)
-            .collect()
-        )
-        full = np.stack([np.asarray(r.v) for r in init])  # (n_codes, dim)
-        books = np.stack(
-            [full[:, s * sub : (s + 1) * sub] for s in range(m)]
-        )  # (m, n_codes, sub)
-
-        for _ in range(max_iter):
-            cur = books  # close over this iteration's codebooks
-
-            def assign_and_partial(batches):
-                # assignment AND the mean-update partial aggregation in one
-                # worker pass: each batch emits at most m × n_codes × sub
-                # (sum, n) cells — the map-side combine that keeps the
-                # shuffle O(cells), never O(rows × dim)
-                for pdf in batches:
-                    mat = np.stack(pdf["v"].to_numpy())
-                    sums = np.zeros((m, n_codes, sub))
-                    cnts = np.zeros((m, n_codes), dtype=np.int64)
-                    for si in range(m):
-                        x = mat[:, si * sub : (si + 1) * sub]
-                        cb = cur[si]
-                        d = (x * x).sum(1)[:, None] - 2 * (x @ cb.T) + (cb * cb).sum(1)[None, :]
-                        codes = d.argmin(1)
-                        np.add.at(sums[si], codes, x)
-                        np.add.at(cnts[si], codes, 1)
-                    si_idx, c_idx = np.nonzero(cnts)
-                    rows = {
-                        "s": np.repeat(si_idx, sub).astype("int32"),
-                        "cid": np.repeat(c_idx, sub).astype("int32"),
-                        "sp": np.tile(np.arange(sub, dtype="int32"), len(si_idx)),
-                        "sum": sums[si_idx, c_idx].ravel(),
-                        "n": np.repeat(cnts[si_idx, c_idx], sub),
-                    }
-                    yield pd.DataFrame(rows)
-
-            cells = (
-                vecs.mapInPandas(
-                    assign_and_partial, "s int, cid int, sp int, sum double, n long"
-                )
-                .groupBy("s", "cid", "sp")
-                .agg(F.sum("sum").alias("sum"), F.sum("n").alias("n"))
-                .collect()
-            )
-            new = books.copy()
-            for r in cells:
-                new[r.s, r.cid, r.sp] = r.sum / r.n
-            if np.allclose(new, books):
-                break
-            books = new
-    finally:
-        vecs.unpersist()
-    return [books[s] for s in range(m)]
+    return list(_lloyd(corpus.select(vec_col), n_codes, max_iter, seed, m_subspaces))
 
 
 def pq_encode(
@@ -708,9 +598,9 @@ def pq_encode(
     """D3 scale path #3 (encode): quantize every corpus vector to its
     per-subspace nearest-code ids → (id, codes array<int> of length m).
 
-    One Arrow-batched pandas_udf pass (numpy argmin against the broadcast
-    codebooks); this is the ingest-time path, run once per corpus. The
-    codes table is what query-time touches — m small ints per vector.
+    One Arrow-batched pandas_udf pass; this is the ingest-time path, run
+    once per corpus. The codes table is what query-time touches — m small
+    ints per vector.
     """
     from pyspark.sql.pandas.functions import pandas_udf
 
@@ -723,9 +613,7 @@ def pq_encode(
         mat = np.stack(vecs.to_numpy()).astype(np.float64)
         out = np.empty((mat.shape[0], m), dtype=np.int32)
         for s, cb in enumerate(books):
-            x = mat[:, s * sub : (s + 1) * sub]
-            d = (x * x).sum(1)[:, None] - 2 * (x @ cb.T) + (cb * cb).sum(1)[None, :]
-            out[:, s] = d.argmin(1)
+            out[:, s] = _sq_dists(mat[:, s * sub : (s + 1) * sub], cb).argmin(1)
         return pd.Series(list(out))
 
     v = F.col(vec_col).cast("array<double>")
@@ -809,6 +697,30 @@ def _pq_lut(
     )
 
 
+def _adc_topk(cand: DataFrame, lut: DataFrame, k: int) -> DataFrame:
+    """ADC scoring of candidate code rows (neighbor_id, codes), or
+    (query_id, neighbor_id, codes) when candidates are per query: codes
+    posexplode to (s, code) and equi-join the :func:`_pq_lut` table on
+    every column the two share, one partial+final sum per (query,
+    neighbor) pair, per-query top-k by (approx_sqdist, neighbor_id) →
+    (query_id, neighbor_id, approx_sqdist rounded to 6 dp, rn)."""
+    exploded = cand.select(
+        *[c for c in cand.columns if c != "codes"],
+        F.posexplode("codes").alias("s", "code"),
+    )
+    dists = (
+        exploded.join(lut, [c for c in exploded.columns if c in lut.columns])
+        .groupBy("query_id", "neighbor_id")
+        .agg(F.sum("pd").alias("approx_sqdist"))
+    )
+    w = Window.partitionBy("query_id").orderBy("approx_sqdist", "neighbor_id")
+    return (
+        dists.withColumn("rn", F.row_number().over(w))
+        .filter(F.col("rn") <= k)
+        .select("query_id", "neighbor_id", F.round("approx_sqdist", 6).alias("approx_sqdist"), "rn")
+    )
+
+
 def pq_topk(
     queries: DataFrame,
     corpus_codes: DataFrame,
@@ -820,42 +732,19 @@ def pq_topk(
     max_collect_queries: int = 4096,
 ) -> DataFrame:
     """D3 scale path #3 (query): asymmetric-distance top-k over PQ codes,
-    entirely JVM-side.
+    entirely JVM-side (:func:`_adc_topk` over every corpus code row).
 
-    The per-query lookup table (query_id, subspace, code, partial squared
-    distance) is Q × m × n_codes rows; corpus codes posexplode to
-    (id, subspace, code) and equi-join it, then one partial+final sum per
-    (query, corpus) pair and a per-query top-k window. No vector floats
-    move at query time, no Python in the scoring path; the scan side is
-    the m-byte code table, 32× narrower than the embeddings.
-
-    Two LUT tiers — collected (driver numpy, broadcast) for interactive Q,
-    distributed (codebook literal table × query DataFrame, HOF partial
-    distances, query vectors never leave the cluster) for corpus-scale Q —
-    shared with :func:`ivf_pq_topk` via :func:`_pq_lut`, which documents
-    the tier contract and the ulp-level cross-tier agreement.
+    No vector floats move at query time, no Python in the scoring path;
+    the scan side is the m-byte code table, 32× narrower than the
+    embeddings. The LUT tier (collected for interactive Q, distributed
+    for corpus-scale Q) is :func:`_pq_lut`'s, which documents the tier
+    contract and the ulp-level cross-tier agreement.
     """
     lut = _pq_lut(
         queries, [np.asarray(b) for b in codebooks], query_id, vec_col,
         collect_lut, max_collect_queries,
     )
-
-    exploded = corpus_codes.select(
-        "neighbor_id", F.posexplode("codes").alias("s", "code")
-    )
-    dists = (
-        exploded.join(lut, ["s", "code"])
-        .groupBy("query_id", "neighbor_id")
-        .agg(F.sum("pd").alias("approx_sqdist"))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("approx_sqdist").asc(), F.col("neighbor_id")
-    )
-    return (
-        dists.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .select("query_id", "neighbor_id", F.round("approx_sqdist", 6).alias("approx_sqdist"), "rn")
-    )
+    return _adc_topk(corpus_codes.select("neighbor_id", "codes"), lut, k)
 
 
 # ------------------------------------------------------------ centroid ops
@@ -1125,28 +1014,13 @@ def semantic_dedup(
     array) — skips the training pass. Training is an ingest-time step at
     scale; see ``_models.cached_model`` for the reuse pattern.
     """
-    from pyspark.sql.pandas.functions import pandas_udf
-
     from .dedup import connected_components
 
     if centroids is None:
         if n_clusters is None:
             n_clusters = adaptive_cell_count(df.count())
         centroids = _kmeans_centroids(df, vec_col, n_clusters, max_iter, seed)
-    else:
-        centroids = np.asarray(centroids)
-    n_probe = min(n_assign, len(centroids))
-
-    @pandas_udf("array<int>")
-    def cells_of(vecs: pd.Series) -> pd.Series:
-        mat = np.stack(vecs.to_numpy())
-        d = (
-            (mat * mat).sum(1)[:, None]
-            - 2 * (mat @ centroids.T)
-            + (centroids * centroids).sum(1)[None, :]
-        )
-        order = np.argsort(d, 1)[:, :n_probe].astype("int32")
-        return pd.Series(list(order))
+    cells_of = _nearest_cells(centroids, n_assign)
 
     blocked = df.select(
         F.col(id_col), F.col(vec_col).alias("__v")
@@ -1213,24 +1087,10 @@ def ivf_pq_index_append(
     Arrow-batched encode pass over the new rows only, and appended vectors
     are immediately visible to :func:`ivf_pq_topk` probes. Also the build
     path of :func:`ivf_pq_index` itself (append-to-empty)."""
-    from pyspark.sql.pandas.functions import pandas_udf
-
-    cent = np.asarray(centroids)
-
-    @pandas_udf("int")
-    def cell_of(vecs: pd.Series) -> pd.Series:
-        mat = np.stack(vecs.to_numpy())
-        d = (
-            (mat * mat).sum(1)[:, None]
-            - 2 * (mat @ cent.T)
-            + (cent * cent).sum(1)[None, :]
-        )
-        return pd.Series(d.argmin(1).astype("int32"))
-
     codes = pq_encode(new_vecs, codebooks, corpus_id, vec_col)
     cells = new_vecs.select(
         F.col(corpus_id).alias("neighbor_id"),
-        cell_of(F.col(vec_col).cast("array<double>")).alias("cid"),
+        _nearest_cells(centroids)(F.col(vec_col).cast("array<double>")).alias("cid"),
     )
     return codes.join(cells, "neighbor_id")
 
@@ -1278,52 +1138,23 @@ def ivf_pq_topk(
     two-tier LUT (:func:`_pq_lut`) restricted to the probed candidates —
     large query sets (corpus-vs-corpus semantic dedup) take the
     distributed tier, so no query vector ever lands on the driver.
-    With ``n_probes == n_centroids`` the candidate set is the whole corpus
+    Scoring is :func:`_adc_topk`, the same as :func:`pq_topk`'s. With
+    ``n_probes == n_centroids`` the candidate set is the whole corpus
     and the result equals plain ``pq_topk`` (pinned in tests, profile
     compare) — the probe cutoff is the ONLY approximation this tier adds
     over PQ.
     """
-    from pyspark.sql.pandas.functions import pandas_udf
-
-    cent = np.asarray(centroids)
-    n_probes = min(n_probes, len(cent))
-    books = [np.asarray(b) for b in codebooks]
-
-    @pandas_udf("array<int>")
-    def probes_of(vecs: pd.Series) -> pd.Series:
-        mat = np.stack(vecs.to_numpy())
-        d = (
-            (mat * mat).sum(1)[:, None]
-            - 2 * (mat @ cent.T)
-            + (cent * cent).sum(1)[None, :]
-        )
-        order = np.argsort(d, 1)[:, :n_probes].astype("int32")
-        return pd.Series(list(order))
-
-    qv = queries.select(
+    probed = queries.select(
         F.col(query_id).alias("query_id"),
-        F.col(vec_col).cast("array<double>").alias("__qv"),
-    )
-    probed = qv.select(
-        "query_id", F.explode(probes_of("__qv")).alias("cid")
+        F.explode(
+            _nearest_cells(centroids, n_probes)(F.col(vec_col).cast("array<double>"))
+        ).alias("cid"),
     )
     # candidate codes: only rows of probed (query, cell) pairs survive
     cand = index_df.join(probed, "cid").select("query_id", "neighbor_id", "codes")
-
+    books = [np.asarray(b) for b in codebooks]
     lut = _pq_lut(queries, books, query_id, vec_col, collect_lut, max_collect_queries)
-    exploded = cand.select(
-        "query_id", "neighbor_id", F.posexplode("codes").alias("s", "code")
-    )
-    dists = (
-        exploded.join(lut, ["query_id", "s", "code"])
-        .groupBy("query_id", "neighbor_id")
-        .agg(F.sum("pd").alias("approx_sqdist"))
-    )
-    w = Window.partitionBy("query_id").orderBy("approx_sqdist", "neighbor_id")
-    return (
-        dists.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-    )
+    return _adc_topk(cand, lut, k)
 
 
 def _per_dim_arrays(emb: DataFrame, vec_col: str, aggs: dict) -> DataFrame:

@@ -554,3 +554,19 @@ def test_kcore_peeling_depth_budget_on_chain(spark):
             graph.kcore(chain, k=2, max_iter=5, local_threshold=thr)
         # 41-node path: ends peel pairwise -> depth 20; budget 25 clears
         assert graph.kcore(chain, k=2, max_iter=25, local_threshold=thr).count() == 0
+
+
+def test_hamming_near_pairs_bucket_cap(spark):
+    """max_bucket_size on the Hamming banding: every band bucket of an
+    identical-signature cluster holds the whole cluster, so a cluster
+    larger than the cap yields no pairs and one at the cap yields all of
+    them."""
+    cap = 5
+    rows = [(i, 0) for i in range(cap)] + [(100 + i, -1) for i in range(cap + 1)]
+    sigs = spark.createDataFrame(rows, "id long, sig long")
+    at_cap = {(a, b, 0) for a in range(cap) for b in range(a + 1, cap)}
+
+    got = dedup.hamming_near_pairs(sigs, "id", "sig", max_hamming=3, max_bucket_size=cap)
+    assert {tuple(r) for r in got.collect()} == at_cap
+    uncapped = dedup.hamming_near_pairs(sigs, "id", "sig", max_hamming=3)
+    assert uncapped.count() == len(at_cap) + (cap + 1) * cap // 2

@@ -700,3 +700,116 @@ def test_double_literal_numpy2_safe():
     assert "np." not in lit
     # tiny magnitudes keep the quoted-cast form that parses sci notation
     assert _double_literal(Numpy2Scalar(1e-07)) == "cast('1e-07' as double)"
+
+
+def test_lsh_tiers_accept_any_embedding_width(spark):
+    """Both hyperplane-LSH entry points size their planes from the
+    embedding width of the batch, so 16-dim vectors work: each base
+    vector has a near-twin with another label, LSH finds the exact top-2
+    (self, twin) and the twin is every base's hard negative."""
+    import numpy as np
+
+    rng = np.random.default_rng(0)
+    base = rng.normal(size=(20, 16))
+    twin = base + rng.normal(scale=0.01, size=base.shape)
+    rows = [(i, i % 3, v.tolist()) for i, v in enumerate(base)] + [
+        (20 + i, i % 3 + 1, v.tolist()) for i, v in enumerate(twin)
+    ]
+    corpus = spark.createDataFrame(rows, "vec_id long, label int, embedding array<float>")
+    queries = corpus.filter(F.col("vec_id") < 20)
+    pairs = lambda df: {(r.query_id, r.neighbor_id) for r in df.collect()}
+
+    exact = similarity.cosine_topk_bruteforce(queries, corpus, "vec_id", "vec_id", k=2)
+    ann = similarity.cosine_topk_lsh(queries, corpus, "vec_id", "vec_id", k=2)
+    assert pairs(ann) == pairs(exact) == {(i, j) for i in range(20) for j in (i, 20 + i)}
+
+    hn = similarity.hard_negatives(
+        queries, corpus, "vec_id", "vec_id", k=1, max_broadcast_queries=0
+    )
+    assert pairs(hn) == {(i, 20 + i) for i in range(20)}
+
+
+def _sq(x, c):
+    """Squared L2 by direct differences — independent of the kernel's
+    expansion form."""
+    import numpy as np
+
+    return ((x[:, None, :] - np.asarray(c)[None, :, :]) ** 2).sum(-1)
+
+
+def _numpy_lloyd(x, init, m, max_iter):
+    """Reference Lloyd loop: m contiguous subspaces, mean update, a cell
+    with no members keeps its centroid, stop when allclose."""
+    import numpy as np
+
+    sub = x.shape[1] // m
+    books = np.stack([init[:, s * sub : (s + 1) * sub] for s in range(m)])
+    for _ in range(max_iter):
+        new = books.copy()
+        for s in range(m):
+            xs = x[:, s * sub : (s + 1) * sub]
+            cells = _sq(xs, books[s]).argmin(1)
+            for c in np.unique(cells):
+                new[s, c] = xs[cells == c].mean(0)
+        if np.allclose(new, books):
+            break
+        books = new
+    return books
+
+
+def test_kmeans_and_pq_train_match_numpy_lloyd(spark, emb):
+    """The one distributed Lloyd loop, trained as the IVF coarse quantizer
+    (one subspace) and as PQ codebooks (8 subspaces), equals a pure-numpy
+    Lloyd run from the same init rows (the 16 smallest xxhash64(seed, v));
+    the Spark-side assignments (cell UDF, PQ encode) equal numpy argmins
+    against the reference centroids."""
+    import numpy as np
+
+    v = emb.select("vec_id", F.col("embedding").cast("array<double>").alias("v"))
+    init_rows = (
+        v.withColumn("__r", F.xxhash64(F.lit(42), F.col("v"))).orderBy("__r").limit(16).collect()
+    )
+    init = np.stack([np.asarray(r.v) for r in init_rows])
+    data = v.orderBy("vec_id").collect()
+    x = np.stack([np.asarray(r.v) for r in data])
+
+    cent = similarity._kmeans_centroids(emb, "embedding", 16, 5, 42)
+    ref = _numpy_lloyd(x, init, 1, 5)[0]
+    assert np.allclose(cent, ref, rtol=1e-9, atol=0)
+    cells = v.select(
+        "vec_id", similarity._nearest_cells(cent)(F.col("v")).alias("c")
+    ).orderBy("vec_id")
+    assert [r.c for r in cells.collect()] == _sq(x, ref).argmin(1).tolist()
+
+    books = similarity.pq_train(emb, "embedding", m_subspaces=8, n_codes=16)
+    ref_books = _numpy_lloyd(x, init, 8, 5)
+    assert np.allclose(np.stack(books), ref_books, rtol=1e-9, atol=0)
+    codes = similarity.pq_encode(emb, books, "vec_id").orderBy("neighbor_id")
+    want = np.stack(
+        [_sq(x[:, s * 8 : (s + 1) * 8], ref_books[s]).argmin(1) for s in range(8)], 1
+    )
+    assert [list(r.codes) for r in codes.collect()] == want.tolist()
+
+
+def test_ivf_pq_index_append_layout_matches_numpy(spark, emb):
+    """The persisted IVF-PQ row layout (what stream_into_ann_index appends
+    to existing indexes): against fixed numpy-built quantizers, every row
+    is (neighbor_id, codes, cid) with cid the nearest centroid and codes
+    the per-subspace nearest code ids."""
+    import numpy as np
+
+    rng = np.random.default_rng(7)
+    cent = rng.normal(scale=0.2, size=(8, 64))
+    books = [rng.normal(scale=0.2, size=(16, 8)) for _ in range(8)]
+    out = similarity.ivf_pq_index_append(emb, cent, books, "vec_id")
+    assert out.schema.simpleString() == "struct<neighbor_id:bigint,codes:array<int>,cid:int>"
+
+    data = emb.orderBy("vec_id").collect()
+    x = np.stack([np.asarray(r.embedding, dtype=np.float64) for r in data])
+    cids = _sq(x, cent).argmin(1)
+    codes = np.stack([_sq(x[:, s * 8 : (s + 1) * 8], books[s]).argmin(1) for s in range(8)], 1)
+    want = [
+        (r.vec_id, int(c), [int(k) for k in cs]) for r, c, cs in zip(data, cids, codes)
+    ]
+    got = sorted((r.neighbor_id, r.cid, list(r.codes)) for r in out.collect())
+    assert got == want
