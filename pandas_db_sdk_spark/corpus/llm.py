@@ -5407,12 +5407,13 @@ def d121(spark, sf_dir):
     (SOF2, T.81 §G) web images actually ship: a DC scan followed by
     spectral-selection AC band scans (1–5, 6–63 here), each a
     non-interleaved single-component entropy segment, coefficients
-    ACCUMULATED across scans before one dequant/IDCT.  The decoder
-    (``_jpeg_decode_gray_progressive``) walks every scan header,
+    ACCUMULATED across scans before one dequant/IDCT.  The one JPEG
+    decoder (``multimodal._jpeg_decode``) walks every scan header,
     handles general EOBRUN (EOBn symbols skipping 2ⁿ+ext end-of-band
-    blocks), enforces the spec's one-scan-per-coefficient rule, and
-    skips successive-approximation scans (Ah/Al ≠ 0 — the documented
-    next rung) rather than mis-decoding them.  The oracle is d108's
+    blocks), tracks each coefficient's successive-approximation depth
+    (a first scan delivers it once, refinements one bit each), and
+    rejects a script that leaves any coefficient unfinished.  The
+    oracle is d108's
     VERBATIM (the d118/d120 isolation discipline): scan structure must
     be result-invisible, so a band-bookkeeping slip, EOBRUN
     miscount, or DC-chain break isolates to this row while d108/d118
@@ -5587,9 +5588,9 @@ def d126(spark, sf_dir):
     color progressive genuinely different from grayscale (d121): a
     decoder that walks AC scans in MCU order, mixes predictor chains,
     or uses the luma raster for chroma shears whole planes.
-    Coefficients accumulate across scans before the SHARED 4:2:0
-    reconstruction (``_jpeg_color_reconstruct``); an incomplete scan
-    script (missing any AC component) is REJECTED.  Oracle is d110's
+    Coefficients accumulate across scans before the 4:2:0
+    reconstruction of the one JPEG decoder (``multimodal._jpeg_decode``);
+    an incomplete scan script (missing any AC component) is REJECTED.  Oracle is d110's
     VERBATIM (neutral-chroma exactness + result-invisible scan
     structure); random-chroma grids are unit-pinned against the
     baseline decoder.  Scale: two chained mapInPandas stages, zero

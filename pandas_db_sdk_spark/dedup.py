@@ -155,15 +155,6 @@ def _minhash_signature_agg(
     return exploded.groupBy("__id").agg(*_min_hash_exprs(n_hashes))
 
 
-def minhash_signature(df: DataFrame, id_col: str, text_col: str, n_hashes: int = 64, shingle: int = 3) -> DataFrame:
-    """MinHash signatures: (id, __minhash array<long> of length n_hashes)."""
-    agg = _minhash_signature_agg(df, id_col, text_col, n_hashes, shingle)
-    return agg.select(
-        F.col("__id").alias(id_col),
-        F.array(*[f"__mh{i}" for i in range(n_hashes)]).alias("__minhash"),
-    )
-
-
 def minhash_lsh_pairs(
     df: DataFrame,
     id_col: str,
@@ -845,24 +836,6 @@ def ngram_jaccard_consecutive(df: DataFrame, id_col: str, text_col: str, n: int 
     inter = F.size(F.array_intersect("g_a", "g_b")).cast("double")
     union = F.size(F.array_union("g_a", "g_b")).cast("double")
     return j.select("id_a", "id_b", F.round(inter / union, 6).alias("ngram_jaccard"))
-
-
-def token_jaccard_consecutive(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """D2: token-set Jaccard between consecutive ids (id, id+1) — a bounded,
-    oracle-checkable pairing that exercises the set arithmetic."""
-    toks = df.select(
-        F.col(id_col).alias("id_a"),
-        F.array_distinct(F.split(F.col(text_col), " ")).alias("t_a"),
-    )
-    toks_b = df.select(
-        (F.col(id_col) - 1).alias("id_a"),
-        F.col(id_col).alias("id_b"),
-        F.array_distinct(F.split(F.col(text_col), " ")).alias("t_b"),
-    )
-    j = toks.join(toks_b, "id_a")
-    inter = F.size(F.array_intersect("t_a", "t_b")).cast("double")
-    union = F.size(F.array_union("t_a", "t_b")).cast("double")
-    return j.select("id_a", "id_b", F.round(inter / union, 6).alias("jaccard"))
 
 
 def cross_jaccard_pairs(

@@ -21,7 +21,6 @@ work is directory listing and renames (metadata ops).
 from __future__ import annotations
 
 import glob
-import gzip
 import os
 import shutil
 import urllib.parse
@@ -141,7 +140,3 @@ def export_reference_layout(
         "null_partitions_skipped": n_null_skipped,
     }
 
-
-def _read_chunk_header(path: str) -> str:
-    with gzip.open(path, "rt") as f:
-        return f.readline().strip()

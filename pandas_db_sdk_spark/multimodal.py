@@ -108,6 +108,43 @@ def frame_sample_plan(df: DataFrame, every_n: int = 10) -> DataFrame:
     return df.select("doc_id", F.explode(idx).alias("frame_idx"))
 
 
+def _synth_payloads(df: DataFrame, id_col: str, make) -> DataFrame:
+    """The (id, payload binary) frame of a ``synth_*`` fixture: one
+    ``make(i) -> bytes`` call per id, as Arrow-batched mapInPandas
+    (binary construction is Python-side by design — the UDF tier of the
+    multimodal surface)."""
+
+    def payloads(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            yield pd.DataFrame(
+                [(int(i), make(int(i))) for i in pdf[id_col]],
+                columns=[id_col, "payload"],
+            )
+
+    return df.select(id_col).mapInPandas(payloads, f"{id_col} long, payload binary")
+
+
+def _pattern_rgb(i: int, w: int, h: int):
+    """The d93 test frame: (h, w, 3) uint8 with pixel (x, y, c) =
+    (7·i + 3·x + 5·y + 11·c) mod 256 — shared by the raw, BMP/PPM and
+    PNG fixtures, so every image oracle replays one formula."""
+    import numpy as np
+
+    y, x, c = np.meshgrid(np.arange(h), np.arange(w), np.arange(3), indexing="ij")
+    return ((7 * i + 3 * x + 5 * y + 11 * c) % 256).astype(np.uint8)
+
+
+def _wav_pcm16(data: bytes, sr: int, ch: int = 1) -> bytes:
+    """A RIFF/WAVE file around 16-bit little-endian PCM ``data``: the
+    fmt chunk (PCM, ``ch`` channels at ``sr`` Hz) and one data chunk."""
+    import struct
+
+    fmt = struct.pack("<HHIIHH", 1, ch, sr, sr * ch * 2, ch * 2, 16)
+    body = b"WAVEfmt " + struct.pack("<I", 16) + fmt
+    body += b"data" + struct.pack("<I", len(data)) + data
+    return b"RIFF" + struct.pack("<I", len(body)) + body
+
+
 def synth_media_payload(
     df: DataFrame, id_col: str = "doc_id", kinds: int = 3
 ) -> DataFrame:
@@ -127,97 +164,78 @@ def synth_media_payload(
     Runs as Arrow-batched mapInPandas (binary construction is Python-side
     by design — this IS the UDF tier of the multimodal surface)."""
 
-    def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import struct
-        import zlib
+    import struct
+    import zlib
 
-        def png(i: int) -> bytes:
-            w, h = 16 + i % 64, 16 + (i * 7) % 64
-            ihdr = struct.pack(">IIBBBBB", w, h, 8, 2, 0, 0, 0)
-            chunk = b"IHDR" + ihdr
-            return (
-                b"\x89PNG\r\n\x1a\n"
-                + struct.pack(">I", 13)
-                + chunk
-                + struct.pack(">I", zlib.crc32(chunk) & 0xFFFFFFFF)
-            )
+    def png(i: int) -> bytes:
+        w, h = 16 + i % 64, 16 + (i * 7) % 64
+        ihdr = struct.pack(">IIBBBBB", w, h, 8, 2, 0, 0, 0)
+        chunk = b"IHDR" + ihdr
+        return (
+            b"\x89PNG\r\n\x1a\n"
+            + struct.pack(">I", 13)
+            + chunk
+            + struct.pack(">I", zlib.crc32(chunk) & 0xFFFFFFFF)
+        )
 
-        def box(btype: bytes, payload: bytes) -> bytes:
-            return struct.pack(">I", 8 + len(payload)) + btype + payload
+    def box(btype: bytes, payload: bytes) -> bytes:
+        return struct.pack(">I", 8 + len(payload)) + btype + payload
 
-        def mp4(i: int) -> bytes:
-            timescale, dur_s = 600, 5 + i % 20
-            w, h = 320 + (i % 16) * 16, 240 + (i * 3 % 16) * 16
-            mvhd = box(
-                b"mvhd",
-                b"\x00\x00\x00\x00"  # version 0 + flags
-                + struct.pack(">II", 0, 0)  # creation/modification
-                + struct.pack(">II", timescale, timescale * dur_s)
-                + b"\x00" * 80,  # rate/volume/reserved/matrix/predefines/next-track
-            )
-            tkhd = box(
-                b"tkhd",
-                b"\x00\x00\x00\x07"  # version 0 + enabled flags
-                + struct.pack(">IIII", 0, 0, 1, 0)  # times, track id, reserved
-                + struct.pack(">I", timescale * dur_s)
-                + b"\x00" * 52  # reserved/layer/volume/matrix
-                + struct.pack(">II", w << 16, h << 16),  # 16.16 fixed point
-            )
-            moov = box(b"moov", mvhd + box(b"trak", tkhd))
-            ftyp = box(b"ftyp", b"isom" + struct.pack(">I", 512) + b"isomiso2")
-            return ftyp + moov
+    def mp4(i: int) -> bytes:
+        timescale, dur_s = 600, 5 + i % 20
+        w, h = 320 + (i % 16) * 16, 240 + (i * 3 % 16) * 16
+        mvhd = box(
+            b"mvhd",
+            b"\x00\x00\x00\x00"  # version 0 + flags
+            + struct.pack(">II", 0, 0)  # creation/modification
+            + struct.pack(">II", timescale, timescale * dur_s)
+            + b"\x00" * 80,  # rate/volume/reserved/matrix/predefines/next-track
+        )
+        tkhd = box(
+            b"tkhd",
+            b"\x00\x00\x00\x07"  # version 0 + enabled flags
+            + struct.pack(">IIII", 0, 0, 1, 0)  # times, track id, reserved
+            + struct.pack(">I", timescale * dur_s)
+            + b"\x00" * 52  # reserved/layer/volume/matrix
+            + struct.pack(">II", w << 16, h << 16),  # 16.16 fixed point
+        )
+        moov = box(b"moov", mvhd + box(b"trak", tkhd))
+        ftyp = box(b"ftyp", b"isom" + struct.pack(">I", 512) + b"isomiso2")
+        return ftyp + moov
 
-        def jpeg(i: int) -> bytes:
-            w, h = 32 + i % 96, 32 + (i * 5) % 96
-            app0 = b"\xff\xe0" + struct.pack(">H", 16) + b"JFIF\x00" + bytes(
-                [1, 1, 0]
-            ) + struct.pack(">HH", 1, 1) + bytes([0, 0])
-            comps = b"".join(bytes([c, 0x11, 0]) for c in (1, 2, 3))
-            sof0 = (
-                b"\xff\xc0"
-                + struct.pack(">H", 8 + len(comps))
-                + bytes([8])
-                + struct.pack(">HH", h, w)
-                + bytes([3])
-                + comps
-            )
-            return b"\xff\xd8" + app0 + sof0 + b"\xff\xd9"
+    def jpeg(i: int) -> bytes:
+        w, h = 32 + i % 96, 32 + (i * 5) % 96
+        app0 = b"\xff\xe0" + struct.pack(">H", 16) + b"JFIF\x00" + bytes(
+            [1, 1, 0]
+        ) + struct.pack(">HH", 1, 1) + bytes([0, 0])
+        comps = b"".join(bytes([c, 0x11, 0]) for c in (1, 2, 3))
+        sof0 = (
+            b"\xff\xc0"
+            + struct.pack(">H", 8 + len(comps))
+            + bytes([8])
+            + struct.pack(">HH", h, w)
+            + bytes([3])
+            + comps
+        )
+        return b"\xff\xd8" + app0 + sof0 + b"\xff\xd9"
 
-        def wav(i: int) -> bytes:
-            ch = 1 + i % 2
-            sr = 8000 + (i % 8) * 1000
-            n_samples = 1000 + i % 100
-            data = b"\x00" * (n_samples * ch * 2)
-            fmt = struct.pack("<HHIIHH", 1, ch, sr, sr * ch * 2, ch * 2, 16)
-            body = b"WAVEfmt " + struct.pack("<I", 16) + fmt
-            body += b"data" + struct.pack("<I", len(data)) + data
-            return b"RIFF" + struct.pack("<I", len(body)) + body
+    def wav(i: int) -> bytes:
+        ch = 1 + i % 2
+        sr = 8000 + (i % 8) * 1000
+        n_samples = 1000 + i % 100
+        return _wav_pcm16(b"\x00" * (n_samples * ch * 2), sr, ch)
 
-        for pdf in batches:
-            ids = pdf[id_col].astype(int)
-            yield pd.DataFrame(
-                {
-                    id_col: ids,
-                    "payload": [
-                        (
-                            png(i) if i % 3 == 0 else wav(i) if i % 3 == 1 else mp4(i)
-                        )
-                        if kinds == 3
-                        else (
-                            png(i)
-                            if i % 4 == 0
-                            else wav(i)
-                            if i % 4 == 1
-                            else mp4(i)
-                            if i % 4 == 2
-                            else jpeg(i)
-                        )
-                        for i in ids
-                    ],
-                }
-            )
+    def payload(i: int) -> bytes:
+        if kinds == 3:
+            return png(i) if i % 3 == 0 else wav(i) if i % 3 == 1 else mp4(i)
+        return (
+            png(i) if i % 4 == 0
+            else wav(i) if i % 4 == 1
+            else mp4(i) if i % 4 == 2
+            else jpeg(i)
+        )
 
-    return df.select(id_col).mapInPandas(build, f"{id_col} long, payload binary")
+    return _synth_payloads(df, id_col, payload)
 
 
 def parse_media_headers(
@@ -247,19 +265,12 @@ def parse_media_headers(
                 if chunk[:4] == b"IHDR" and zlib.crc32(chunk) & 0xFFFFFFFF == crc:
                     w, h, depth = struct.unpack(">IIB", chunk[4:13])
                     return ("png", w, h, depth, None, None, None)
-            if b[:2] == b"\xff\xd8":
-                # JPEG: scan markers for a start-of-frame (SOF0/1/2) header
-                pos = 2
-                while pos + 4 <= len(b) and b[pos] == 0xFF:
-                    m = b[pos + 1]
-                    if m == 0xD9:
-                        break
-                    (seg,) = struct.unpack(">H", b[pos + 2 : pos + 4])
-                    if m in (0xC0, 0xC1, 0xC2) and pos + 9 <= len(b):
-                        prec = b[pos + 4]
-                        h, w = struct.unpack(">HH", b[pos + 5 : pos + 9])
-                        return ("jpeg", w, h, prec, None, None, None)
-                    pos += 2 + seg
+            # JPEG: the first start-of-frame (SOF0/1/2) header
+            for m, pos, _ in _jpeg_segments(b):
+                if m in (0xC0, 0xC1, 0xC2) and pos + 9 <= len(b):
+                    prec = b[pos + 4]
+                    h, w = struct.unpack(">HH", b[pos + 5 : pos + 9])
+                    return ("jpeg", w, h, prec, None, None, None)
             if b[:4] == b"RIFF" and b[8:12] == b"WAVE":
                 pos, sr, ch, bits, data_len = 12, None, None, None, None
                 while pos + 8 <= len(b):
@@ -340,16 +351,10 @@ def synth_raw_rgb(
     Arrow-batched mapInPandas, same contract as ``synth_media_payload``."""
 
     def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        y, x, c = np.meshgrid(
-            np.arange(height), np.arange(width), np.arange(3), indexing="ij"
-        )
-        base = (3 * x + 5 * y + 11 * c).astype(np.int64)
         for pdf in batches:
             out = []
             for i in pdf[id_col]:
-                arr = ((7 * int(i) + base) % 256).astype(np.uint8)
+                arr = _pattern_rgb(int(i), width, height)
                 out.append((int(i), width, height, arr.tobytes()))
             yield pd.DataFrame(
                 out, columns=[id_col, "width", "height", "payload"]
@@ -375,16 +380,10 @@ def synth_raw_rgb_swapped(
     inside Hamming ≤ 3 of its original, so banding must pair them."""
 
     def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        y, x, c = np.meshgrid(
-            np.arange(height), np.arange(width), np.arange(3), indexing="ij"
-        )
-        base = (3 * x + 5 * y + 11 * c).astype(np.int64)
         for pdf in batches:
             out = []
             for i in pdf[id_col]:
-                arr = ((7 * int(i) + base) % 256).astype(np.uint8)
+                arr = _pattern_rgb(int(i), width, height)
                 corner = arr[0, 0, :].copy()
                 arr[0, 0, :] = arr[height - 1, width - 1, :]
                 arr[height - 1, width - 1, :] = corner
@@ -412,42 +411,30 @@ def synth_bmp_ppm(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
 
     Arrow-batched mapInPandas, same contract as ``synth_media_payload``."""
 
-    def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import struct
+    import struct
 
-        import numpy as np
+    import numpy as np
 
-        def pixels(i: int, w: int, h: int) -> "np.ndarray":
-            y, x, c = np.meshgrid(
-                np.arange(h), np.arange(w), np.arange(3), indexing="ij"
-            )
-            return ((7 * i + 3 * x + 5 * y + 11 * c) % 256).astype(np.uint8)
+    def bmp(i: int, w: int, h: int) -> bytes:
+        bgr = _pattern_rgb(i, w, h)[:, :, ::-1]  # BMP stores blue-green-red
+        row_len = (w * 3 + 3) // 4 * 4
+        rows = np.zeros((h, row_len), dtype=np.uint8)
+        rows[:, : w * 3] = bgr.reshape(h, w * 3)
+        pix = rows[::-1].tobytes()  # bottom-up row order
+        info = struct.pack(
+            "<IiiHHIIiiII", 40, w, h, 1, 24, 0, len(pix), 2835, 2835, 0, 0
+        )
+        head = struct.pack("<2sIHHI", b"BM", 14 + 40 + len(pix), 0, 0, 54)
+        return head + info + pix
 
-        def bmp(i: int, w: int, h: int) -> bytes:
-            rgb = pixels(i, w, h)
-            bgr = rgb[:, :, ::-1]  # BMP stores blue-green-red
-            row_len = (w * 3 + 3) // 4 * 4
-            rows = np.zeros((h, row_len), dtype=np.uint8)
-            rows[:, : w * 3] = bgr.reshape(h, w * 3)
-            pix = rows[::-1].tobytes()  # bottom-up row order
-            info = struct.pack(
-                "<IiiHHIIiiII", 40, w, h, 1, 24, 0, len(pix), 2835, 2835, 0, 0
-            )
-            head = struct.pack("<2sIHHI", b"BM", 14 + 40 + len(pix), 0, 0, 54)
-            return head + info + pix
+    def ppm(i: int, w: int, h: int) -> bytes:
+        return f"P6\n{w} {h}\n255\n".encode() + _pattern_rgb(i, w, h).tobytes()
 
-        def ppm(i: int, w: int, h: int) -> bytes:
-            return f"P6\n{w} {h}\n255\n".encode() + pixels(i, w, h).tobytes()
+    def image(i: int) -> bytes:
+        w, h = 5 + i % 8, 4 + (3 * i) % 8
+        return bmp(i, w, h) if i % 2 == 0 else ppm(i, w, h)
 
-        for pdf in batches:
-            ids = pdf[id_col].astype(int)
-            out = []
-            for i in ids:
-                w, h = 5 + i % 8, 4 + (3 * i) % 8
-                out.append((int(i), bmp(i, w, h) if i % 2 == 0 else ppm(i, w, h)))
-            yield pd.DataFrame(out, columns=[id_col, "payload"])
-
-    return df.select(id_col).mapInPandas(build, f"{id_col} long, payload binary")
+    return _synth_payloads(df, id_col, image)
 
 
 # Adam7 pass geometry: (x0, y0, dx, dy) per pass, PNG spec §8.2
@@ -782,29 +769,15 @@ def synth_png(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
 
     Arrow-batched mapInPandas, same contract as ``synth_media_payload``."""
 
-    def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    def png(i: int) -> bytes:
+        w, h = 6 + i % 7, 5 + (2 * i) % 7
+        return _png_encode_rgb(
+            _pattern_rgb(i, w, h),
+            lambda y: (i + y) % 5,
+            idat_split=i % 3 == 0,
+        )
 
-        def pixels(i: int, w: int, h: int) -> "np.ndarray":
-            y, x, c = np.meshgrid(
-                np.arange(h), np.arange(w), np.arange(3), indexing="ij"
-            )
-            return ((7 * i + 3 * x + 5 * y + 11 * c) % 256).astype(np.uint8)
-
-        def png(i: int) -> bytes:
-            w, h = 6 + i % 7, 5 + (2 * i) % 7
-            return _png_encode_rgb(
-                pixels(i, w, h), lambda y: (i + y) % 5, idat_split=i % 3 == 0
-            )
-
-        for pdf in batches:
-            ids = pdf[id_col].astype(int)
-            yield pd.DataFrame(
-                [(int(i), png(int(i))) for i in ids],
-                columns=[id_col, "payload"],
-            )
-
-    return df.select(id_col).mapInPandas(build, f"{id_col} long, payload binary")
+    return _synth_payloads(df, id_col, png)
 
 
 def synth_png_adam7(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -816,32 +789,16 @@ def synth_png_adam7(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     a pass-geometry or scatter bug breaks d120 while d105 stays green.
     Arrow-batched mapInPandas."""
 
-    def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    def png(i: int) -> bytes:
+        w, h = 6 + i % 7, 5 + (2 * i) % 7
+        return _png_encode_rgb(
+            _pattern_rgb(i, w, h),
+            lambda y: (i + y) % 5,
+            idat_split=i % 3 == 0,
+            interlace=True,
+        )
 
-        def pixels(i: int, w: int, h: int) -> "np.ndarray":
-            y, x, c = np.meshgrid(
-                np.arange(h), np.arange(w), np.arange(3), indexing="ij"
-            )
-            return ((7 * i + 3 * x + 5 * y + 11 * c) % 256).astype(np.uint8)
-
-        def png(i: int) -> bytes:
-            w, h = 6 + i % 7, 5 + (2 * i) % 7
-            return _png_encode_rgb(
-                pixels(i, w, h),
-                lambda y: (i + y) % 5,
-                idat_split=i % 3 == 0,
-                interlace=True,
-            )
-
-        for pdf in batches:
-            ids = pdf[id_col].astype(int)
-            yield pd.DataFrame(
-                [(int(i), png(int(i))) for i in ids],
-                columns=[id_col, "payload"],
-            )
-
-    return df.select(id_col).mapInPandas(build, f"{id_col} long, payload binary")
+    return _synth_payloads(df, id_col, png)
 
 
 def synth_png_palette(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -852,32 +809,16 @@ def synth_png_palette(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     be RESULT-INVISIBLE, so d122 reuses d105's oracle verbatim.
     Arrow-batched mapInPandas."""
 
-    def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    def png(i: int) -> bytes:
+        w, h = 6 + i % 7, 5 + (2 * i) % 7
+        return _png_encode_rgb(
+            _pattern_rgb(i, w, h),
+            lambda y: (i + y) % 5,
+            idat_split=i % 3 == 0,
+            palette=True,
+        )
 
-        def pixels(i: int, w: int, h: int) -> "np.ndarray":
-            y, x, c = np.meshgrid(
-                np.arange(h), np.arange(w), np.arange(3), indexing="ij"
-            )
-            return ((7 * i + 3 * x + 5 * y + 11 * c) % 256).astype(np.uint8)
-
-        def png(i: int) -> bytes:
-            w, h = 6 + i % 7, 5 + (2 * i) % 7
-            return _png_encode_rgb(
-                pixels(i, w, h),
-                lambda y: (i + y) % 5,
-                idat_split=i % 3 == 0,
-                palette=True,
-            )
-
-        for pdf in batches:
-            ids = pdf[id_col].astype(int)
-            yield pd.DataFrame(
-                [(int(i), png(int(i))) for i in ids],
-                columns=[id_col, "payload"],
-            )
-
-    return df.select(id_col).mapInPandas(build, f"{id_col} long, payload binary")
+    return _synth_payloads(df, id_col, png)
 
 
 def synth_png_16bit(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -889,35 +830,89 @@ def synth_png_16bit(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     is d105's with every value scaled 257× — bit depth must change the
     VALUES exactly and nothing else.  Arrow-batched mapInPandas."""
 
-    def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    import numpy as np
+
+    def png(i: int) -> bytes:
+        w, h = 6 + i % 7, 5 + (2 * i) % 7
+        return _png_encode_rgb(
+            _pattern_rgb(i, w, h).astype(np.uint16) * 257,
+            lambda y: (i + y) % 5,
+            idat_split=i % 3 == 0,
+            interlace=i % 2 == 1,
+            depth16=True,
+        )
+
+    return _synth_payloads(df, id_col, png)
+
+
+def _image_stats(
+    df: DataFrame, decode, payload_col: str, id_col: str
+) -> DataFrame:
+    """The image-tier stats frame: ``decode(bytes) -> (format, img) |
+    None`` per payload, img an (h, w) or (h, w, 3) pixel grid, then one
+    row per (image, channel) — mean, min, max, population std and the
+    POSITION-WEIGHTED checksum ``pos_sum = Σ v(x,y)·(x+1)·(y+2)``.  The
+    channel means alone would certify the channel order but not the
+    geometry (a row flip permutes pixels within a channel, leaving every
+    order-free statistic unchanged); pos_sum is the statistic a
+    mis-flipped, mis-padded or mis-strided decode cannot fake.  Integer
+    sums are exact, so an oracle replays them arithmetically.  Pure
+    mapInPandas over Arrow batches, zero shuffles."""
+
+    def stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import numpy as np
 
-        def pixels16(i: int, w: int, h: int) -> "np.ndarray":
-            y, x, c = np.meshgrid(
-                np.arange(h), np.arange(w), np.arange(3), indexing="ij"
-            )
-            return (((7 * i + 3 * x + 5 * y + 11 * c) % 256) * 257).astype(
-                np.uint16
-            )
-
-        def png(i: int) -> bytes:
-            w, h = 6 + i % 7, 5 + (2 * i) % 7
-            return _png_encode_rgb(
-                pixels16(i, w, h),
-                lambda y: (i + y) % 5,
-                idat_split=i % 3 == 0,
-                interlace=i % 2 == 1,
-                depth16=True,
-            )
-
         for pdf in batches:
-            ids = pdf[id_col].astype(int)
+            rows = []
+            for i, buf in zip(pdf[id_col], pdf[payload_col]):
+                # belt-and-braces: ANY parse failure degrades to skip
+                # (the parse_media_headers contract), never an executor
+                # error — the decoders' explicit guards cover the known
+                # malformed shapes; this catches the unknown ones
+                try:
+                    got = decode(bytes(buf))
+                except Exception:
+                    got = None
+                if got is None:
+                    continue
+                fmt, img = got
+                h, w = img.shape[0], img.shape[1]
+                arr = img.astype(np.int64).reshape(h, w, -1)
+                n = w * h
+                xw = np.arange(w) + 1
+                yw = np.arange(h) + 2
+                wgt = yw[:, None] * xw[None, :]
+                for ch in range(arr.shape[2]):
+                    v = arr[:, :, ch]
+                    s, ss = int(v.sum()), int((v * v).sum())
+                    mean = s / n
+                    rows.append(
+                        (
+                            int(i),
+                            fmt,
+                            w,
+                            h,
+                            ch,
+                            round(mean, 6),
+                            int(v.min()),
+                            int(v.max()),
+                            round((ss / n - mean * mean) ** 0.5, 6),
+                            int((v * wgt).sum()),
+                        )
+                    )
             yield pd.DataFrame(
-                [(int(i), png(int(i))) for i in ids],
-                columns=[id_col, "payload"],
+                rows,
+                columns=[
+                    id_col, "format", "width", "height", "channel",
+                    "mean", "min", "max", "std", "pos_sum",
+                ],
             )
 
-    return df.select(id_col).mapInPandas(build, f"{id_col} long, payload binary")
+    return df.mapInPandas(
+        stats,
+        f"{id_col} long, format string, width int, height int, channel int, "
+        "mean double, min int, max int, std double, pos_sum long",
+    )
 
 
 def decode_png_stats(
@@ -949,55 +944,11 @@ def decode_png_stats(
     Integer sums are exact, so the oracle replays them arithmetically —
     the d48/d93/d99 certification pattern."""
 
-    def stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    def decode(b: bytes):
+        got = _png_decode_rgb(b)
+        return None if got is None else ("png", got[2])
 
-        for pdf in batches:
-            rows = []
-            for i, buf in zip(pdf[id_col], pdf[payload_col]):
-                try:
-                    got = _png_decode_rgb(bytes(buf))
-                except Exception:
-                    got = None
-                if got is None:
-                    continue
-                w, h, rgb = got
-                arr = rgb.astype(np.int64)
-                n = w * h
-                xw = np.arange(w) + 1
-                yw = np.arange(h) + 2
-                wgt = yw[:, None] * xw[None, :]
-                for ch in range(3):
-                    v = arr[:, :, ch]
-                    s, ss = int(v.sum()), int((v * v).sum())
-                    mean = s / n
-                    rows.append(
-                        (
-                            int(i),
-                            "png",
-                            w,
-                            h,
-                            ch,
-                            round(mean, 6),
-                            int(v.min()),
-                            int(v.max()),
-                            round((ss / n - mean * mean) ** 0.5, 6),
-                            int((v * wgt).sum()),
-                        )
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    id_col, "format", "width", "height", "channel",
-                    "mean", "min", "max", "std", "pos_sum",
-                ],
-            )
-
-    return df.mapInPandas(
-        stats,
-        f"{id_col} long, format string, width int, height int, channel int, "
-        "mean double, min int, max int, std double, pos_sum long",
-    )
+    return _image_stats(df, decode, payload_col, id_col)
 
 
 def decode_bmp_ppm_stats(
@@ -1021,114 +972,64 @@ def decode_bmp_ppm_stats(
     Scale: pure mapInPandas over Arrow batches, zero shuffles, one output
     row per (image, channel)."""
 
-    def stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import struct
+    import struct
 
-        import numpy as np
+    import numpy as np
 
-        def decode(b: bytes):
-            if b[:2] == b"BM":
-                if len(b) < 54:
-                    return None
-                off, = struct.unpack("<I", b[10:14])
-                w, h = struct.unpack("<ii", b[18:26])
-                bpp, = struct.unpack("<H", b[28:30])
-                comp, = struct.unpack("<I", b[30:34])
-                # top-down (h < 0) and other exotic layouts degrade to
-                # skip, matching the parse_media_headers contract
-                if bpp != 24 or comp != 0 or w <= 0 or h <= 0:
-                    return None
-                row_len = (w * 3 + 3) // 4 * 4
-                if len(b) < off + h * row_len:
-                    return None
-                rows = np.frombuffer(
-                    b[off : off + h * row_len], dtype=np.uint8
-                ).reshape(h, row_len)
-                bgr = rows[:, : w * 3].reshape(h, w, 3)[::-1]  # undo bottom-up
-                return "bmp", w, h, bgr[:, :, ::-1]  # undo BGR
-            if b[:2] == b"P6":
-                # header: magic, width, height, maxval — ASCII tokens
-                # separated by whitespace, with optional '#' comment lines
-                # (legal PPM; skipped to end-of-line); pixel data starts
-                # after the single whitespace byte following maxval
-                pos, fields = 2, []
-                while len(fields) < 3 and pos < len(b):
-                    while pos < len(b) and b[pos : pos + 1].isspace():
+    def decode(b: bytes):
+        if b[:2] == b"BM":
+            if len(b) < 54:
+                return None
+            off, = struct.unpack("<I", b[10:14])
+            w, h = struct.unpack("<ii", b[18:26])
+            bpp, = struct.unpack("<H", b[28:30])
+            comp, = struct.unpack("<I", b[30:34])
+            # top-down (h < 0) and other exotic layouts degrade to
+            # skip, matching the parse_media_headers contract
+            if bpp != 24 or comp != 0 or w <= 0 or h <= 0:
+                return None
+            row_len = (w * 3 + 3) // 4 * 4
+            if len(b) < off + h * row_len:
+                return None
+            rows = np.frombuffer(
+                b[off : off + h * row_len], dtype=np.uint8
+            ).reshape(h, row_len)
+            bgr = rows[:, : w * 3].reshape(h, w, 3)[::-1]  # undo bottom-up
+            return "bmp", bgr[:, :, ::-1]  # undo BGR
+        if b[:2] == b"P6":
+            # header: magic, width, height, maxval — ASCII tokens
+            # separated by whitespace, with optional '#' comment lines
+            # (legal PPM; skipped to end-of-line); pixel data starts
+            # after the single whitespace byte following maxval
+            pos, fields = 2, []
+            while len(fields) < 3 and pos < len(b):
+                while pos < len(b) and b[pos : pos + 1].isspace():
+                    pos += 1
+                if pos < len(b) and b[pos : pos + 1] == b"#":
+                    while pos < len(b) and b[pos : pos + 1] != b"\n":
                         pos += 1
-                    if pos < len(b) and b[pos : pos + 1] == b"#":
-                        while pos < len(b) and b[pos : pos + 1] != b"\n":
-                            pos += 1
-                        continue
-                    start = pos
-                    while pos < len(b) and not b[pos : pos + 1].isspace():
-                        pos += 1
-                    if not b[start:pos].isdigit():
-                        return None
-                    fields.append(int(b[start:pos]))
-                pos += 1  # the single whitespace after maxval
-                if len(fields) < 3:  # truncated header
-                    return None
-                w, h, maxval = fields
-                if maxval != 255 or w <= 0 or h <= 0:
-                    return None
-                if len(b) < pos + w * h * 3:  # short pixel payload
-                    return None
-                rgb = np.frombuffer(
-                    b[pos : pos + w * h * 3], dtype=np.uint8
-                ).reshape(h, w, 3)
-                return "ppm", w, h, rgb
-            return None
-
-        for pdf in batches:
-            rows = []
-            for i, buf in zip(pdf[id_col], pdf[payload_col]):
-                # belt-and-braces: ANY parse failure degrades to skip
-                # (the parse_media_headers contract), never an executor
-                # error — the explicit guards above cover the known
-                # malformed shapes; this catches the unknown ones
-                try:
-                    got = decode(bytes(buf))
-                except Exception:
-                    got = None
-                if got is None:
                     continue
-                fmt, w, h, rgb = got
-                arr = rgb.astype(np.int64)
-                n = w * h
-                xw = np.arange(w) + 1
-                yw = np.arange(h) + 2
-                wgt = yw[:, None] * xw[None, :]
-                for ch in range(3):
-                    v = arr[:, :, ch]
-                    s, ss = int(v.sum()), int((v * v).sum())
-                    mean = s / n
-                    rows.append(
-                        (
-                            int(i),
-                            fmt,
-                            w,
-                            h,
-                            ch,
-                            round(mean, 6),
-                            int(v.min()),
-                            int(v.max()),
-                            round((ss / n - mean * mean) ** 0.5, 6),
-                            int((v * wgt).sum()),
-                        )
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    id_col, "format", "width", "height", "channel",
-                    "mean", "min", "max", "std", "pos_sum",
-                ],
-            )
+                start = pos
+                while pos < len(b) and not b[pos : pos + 1].isspace():
+                    pos += 1
+                if not b[start:pos].isdigit():
+                    return None
+                fields.append(int(b[start:pos]))
+            pos += 1  # the single whitespace after maxval
+            if len(fields) < 3:  # truncated header
+                return None
+            w, h, maxval = fields
+            if maxval != 255 or w <= 0 or h <= 0:
+                return None
+            if len(b) < pos + w * h * 3:  # short pixel payload
+                return None
+            rgb = np.frombuffer(
+                b[pos : pos + w * h * 3], dtype=np.uint8
+            ).reshape(h, w, 3)
+            return "ppm", rgb
+        return None
 
-    return df.mapInPandas(
-        stats,
-        f"{id_col} long, format string, width int, height int, channel int, "
-        "mean double, min int, max int, std double, pos_sum long",
-    )
+    return _image_stats(df, decode, payload_col, id_col)
 
 
 def raw_pixel_stats(
@@ -1188,16 +1089,35 @@ def raw_pixel_stats(
 
 
 # ---------------------------------------------------------------------------
-# Baseline JPEG (ITU T.81) — REAL entropy codec, no library.  The encoder
-# below writes spec-valid grayscale baseline JPEGs from a chosen quantized-
-# coefficient grid (canonical Huffman DHT, zigzag DQT, DC-diff prediction,
-# AC run-length coding, FF byte stuffing); the decoder reverses all of it —
-# marker walk, DHT canonical-code rebuild, bit-unstuffing, Huffman decode,
-# zigzag/dequant, separable IDCT, level shift.  d108 certifies the whole
-# chain arithmetically on DC-only blocks (flat 8x8 output = 128 + q0·dc/8,
-# exact when 8 | q0·dc); the AC path is exercised by unit tests against a
-# reference IDCT.  Helpers live at module level so mapInPandas workers
-# pickle them.
+# JPEG (ITU T.81) — a REAL entropy codec, no library: one encoder and one
+# decoder for baseline (SOF0) and progressive (SOF2) files, grayscale or
+# YCbCr 4:2:0.  Both are driven by data, not by code paths per layout:
+#
+# * the FRAME's component list — (id, h, v, tq) per component, with tq
+#   naming the component's quant table and, in the encoder, its DC and AC
+#   Huffman tables (``_JPEG_GRAY``, ``_JPEG_YCC420``);
+# * the SCAN SCRIPT — one (component indices, Ss, Se, Ah, Al) entry per
+#   scan.  Baseline is one full-band scan (0, 63, 0, 0); spectral
+#   selection splits the band; successive approximation adds Ah > 0
+#   refinement scans; restart intervals (DRI/RSTm) apply to any
+#   sequential scan.
+#
+# Shared helpers, each the only copy of its decision:
+# ``_jpeg_segments`` (the marker walk, also used by the header probe and
+# the EXIF tier), ``_huff_decode_lut`` (one 16-bit decode table per DHT),
+# ``_jpeg_unstuff`` (FF00 unstuffing, split at RSTm), ``_BitReader`` (the
+# bit reader and RECEIVE/EXTEND), ``_jpeg_mcus`` (the MCU block order of a
+# scan, for encoder and decoder), ``_jpeg_emit_band`` /
+# ``_jpeg_decode_band`` (first-pass block symbols, sequential or
+# progressive), ``_jpeg_emit_ac_refine`` / ``_jpeg_decode_ac_refine`` (AC
+# refinement, T.81 §G.1.2.3 / §G.2) and ``_idct_plane`` (dequantize +
+# IDCT with one cached basis).  The layout-named functions
+# (``_jpeg_encode_gray`` … ``_jpeg_decode_color_420_progressive``) are thin
+# wrappers that build a script or filter the decoder's result.  d108
+# certifies the chain arithmetically on DC-only blocks (flat 8x8 output =
+# 128 + q0·dc/8, exact when 8 | q0·dc); the AC paths are unit-tested
+# against a reference IDCT.  Helpers live at module level so mapInPandas
+# workers pickle them.
 # ---------------------------------------------------------------------------
 
 
@@ -1212,19 +1132,12 @@ def _gen_zigzag():
     return order
 
 
-# the zigzag never changes: computed once, plus the flattened row-major
-# offsets (r*8+c) used for vectorized (de)quantization-table and
-# coefficient indexing — the per-image _jpeg_zigzag()/per-element numpy
-# indexing was a measurable slice of the tiny-image decode profile
+# the T.81 zigzag order as (row, col) pairs, generated from the
+# diagonal-walk definition (odd anti-diagonals run down-left, even run
+# up-right), plus the flattened row-major offsets (r*8+c) used for
+# vectorized (de)quantization-table and coefficient indexing
 _ZZ = _gen_zigzag()
 _ZZ_FLAT = [r * 8 + c for r, c in _ZZ]
-
-
-def _jpeg_zigzag():
-    """The T.81 zigzag order as (row, col) pairs, generated from the
-    diagonal-walk definition (odd anti-diagonals run down-left, even run
-    up-right); module-cached."""
-    return _ZZ
 
 
 # custom canonical Huffman tables (the decoder parses DHT, so any
@@ -1235,6 +1148,12 @@ _JPEG_AC_LENGTHS = {0x00: 4, 0xF0: 4}
 _JPEG_AC_LENGTHS.update(
     {(r << 4) | s: 10 for r in range(16) for s in range(1, 11)}
 )
+
+# frame component lists (id, h, v, tq): grayscale, and YCbCr 4:2:0 with a
+# 2x2-sampled luma on table 0 and 1x1 chroma on table 1 — the two
+# layouts the decoder reconstructs
+_JPEG_GRAY = ((1, 1, 1, 0),)
+_JPEG_YCC420 = ((1, 2, 2, 0), (2, 1, 1, 1), (3, 1, 1, 1))
 
 
 _CANONICAL_CACHE: dict = {}
@@ -1269,11 +1188,11 @@ def _huff_decode_lut(dht: bytes):
     across a corpus build one LUT total).  Entry i (the next 16 stream
     bits, zero-padded past EOF) is ``(code_length << 8) | symbol`` for
     the unique code prefixing those bits, 0 where no code matches.
-    Codes are prefix-free, so the shortest match the old bit-serial
-    walk found is the only match; a bogus table whose canonical codes
-    overflow ``2^len`` produces entries the old walk could never reach
-    either (read codes are always < 2^len) — the slice below is then
-    empty, preserving unreachability."""
+    Codes are prefix-free, so the shortest match a bit-serial walk
+    would find is the only match; a bogus table whose canonical codes
+    overflow ``2^len`` produces entries a bit-serial walk could never
+    reach either (read codes are always < 2^len) — the slice below is
+    then empty, preserving unreachability."""
     lut = _HUFF_LUT_CACHE.get(dht)
     if lut is None:
         import numpy as np
@@ -1311,7 +1230,7 @@ class _BitWriter:
         self.nbits = 0
 
     def write(self, value, nbits):
-        # whole-value shift-in (bit-identical to the per-bit loop: the
+        # whole-value shift-in (bit-identical to a per-bit loop: the
         # accumulator sees the same bit sequence, bytes drain MSB-first
         # with the same FF stuffing)
         acc = (self.acc << nbits) | (value & ((1 << nbits) - 1))
@@ -1338,326 +1257,6 @@ class _BitWriter:
         return bytes(self.buf)
 
 
-def _jpeg_encode_gray(coefs, qtable, restart_interval: int = 0):
-    """Encode a quantized-coefficient grid into a baseline grayscale JPEG.
-
-    coefs: int array (by, bx, 8, 8) of QUANTIZED DCT coefficients in
-    natural (row, col) order; qtable: int array (8, 8). Image dimensions
-    are (by·8, bx·8). ``restart_interval`` > 0 emits a DRI segment and
-    splits the scan into restart intervals (r10, d118): after every
-    ``restart_interval`` MCUs the bitstream byte-aligns (1-padded), an
-    RSTm marker (D0–D7, cycling) is written, and the DC predictor
-    resets — T.81 §B.2.4.4 / §E.2.4, the resync machinery most real
-    camera JPEGs carry."""
-    import struct
-
-    import numpy as np
-
-    by, bx = coefs.shape[0], coefs.shape[1]
-    h, w = by * 8, bx * 8
-    dc_codes = _canonical_codes(_JPEG_DC_LENGTHS)
-    ac_codes = _canonical_codes(_JPEG_AC_LENGTHS)
-
-    def seg(marker, payload):
-        return bytes([0xFF, marker]) + struct.pack(">H", 2 + len(payload)) + payload
-
-    out = bytearray(b"\xff\xd8")  # SOI
-    qzz = bytes(np.asarray(qtable).reshape(64)[_ZZ_FLAT].tolist())
-    out += seg(0xDB, bytes([0x00]) + qzz)  # DQT, 8-bit, table 0
-    out += seg(
-        0xC0, bytes([8]) + struct.pack(">HH", h, w) + bytes([1, 1, 0x11, 0])
-    )  # SOF0 grayscale
-    out += seg(0xC4, _dht_payload(0, 0, _JPEG_DC_LENGTHS))
-    out += seg(0xC4, _dht_payload(1, 0, _JPEG_AC_LENGTHS))
-    if restart_interval:
-        out += seg(0xDD, struct.pack(">H", restart_interval))  # DRI
-    out += seg(0xDA, bytes([1, 1, 0x00, 0, 63, 0]))  # SOS
-
-    wtr = _BitWriter()
-
-    def put_amplitude(v):
-        # JPEG magnitude coding: category s = bit_length(|v|); negatives
-        # are stored as v + 2^s - 1
-        s = int(v).bit_length() if v > 0 else int(-v).bit_length()
-        bits = v if v > 0 else v + (1 << s) - 1
-        return s, bits
-
-    pred = 0
-    mcu = 0
-    for y in range(by):
-        for x in range(bx):
-            if restart_interval and mcu and mcu % restart_interval == 0:
-                out += wtr.flush()  # byte-align (1-padded) before RSTm
-                out += bytes([0xFF, 0xD0 + ((mcu // restart_interval - 1) % 8)])
-                wtr = _BitWriter()
-                pred = 0
-            mcu += 1
-            # one vectorized zigzag gather per block instead of 63
-            # per-element numpy index chains
-            bl = coefs[y, x].reshape(64)[_ZZ_FLAT].tolist()
-            dc = int(bl[0])
-            diff = dc - pred
-            pred = dc
-            if diff == 0:
-                c, ln = dc_codes[0]
-                wtr.write(c, ln)
-            else:
-                s, bits = put_amplitude(diff)
-                c, ln = dc_codes[s]
-                wtr.write(c, ln)
-                wtr.write(bits, s)
-            acs = bl[1:]
-            run = 0
-            for v in acs:
-                if v == 0:
-                    run += 1
-                    continue
-                while run >= 16:
-                    c, ln = ac_codes[0xF0]  # ZRL
-                    wtr.write(c, ln)
-                    run -= 16
-                s, bits = put_amplitude(v)
-                c, ln = ac_codes[(run << 4) | s]
-                wtr.write(c, ln)
-                wtr.write(bits, s)
-                run = 0
-            if run:
-                c, ln = ac_codes[0x00]  # EOB
-                wtr.write(c, ln)
-    out += wtr.flush()
-    out += b"\xff\xd9"  # EOI
-    return bytes(out)
-
-
-def _jpeg_decode_gray(b):
-    """Decode a baseline grayscale JPEG to a (h, w) uint8 pixel grid, or
-    None for anything out of scope (color, progressive, 16-bit tables)
-    or structurally broken. Restart intervals ARE in scope (r10, d118):
-    a DRI segment arms per-interval decoding — the scan splits at RSTm
-    markers (whose D0–D7 cycle is verified), each interval byte-aligns
-    and resets the DC predictor, and an interval with the wrong MCU
-    count fails the decode rather than smearing blocks."""
-    import struct
-
-    import numpy as np
-
-    if b[:2] != b"\xff\xd8":
-        return None
-    pos = 2
-    qtables = {}
-    huff = {}  # (class, id) -> 16-bit decode LUT (see _huff_decode_lut)
-    w = h = None
-    scan = None
-    ri = 0  # restart interval in MCUs; 0 = none
-    while pos + 4 <= len(b):
-        if b[pos] != 0xFF:
-            return None
-        marker = b[pos + 1]
-        if marker == 0xD9:
-            break
-        (ln,) = struct.unpack(">H", b[pos + 2 : pos + 4])
-        payload = b[pos + 4 : pos + 2 + ln]
-        if len(payload) != ln - 2:
-            return None
-        if marker == 0xDB:
-            p = 0
-            while p < len(payload):
-                pq, tq = payload[p] >> 4, payload[p] & 15
-                if pq != 0:
-                    return None  # 16-bit tables out of scope
-                vals = payload[p + 1 : p + 65]
-                if len(vals) != 64:
-                    return None
-                q = np.zeros(64, dtype=np.int64)
-                q[_ZZ_FLAT] = np.frombuffer(vals, dtype=np.uint8)
-                qtables[tq] = q.reshape(8, 8)
-                p += 65
-        elif marker == 0xC4:
-            p = 0
-            while p < len(payload):
-                tc, th = payload[p] >> 4, payload[p] & 15
-                counts = payload[p + 1 : p + 17]
-                nsym = sum(counts)
-                syms = payload[p + 17 : p + 17 + nsym]
-                if len(syms) != nsym:
-                    return None
-                huff[(tc, th)] = _huff_decode_lut(
-                    bytes(payload[p + 1 : p + 17 + nsym])
-                )
-                p += 17 + nsym
-        elif marker == 0xC0:
-            prec = payload[0]
-            h, w = struct.unpack(">HH", payload[1:5])
-            ncomp = payload[5]
-            if prec != 8 or ncomp != 1:
-                return None  # grayscale baseline only
-            samp, tq = payload[7], payload[8]
-            if samp != 0x11:
-                return None
-            comp_q = tq
-        elif marker == 0xDD:  # DRI
-            if len(payload) < 2:
-                return None
-            (ri,) = struct.unpack(">H", payload[:2])
-        elif marker in (0xC1, 0xC2, 0xC3, 0xC5, 0xC6, 0xC7):
-            return None  # other SOF classes
-        elif marker == 0xDA:
-            td = payload[2] >> 4
-            ta = payload[2] & 15
-            scan = (td, ta)
-            pos = pos + 2 + ln
-            break
-        pos += 2 + ln
-    if scan is None or w is None or comp_q not in qtables:
-        return None
-    dc_tab = huff.get((0, scan[0]))
-    ac_tab = huff.get((1, scan[1]))
-    if dc_tab is None or ac_tab is None:
-        return None
-
-    # unstuff entropy-coded bytes up to EOI, splitting at RSTm markers
-    # into one byte-aligned segment per restart interval (the whole scan
-    # is one segment when DRI is absent); the D0-D7 marker cycle is
-    # verified — a skipped or duplicated restart is a hard decode fail
-    segments = [bytearray()]
-    p = pos
-    while p < len(b):
-        byte = b[p]
-        if byte == 0xFF:
-            nxt = b[p + 1] if p + 1 < len(b) else None
-            if nxt == 0x00:
-                segments[-1].append(0xFF)
-                p += 2
-                continue
-            if nxt is not None and 0xD0 <= nxt <= 0xD7:
-                if ri == 0 or (nxt - 0xD0) != (len(segments) - 1) % 8:
-                    return None  # RST without DRI, or out-of-cycle
-                segments.append(bytearray())
-                p += 2
-                continue
-            break  # a real marker (EOI) ends the scan
-        segments[-1].append(byte)
-        p += 1
-
-    # LUT-based bit reader (same EOF semantics as the old bit-serial
-    # walk): `peek` reads the next 16 stream bits zero-padded past EOF;
-    # a LUT hit whose code length crosses the stream end, or a window no
-    # code prefixes (LUT entry 0), is exactly where the old read1() walk
-    # raised EOFError — both fail the decode.
-    q = qtables[comp_q]
-    bx, by = (w + 7) // 8, (h + 7) // 8
-    # coefficients accumulate in a flat Python list (zigzag write offsets
-    # precomputed); one bulk np.array at the end replaces per-coefficient
-    # numpy scalar stores
-    co = [0] * (by * bx * 64)
-    zf = _ZZ_FLAT
-    # 3 pad bytes: the 24-bit peek at bpos == nbits (all bits consumed)
-    # indexes seg_len + 2 at most
-    sbuf = bytes(segments[0]) + b"\x00\x00\x00"
-    nbits = (len(sbuf) - 3) * 8
-    bpos = 0
-    pred = 0
-    mcu = 0
-    seg_idx = 0
-    for yb in range(by):
-        for xb in range(bx):
-            if ri and mcu and mcu % ri == 0:
-                seg_idx += 1
-                if seg_idx >= len(segments):
-                    return None  # fewer intervals than MCUs demand
-                sbuf = bytes(segments[seg_idx]) + b"\x00\x00\x00"
-                nbits = (len(sbuf) - 3) * 8
-                bpos = 0
-                pred = 0
-            mcu += 1
-            base = (yb * bx + xb) * 64
-            # DC: one LUT probe + one amplitude read
-            i = bpos >> 3
-            off = bpos & 7
-            w24 = (sbuf[i] << 16) | (sbuf[i + 1] << 8) | sbuf[i + 2]
-            e = dc_tab[(w24 >> (8 - off)) & 0xFFFF]
-            cl = e >> 8
-            if cl == 0 or bpos + cl > nbits:
-                return None  # no code / past EOF
-            s = e & 0xFF
-            bpos += cl
-            if s:
-                if s > 16:
-                    return None  # DHT symbol beyond any DC category
-                if bpos + s > nbits:
-                    return None
-                i = bpos >> 3
-                off = bpos & 7
-                w24 = (sbuf[i] << 16) | (sbuf[i + 1] << 8) | sbuf[i + 2]
-                bits = (w24 >> (24 - off - s)) & ((1 << s) - 1)
-                bpos += s
-                # inverse magnitude coding
-                pred += bits if bits >> (s - 1) else bits - (1 << s) + 1
-            co[base] = pred
-            k = 1
-            while k < 64:
-                i = bpos >> 3
-                off = bpos & 7
-                w24 = (sbuf[i] << 16) | (sbuf[i + 1] << 8) | sbuf[i + 2]
-                e = ac_tab[(w24 >> (8 - off)) & 0xFFFF]
-                cl = e >> 8
-                if cl == 0 or bpos + cl > nbits:
-                    return None
-                rs = e & 0xFF
-                bpos += cl
-                if rs == 0x00:  # EOB
-                    break
-                if rs == 0xF0:  # ZRL
-                    k += 16
-                    continue
-                run, size = rs >> 4, rs & 15
-                k += run
-                if k > 63 or size == 0:
-                    return None
-                if bpos + size > nbits:
-                    return None
-                i = bpos >> 3
-                off = bpos & 7
-                w24 = (sbuf[i] << 16) | (sbuf[i + 1] << 8) | sbuf[i + 2]
-                bits = (w24 >> (24 - off - size)) & ((1 << size) - 1)
-                bpos += size
-                co[base + zf[k]] = (
-                    bits if bits >> (size - 1) else bits - (1 << size) + 1
-                )
-                k += 1
-    if seg_idx != len(segments) - 1:
-        return None  # more restart segments than the MCU count demands
-
-    coefs = np.array(co, dtype=np.int64).reshape(by, bx, 8, 8)
-    return _jpeg_idct_gray(coefs, q, w, h)
-
-
-_IDCT_BASIS: dict = {}  # the 8x8 C[u, x] basis — identical for every image
-
-
-def _jpeg_idct_gray(coefs, q, w, h):
-    """Dequant + separable IDCT + level shift for a (by, bx, 8, 8)
-    quantized-coefficient grid — shared by the baseline (sequential
-    scan) and progressive (multi-scan accumulated) decoders."""
-    import numpy as np
-
-    by, bx = coefs.shape[0], coefs.shape[1]
-    C = _IDCT_BASIS.get("C")
-    if C is None:
-        alpha = np.full(8, np.sqrt(2.0 / 8.0))
-        alpha[0] = np.sqrt(1.0 / 8.0)
-        xs = np.arange(8)
-        basis = np.cos((2 * xs[None, :] + 1) * xs[:, None] * np.pi / 16.0)
-        C = alpha[:, None] * basis  # C[u, x]
-        _IDCT_BASIS["C"] = C
-    deq = coefs * q[None, None, :, :]
-    spatial = np.einsum("ux,vy,bcuv->bcxy", C, C, deq.astype(np.float64))
-    pix = np.floor(spatial + 128.0 + 0.5)
-    pix = np.clip(pix, 0, 255).astype(np.uint8)
-    img = pix.transpose(0, 2, 1, 3).reshape(by * 8, bx * 8)
-    return img[:h, :w]
-
-
 def _jpeg_put_amplitude(v: int):
     """JPEG magnitude coding: category s = bit_length(|v|); negatives
     are stored as v + 2^s − 1."""
@@ -1666,497 +1265,729 @@ def _jpeg_put_amplitude(v: int):
     return s, bits
 
 
-def _jpeg_encode_gray_progressive(coefs, qtable, bands=((1, 5), (6, 63))):
-    """Encode a quantized-coefficient grid as a PROGRESSIVE grayscale
-    JPEG (SOF2) using SPECTRAL SELECTION (r10, d121): a DC scan
-    (Ss=Se=0) followed by one AC scan per ``bands`` entry, each a
-    non-interleaved single-component scan over its zigzag band with
-    run-length/ZRL coding and EOB terminating the band remainder —
-    T.81 §G.1, the Ah=Al=0 (no successive approximation) progressive
-    mode. The union of bands must cover 1..63."""
+def _jpeg_mcus(geom, comps, my, mx):
+    """The block order of one scan (T.81 §A.2): a list of MCUs, each a
+    list of (component index, block index in that component's
+    MCU-padded raster, mx·h blocks wide).  A one-component scan walks
+    that component's own rows × cols block raster, one block per MCU;
+    an interleaved scan walks my × mx MCUs, each holding every scan
+    component's v × h blocks in raster order.  geom[i] = (h, v, rows,
+    cols) for frame component i."""
+    if len(comps) == 1:
+        ci = comps[0]
+        hs, _, rows, cols = geom[ci]
+        return [[(ci, y * mx * hs + x)] for y in range(rows) for x in range(cols)]
+    return [
+        [
+            (ci, (m_y * geom[ci][1] + dy) * mx * geom[ci][0] + m_x * geom[ci][0] + dx)
+            for ci in comps
+            for dy in range(geom[ci][1])
+            for dx in range(geom[ci][0])
+        ]
+        for m_y in range(my)
+        for m_x in range(mx)
+    ]
+
+
+def _jpeg_emit_band(wtr, zzv, ss, se, al, pred, dc_codes, ac_codes):
+    """Emit one block's first-pass symbols for band ss..se at point
+    transform ``al`` (al=0 codes the plain values): with ss = 0 the DC
+    difference against ``pred`` (of dc >> al, an arithmetic shift),
+    then the AC coefficients (magnitudes truncated toward zero) as
+    run/size symbols with ZRL and a closing EOB.  ``zzv`` is the block
+    in zigzag order.  Returns the next DC predictor."""
+    if ss == 0:
+        dc = zzv[0] >> al
+        s, bits = _jpeg_put_amplitude(dc - pred)
+        c, ln = dc_codes[s]
+        wtr.write(c, ln)
+        wtr.write(bits, s)
+        pred = dc
+    run = 0
+    for v in zzv[max(ss, 1) : se + 1]:
+        v = (abs(v) >> al) * (1 if v > 0 else -1)
+        if v == 0:
+            run += 1
+            continue
+        while run >= 16:
+            c, ln = ac_codes[0xF0]  # ZRL
+            wtr.write(c, ln)
+            run -= 16
+        s, bits = _jpeg_put_amplitude(v)
+        c, ln = ac_codes[(run << 4) | s]
+        wtr.write(c, ln)
+        wtr.write(bits, s)
+        run = 0
+    if run:
+        c, ln = ac_codes[0x00]  # EOB (in a progressive scan: EOB0)
+        wtr.write(c, ln)
+    return pred
+
+
+def _jpeg_emit_ac_refine(wtr, zzv, ss, se, al, ac_codes):
+    """Emit one block of an AC-refinement scan over band ss..se
+    delivering bit ``al`` (T.81 §G.1.2.3, libjpeg emission shape):
+    newly-significant coefficients as (zero-history run, size 1) +
+    sign, correction bits for already-significant coefficients
+    buffered between symbols, EOB followed by the band remainder's
+    corrections."""
+    band = zzv[ss : se + 1]
+    absv = [abs(v) >> al for v in band]
+    eob = -1
+    for idx, t in enumerate(absv):
+        if t == 1:
+            eob = idx
+    run = 0
+    buffered = []
+    for idx, t in enumerate(absv):
+        if t == 0:
+            run += 1
+            continue
+        while run > 15 and idx <= eob:
+            c, ln = ac_codes[0xF0]
+            wtr.write(c, ln)
+            run -= 16
+            for bit in buffered:
+                wtr.write(bit, 1)
+            buffered = []
+        if t > 1:
+            buffered.append(t & 1)
+            continue
+        c, ln = ac_codes[(run << 4) | 1]
+        wtr.write(c, ln)
+        wtr.write(1 if band[idx] > 0 else 0, 1)
+        for bit in buffered:
+            wtr.write(bit, 1)
+        buffered = []
+        run = 0
+    if run > 0 or buffered:
+        c, ln = ac_codes[0x00]
+        wtr.write(c, ln)
+        for bit in buffered:
+            wtr.write(bit, 1)
+
+
+def _jpeg_encode(grids, layout, qtables, script, restart_interval: int = 0):
+    """Encode quantized coefficient grids as a JPEG.
+
+    ``layout`` is the frame's component list, (id, h, v, tq) per
+    component, where tq names the component's quant table and its DC
+    and AC Huffman tables; ``grids[i]`` holds component i's QUANTIZED
+    coefficients as a (rows, cols, 8, 8) int array in natural (row,
+    col) order, component 0 at full resolution (image = rows·8 ×
+    cols·8); ``qtables[tq]`` is an (8, 8) table.  ``script`` lists the
+    scans, each (component indices, Ss, Se, Ah, Al): a script of
+    full-band scans (0, 63) is written as baseline SOF0, any other as
+    progressive SOF2.  The file carries one DQT per quant table, DC and
+    AC DHT per table id, the SOF, a DRI when ``restart_interval`` > 0,
+    then the scans.  Restart intervals (T.81 §B.2.4.4 / §E.2.4): after
+    every ``restart_interval`` MCUs the bitstream byte-aligns
+    (1-padded), an RSTm marker (D0–D7, cycling) is written, and the DC
+    predictors reset."""
     import struct
 
-    zz = _jpeg_zigzag()
-    by, bx = coefs.shape[0], coefs.shape[1]
-    h, w = by * 8, bx * 8
-    dc_codes = _canonical_codes(_JPEG_DC_LENGTHS)
-    ac_codes = _canonical_codes(_JPEG_AC_LENGTHS)
+    import numpy as np
 
     def seg(marker, payload):
         return bytes([0xFF, marker]) + struct.pack(">H", 2 + len(payload)) + payload
 
-    out = bytearray(b"\xff\xd8")
-    qzz = bytes(int(qtable[r][c]) for r, c in zz)
-    out += seg(0xDB, bytes([0x00]) + qzz)
+    dc_codes = _canonical_codes(_JPEG_DC_LENGTHS)
+    ac_codes = _canonical_codes(_JPEG_AC_LENGTHS)
+    rows, cols = grids[0].shape[0], grids[0].shape[1]
+    progressive = any((ss, se) != (0, 63) for _, ss, se, _, _ in script)
+    out = bytearray(b"\xff\xd8")  # SOI
+    for tq, qt in enumerate(qtables):
+        qzz = bytes(np.asarray(qt).reshape(64)[_ZZ_FLAT].tolist())
+        out += seg(0xDB, bytes([tq]) + qzz)  # DQT, 8-bit
     out += seg(
-        0xC2, bytes([8]) + struct.pack(">HH", h, w) + bytes([1, 1, 0x11, 0])
-    )  # SOF2 progressive grayscale
-    out += seg(0xC4, _dht_payload(0, 0, _JPEG_DC_LENGTHS))
-    out += seg(0xC4, _dht_payload(1, 0, _JPEG_AC_LENGTHS))
-
-    # DC scan — identical diff chain to baseline (Ah=Al=0)
-    out += seg(0xDA, bytes([1, 1, 0x00, 0, 0, 0]))
-    wtr = _BitWriter()
-    pred = 0
-    for y in range(by):
-        for x in range(bx):
-            dc = int(coefs[y, x, 0, 0])
-            diff = dc - pred
-            pred = dc
-            if diff == 0:
-                c, ln = dc_codes[0]
-                wtr.write(c, ln)
-            else:
-                s, bits = _jpeg_put_amplitude(diff)
-                c, ln = dc_codes[s]
-                wtr.write(c, ln)
-                wtr.write(bits, s)
-    out += wtr.flush()
-
-    # AC band scans — EOB (run length 1) terminates each block's band
-    for ss, se in bands:
-        out += seg(0xDA, bytes([1, 1, 0x00, ss, se, 0]))
+        0xC2 if progressive else 0xC0,
+        bytes([8])
+        + struct.pack(">HH", rows * 8, cols * 8)
+        + bytes([len(layout)])
+        + b"".join(bytes([cid, (hs << 4) | vs, tq]) for cid, hs, vs, tq in layout),
+    )
+    for tid in range(len(qtables)):
+        out += seg(0xC4, _dht_payload(0, tid, _JPEG_DC_LENGTHS))
+        out += seg(0xC4, _dht_payload(1, tid, _JPEG_AC_LENGTHS))
+    if restart_interval:
+        out += seg(0xDD, struct.pack(">H", restart_interval))
+    geom = [(c[1], c[2], g.shape[0], g.shape[1]) for c, g in zip(layout, grids)]
+    # each block in zigzag order, one bulk gather per component
+    zzs = [np.asarray(g).reshape(-1, 64)[:, _ZZ_FLAT].tolist() for g in grids]
+    for comps, ss, se, ah, al in script:
+        out += seg(
+            0xDA,
+            bytes([len(comps)])
+            + b"".join(bytes([layout[ci][0], layout[ci][3] * 0x11]) for ci in comps)
+            + bytes([ss, se, (ah << 4) | al]),
+        )
         wtr = _BitWriter()
-        for y in range(by):
-            for x in range(bx):
-                block = coefs[y, x]
-                vals = [int(block[r][cc]) for r, cc in zz[ss : se + 1]]
-                run = 0
-                for v in vals:
-                    if v == 0:
-                        run += 1
-                        continue
-                    while run >= 16:
-                        c, ln = ac_codes[0xF0]  # ZRL
-                        wtr.write(c, ln)
-                        run -= 16
-                    s, bits = _jpeg_put_amplitude(v)
-                    c, ln = ac_codes[(run << 4) | s]
-                    wtr.write(c, ln)
-                    wtr.write(bits, s)
-                    run = 0
-                if run:
-                    c, ln = ac_codes[0x00]  # EOB0: end-of-band, run 1
-                    wtr.write(c, ln)
+        preds = [0] * len(grids)
+        mcus = _jpeg_mcus(geom, comps, rows // layout[0][2], cols // layout[0][1])
+        for n, mcu in enumerate(mcus):
+            if restart_interval and n and n % restart_interval == 0:
+                out += wtr.flush()  # byte-align (1-padded) before RSTm
+                out += bytes([0xFF, 0xD0 + ((n // restart_interval - 1) % 8)])
+                wtr = _BitWriter()
+                preds = [0] * len(grids)
+            for ci, blk in mcu:
+                zzv = zzs[ci][blk]
+                if ah == 0:
+                    preds[ci] = _jpeg_emit_band(
+                        wtr, zzv, ss, se, al, preds[ci], dc_codes, ac_codes
+                    )
+                elif ss == 0:  # DC refinement: one bit per block
+                    wtr.write((zzv[0] >> al) & 1, 1)
+                else:
+                    _jpeg_emit_ac_refine(wtr, zzv, ss, se, al, ac_codes)
         out += wtr.flush()
-    out += b"\xff\xd9"
+    out += b"\xff\xd9"  # EOI
     return bytes(out)
 
 
-def _jpeg_emit_ac_refine(wtr, grid, zz, ac_codes, al: int):
-    """Emit one AC-refinement scan (T.81 §G.1.2.3, libjpeg emission
-    shape) for a (by, bx, 8, 8) coefficient grid over band 1–63 at
-    point transform ``al``: newly-significant coefficients as
-    (zero-history run, size 1) + sign, correction bits for
-    already-significant coefficients buffered between symbols, EOB
-    followed by the band remainder's corrections. Shared by the
-    grayscale (d123) and color (d128) SA encoders."""
-    for by_ in range(grid.shape[0]):
-        for bx_ in range(grid.shape[1]):
-            block = grid[by_, bx_]
-            absv = [abs(int(block[rr, cc])) >> (al - 1) for rr, cc in zz[1:]]
-            signs = [int(block[rr, cc]) > 0 for rr, cc in zz[1:]]
-            eob = -1
-            for idx, t in enumerate(absv):
-                if t == 1:
-                    eob = idx
-            run = 0
-            buffered = []
-            for idx, t in enumerate(absv):
-                if t == 0:
-                    run += 1
-                    continue
-                while run > 15 and idx <= eob:
-                    c, ln = ac_codes[0xF0]
-                    wtr.write(c, ln)
-                    run -= 16
-                    for bit in buffered:
-                        wtr.write(bit, 1)
-                    buffered = []
-                if t > 1:
-                    buffered.append(t & 1)
-                    continue
-                c, ln = ac_codes[(run << 4) | 1]
-                wtr.write(c, ln)
-                wtr.write(1 if signs[idx] else 0, 1)
-                for bit in buffered:
-                    wtr.write(bit, 1)
-                buffered = []
-                run = 0
-            if run > 0 or buffered:
-                c, ln = ac_codes[0x00]
-                wtr.write(c, ln)
-                for bit in buffered:
-                    wtr.write(bit, 1)
+def _jpeg_progressive_script(n_comps, bands, al):
+    """The progressive scan script T.81 §G prescribes: one interleaved
+    DC scan, then one single-component AC scan per (component, band),
+    all at point transform ``al``; al = 1 appends the successive-
+    approximation pass — the same scans again refining bit 0."""
+    first = [(tuple(range(n_comps)), 0, 0, 0, al)] + [
+        ((ci,), ss, se, 0, al) for ci in range(n_comps) for ss, se in bands
+    ]
+    if not al:
+        return first
+    return first + [(comps, ss, se, al, al - 1) for comps, ss, se, _, _ in first]
 
 
-def _jpeg_decode_ac_refine(grid, zz, rdr, ac_tab, ss, se, al: int):
-    """Decode one AC-refinement scan into ``grid`` (accumulating) —
-    the T.81 §G.2 correction algorithm: EOB-run phases read correction
-    bits only; inside a block, runs count zero-history positions while
-    nonzero-history positions consume correction bits. Shared by the
-    grayscale (d123) and color (d128) SA decoders. Raises EOFError on
-    truncation; returns None-on-error via ValueError for malformed
-    symbols."""
-    p1, m1 = 1 << al, -1 << al
-    eobrun = 0
-    for by_ in range(grid.shape[0]):
-        for bx_ in range(grid.shape[1]):
-            block = grid[by_, bx_]
-            k = ss
-            if eobrun == 0:
-                while k <= se:
-                    rs = rdr.huffman(ac_tab)
-                    r, sz = rs >> 4, rs & 15
-                    newval = 0
-                    if sz == 0:
-                        if r != 15:
-                            eobrun = 1 << r
-                            if r:
-                                eobrun += rdr.read(r)
-                            break
-                    else:
-                        if sz != 1:
-                            raise ValueError("bad refinement size")
-                        newval = p1 if rdr.read1() else m1
-                    while k <= se:
-                        rr, cc = zz[k]
-                        if block[rr, cc] != 0:
-                            if rdr.read1() and not (int(block[rr, cc]) & p1):
-                                block[rr, cc] += p1 if block[rr, cc] > 0 else m1
-                        else:
-                            if r == 0:
-                                break
-                            r -= 1
-                        k += 1
-                    if newval and k <= se:
-                        rr, cc = zz[k]
-                        block[rr, cc] = newval
-                    k += 1
-            if eobrun > 0:
-                while k <= se:
-                    rr, cc = zz[k]
-                    if block[rr, cc] != 0:
-                        if rdr.read1() and not (int(block[rr, cc]) & p1):
-                            block[rr, cc] += p1 if block[rr, cc] > 0 else m1
-                    k += 1
-                eobrun -= 1
+def _jpeg_encode_gray(coefs, qtable, restart_interval: int = 0):
+    """Encode a (by, bx, 8, 8) quantized-coefficient grid into a
+    baseline grayscale JPEG of (by·8, bx·8) pixels; ``restart_interval``
+    > 0 adds restart intervals (r10, d118; see ``_jpeg_encode``)."""
+    script = [((0,), 0, 63, 0, 0)]
+    return _jpeg_encode([coefs], _JPEG_GRAY, [qtable], script, restart_interval)
+
+
+def _jpeg_encode_gray_progressive(coefs, qtable, bands=((1, 5), (6, 63))):
+    """Encode a quantized-coefficient grid as a PROGRESSIVE grayscale
+    JPEG (SOF2) using SPECTRAL SELECTION (r10, d121): a DC scan followed
+    by one AC scan per ``bands`` entry, EOB terminating each block's
+    band remainder — T.81 §G.1, Ah=Al=0.  The union of bands must cover
+    1..63."""
+    script = _jpeg_progressive_script(1, bands, 0)
+    return _jpeg_encode([coefs], _JPEG_GRAY, [qtable], script)
 
 
 def _jpeg_encode_gray_progressive_sa(coefs, qtable, al: int = 1):
     """Encode a quantized-coefficient grid as a progressive grayscale
     JPEG with SUCCESSIVE APPROXIMATION (r10, d123) — the four-scan
-    structure real progressive encoders emit: DC first at point
-    transform ``al`` (diffs of dc >> al, arithmetic shift), AC 1–63
-    first at ``al`` (magnitudes truncated toward zero), then a DC
-    refinement (one bit per block) and an AC refinement delivering bit
-    al−1 per coefficient — newly-significant coefficients coded as
-    (zero-history run, size 1) + sign, already-significant ones as
-    correction bits buffered between symbols, end-of-band as EOB0
-    followed by the band remainder's correction bits (T.81 §G.1.2.3,
-    the libjpeg emission shape). ``al`` must be 1 (single refinement
+    structure real progressive encoders emit: DC and AC 1–63 first
+    scans at point transform ``al``, then a DC refinement (one bit per
+    block) and an AC refinement.  ``al`` must be 1 (single refinement
     pass per band — the canonical minimal SA script)."""
-    import struct
-
     if al != 1:
         raise ValueError("single-refinement SA only: al must be 1")
-    zz = _jpeg_zigzag()
-    by, bx = coefs.shape[0], coefs.shape[1]
-    h, w = by * 8, bx * 8
-    dc_codes = _canonical_codes(_JPEG_DC_LENGTHS)
-    ac_codes = _canonical_codes(_JPEG_AC_LENGTHS)
+    script = _jpeg_progressive_script(1, ((1, 63),), al)
+    return _jpeg_encode([coefs], _JPEG_GRAY, [qtable], script)
 
-    def seg(marker, payload):
-        return bytes([0xFF, marker]) + struct.pack(">H", 2 + len(payload)) + payload
 
-    out = bytearray(b"\xff\xd8")
-    qzz = bytes(int(qtable[r][c]) for r, c in zz)
-    out += seg(0xDB, bytes([0x00]) + qzz)
-    out += seg(
-        0xC2, bytes([8]) + struct.pack(">HH", h, w) + bytes([1, 1, 0x11, 0])
+def _jpeg_encode_color_420(yc, cbc, crc, qt_luma, qt_chroma):
+    """Encode quantized coefficient grids into a baseline YCbCr 4:2:0
+    color JPEG — interleaved MCU scan (Y00 Y01 Y10 Y11 Cb Cr), separate
+    luma/chroma quant + Huffman tables, per-component DC predictors.
+
+    yc: (2·my, 2·mx, 8, 8) luma coefficients; cbc/crc: (my, mx, 8, 8);
+    image dimensions (my·16, mx·16)."""
+    script = [((0, 1, 2), 0, 63, 0, 0)]
+    return _jpeg_encode(
+        [yc, cbc, crc], _JPEG_YCC420, [qt_luma, qt_chroma], script
     )
-    out += seg(0xC4, _dht_payload(0, 0, _JPEG_DC_LENGTHS))
-    out += seg(0xC4, _dht_payload(1, 0, _JPEG_AC_LENGTHS))
 
-    # scan 1: DC first, Ah=0, Al=al — diff chain over dc >> al
-    out += seg(0xDA, bytes([1, 1, 0x00, 0, 0, al]))
-    wtr = _BitWriter()
-    pred = 0
-    for y in range(by):
-        for x in range(bx):
-            dc = int(coefs[y, x, 0, 0]) >> al  # arithmetic shift (spec)
-            diff = dc - pred
-            pred = dc
-            if diff == 0:
-                c, ln = dc_codes[0]
-                wtr.write(c, ln)
+
+def _jpeg_encode_color_420_progressive(
+    yc, cbc, crc, qt_luma, qt_chroma, sa: bool = False, al: int = 1
+):
+    """Encode quantized 4:2:0 coefficient grids as a PROGRESSIVE color
+    JPEG (SOF2, r10 d126): one interleaved DC scan, then one
+    single-component AC 1–63 scan per component (progressive AC scans
+    are single-component BY SPEC).  ``sa=True`` (r10, d128) emits the
+    full SUCCESSIVE-APPROXIMATION script: first scans at point
+    transform ``al`` (must be 1), then an interleaved one-bit DC
+    refinement and three per-component AC refinements."""
+    if sa and al != 1:
+        raise ValueError("single-refinement SA only: al must be 1")
+    script = _jpeg_progressive_script(3, ((1, 63),), al if sa else 0)
+    return _jpeg_encode(
+        [yc, cbc, crc], _JPEG_YCC420, [qt_luma, qt_chroma], script
+    )
+
+
+def _jpeg_segments(b: bytes, pos: int = 2):
+    """Walk JPEG marker segments from ``pos`` (default: just past SOI):
+    yields (marker, start, end) byte ranges, end exclusive, up to and
+    including the next SOS (entropy-coded data follows it, which has no
+    segment structure; the decoder resumes the walk after each scan's
+    data) and stops at EOI.  Real-world tolerant (the r12 ADVICE fix):
+    consecutive 0xFF FILL bytes before a marker are legal padding (ITU
+    T.81 §B.1.1.2) and are skipped, and standalone markers (TEM 0x01,
+    RST0–7 0xD0–0xD7) carry no length field; a malformed length (< 2)
+    ends the walk instead of yielding garbage ranges — callers then see
+    the segments parsed so far (extract emits has_exif=0, strip passes
+    the payload through, the decoder fails) rather than dropping the
+    row.  A yielded range may run past the end of a truncated file."""
+    if b[:2] != b"\xff\xd8":
+        return
+    n = len(b)
+    while pos + 2 <= n:
+        if b[pos] != 0xFF:
+            return
+        # skip 0xFF fill (padding) bytes: marker byte is the first
+        # non-0xFF after the run
+        while pos + 1 < n and b[pos + 1] == 0xFF:
+            pos += 1
+        if pos + 2 > n:
+            return
+        marker = b[pos + 1]
+        if marker == 0xD9:  # EOI
+            return
+        if marker == 0x01 or 0xD0 <= marker <= 0xD7:  # TEM / RSTn
+            pos += 2
+            continue
+        if pos + 4 > n:
+            return
+        seg_len = int.from_bytes(b[pos + 2 : pos + 4], "big")
+        if seg_len < 2:
+            return
+        yield marker, pos, pos + 2 + seg_len
+        if marker == 0xDA:  # SOS: entropy-coded data follows
+            return
+        pos += 2 + seg_len
+
+
+def _jpeg_unstuff(b, pos, ri):
+    """Unstuff one scan's entropy-coded bytes from ``pos`` up to the
+    next marker that is not RSTm, split at RSTm markers into one
+    byte-aligned segment per restart interval (the whole scan is one
+    segment without DRI).  Returns (segments, position of the ending
+    marker).  An RSTm without DRI (``ri`` = 0), or out of the D0–D7
+    cycle, raises ValueError: a skipped or duplicated restart is a hard
+    decode failure."""
+    segs = [bytearray()]
+    n = len(b)
+    while True:
+        q = b.find(b"\xff", pos)
+        if q < 0:
+            segs[-1] += b[pos:]
+            return segs, n
+        segs[-1] += b[pos:q]
+        nxt = b[q + 1] if q + 1 < n else None
+        if nxt == 0x00:
+            segs[-1].append(0xFF)
+        elif nxt is not None and 0xD0 <= nxt <= 0xD7:
+            if ri == 0 or nxt - 0xD0 != (len(segs) - 1) % 8:
+                raise ValueError("RSTm without DRI, or out of cycle")
+            segs.append(bytearray())
+        else:
+            return segs, q  # a real marker ends the scan
+        pos = q + 2
+
+
+class _BitReader:
+    """MSB-first reader over one unstuffed entropy segment.  Every read
+    peeks a 24-bit window (three zero pad bytes past the end), so a
+    Huffman probe is one lookup in a 16-bit ``_huff_decode_lut`` table.
+    A window no code prefixes, a code or amplitude reaching past the
+    segment's last bit (EOFError), and an amplitude wider than 16 bits
+    (ValueError: a DHT symbol beyond any T.81 category, which the window
+    cannot serve) fail the decode instead of reading padding."""
+
+    def __init__(self, seg):
+        self.buf = bytes(seg) + b"\x00\x00\x00"
+        self.nbits = len(seg) * 8
+        self.pos = 0
+
+    def huff(self, lut):
+        pos, buf = self.pos, self.buf
+        i = pos >> 3
+        w24 = (buf[i] << 16) | (buf[i + 1] << 8) | buf[i + 2]
+        e = lut[(w24 >> (8 - (pos & 7))) & 0xFFFF]
+        if e == 0 or pos + (e >> 8) > self.nbits:
+            raise EOFError("no Huffman code, or a code past the data")
+        self.pos = pos + (e >> 8)
+        return e & 0xFF
+
+    def bits(self, n):
+        pos, buf = self.pos, self.buf
+        if n > 16:
+            raise ValueError("amplitude category beyond 16")
+        if pos + n > self.nbits:
+            raise EOFError("amplitude past the data")
+        i = pos >> 3
+        w24 = (buf[i] << 16) | (buf[i + 1] << 8) | buf[i + 2]
+        self.pos = pos + n
+        return (w24 >> (24 - (pos & 7) - n)) & ((1 << n) - 1)
+
+    def receive_extend(self, s):
+        """T.81 RECEIVE + EXTEND: the signed value of category ``s``."""
+        if s == 0:
+            return 0
+        v = self.bits(s)
+        return v if v >> (s - 1) else v - (1 << s) + 1
+
+
+def _jpeg_decode_band(rdr, co, base, lut, k, se, al, progressive):
+    """Decode one block's AC first-pass symbols for band k..se at point
+    transform ``al`` into the flat coefficient list ``co`` (block at
+    ``base``, natural order).  Returns the EOBRUN that follows: EOBn
+    symbols (T.81 §G.2; progressive scans only) skip 2ⁿ + ext − 1 more
+    blocks."""
+    zf = _ZZ_FLAT
+    while k <= se:
+        rs = rdr.huff(lut)
+        r, s = rs >> 4, rs & 15
+        if s == 0:
+            if r == 15:  # ZRL
+                k += 16
+                continue
+            if r and not progressive:
+                raise ValueError("EOBn in a sequential scan")
+            return (1 << r) - 1 + rdr.bits(r)
+        k += r
+        if k > se:
+            raise ValueError("run past the end of the band")
+        co[base + zf[k]] = rdr.receive_extend(s) << al
+        k += 1
+    return 0
+
+
+def _jpeg_decode_ac_refine(rdr, co, base, lut, ss, se, al, eobrun):
+    """Decode one block of an AC-refinement scan (T.81 §G.2) into the
+    flat coefficient list ``co`` (block at ``base``): EOB-run blocks
+    read correction bits only; inside a block, runs count zero-history
+    positions while nonzero-history positions consume correction bits.
+    Returns the remaining EOBRUN."""
+    zf = _ZZ_FLAT
+    p1, m1 = 1 << al, -1 << al
+    k = ss
+    if eobrun == 0:
+        while k <= se:
+            rs = rdr.huff(lut)
+            r, sz = rs >> 4, rs & 15
+            newval = 0
+            if sz == 0:
+                if r != 15:
+                    eobrun = (1 << r) + rdr.bits(r)
+                    break
             else:
-                s, bits = _jpeg_put_amplitude(diff)
-                c, ln = dc_codes[s]
-                wtr.write(c, ln)
-                wtr.write(bits, s)
-    out += wtr.flush()
-
-    # scan 2: AC 1-63 first, Ah=0, Al=al — magnitudes truncated to zero
-    out += seg(0xDA, bytes([1, 1, 0x00, 1, 63, al]))
-    wtr = _BitWriter()
-    for y in range(by):
-        for x in range(bx):
-            block = coefs[y, x]
-            run = 0
-            for rr, cc in zz[1:]:
-                v = int(block[rr, cc])
-                vt = (abs(v) >> al) * (1 if v > 0 else -1)
-                if vt == 0:
-                    run += 1
-                    continue
-                while run >= 16:
-                    c, ln = ac_codes[0xF0]
-                    wtr.write(c, ln)
-                    run -= 16
-                s, bits = _jpeg_put_amplitude(vt)
-                c, ln = ac_codes[(run << 4) | s]
-                wtr.write(c, ln)
-                wtr.write(bits, s)
-                run = 0
-            if run:
-                c, ln = ac_codes[0x00]
-                wtr.write(c, ln)
-    out += wtr.flush()
-
-    # scan 3: DC refinement, Ah=al, Al=al-1 — one bit per block
-    out += seg(0xDA, bytes([1, 1, 0x00, 0, 0, ((al << 4) | (al - 1))]))
-    wtr = _BitWriter()
-    for y in range(by):
-        for x in range(bx):
-            wtr.write((int(coefs[y, x, 0, 0]) >> (al - 1)) & 1, 1)
-    out += wtr.flush()
-
-    # scan 4: AC refinement, Ah=al, Al=al-1 (shared emission helper)
-    out += seg(0xDA, bytes([1, 1, 0x00, 1, 63, ((al << 4) | (al - 1))]))
-    wtr = _BitWriter()
-    _jpeg_emit_ac_refine(wtr, coefs, zz, ac_codes, al)
-    out += wtr.flush()
-    out += b"\xff\xd9"
-    return bytes(out)
+                if sz != 1:
+                    raise ValueError("bad refinement size")
+                newval = p1 if rdr.bits(1) else m1
+            while k <= se:
+                z = base + zf[k]
+                if co[z] != 0:
+                    if rdr.bits(1) and not (co[z] & p1):
+                        co[z] += p1 if co[z] > 0 else m1
+                else:
+                    if r == 0:
+                        break
+                    r -= 1
+                k += 1
+            if newval and k <= se:
+                co[base + zf[k]] = newval
+            k += 1
+    if eobrun > 0:
+        while k <= se:
+            z = base + zf[k]
+            if co[z] != 0 and rdr.bits(1) and not (co[z] & p1):
+                co[z] += p1 if co[z] > 0 else m1
+            k += 1
+        eobrun -= 1
+    return eobrun
 
 
-def _jpeg_decode_gray_progressive(b):
-    """Decode a PROGRESSIVE grayscale JPEG (SOF2, spectral selection,
-    Ah=Al=0) to a (h, w) uint8 grid, or None when out of scope
-    (successive approximation, color, restart intervals) or broken:
-    multi-scan marker walk accumulating coefficients — the DC scan's
-    diff chain plus per-band AC scans with general EOBRUN handling
-    (EOBn symbols with n extension bits skip 2ⁿ+ext end-of-band
-    blocks, T.81 §G.2) — then the shared dequant/IDCT tail. Each band
-    must arrive at most once per coefficient (spec: a coefficient
-    appears in exactly one spectral-selection scan)."""
+_IDCT_BASIS: dict = {}  # the 8x8 C[u, x] basis — identical for every image
+
+
+def _idct_plane(coefs, q):
+    """Dequantize + separable IDCT + level shift of a (rows, cols, 8, 8)
+    quantized-coefficient grid: the (rows·8, cols·8) float plane
+    spatial + 128.0, before rounding."""
+    import numpy as np
+
+    C = _IDCT_BASIS.get("C")
+    if C is None:
+        alpha = np.full(8, np.sqrt(2.0 / 8.0))
+        alpha[0] = np.sqrt(1.0 / 8.0)
+        xs = np.arange(8)
+        basis = np.cos((2 * xs[None, :] + 1) * xs[:, None] * np.pi / 16.0)
+        C = alpha[:, None] * basis  # C[u, x]
+        _IDCT_BASIS["C"] = C
+    rows, cols = coefs.shape[0], coefs.shape[1]
+    deq = coefs * q[None, None, :, :]
+    sp = np.einsum("ux,vy,bcuv->bcxy", C, C, deq.astype(np.float64))
+    return (sp + 128.0).transpose(0, 2, 1, 3).reshape(rows * 8, cols * 8)
+
+
+def _jpeg_decode(b):
+    """Decode a baseline (SOF0) or progressive (SOF2) JPEG to ``(sof,
+    img)``: the SOF marker and a (h, w) uint8 grid for one component,
+    or an (h, w, 3) uint8 RGB grid for YCbCr 4:2:0 (sample-replication
+    chroma upsampling, JFIF YCbCr→RGB with floor(x+0.5) rounding).
+    Returns None when out of scope — other SOF classes, 16-bit quant
+    tables, other sampling layouts, DRI in a progressive frame — or
+    broken.
+
+    One marker walk, resumed after each scan's entropy data; each scan
+    decodes into per-component coefficient lists.  A sequential scan
+    covers Ss..Se = 0..63 over its MCUs with per-component DC
+    predictors and restart intervals (each interval byte-aligned, DC
+    predictors reset, the interval count checked).  A progressive scan
+    is DC first, DC refinement, AC first (EOBRUN/ZRL) or AC refinement:
+    DC and AC never share a scan and AC scans are single-component.
+    Each (component, coefficient) slot tracks its successive-
+    approximation depth: a first scan finds it unset, a refinement
+    presents Ah = the previous Al and Al = Ah − 1, and the script must
+    leave every slot of every component at Al = 0."""
     import struct
 
     import numpy as np
 
-    if b[:2] != b"\xff\xd8":
-        return None
-    zz = _jpeg_zigzag()
+    def ceil(a, d):
+        return -(-a // d)
+
+    qtables, huff = {}, {}
+    sof = None
+    ri = 0  # restart interval in MCUs; 0 = none
     pos = 2
-    qtables = {}
-    huff = {}
-    w = h = None
-    comp_q = None
-    scans = []  # (td, ta, ss, se, ah, al, data)
-    while pos + 4 <= len(b):
-        if b[pos] != 0xFF:
-            return None
-        marker = b[pos + 1]
-        if marker == 0xD9:
-            break
-        (ln,) = struct.unpack(">H", b[pos + 2 : pos + 4])
-        payload = b[pos + 4 : pos + 2 + ln]
-        if len(payload) != ln - 2:
-            return None
-        if marker == 0xDB:
-            p = 0
-            while p < len(payload):
-                pq, tq = payload[p] >> 4, payload[p] & 15
-                if pq != 0:
-                    return None
-                vals = payload[p + 1 : p + 65]
-                if len(vals) != 64:
-                    return None
-                q = np.zeros((8, 8), dtype=np.int64)
-                for (r, c), v in zip(zz, vals):
-                    q[r, c] = v
-                qtables[tq] = q
-                p += 65
-        elif marker == 0xC4:
-            p = 0
-            while p < len(payload):
-                tc, th = payload[p] >> 4, payload[p] & 15
-                counts = payload[p + 1 : p + 17]
-                nsym = sum(counts)
-                syms = payload[p + 17 : p + 17 + nsym]
-                if len(syms) != nsym:
-                    return None
-                table = {}
-                code = 0
-                k = 0
-                for lln in range(1, 17):
-                    for _ in range(counts[lln - 1]):
-                        table[(code, lln)] = syms[k]
-                        code += 1
-                        k += 1
-                    code <<= 1
-                huff[(tc, th)] = table
-                p += 17 + nsym
-        elif marker == 0xC2:
-            prec = payload[0]
-            h, w = struct.unpack(">HH", payload[1:5])
-            if prec != 8 or payload[5] != 1 or payload[7] != 0x11:
-                return None
-            comp_q = payload[8]
-        elif marker in (0xC0, 0xC1, 0xC3, 0xC5, 0xC6, 0xC7, 0xDD):
-            return None  # baseline/other SOF here, or DRI (out of scope)
-        elif marker == 0xDA:
-            if payload[0] != 1:
-                return None  # single-component scans only (grayscale)
-            td, ta = payload[2] >> 4, payload[2] & 15
-            ss, se = payload[3], payload[4]
-            ah, al = payload[5] >> 4, payload[5] & 15
-            # entropy data runs to the next real marker
-            data = bytearray()
-            p = pos + 2 + ln
-            while p < len(b):
-                byte = b[p]
-                if byte == 0xFF:
-                    nxt = b[p + 1] if p + 1 < len(b) else None
-                    if nxt == 0x00:
-                        data.append(0xFF)
-                        p += 2
-                        continue
-                    break
-                data.append(byte)
-                p += 1
-            scans.append((td, ta, ss, se, ah, al, bytes(data)))
-            pos = p
-            continue
-        pos += 2 + ln
-    if w is None or comp_q not in qtables or not scans:
-        return None
-
-    class Bits:
-        def __init__(self, buf):
-            self.buf = buf
-            self.pos = 0
-
-        def read1(self):
-            byte_i, bit_i = self.pos >> 3, self.pos & 7
-            if byte_i >= len(self.buf):
-                raise EOFError
-            self.pos += 1
-            return (self.buf[byte_i] >> (7 - bit_i)) & 1
-
-        def read(self, n):
-            v = 0
-            for _ in range(n):
-                v = (v << 1) | self.read1()
-            return v
-
-        def huffman(self, table):
-            code, lln = 0, 0
-            while lln < 16:
-                code = (code << 1) | self.read1()
-                lln += 1
-                sym = table.get((code, lln))
-                if sym is not None:
-                    return sym
-            raise EOFError
-
-    def extend(bits, s):
-        if s == 0:
-            return 0
-        if bits >> (s - 1):
-            return bits
-        return bits - (1 << s) + 1
-
-    bx, by = (w + 7) // 8, (h + 7) // 8
-    coefs = np.zeros((by, bx, 8, 8), dtype=np.int64)
-    # successive-approximation bookkeeping (r10, d123): each zigzag
-    # index's pending low-bit position — None until its first scan; a
-    # refinement scan must present Ah == previous Al and Al == Ah − 1
-    al_state = [None] * 64
     try:
-        for td, ta, ss, se, ah, al, data in scans:
-            if se > 63 or ss > se:
-                return None
-            states = {al_state[k] for k in range(ss, se + 1)}
-            if len(states) != 1:
-                return None  # band straddles different refinement depths
-            prev = states.pop()
-            if ah == 0:
-                if prev is not None:
-                    return None  # first scan must be the first
-            elif prev != ah or al != ah - 1:
-                return None
-            for k in range(ss, se + 1):
-                al_state[k] = al
-            rdr = Bits(data)
-            if ss == 0:
-                if se != 0:
-                    return None  # DC and AC never share a scan (spec)
-                if ah == 0:
-                    dc_tab = huff.get((0, td))
-                    if dc_tab is None:
+        while True:
+            for marker, s, e in _jpeg_segments(b, pos):
+                if e > len(b):
+                    return None
+                payload = b[s + 4 : e]
+                if marker == 0xDB:
+                    p = 0
+                    while p < len(payload):
+                        pq, tq = payload[p] >> 4, payload[p] & 15
+                        if pq != 0:
+                            return None  # 16-bit tables out of scope
+                        vals = payload[p + 1 : p + 65]
+                        if len(vals) != 64:
+                            return None
+                        q = np.zeros(64, dtype=np.int64)
+                        q[_ZZ_FLAT] = np.frombuffer(vals, dtype=np.uint8)
+                        qtables[tq] = q.reshape(8, 8)
+                        p += 65
+                elif marker == 0xC4:
+                    p = 0
+                    while p < len(payload):
+                        tc, th = payload[p] >> 4, payload[p] & 15
+                        nsym = sum(payload[p + 1 : p + 17])
+                        if p + 17 + nsym > len(payload):
+                            return None
+                        huff[(tc, th)] = _huff_decode_lut(
+                            bytes(payload[p + 1 : p + 17 + nsym])
+                        )
+                        p += 17 + nsym
+                elif marker == 0xDD:
+                    (ri,) = struct.unpack(">H", payload[:2])
+                elif marker == 0xDA:
+                    break
+                elif 0xC0 <= marker <= 0xCF and marker not in (0xC8, 0xCC):
+                    if marker not in (0xC0, 0xC2) or sof is not None:
+                        return None  # other SOF classes, or a second frame
+                    h, w = struct.unpack(">HH", payload[1:5])
+                    nc = payload[5]
+                    comps = [payload[6 + 3 * k : 9 + 3 * k] for k in range(nc)]
+                    samp = [(c[1] >> 4, c[1] & 15) for c in comps]
+                    if (
+                        payload[0] != 8
+                        or len(payload) != 6 + 3 * nc
+                        or not (h and w)
+                        or len({c[0] for c in comps}) != nc
+                        or samp not in ([(1, 1)], [(2, 2), (1, 1), (1, 1)])
+                    ):
                         return None
-                    pred = 0
-                    for yb in range(by):
-                        for xb in range(bx):
-                            s = rdr.huffman(dc_tab)
-                            pred += extend(rdr.read(s), s)
-                            coefs[yb, xb, 0, 0] = pred << al
-                else:  # DC refinement: one bit per block at position al
-                    for yb in range(by):
-                        for xb in range(bx):
-                            if rdr.read1():
-                                coefs[yb, xb, 0, 0] |= 1 << al
-            elif ah == 0:  # AC first scan at this depth
-                ac_tab = huff.get((1, ta))
-                if ac_tab is None:
+                    sof = marker
+                    hmax = max(hs for hs, _ in samp)
+                    vmax = max(vs for _, vs in samp)
+                    mx, my = ceil(w, 8 * hmax), ceil(h, 8 * vmax)
+                    # (h, v, rows, cols): each component's own block raster
+                    geom = [
+                        (hs, vs, ceil(ceil(h * vs, vmax), 8),
+                         ceil(ceil(w * hs, hmax), 8))
+                        for hs, vs in samp
+                    ]
+                    co = [[0] * (my * vs * mx * hs * 64) for hs, vs in samp]
+                    depth = [[None] * 64 for _ in comps]
+            else:
+                break  # the walk ended: EOI, truncation or a stray byte
+            if sof is None:
+                return None
+            # the scan header: components, band, successive approximation
+            ids = [c[0] for c in comps]
+            ns = payload[0]
+            scan = [ids.index(payload[1 + 2 * k]) for k in range(ns)]
+            ss, se = payload[1 + 2 * ns], payload[2 + 2 * ns]
+            ah, al = payload[3 + 2 * ns] >> 4, payload[3 + 2 * ns] & 15
+            if not ns or len(payload) != 4 + 2 * ns:
+                return None
+            if sof == 0xC2:
+                # DC and AC never share a scan; AC scans are single-component
+                if ri or ss > se or se > 63 or (ss == 0 and se) or (ss and ns != 1):
                     return None
-                eobrun = 0
-                for yb in range(by):
-                    for xb in range(bx):
-                        if eobrun > 0:
-                            eobrun -= 1
+            elif (ss, se, ah, al) != (0, 63, 0, 0):
+                return None
+            for ci in scan:
+                prev = set(depth[ci][ss : se + 1])
+                if len(prev) != 1:
+                    return None  # band straddles different refinement depths
+                prev = prev.pop()
+                if (ah == 0 and prev is not None) or (
+                    ah and (prev != ah or al != ah - 1)
+                ):
+                    return None
+                depth[ci][ss : se + 1] = [al] * (se - ss + 1)
+            tabs = {}
+            for k, ci in enumerate(scan):
+                t = payload[2 + 2 * k]
+                tabs[ci] = (huff.get((0, t >> 4)), huff.get((1, t & 15)))
+                if (ss == 0 and ah == 0 and tabs[ci][0] is None) or (
+                    se and tabs[ci][1] is None
+                ):
+                    return None
+            segs, pos = _jpeg_unstuff(b, e, ri)
+            mcus = _jpeg_mcus(geom, scan, my, mx)
+            if len(segs) != (ceil(len(mcus), ri) if ri else 1):
+                return None  # restart interval count disagrees with the MCUs
+            for n, mcu in enumerate(mcus):
+                if n == 0 or (ri and n % ri == 0):
+                    rdr = _BitReader(segs[n // ri if ri else 0])
+                    preds = [0] * nc
+                    eobrun = 0
+                for ci, blk in mcu:
+                    c, base = co[ci], blk * 64
+                    if ss == 0:
+                        if ah:  # DC refinement: one bit per block
+                            if rdr.bits(1):
+                                c[base] |= 1 << al
+                        else:
+                            preds[ci] += rdr.receive_extend(rdr.huff(tabs[ci][0]))
+                            c[base] = preds[ci] << al
+                        if se == 0:
                             continue
-                        k = ss
-                        while k <= se:
-                            rs = rdr.huffman(ac_tab)
-                            r, s = rs >> 4, rs & 15
-                            if s == 0:
-                                if r == 15:  # ZRL
-                                    k += 16
-                                    continue
-                                # EOBn: run of 2^r + ext end-of-band blocks
-                                eobrun = (1 << r) - 1
-                                if r:
-                                    eobrun += rdr.read(r)
-                                break
-                            k += r
-                            if k > se:
-                                return None
-                            rr, cc = zz[k]
-                            coefs[yb, xb, rr, cc] = extend(rdr.read(s), s) << al
-                            k += 1
-            else:  # AC refinement scan (T.81 §G.2, shared helper)
-                ac_tab = huff.get((1, ta))
-                if ac_tab is None:
-                    return None
-                _jpeg_decode_ac_refine(coefs, zz, rdr, ac_tab, ss, se, al)
-    except (EOFError, ValueError):
+                    if ah:
+                        eobrun = _jpeg_decode_ac_refine(
+                            rdr, c, base, tabs[ci][1], ss, se, al, eobrun
+                        )
+                    elif eobrun:
+                        eobrun -= 1
+                    else:
+                        eobrun = _jpeg_decode_band(
+                            rdr, c, base, tabs[ci][1], max(ss, 1), se, al, sof == 0xC2
+                        )
+    except (EOFError, IndexError, ValueError, struct.error):
         return None
-    if any(st not in (None, 0) for st in al_state):
-        return None  # refinement chain left unfinished (low bits missing)
-    return _jpeg_idct_gray(coefs, qtables[comp_q], w, h)
+    if sof is None or any(d != 0 for dd in depth for d in dd):
+        return None  # no frame, or the scan script left slots unfinished
+    if any(c[2] not in qtables for c in comps):
+        return None
+    planes = [
+        _idct_plane(
+            np.array(c, dtype=np.int64).reshape(my * vs, mx * hs, 8, 8),
+            qtables[comp[2]],
+        )
+        for c, comp, (hs, vs) in zip(co, comps, samp)
+    ]
+    if len(planes) == 1:
+        img = np.clip(np.floor(planes[0] + 0.5), 0, 255).astype(np.uint8)
+        return sof, img[:h, :w]
+    yp, cbp, crp = planes
+    # 4:2:0 upsampling by sample replication
+    cbu = np.repeat(np.repeat(cbp, 2, axis=0), 2, axis=1)
+    cru = np.repeat(np.repeat(crp, 2, axis=0), 2, axis=1)
+    yv, cb, cr = yp[: my * 16, : mx * 16], cbu - 128.0, cru - 128.0
+    r = yv + 1.402 * cr
+    g = yv - 0.344136 * cb - 0.714136 * cr
+    bl = yv + 1.772 * cb
+    rgb = np.stack([r, g, bl], axis=-1)
+    out = np.clip(np.floor(rgb + 0.5), 0, 255).astype(np.uint8)
+    return sof, out[:h, :w]
+
+
+def _jpeg_decode_as(b, sof, ndim):
+    """``_jpeg_decode`` restricted to one SOF class and component count
+    — the four layout-named decoders below, each rejecting the others'
+    files."""
+    got = _jpeg_decode(b)
+    return got[1] if got is not None and got[0] == sof and got[1].ndim == ndim else None
+
+
+def _jpeg_decode_gray(b):
+    """Baseline grayscale JPEG → (h, w) uint8, else None."""
+    return _jpeg_decode_as(b, 0xC0, 2)
+
+
+def _jpeg_decode_gray_progressive(b):
+    """Progressive (SOF2) grayscale JPEG → (h, w) uint8, else None."""
+    return _jpeg_decode_as(b, 0xC2, 2)
+
+
+def _jpeg_decode_color_420(b):
+    """Baseline YCbCr 4:2:0 JPEG → (h, w, 3) uint8 RGB, else None."""
+    return _jpeg_decode_as(b, 0xC0, 3)
+
+
+def _jpeg_decode_color_420_progressive(b):
+    """Progressive (SOF2) YCbCr 4:2:0 JPEG → (h, w, 3) uint8 RGB, else
+    None."""
+    return _jpeg_decode_as(b, 0xC2, 3)
+
+
+def _jpeg_dc_grid(i: int, rows: int, cols: int):
+    """The JPEG fixtures' coefficient grid: (rows, cols, 8, 8) int64
+    carrying only a DC per block, dc(x, y) = (5·i + 3·x + 7·y) mod 21 −
+    10 — with q0 = 16 each block decodes EXACTLY flat at 128 + 2·dc."""
+    import numpy as np
+
+    coefs = np.zeros((rows, cols, 8, 8), dtype=np.int64)
+    y, x = np.meshgrid(np.arange(rows), np.arange(cols), indexing="ij")
+    coefs[:, :, 0, 0] = (5 * i + 3 * x + 7 * y) % 21 - 10
+    return coefs
+
+
+def _synth_jpeg_gray(
+    df: DataFrame, id_col: str, script, restart_interval: int = 0
+) -> DataFrame:
+    """The grayscale JPEG fixtures: the id's DC grid — width =
+    8·(1 + id%3), height = 8·(1 + (2·id)%3) — against a flat q = 16
+    table, encoded with the given scan script."""
+    import numpy as np
+
+    q = np.full((8, 8), 16, dtype=np.int64)
+
+    def jpeg(i: int) -> bytes:
+        coefs = _jpeg_dc_grid(i, 1 + (2 * i) % 3, 1 + i % 3)
+        return _jpeg_encode([coefs], _JPEG_GRAY, [q], script, restart_interval)
+
+    return _synth_payloads(df, id_col, jpeg)
+
+
+def _synth_jpeg_color(df: DataFrame, id_col: str, script) -> DataFrame:
+    """The 4:2:0 color JPEG fixtures: the id's DC grid as luma — width =
+    16·(1 + id%2), height = 16·(1 + (3·id)%2) — with zero (neutral)
+    chroma and flat tables ql = 16, qc = 8, encoded with the given scan
+    script."""
+    import numpy as np
+
+    ql = np.full((8, 8), 16, dtype=np.int64)
+    qc = np.full((8, 8), 8, dtype=np.int64)
+
+    def jpeg(i: int) -> bytes:
+        mx, my = 1 + i % 2, 1 + (3 * i) % 2
+        chroma = np.zeros((my, mx, 8, 8), dtype=np.int64)
+        grids = [_jpeg_dc_grid(i, 2 * my, 2 * mx), chroma, chroma]
+        return _jpeg_encode(grids, _JPEG_YCC420, [ql, qc], script)
+
+    return _synth_payloads(df, id_col, jpeg)
 
 
 def synth_jpeg(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -2174,27 +2005,7 @@ def synth_jpeg(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
 
     Arrow-batched mapInPandas, same contract as ``synth_media_payload``."""
 
-    def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        q = np.full((8, 8), 16, dtype=np.int64)
-
-        def jpeg(i: int) -> bytes:
-            bx, by = 1 + i % 3, 1 + (2 * i) % 3
-            coefs = np.zeros((by, bx, 8, 8), dtype=np.int64)
-            for y in range(by):
-                for x in range(bx):
-                    coefs[y, x, 0, 0] = (5 * i + 3 * x + 7 * y) % 21 - 10
-            return _jpeg_encode_gray(coefs, q)
-
-        for pdf in batches:
-            ids = pdf[id_col].astype(int)
-            yield pd.DataFrame(
-                [(int(i), jpeg(int(i))) for i in ids],
-                columns=[id_col, "payload"],
-            )
-
-    return df.select(id_col).mapInPandas(build, f"{id_col} long, payload binary")
+    return _synth_jpeg_gray(df, id_col, [((0,), 0, 63, 0, 0)])
 
 
 def synth_jpeg_progressive(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -2204,27 +2015,9 @@ def synth_jpeg_progressive(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     RESULT-INVISIBLE, so d121 reuses d108's oracle verbatim (the
     d118/d120 isolation discipline).  Arrow-batched mapInPandas."""
 
-    def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        q = np.full((8, 8), 16, dtype=np.int64)
-
-        def jpeg(i: int) -> bytes:
-            bx, by = 1 + i % 3, 1 + (2 * i) % 3
-            coefs = np.zeros((by, bx, 8, 8), dtype=np.int64)
-            for y in range(by):
-                for x in range(bx):
-                    coefs[y, x, 0, 0] = (5 * i + 3 * x + 7 * y) % 21 - 10
-            return _jpeg_encode_gray_progressive(coefs, q)
-
-        for pdf in batches:
-            ids = pdf[id_col].astype(int)
-            yield pd.DataFrame(
-                [(int(i), jpeg(int(i))) for i in ids],
-                columns=[id_col, "payload"],
-            )
-
-    return df.select(id_col).mapInPandas(build, f"{id_col} long, payload binary")
+    return _synth_jpeg_gray(
+        df, id_col, _jpeg_progressive_script(1, ((1, 5), (6, 63)), 0)
+    )
 
 
 def synth_jpeg_progressive_sa(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -2234,27 +2027,7 @@ def synth_jpeg_progressive_sa(df: DataFrame, id_col: str = "doc_id") -> DataFram
     must be RESULT-INVISIBLE, so d123 reuses d108's oracle verbatim.
     Arrow-batched mapInPandas."""
 
-    def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        q = np.full((8, 8), 16, dtype=np.int64)
-
-        def jpeg(i: int) -> bytes:
-            bx, by = 1 + i % 3, 1 + (2 * i) % 3
-            coefs = np.zeros((by, bx, 8, 8), dtype=np.int64)
-            for y in range(by):
-                for x in range(bx):
-                    coefs[y, x, 0, 0] = (5 * i + 3 * x + 7 * y) % 21 - 10
-            return _jpeg_encode_gray_progressive_sa(coefs, q)
-
-        for pdf in batches:
-            ids = pdf[id_col].astype(int)
-            yield pd.DataFrame(
-                [(int(i), jpeg(int(i))) for i in ids],
-                columns=[id_col, "payload"],
-            )
-
-    return df.select(id_col).mapInPandas(build, f"{id_col} long, payload binary")
+    return _synth_jpeg_gray(df, id_col, _jpeg_progressive_script(1, ((1, 63),), 1))
 
 
 def synth_jpeg_dri(
@@ -2271,100 +2044,35 @@ def synth_jpeg_dri(
     broken byte-align breaks d118 while d108 stays green, isolating the
     restart path.  Arrow-batched mapInPandas."""
 
-    def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        q = np.full((8, 8), 16, dtype=np.int64)
-
-        def jpeg(i: int) -> bytes:
-            bx, by = 1 + i % 3, 1 + (2 * i) % 3
-            coefs = np.zeros((by, bx, 8, 8), dtype=np.int64)
-            for y in range(by):
-                for x in range(bx):
-                    coefs[y, x, 0, 0] = (5 * i + 3 * x + 7 * y) % 21 - 10
-            return _jpeg_encode_gray(coefs, q, restart_interval=restart_interval)
-
-        for pdf in batches:
-            ids = pdf[id_col].astype(int)
-            yield pd.DataFrame(
-                [(int(i), jpeg(int(i))) for i in ids],
-                columns=[id_col, "payload"],
-            )
-
-    return df.select(id_col).mapInPandas(build, f"{id_col} long, payload binary")
+    return _synth_jpeg_gray(df, id_col, [((0,), 0, 63, 0, 0)], restart_interval)
 
 
 def decode_jpeg_stats(
     df: DataFrame, payload_col: str = "payload", id_col: str = "doc_id"
 ) -> DataFrame:
-    """REAL baseline JPEG decode with NO codec library — the lossy-codec
-    gap closed for grayscale baseline JPEG: marker walk, DQT zigzag
-    rebuild, DHT canonical-Huffman reconstruction, FF00 unstuffing,
-    bit-level Huffman decode of the DC-diff chain and AC run-length
-    symbols (EOB/ZRL), dequantization, separable IDCT, level shift —
-    then the same per-channel stats + position-weighted checksum frame
-    as the PNG/BMP/PPM tiers (grayscale = channel 0). Out-of-scope
-    shapes (color, progressive, restart markers, 16-bit tables) and any
-    structural error degrade to skip, never an executor error.
+    """REAL grayscale JPEG decode with NO codec library — baseline and
+    progressive (spectral selection, successive approximation), with or
+    without restart intervals, through the one ``_jpeg_decode``: marker
+    walk, DQT zigzag rebuild, DHT canonical-Huffman tables, FF00
+    unstuffing, Huffman decode of the scan script, dequantization,
+    separable IDCT, level shift — then the shared per-channel stats +
+    position-weighted checksum frame of the PNG/BMP/PPM tiers
+    (grayscale = channel 0 only). Color files, out-of-scope shapes
+    (other SOF classes, 16-bit tables, DRI in a progressive frame) and
+    any structural error degrade to skip, never an executor error.
 
     d108 certifies the full chain on DC-only blocks where the IDCT is
     exact integer arithmetic; the AC path is unit-tested against a
     reference IDCT. Scale: pure mapInPandas over Arrow batches, zero
-    shuffles; the bit-serial entropy decode is per-image sequential BY
-    SPEC (DC prediction chains through the scan) — parallelism lives
-    across images, which is where 100 TB lives."""
+    shuffles; the entropy decode is per-image sequential BY SPEC (DC
+    prediction chains through the scan) — parallelism lives across
+    images, which is where 100 TB lives."""
 
-    def stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    def decode(b: bytes):
+        got = _jpeg_decode(b)
+        return ("jpeg", got[1]) if got is not None and got[1].ndim == 2 else None
 
-        for pdf in batches:
-            rows = []
-            for i, buf in zip(pdf[id_col], pdf[payload_col]):
-                # baseline first (its marker walk exits cheaply at SOF2),
-                # then the progressive decoder (r10, d121)
-                try:
-                    img = _jpeg_decode_gray(bytes(buf))
-                    if img is None:
-                        img = _jpeg_decode_gray_progressive(bytes(buf))
-                except Exception:
-                    img = None
-                if img is None:
-                    continue
-                h, w = img.shape
-                v = img.astype(np.int64)
-                n = w * h
-                xw = np.arange(w) + 1
-                yw = np.arange(h) + 2
-                wgt = yw[:, None] * xw[None, :]
-                s, ss = int(v.sum()), int((v * v).sum())
-                mean = s / n
-                rows.append(
-                    (
-                        int(i),
-                        "jpeg",
-                        w,
-                        h,
-                        0,
-                        round(mean, 6),
-                        int(v.min()),
-                        int(v.max()),
-                        round((ss / n - mean * mean) ** 0.5, 6),
-                        int((v * wgt).sum()),
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    id_col, "format", "width", "height", "channel",
-                    "mean", "min", "max", "std", "pos_sum",
-                ],
-            )
-
-    return df.mapInPandas(
-        stats,
-        f"{id_col} long, format string, width int, height int, channel int, "
-        "mean double, min int, max int, std double, pos_sum long",
-    )
+    return _image_stats(df, decode, payload_col, id_col)
 
 
 def synth_pcm_wav(
@@ -2388,33 +2096,18 @@ def synth_pcm_wav(
             "gain*1024 + offset inside int16"
         )
 
-    def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import struct
+    import numpy as np
 
-        import numpy as np
+    def wav(i: int) -> bytes:
+        n = 256 + i % 64
+        a, b = 3 + i % 5, i % 97
+        t = np.arange(n, dtype=np.int64)
+        samples = (
+            gain * ((a * t + b) % 2048 - 1024) + offset
+        ).astype("<i2")
+        return _wav_pcm16(samples.tobytes(), 8000)
 
-        def wav(i: int) -> bytes:
-            n = 256 + i % 64
-            a, b = 3 + i % 5, i % 97
-            t = np.arange(n, dtype=np.int64)
-            samples = (
-                gain * ((a * t + b) % 2048 - 1024) + offset
-            ).astype("<i2")
-            data = samples.tobytes()
-            sr, ch = 8000, 1
-            fmt = struct.pack("<HHIIHH", 1, ch, sr, sr * ch * 2, ch * 2, 16)
-            body = b"WAVEfmt " + struct.pack("<I", 16) + fmt
-            body += b"data" + struct.pack("<I", len(data)) + data
-            return b"RIFF" + struct.pack("<I", len(body)) + body
-
-        for pdf in batches:
-            ids = pdf[id_col].astype(int)
-            yield pd.DataFrame(
-                [(int(i), wav(int(i))) for i in ids],
-                columns=[id_col, "payload"],
-            )
-
-    return df.select(id_col).mapInPandas(build, f"{id_col} long, payload binary")
+    return _synth_payloads(df, id_col, wav)
 
 
 def synth_chirp_wav(
@@ -2448,33 +2141,18 @@ def synth_chirp_wav(
     if extra < 0:
         raise ValueError("synth_chirp_wav: extra must be >= 0")
 
-    def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import struct
+    import numpy as np
 
-        import numpy as np
+    def wav(i: int) -> bytes:
+        n = 256 + i % 64 + extra
+        a, b = 1 + i % 7, 3 + i % 13
+        t = np.arange(n, dtype=np.int64)
+        samples = (
+            gain * ((a * t * t + b * t + i) % 2048 - 1024) + offset
+        ).astype("<i2")
+        return _wav_pcm16(samples.tobytes(), 8000)
 
-        def wav(i: int) -> bytes:
-            n = 256 + i % 64 + extra
-            a, b = 1 + i % 7, 3 + i % 13
-            t = np.arange(n, dtype=np.int64)
-            samples = (
-                gain * ((a * t * t + b * t + i) % 2048 - 1024) + offset
-            ).astype("<i2")
-            data = samples.tobytes()
-            sr, ch = 8000, 1
-            fmt = struct.pack("<HHIIHH", 1, ch, sr, sr * ch * 2, ch * 2, 16)
-            body = b"WAVEfmt " + struct.pack("<I", 16) + fmt
-            body += b"data" + struct.pack("<I", len(data)) + data
-            return b"RIFF" + struct.pack("<I", len(body)) + body
-
-        for pdf in batches:
-            ids = pdf[id_col].astype(int)
-            yield pd.DataFrame(
-                [(int(i), wav(int(i))) for i in ids],
-                columns=[id_col, "payload"],
-            )
-
-    return df.select(id_col).mapInPandas(build, f"{id_col} long, payload binary")
+    return _synth_payloads(df, id_col, wav)
 
 
 def synth_speech_wav(
@@ -2494,36 +2172,21 @@ def synth_speech_wav(
     if not -16 <= gain <= 16:
         raise ValueError("synth_speech_wav: |gain| <= 16 keeps int16")
 
-    def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import struct
+    import numpy as np
 
-        import numpy as np
+    def wav(i: int) -> bytes:
+        n = 512 + (i % 8) * 64
+        a, b = 1 + i % 7, 3 + i % 13
+        t = np.arange(n, dtype=np.int64)
+        cls = (t // 64 + i) % 4
+        loud = (a * t * t + b * t + i) % 2048 - 1024
+        med = (a * t * t + b * t + i) % 720 - 360
+        sil = (3 * t + i) % 16 - 8
+        base = np.where(cls == 0, sil, np.where(cls == 3, med, loud))
+        samples = (gain * base).astype("<i2")
+        return _wav_pcm16(samples.tobytes(), 8000)
 
-        def wav(i: int) -> bytes:
-            n = 512 + (i % 8) * 64
-            a, b = 1 + i % 7, 3 + i % 13
-            t = np.arange(n, dtype=np.int64)
-            cls = (t // 64 + i) % 4
-            loud = (a * t * t + b * t + i) % 2048 - 1024
-            med = (a * t * t + b * t + i) % 720 - 360
-            sil = (3 * t + i) % 16 - 8
-            base = np.where(cls == 0, sil, np.where(cls == 3, med, loud))
-            samples = (gain * base).astype("<i2")
-            data = samples.tobytes()
-            sr, ch = 8000, 1
-            fmt = struct.pack("<HHIIHH", 1, ch, sr, sr * ch * 2, ch * 2, 16)
-            body = b"WAVEfmt " + struct.pack("<I", 16) + fmt
-            body += b"data" + struct.pack("<I", len(data)) + data
-            return b"RIFF" + struct.pack("<I", len(body)) + body
-
-        for pdf in batches:
-            ids = pdf[id_col].astype(int)
-            yield pd.DataFrame(
-                [(int(i), wav(int(i))) for i in ids],
-                columns=[id_col, "payload"],
-            )
-
-    return df.select(id_col).mapInPandas(build, f"{id_col} long, payload binary")
+    return _synth_payloads(df, id_col, wav)
 
 
 def vad_segments(
@@ -2909,711 +2572,6 @@ def resample_fir_stats(
     )
 
 
-def _jpeg_encode_color_420(yc, cbc, crc, qt_luma, qt_chroma):
-    """Encode quantized coefficient grids into a baseline YCbCr 4:2:0
-    color JPEG — interleaved MCU scan (Y00 Y01 Y10 Y11 Cb Cr), separate
-    luma/chroma quant + Huffman tables, per-component DC predictors.
-
-    yc: (2·my, 2·mx, 8, 8) luma coefficients; cbc/crc: (my, mx, 8, 8);
-    image dimensions (my·16, mx·16)."""
-    import struct
-
-    zz = _jpeg_zigzag()
-    my, mx = cbc.shape[0], cbc.shape[1]
-    h, w = my * 16, mx * 16
-    dc_codes = _canonical_codes(_JPEG_DC_LENGTHS)
-    ac_codes = _canonical_codes(_JPEG_AC_LENGTHS)
-
-    def seg(marker, payload):
-        return bytes([0xFF, marker]) + struct.pack(">H", 2 + len(payload)) + payload
-
-    out = bytearray(b"\xff\xd8")
-    for tid, qt in ((0, qt_luma), (1, qt_chroma)):
-        qzz = bytes(int(qt[r][c]) for r, c in zz)
-        out += seg(0xDB, bytes([tid]) + qzz)
-    out += seg(
-        0xC0,
-        bytes([8])
-        + struct.pack(">HH", h, w)
-        + bytes([3, 1, 0x22, 0, 2, 0x11, 1, 3, 0x11, 1]),
-    )
-    # the same canonical tables registered under BOTH table ids —
-    # exercises the 4-table DHT parse without changing code assignments
-    for tid in (0, 1):
-        out += seg(0xC4, _dht_payload(0, tid, _JPEG_DC_LENGTHS))
-        out += seg(0xC4, _dht_payload(1, tid, _JPEG_AC_LENGTHS))
-    out += seg(0xDA, bytes([3, 1, 0x00, 2, 0x11, 3, 0x11, 0, 63, 0]))
-
-    wtr = _BitWriter()
-
-    def put_amplitude(v):
-        s = int(v).bit_length() if v > 0 else int(-v).bit_length()
-        bits = v if v > 0 else v + (1 << s) - 1
-        return s, bits
-
-    def put_block(block, pred):
-        dc = int(block[0, 0])
-        diff = dc - pred
-        if diff == 0:
-            c, ln = dc_codes[0]
-            wtr.write(c, ln)
-        else:
-            s, bits = put_amplitude(diff)
-            c, ln = dc_codes[s]
-            wtr.write(c, ln)
-            wtr.write(bits, s)
-        acs = [int(block[r][cc]) for r, cc in zz[1:]]
-        run = 0
-        for v in acs:
-            if v == 0:
-                run += 1
-                continue
-            while run >= 16:
-                c, ln = ac_codes[0xF0]
-                wtr.write(c, ln)
-                run -= 16
-            s, bits = put_amplitude(v)
-            c, ln = ac_codes[(run << 4) | s]
-            wtr.write(c, ln)
-            wtr.write(bits, s)
-            run = 0
-        if run:
-            c, ln = ac_codes[0x00]
-            wtr.write(c, ln)
-        return dc
-
-    py = pcb = pcr = 0
-    for m_y in range(my):
-        for m_x in range(mx):
-            for dy in (0, 1):
-                for dx in (0, 1):
-                    py = put_block(yc[2 * m_y + dy, 2 * m_x + dx], py)
-            pcb = put_block(cbc[m_y, m_x], pcb)
-            pcr = put_block(crc[m_y, m_x], pcr)
-    out += wtr.flush()
-    out += b"\xff\xd9"
-    return bytes(out)
-
-
-def _jpeg_decode_color_420(b):
-    """Decode a baseline YCbCr 4:2:0 color JPEG to an (h, w, 3) uint8 RGB
-    grid, or None when out of scope / broken: interleaved-MCU Huffman
-    decode with per-component DC predictors, dual quant tables, sample-
-    replication chroma upsampling, JFIF YCbCr→RGB with floor(x+0.5)
-    rounding."""
-    import struct
-
-    import numpy as np
-
-    if b[:2] != b"\xff\xd8":
-        return None
-    zz = _jpeg_zigzag()
-    pos = 2
-    qtables = {}
-    huff = {}
-    w = h = None
-    comps = None
-    scan_tabs = None
-    while pos + 4 <= len(b):
-        if b[pos] != 0xFF:
-            return None
-        marker = b[pos + 1]
-        if marker == 0xD9:
-            break
-        (ln,) = struct.unpack(">H", b[pos + 2 : pos + 4])
-        payload = b[pos + 4 : pos + 2 + ln]
-        if len(payload) != ln - 2:
-            return None
-        if marker == 0xDB:
-            p = 0
-            while p < len(payload):
-                pq, tq = payload[p] >> 4, payload[p] & 15
-                if pq != 0:
-                    return None
-                vals = payload[p + 1 : p + 65]
-                if len(vals) != 64:
-                    return None
-                q = np.zeros((8, 8), dtype=np.int64)
-                for (r, c), v in zip(zz, vals):
-                    q[r, c] = v
-                qtables[tq] = q
-                p += 65
-        elif marker == 0xC4:
-            p = 0
-            while p < len(payload):
-                tc, th = payload[p] >> 4, payload[p] & 15
-                counts = payload[p + 1 : p + 17]
-                nsym = sum(counts)
-                syms = payload[p + 17 : p + 17 + nsym]
-                if len(syms) != nsym:
-                    return None
-                table = {}
-                code = 0
-                k = 0
-                for lln in range(1, 17):
-                    for _ in range(counts[lln - 1]):
-                        table[(code, lln)] = syms[k]
-                        code += 1
-                        k += 1
-                    code <<= 1
-                huff[(tc, th)] = table
-                p += 17 + nsym
-        elif marker == 0xC0:
-            prec = payload[0]
-            h, w = struct.unpack(">HH", payload[1:5])
-            ncomp = payload[5]
-            if prec != 8 or ncomp != 3:
-                return None
-            comps = {}
-            for ci in range(3):
-                cid = payload[6 + 3 * ci]
-                samp = payload[7 + 3 * ci]
-                tq = payload[8 + 3 * ci]
-                comps[cid] = (samp, tq)
-            # strict 4:2:0: Y 2x2, chroma 1x1
-            if comps.get(1, (0, 0))[0] != 0x22:
-                return None
-            if comps.get(2, (0, 0))[0] != 0x11 or comps.get(3, (0, 0))[0] != 0x11:
-                return None
-        elif marker in (0xC1, 0xC2, 0xC3, 0xC5, 0xC6, 0xC7, 0xDD):
-            return None
-        elif marker == 0xDA:
-            ns = payload[0]
-            if ns != 3:
-                return None
-            scan_tabs = {}
-            for si in range(3):
-                cid = payload[1 + 2 * si]
-                scan_tabs[cid] = (payload[2 + 2 * si] >> 4, payload[2 + 2 * si] & 15)
-            pos = pos + 2 + ln
-            break
-        pos += 2 + ln
-    if scan_tabs is None or comps is None or w is None:
-        return None
-    for cid in (1, 2, 3):
-        if comps[cid][1] not in qtables:
-            return None
-        td, ta = scan_tabs[cid]
-        if (0, td) not in huff or (1, ta) not in huff:
-            return None
-
-    data = bytearray()
-    p = pos
-    while p < len(b):
-        byte = b[p]
-        if byte == 0xFF:
-            nxt = b[p + 1] if p + 1 < len(b) else None
-            if nxt == 0x00:
-                data.append(0xFF)
-                p += 2
-                continue
-            break
-        data.append(byte)
-        p += 1
-
-    class Bits:
-        def __init__(self, buf):
-            self.buf = buf
-            self.pos = 0
-
-        def read1(self):
-            byte_i, bit_i = self.pos >> 3, self.pos & 7
-            if byte_i >= len(self.buf):
-                raise EOFError
-            self.pos += 1
-            return (self.buf[byte_i] >> (7 - bit_i)) & 1
-
-        def read(self, n):
-            v = 0
-            for _ in range(n):
-                v = (v << 1) | self.read1()
-            return v
-
-        def huffman(self, table):
-            code, lln = 0, 0
-            while lln < 16:
-                code = (code << 1) | self.read1()
-                lln += 1
-                sym = table.get((code, lln))
-                if sym is not None:
-                    return sym
-            raise EOFError
-
-    def extend(bits, s):
-        if s == 0:
-            return 0
-        if bits >> (s - 1):
-            return bits
-        return bits - (1 << s) + 1
-
-    mx, my = (w + 15) // 16, (h + 15) // 16
-    yc = np.zeros((2 * my, 2 * mx, 8, 8), dtype=np.int64)
-    cbc = np.zeros((my, mx, 8, 8), dtype=np.int64)
-    crc = np.zeros((my, mx, 8, 8), dtype=np.int64)
-    rdr = Bits(bytes(data))
-    preds = {1: 0, 2: 0, 3: 0}
-
-    def read_block(cid, target):
-        dc_tab = huff[(0, scan_tabs[cid][0])]
-        ac_tab = huff[(1, scan_tabs[cid][1])]
-        s = rdr.huffman(dc_tab)
-        preds[cid] += extend(rdr.read(s), s)
-        target[0, 0] = preds[cid]
-        k = 1
-        while k < 64:
-            rs = rdr.huffman(ac_tab)
-            if rs == 0x00:
-                break
-            if rs == 0xF0:
-                k += 16
-                continue
-            run, size = rs >> 4, rs & 15
-            k += run
-            if k > 63 or size == 0:
-                raise EOFError
-            r, c = zz[k]
-            target[r, c] = extend(rdr.read(size), size)
-            k += 1
-
-    try:
-        for m_y in range(my):
-            for m_x in range(mx):
-                for dy in (0, 1):
-                    for dx in (0, 1):
-                        read_block(1, yc[2 * m_y + dy, 2 * m_x + dx])
-                read_block(2, cbc[m_y, m_x])
-                read_block(3, crc[m_y, m_x])
-    except EOFError:
-        return None
-
-    return _jpeg_color_reconstruct(
-        yc, cbc, crc,
-        qtables[comps[1][1]], qtables[comps[2][1]], qtables[comps[3][1]],
-        w, h,
-    )
-
-
-def _jpeg_color_reconstruct(yc, cbc, crc, qy, qcb, qcr, w, h):
-    """Dequant + IDCT per plane, 4:2:0 sample-replication upsampling,
-    JFIF YCbCr→RGB — shared by the baseline (interleaved scan) and
-    progressive (multi-scan accumulated) color decoders."""
-    import numpy as np
-
-    my, mx = cbc.shape[0], cbc.shape[1]
-    alpha = np.full(8, np.sqrt(2.0 / 8.0))
-    alpha[0] = np.sqrt(1.0 / 8.0)
-    xs = np.arange(8)
-    C = alpha[:, None] * np.cos((2 * xs[None, :] + 1) * xs[:, None] * np.pi / 16.0)
-
-    def plane(coefs, q):
-        deq = coefs * q[None, None, :, :]
-        sp = np.einsum("ux,vy,bcuv->bcxy", C, C, deq.astype(np.float64))
-        by, bx = coefs.shape[0], coefs.shape[1]
-        return (sp + 128.0).transpose(0, 2, 1, 3).reshape(by * 8, bx * 8)
-
-    yp = plane(yc, qy)
-    cbp = plane(cbc, qcb)
-    crp = plane(crc, qcr)
-    # 4:2:0 upsampling by sample replication
-    cbu = np.repeat(np.repeat(cbp, 2, axis=0), 2, axis=1)
-    cru = np.repeat(np.repeat(crp, 2, axis=0), 2, axis=1)
-    yv, cb, cr = yp[: my * 16, : mx * 16], cbu - 128.0, cru - 128.0
-    r = yv + 1.402 * cr
-    g = yv - 0.344136 * cb - 0.714136 * cr
-    bl = yv + 1.772 * cb
-    rgb = np.stack([r, g, bl], axis=-1)
-    out = np.clip(np.floor(rgb + 0.5), 0, 255).astype(np.uint8)
-    return out[:h, :w]
-
-
-def _jpeg_encode_color_420_progressive(
-    yc, cbc, crc, qt_luma, qt_chroma, sa: bool = False, al: int = 1
-):
-    """Encode quantized 4:2:0 coefficient grids as a PROGRESSIVE color
-    JPEG (SOF2, r10 d126) — the structure T.81 §G prescribes for color:
-    ONE INTERLEAVED DC scan (all three components in MCU order,
-    per-component predictors), then one NON-interleaved AC scan per
-    component over that component's own block raster (1–63; progressive
-    AC scans are single-component BY SPEC). ``sa=True`` (r10, d128)
-    emits the full SUCCESSIVE-APPROXIMATION script: DC/AC first scans
-    at point transform ``al`` (must be 1), then an interleaved one-bit
-    DC refinement and three per-component AC refinements. Same
-    tables/geometry as ``_jpeg_encode_color_420``."""
-    if sa and al != 1:
-        raise ValueError("single-refinement SA only: al must be 1")
-    a0 = al if sa else 0
-    import struct
-
-    zz = _jpeg_zigzag()
-    my, mx = cbc.shape[0], cbc.shape[1]
-    h, w = my * 16, mx * 16
-    dc_codes = _canonical_codes(_JPEG_DC_LENGTHS)
-    ac_codes = _canonical_codes(_JPEG_AC_LENGTHS)
-
-    def seg(marker, payload):
-        return bytes([0xFF, marker]) + struct.pack(">H", 2 + len(payload)) + payload
-
-    out = bytearray(b"\xff\xd8")
-    for tid, qt in ((0, qt_luma), (1, qt_chroma)):
-        qzz = bytes(int(qt[r][c]) for r, c in zz)
-        out += seg(0xDB, bytes([tid]) + qzz)
-    out += seg(
-        0xC2,
-        bytes([8])
-        + struct.pack(">HH", h, w)
-        + bytes([3, 1, 0x22, 0, 2, 0x11, 1, 3, 0x11, 1]),
-    )
-    for tid in (0, 1):
-        out += seg(0xC4, _dht_payload(0, tid, _JPEG_DC_LENGTHS))
-        out += seg(0xC4, _dht_payload(1, tid, _JPEG_AC_LENGTHS))
-
-    wtr = _BitWriter()
-
-    def put_dc(block, pred):
-        dc = int(block[0, 0]) >> a0  # arithmetic shift (spec, a0=0 plain)
-        diff = dc - pred
-        if diff == 0:
-            c, ln = dc_codes[0]
-            wtr.write(c, ln)
-        else:
-            s, bits = _jpeg_put_amplitude(diff)
-            c, ln = dc_codes[s]
-            wtr.write(c, ln)
-            wtr.write(bits, s)
-        return dc
-
-    # scan 1: interleaved DC first (Ss=Se=0, Al=a0), MCU order
-    out += seg(0xDA, bytes([3, 1, 0x00, 2, 0x11, 3, 0x11, 0, 0, a0]))
-    py = pcb = pcr = 0
-    for m_y in range(my):
-        for m_x in range(mx):
-            for dy in (0, 1):
-                for dx in (0, 1):
-                    py = put_dc(yc[2 * m_y + dy, 2 * m_x + dx], py)
-            pcb = put_dc(cbc[m_y, m_x], pcb)
-            pcr = put_dc(crc[m_y, m_x], pcr)
-    out += wtr.flush()
-
-    # scans 2-4: per-component AC 1-63 first (Al=a0), block raster
-    for cid, tid, grid in ((1, 0, yc), (2, 1, cbc), (3, 1, crc)):
-        out += seg(0xDA, bytes([1, cid, (tid << 4) | tid, 1, 63, a0]))
-        wtr = _BitWriter()
-        for by_ in range(grid.shape[0]):
-            for bx_ in range(grid.shape[1]):
-                block = grid[by_, bx_]
-                run = 0
-                for rr, cc in zz[1:]:
-                    v = int(block[rr, cc])
-                    if a0:
-                        v = (abs(v) >> a0) * (1 if v > 0 else -1)
-                    if v == 0:
-                        run += 1
-                        continue
-                    while run >= 16:
-                        c, ln = ac_codes[0xF0]
-                        wtr.write(c, ln)
-                        run -= 16
-                    s, bits = _jpeg_put_amplitude(v)
-                    c, ln = ac_codes[(run << 4) | s]
-                    wtr.write(c, ln)
-                    wtr.write(bits, s)
-                    run = 0
-                if run:
-                    c, ln = ac_codes[0x00]
-                    wtr.write(c, ln)
-        out += wtr.flush()
-    if sa:
-        # scan 5: interleaved DC refinement — one bit per block, MCU order
-        out += seg(0xDA, bytes([3, 1, 0x00, 2, 0x11, 3, 0x11, 0, 0,
-                                (al << 4) | (al - 1)]))
-        wtr = _BitWriter()
-        for m_y in range(my):
-            for m_x in range(mx):
-                for dy in (0, 1):
-                    for dx in (0, 1):
-                        wtr.write(
-                            (int(yc[2 * m_y + dy, 2 * m_x + dx, 0, 0])
-                             >> (al - 1)) & 1, 1)
-                wtr.write((int(cbc[m_y, m_x, 0, 0]) >> (al - 1)) & 1, 1)
-                wtr.write((int(crc[m_y, m_x, 0, 0]) >> (al - 1)) & 1, 1)
-        out += wtr.flush()
-        # scans 6-8: per-component AC refinement (shared helper)
-        for cid, tid, grid in ((1, 0, yc), (2, 1, cbc), (3, 1, crc)):
-            out += seg(0xDA, bytes([1, cid, (tid << 4) | tid, 1, 63,
-                                    (al << 4) | (al - 1)]))
-            wtr = _BitWriter()
-            _jpeg_emit_ac_refine(wtr, grid, zz, ac_codes, al)
-            out += wtr.flush()
-    out += b"\xff\xd9"
-    return bytes(out)
-
-
-def _jpeg_decode_color_420_progressive(b):
-    """Decode a PROGRESSIVE 4:2:0 color JPEG (SOF2, spectral selection,
-    Ah=Al=0) to (h, w, 3) RGB, or None when out of scope / broken: the
-    interleaved DC scan walks MCUs with per-component predictors;
-    single-component AC scans walk that component's block raster with
-    EOBRUN handling; coefficients accumulate across scans before the
-    shared 4:2:0 reconstruction."""
-    import struct
-
-    import numpy as np
-
-    if b[:2] != b"\xff\xd8":
-        return None
-    zz = _jpeg_zigzag()
-    pos = 2
-    qtables = {}
-    huff = {}
-    w = h = None
-    comps = None
-    scans = []  # (ncomp, comp_spec, ss, se, ah, al, data)
-    while pos + 4 <= len(b):
-        if b[pos] != 0xFF:
-            return None
-        marker = b[pos + 1]
-        if marker == 0xD9:
-            break
-        (ln,) = struct.unpack(">H", b[pos + 2 : pos + 4])
-        payload = b[pos + 4 : pos + 2 + ln]
-        if len(payload) != ln - 2:
-            return None
-        if marker == 0xDB:
-            p = 0
-            while p < len(payload):
-                pq, tq = payload[p] >> 4, payload[p] & 15
-                if pq != 0:
-                    return None
-                vals = payload[p + 1 : p + 65]
-                if len(vals) != 64:
-                    return None
-                q = np.zeros((8, 8), dtype=np.int64)
-                for (r, c), v in zip(zz, vals):
-                    q[r, c] = v
-                qtables[tq] = q
-                p += 65
-        elif marker == 0xC4:
-            p = 0
-            while p < len(payload):
-                tc, th = payload[p] >> 4, payload[p] & 15
-                counts = payload[p + 1 : p + 17]
-                nsym = sum(counts)
-                syms = payload[p + 17 : p + 17 + nsym]
-                if len(syms) != nsym:
-                    return None
-                table = {}
-                code = 0
-                k = 0
-                for lln in range(1, 17):
-                    for _ in range(counts[lln - 1]):
-                        table[(code, lln)] = syms[k]
-                        code += 1
-                        k += 1
-                    code <<= 1
-                huff[(tc, th)] = table
-                p += 17 + nsym
-        elif marker == 0xC2:
-            if payload[0] != 8 or payload[5] != 3:
-                return None
-            h, w = struct.unpack(">HH", payload[1:5])
-            comps = {}
-            for ci in range(3):
-                cid = payload[6 + 3 * ci]
-                samp = payload[7 + 3 * ci]
-                tq = payload[8 + 3 * ci]
-                comps[cid] = (samp, tq)
-            if comps.get(1, (0,))[0] != 0x22:
-                return None  # luma 2x2 only (4:2:0)
-            for cid in (2, 3):
-                if comps.get(cid, (0,))[0] != 0x11:
-                    return None
-        elif marker in (0xC0, 0xC1, 0xC3, 0xC5, 0xC6, 0xC7, 0xDD):
-            return None
-        elif marker == 0xDA:
-            ncomp = payload[0]
-            spec = []
-            for si in range(ncomp):
-                spec.append(
-                    (payload[1 + 2 * si], payload[2 + 2 * si] >> 4,
-                     payload[2 + 2 * si] & 15)
-                )
-            ss, se = payload[1 + 2 * ncomp], payload[2 + 2 * ncomp]
-            ahal = payload[3 + 2 * ncomp]
-            data = bytearray()
-            p = pos + 2 + ln
-            while p < len(b):
-                byte = b[p]
-                if byte == 0xFF:
-                    nxt = b[p + 1] if p + 1 < len(b) else None
-                    if nxt == 0x00:
-                        data.append(0xFF)
-                        p += 2
-                        continue
-                    break
-                data.append(byte)
-                p += 1
-            scans.append(
-                (ncomp, spec, ss, se, ahal >> 4, ahal & 15, bytes(data))
-            )
-            pos = p
-            continue
-        pos += 2 + ln
-    if w is None or comps is None or not scans:
-        return None
-    for cid in (1, 2, 3):
-        if cid not in comps or comps[cid][1] not in qtables:
-            return None
-
-    class Bits:
-        def __init__(self, buf):
-            self.buf = buf
-            self.pos = 0
-
-        def read1(self):
-            byte_i, bit_i = self.pos >> 3, self.pos & 7
-            if byte_i >= len(self.buf):
-                raise EOFError
-            self.pos += 1
-            return (self.buf[byte_i] >> (7 - bit_i)) & 1
-
-        def read(self, n):
-            v = 0
-            for _ in range(n):
-                v = (v << 1) | self.read1()
-            return v
-
-        def huffman(self, table):
-            code, lln = 0, 0
-            while lln < 16:
-                code = (code << 1) | self.read1()
-                lln += 1
-                sym = table.get((code, lln))
-                if sym is not None:
-                    return sym
-            raise EOFError
-
-    def extend(bits, s):
-        if s == 0:
-            return 0
-        if bits >> (s - 1):
-            return bits
-        return bits - (1 << s) + 1
-
-    mx, my = (w + 15) // 16, (h + 15) // 16
-    grids = {
-        1: np.zeros((2 * my, 2 * mx, 8, 8), dtype=np.int64),
-        2: np.zeros((my, mx, 8, 8), dtype=np.int64),
-        3: np.zeros((my, mx, 8, 8), dtype=np.int64),
-    }
-    # successive-approximation state (r10, d128): refinement depth per
-    # channel — None until the first scan; a refinement must present
-    # Ah == previous Al and Al == Ah − 1 (the d123 bookkeeping, split
-    # into the DC chain and three per-component AC chains)
-    dc_state = None
-    ac_state = {1: None, 2: None, 3: None}
-    try:
-        for ncomp, spec, ss, se, ah, al, data in scans:
-            rdr = Bits(data)
-            if ss == 0:
-                # interleaved DC scan over MCUs
-                if se != 0 or ncomp != 3:
-                    return None
-                if ah == 0:
-                    if dc_state is not None:
-                        return None
-                elif dc_state != ah or al != ah - 1:
-                    return None
-                dc_state = al
-                if ah == 0:
-                    tabs = {cid: huff.get((0, td)) for cid, td, _ in spec}
-                    if any(t is None for t in tabs.values()):
-                        return None
-                    preds = {1: 0, 2: 0, 3: 0}
-
-                    def read_dc(cid, target):
-                        s = rdr.huffman(tabs[cid])
-                        preds[cid] += extend(rdr.read(s), s)
-                        target[0, 0] = preds[cid] << al
-
-                    for m_y in range(my):
-                        for m_x in range(mx):
-                            for dy in (0, 1):
-                                for dx in (0, 1):
-                                    read_dc(
-                                        1, grids[1][2 * m_y + dy, 2 * m_x + dx]
-                                    )
-                            read_dc(2, grids[2][m_y, m_x])
-                            read_dc(3, grids[3][m_y, m_x])
-                else:
-                    # interleaved DC refinement: one bit per block, MCU order
-                    for m_y in range(my):
-                        for m_x in range(mx):
-                            for dy in (0, 1):
-                                for dx in (0, 1):
-                                    if rdr.read1():
-                                        grids[1][
-                                            2 * m_y + dy, 2 * m_x + dx, 0, 0
-                                        ] |= 1 << al
-                            if rdr.read1():
-                                grids[2][m_y, m_x, 0, 0] |= 1 << al
-                            if rdr.read1():
-                                grids[3][m_y, m_x, 0, 0] |= 1 << al
-            else:
-                # single-component AC band scan over the block raster
-                if ncomp != 1 or se > 63:
-                    return None
-                cid, _, ta = spec[0]
-                if cid not in grids or ss != 1 or se != 63:
-                    return None
-                if ah == 0:
-                    if ac_state[cid] is not None:
-                        return None
-                elif ac_state[cid] != ah or al != ah - 1:
-                    return None
-                ac_state[cid] = al
-                ac_tab = huff.get((1, ta))
-                if ac_tab is None:
-                    return None
-                grid = grids[cid]
-                if ah != 0:
-                    _jpeg_decode_ac_refine(grid, zz, rdr, ac_tab, ss, se, al)
-                    continue
-                eobrun = 0
-                for by_ in range(grid.shape[0]):
-                    for bx_ in range(grid.shape[1]):
-                        if eobrun > 0:
-                            eobrun -= 1
-                            continue
-                        k = ss
-                        while k <= se:
-                            rs = rdr.huffman(ac_tab)
-                            r, s = rs >> 4, rs & 15
-                            if s == 0:
-                                if r == 15:
-                                    k += 16
-                                    continue
-                                eobrun = (1 << r) - 1
-                                if r:
-                                    eobrun += rdr.read(r)
-                                break
-                            k += r
-                            if k > se:
-                                return None
-                            rr, cc = zz[k]
-                            grid[by_, bx_, rr, cc] = extend(rdr.read(s), s) << al
-                            k += 1
-    except (EOFError, ValueError):
-        return None
-    states = [dc_state] + [ac_state[c] for c in (1, 2, 3)]
-    if any(st != 0 for st in states):
-        return None  # incomplete scan script / unfinished refinement
-    return _jpeg_color_reconstruct(
-        grids[1], grids[2], grids[3],
-        qtables[comps[1][1]], qtables[comps[2][1]], qtables[comps[3][1]],
-        w, h,
-    )
-
-
 def synth_jpeg_color(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """Manufacture a REAL baseline YCbCr 4:2:0 COLOR JPEG per row —
     3-component SOF0 (Y 2x2, chroma 1x1), two quant tables, four Huffman
@@ -3628,97 +2586,26 @@ def synth_jpeg_color(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     catches it; NONZERO chroma is exercised by unit tests against the
     reference conversion. Arrow-batched mapInPandas."""
 
-    def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        ql = np.full((8, 8), 16, dtype=np.int64)
-        qc = np.full((8, 8), 8, dtype=np.int64)
-
-        def jpeg(i: int) -> bytes:
-            mx, my = 1 + i % 2, 1 + (3 * i) % 2
-            yc = np.zeros((2 * my, 2 * mx, 8, 8), dtype=np.int64)
-            for y in range(2 * my):
-                for x in range(2 * mx):
-                    yc[y, x, 0, 0] = (5 * i + 3 * x + 7 * y) % 21 - 10
-            cbc = np.zeros((my, mx, 8, 8), dtype=np.int64)
-            crc = np.zeros((my, mx, 8, 8), dtype=np.int64)
-            return _jpeg_encode_color_420(yc, cbc, crc, ql, qc)
-
-        for pdf in batches:
-            ids = pdf[id_col].astype(int)
-            yield pd.DataFrame(
-                [(int(i), jpeg(int(i))) for i in ids],
-                columns=[id_col, "payload"],
-            )
-
-    return df.select(id_col).mapInPandas(build, f"{id_col} long, payload binary")
+    return _synth_jpeg_color(df, id_col, [((0, 1, 2), 0, 63, 0, 0)])
 
 
 def decode_jpeg_color_stats(
     df: DataFrame, payload_col: str = "payload", id_col: str = "doc_id"
 ) -> DataFrame:
-    """REAL baseline COLOR JPEG decode (YCbCr 4:2:0) with no codec
-    library — the d108 grayscale tier extended to the common color
-    case: interleaved-MCU Huffman decode with per-component DC
-    predictors, dual quant tables, 2×2 sample-replication chroma
-    upsampling, JFIF YCbCr→RGB. Emits the standard per-channel stats +
-    position-weighted checksum frame (channels 0/1/2 = R/G/B).
-    Grayscale, progressive, restart-marker and non-4:2:0 inputs degrade
-    to skip. Scale: pure mapInPandas, zero shuffles."""
+    """REAL COLOR JPEG decode (YCbCr 4:2:0) with no codec library — the
+    d108 grayscale tier extended to the common color case, through the
+    same ``_jpeg_decode``: baseline (interleaved MCUs, restart intervals)
+    or progressive scan scripts, per-component DC predictors, dual quant
+    tables, 2×2 sample-replication chroma upsampling, JFIF YCbCr→RGB.
+    Emits the standard per-channel stats + position-weighted checksum
+    frame (channels 0/1/2 = R/G/B). Grayscale and non-4:2:0 inputs
+    degrade to skip. Scale: pure mapInPandas, zero shuffles."""
 
-    def stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    def decode(b: bytes):
+        got = _jpeg_decode(b)
+        return ("jpeg", got[1]) if got is not None and got[1].ndim == 3 else None
 
-        for pdf in batches:
-            rows = []
-            for i, buf in zip(pdf[id_col], pdf[payload_col]):
-                # baseline first (cheap SOF2 exit), then progressive
-                # (r10, d126)
-                try:
-                    img = _jpeg_decode_color_420(bytes(buf))
-                    if img is None:
-                        img = _jpeg_decode_color_420_progressive(bytes(buf))
-                except Exception:
-                    img = None
-                if img is None:
-                    continue
-                h, w = img.shape[0], img.shape[1]
-                arr = img.astype(np.int64)
-                n = w * h
-                xw = np.arange(w) + 1
-                yw = np.arange(h) + 2
-                wgt = yw[:, None] * xw[None, :]
-                for ch in range(3):
-                    v = arr[:, :, ch]
-                    s, ss = int(v.sum()), int((v * v).sum())
-                    mean = s / n
-                    rows.append(
-                        (
-                            int(i),
-                            "jpeg",
-                            w,
-                            h,
-                            ch,
-                            round(mean, 6),
-                            int(v.min()),
-                            int(v.max()),
-                            round((ss / n - mean * mean) ** 0.5, 6),
-                            int((v * wgt).sum()),
-                        )
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    id_col, "format", "width", "height", "channel",
-                    "mean", "min", "max", "std", "pos_sum",
-                ],
-            )
-
-    return df.mapInPandas(
-        stats,
-        f"{id_col} long, format string, width int, height int, channel int, "
-        "mean double, min int, max int, std double, pos_sum long",
-    )
+    return _image_stats(df, decode, payload_col, id_col)
 
 
 def synth_jpeg_color_progressive(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -3728,30 +2615,7 @@ def synth_jpeg_color_progressive(df: DataFrame, id_col: str = "doc_id") -> DataF
     RESULT-INVISIBLE, so d126 reuses d110's oracle verbatim.
     Arrow-batched mapInPandas."""
 
-    def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        ql = np.full((8, 8), 16, dtype=np.int64)
-        qc = np.full((8, 8), 8, dtype=np.int64)
-
-        def jpeg(i: int) -> bytes:
-            mx, my = 1 + i % 2, 1 + (3 * i) % 2
-            yc = np.zeros((2 * my, 2 * mx, 8, 8), dtype=np.int64)
-            for y in range(2 * my):
-                for x in range(2 * mx):
-                    yc[y, x, 0, 0] = (5 * i + 3 * x + 7 * y) % 21 - 10
-            cbc = np.zeros((my, mx, 8, 8), dtype=np.int64)
-            crc = np.zeros((my, mx, 8, 8), dtype=np.int64)
-            return _jpeg_encode_color_420_progressive(yc, cbc, crc, ql, qc)
-
-        for pdf in batches:
-            ids = pdf[id_col].astype(int)
-            yield pd.DataFrame(
-                [(int(i), jpeg(int(i))) for i in ids],
-                columns=[id_col, "payload"],
-            )
-
-    return df.select(id_col).mapInPandas(build, f"{id_col} long, payload binary")
+    return _synth_jpeg_color(df, id_col, _jpeg_progressive_script(3, ((1, 63),), 0))
 
 
 def synth_jpeg_color_progressive_sa(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -3761,32 +2625,7 @@ def synth_jpeg_color_progressive_sa(df: DataFrame, id_col: str = "doc_id") -> Da
     refinements.  Oracle is d110's verbatim.  Arrow-batched
     mapInPandas."""
 
-    def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        ql = np.full((8, 8), 16, dtype=np.int64)
-        qc = np.full((8, 8), 8, dtype=np.int64)
-
-        def jpeg(i: int) -> bytes:
-            mx, my = 1 + i % 2, 1 + (3 * i) % 2
-            yc = np.zeros((2 * my, 2 * mx, 8, 8), dtype=np.int64)
-            for y in range(2 * my):
-                for x in range(2 * mx):
-                    yc[y, x, 0, 0] = (5 * i + 3 * x + 7 * y) % 21 - 10
-            cbc = np.zeros((my, mx, 8, 8), dtype=np.int64)
-            crc = np.zeros((my, mx, 8, 8), dtype=np.int64)
-            return _jpeg_encode_color_420_progressive(
-                yc, cbc, crc, ql, qc, sa=True
-            )
-
-        for pdf in batches:
-            ids = pdf[id_col].astype(int)
-            yield pd.DataFrame(
-                [(int(i), jpeg(int(i))) for i in ids],
-                columns=[id_col, "payload"],
-            )
-
-    return df.select(id_col).mapInPandas(build, f"{id_col} long, payload binary")
+    return _synth_jpeg_color(df, id_col, _jpeg_progressive_script(3, ((1, 63),), 1))
 
 
 def _warc_records(i: int, uri: str, html: str) -> list:
@@ -5316,45 +4155,6 @@ def synth_jpeg_exif(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     return plain.mapInPandas(add, f"{id_col} long, payload binary")
 
 
-def _jpeg_segments(b: bytes):
-    """Walk JPEG marker segments up to SOS: yields (marker, start, end)
-    byte ranges, end exclusive.  Stops at SOS/EOI (entropy data follows,
-    which has no segment structure).  Real-world tolerant (the r12
-    ADVICE fix): consecutive 0xFF FILL bytes between segments are legal
-    padding (ITU T.81 §B.1.1.2) and are skipped, and standalone markers
-    (TEM 0x01, RST0–7 0xD0–0xD7) carry no length field; a malformed
-    length (< 2) ends the walk instead of yielding garbage ranges —
-    callers then see the segments parsed so far (extract emits
-    has_exif=0, strip passes the payload through) rather than dropping
-    the row."""
-    if b[:2] != b"\xff\xd8":
-        return
-    pos = 2
-    n = len(b)
-    while pos + 2 <= n:
-        if b[pos] != 0xFF:
-            return
-        # skip 0xFF fill (padding) bytes: marker byte is the first
-        # non-0xFF after the run
-        while pos + 1 < n and b[pos + 1] == 0xFF:
-            pos += 1
-        if pos + 2 > n:
-            return
-        marker = b[pos + 1]
-        if marker in (0xDA, 0xD9):  # SOS / EOI
-            return
-        if marker == 0x01 or 0xD0 <= marker <= 0xD7:  # TEM / RSTn
-            pos += 2
-            continue
-        if pos + 4 > n:
-            return
-        seg_len = int.from_bytes(b[pos + 2 : pos + 4], "big")
-        if seg_len < 2:
-            return
-        yield marker, pos, pos + 2 + seg_len
-        pos += 2 + seg_len
-
-
 def exif_extract(
     df: DataFrame, payload_col: str = "payload", id_col: str = "doc_id"
 ) -> DataFrame:
@@ -6368,13 +5168,7 @@ def wav_extract_segments(
                 if f0 < 0 or f1 < f0 or hi > s.size:
                     continue
                 clip = s[lo:hi]
-                data = clip.astype("<i2").tobytes()
-                fmt = struct.pack(
-                    "<HHIIHH", 1, 1, sr, sr * 2, 2, 16
-                )
-                body = b"WAVEfmt " + struct.pack("<I", 16) + fmt
-                body += b"data" + struct.pack("<I", len(data)) + data
-                out = b"RIFF" + struct.pack("<I", len(body)) + body
+                out = _wav_pcm16(clip.astype("<i2").tobytes(), sr)
                 c64 = clip.astype(np.int64)
                 rows.append(
                     (
@@ -6462,13 +5256,8 @@ def wav_trim(
                     if n_samples is None
                     else min(s.size, start_sample + n_samples)
                 )
-                data = s[start_sample:end].astype("<i2").tobytes()
-                fmt = struct.pack("<HHIIHH", 1, 1, sr, sr * 2, 2, 16)
-                body = b"WAVEfmt " + struct.pack("<I", 16) + fmt
-                body += b"data" + struct.pack("<I", len(data)) + data
-                rows.append(
-                    (int(i), b"RIFF" + struct.pack("<I", len(body)) + body)
-                )
+                clip = s[start_sample:end].astype("<i2").tobytes()
+                rows.append((int(i), _wav_pcm16(clip, sr)))
             yield pd.DataFrame(rows, columns=[id_col, payload_col])
 
     return df.select(id_col, payload_col).mapInPandas(

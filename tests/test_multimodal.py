@@ -2254,3 +2254,208 @@ def test_limb_helpers_match_bigint_reference():
     qo = im_d[:, 1:].astype(object)
     ref_arg = np.argmax(po * po + qo * qo, axis=1)
     assert np.array_equal(_limb_argmax_first(e2), ref_arg)
+
+
+def _jpeg_seg(marker, payload):
+    import struct
+
+    return bytes([0xFF, marker]) + struct.pack(">H", 2 + len(payload)) + payload
+
+
+def test_jpeg_dc_category_over_16_returns_none_all_layouts():
+    """The DC-category guard holds in every layout, not only gray
+    baseline: a DHT whose only DC symbol is category 20 (code 00000)
+    over all-zero scan data must fail a color baseline file and a
+    complete-script gray progressive file, never decode a clipped
+    image from a 20-bit amplitude."""
+    import numpy as np
+
+    from pandas_db_sdk_spark.multimodal import (
+        _JPEG_DC_LENGTHS,
+        _dht_payload,
+        _jpeg_decode_color_420,
+        _jpeg_decode_gray_progressive,
+        _jpeg_encode_color_420,
+        _jpeg_encode_gray_progressive,
+    )
+
+    dc_seg = _jpeg_seg(0xC4, _dht_payload(0, 0, _JPEG_DC_LENGTHS))
+    bad_seg = _jpeg_seg(0xC4, _dht_payload(0, 0, {20: 5}))
+
+    zeros = np.zeros((1, 1, 8, 8), dtype=np.int64)
+    color = _jpeg_encode_color_420(
+        np.zeros((2, 2, 8, 8), dtype=np.int64), zeros, zeros,
+        np.full((8, 8), 16, dtype=np.int64), np.full((8, 8), 8, dtype=np.int64),
+    )
+    assert _jpeg_decode_color_420(color) is not None
+    assert color.count(dc_seg) == 1
+    color = color.replace(dc_seg, bad_seg)
+    # the 3-component SOS segment is 14 bytes; then zero scan data, enough
+    # for every block at 25 + 4 bits (luma) or 8 bits (chroma)
+    scan_at = color.index(b"\xff\xda") + 14
+    assert _jpeg_decode_color_420(color[:scan_at] + b"\x00" * 64 + b"\xff\xd9") is None
+
+    gray = _jpeg_encode_gray_progressive(
+        zeros, np.full((8, 8), 16, dtype=np.int64), bands=((1, 63),)
+    )
+    assert _jpeg_decode_gray_progressive(gray) is not None
+    gray = gray.replace(dc_seg, bad_seg)
+    # swap the DC scan's data (after its 10-byte SOS) for four zero bytes;
+    # the AC scan stays intact, so the script is complete
+    first = gray.index(b"\xff\xda")
+    second = gray.index(b"\xff\xda", first + 2)
+    bad = gray[: first + 10] + b"\x00" * 4 + gray[second:]
+    assert _jpeg_decode_gray_progressive(bad) is None
+
+
+def test_jpeg_decoders_tolerate_fill_bytes():
+    """0xFF fill bytes before a marker are legal padding (T.81
+    §B.1.1.2) wherever the decoder walks markers — before DQT, before
+    SOF and before every SOS, including the ones the walk reaches after
+    a scan's entropy data. Each layout decodes the padded file to the
+    same image as the plain one."""
+    import numpy as np
+
+    from pandas_db_sdk_spark.multimodal import (
+        _jpeg_decode_color_420,
+        _jpeg_decode_color_420_progressive,
+        _jpeg_decode_gray,
+        _jpeg_decode_gray_progressive,
+        _jpeg_encode_color_420,
+        _jpeg_encode_color_420_progressive,
+        _jpeg_encode_gray,
+        _jpeg_encode_gray_progressive,
+        _jpeg_encode_gray_progressive_sa,
+    )
+
+    def pad(enc):
+        # entropy data never holds FF followed by these marker bytes
+        # (the encoder stuffs every FF), so a plain replace hits markers only
+        for m in (b"\xdb", b"\xc0", b"\xc2", b"\xda"):
+            enc = enc.replace(b"\xff" + m, b"\xff\xff\xff" + m)
+        return enc
+
+    rng = np.random.RandomState(5)
+    q = np.full((8, 8), 16, dtype=np.int64)
+    coefs = rng.randint(-30, 30, size=(2, 3, 8, 8)).astype(np.int64)
+    yc = rng.randint(-20, 20, size=(2, 4, 8, 8)).astype(np.int64)
+    cbc = rng.randint(-12, 12, size=(1, 2, 8, 8)).astype(np.int64)
+    crc = rng.randint(-12, 12, size=(1, 2, 8, 8)).astype(np.int64)
+    qc = np.full((8, 8), 8, dtype=np.int64)
+    cases = [
+        (_jpeg_decode_gray, _jpeg_encode_gray(coefs, q)),
+        (_jpeg_decode_gray_progressive, _jpeg_encode_gray_progressive(coefs, q)),
+        (_jpeg_decode_gray_progressive, _jpeg_encode_gray_progressive_sa(coefs, q)),
+        (_jpeg_decode_color_420, _jpeg_encode_color_420(yc, cbc, crc, q, qc)),
+        (
+            _jpeg_decode_color_420_progressive,
+            _jpeg_encode_color_420_progressive(yc, cbc, crc, q, qc, sa=True),
+        ),
+    ]
+    for k, (decode, enc) in enumerate(cases):
+        padded = pad(enc)
+        assert len(padded) >= len(enc) + 6, k
+        plain = decode(enc)
+        got = decode(padded)
+        assert plain is not None and got is not None, k
+        assert (got == plain).all(), k
+
+
+def test_jpeg_gray_progressive_incomplete_script_rejected():
+    """A gray progressive file whose scan script leaves coefficients
+    undelivered is rejected, as color progressive files are: dropping
+    the last band scan, or a middle one, returns None instead of an
+    image missing those frequencies."""
+    import numpy as np
+
+    from pandas_db_sdk_spark.multimodal import (
+        _jpeg_decode_gray_progressive,
+        _jpeg_encode_gray_progressive,
+    )
+
+    q = np.full((8, 8), 16, dtype=np.int64)
+    coefs = np.random.RandomState(9).randint(-30, 30, size=(2, 2, 8, 8))
+    enc = _jpeg_encode_gray_progressive(coefs.astype(np.int64), q)
+    assert _jpeg_decode_gray_progressive(enc) is not None
+    last = enc.rindex(b"\xff\xda")
+    assert _jpeg_decode_gray_progressive(enc[:last] + b"\xff\xd9") is None
+
+    enc = _jpeg_encode_gray_progressive(
+        coefs.astype(np.int64), q, bands=((1, 2), (3, 20), (21, 63))
+    )
+    sos = [i for i in range(len(enc) - 1) if enc[i : i + 2] == b"\xff\xda"]
+    assert len(sos) == 4
+    dropped = enc[: sos[2]] + enc[sos[3] :]  # the 3..20 band scan
+    assert _jpeg_decode_gray_progressive(dropped) is None
+
+
+def test_jpeg_color_restart_intervals_result_invisible():
+    """DRI/RSTn in a 3-component sequential file: the interleaved scan
+    splits every ``ri`` MCUs (each MCU = 4 luma + 2 chroma blocks), each
+    interval byte-aligned with all three DC predictors reset, and the
+    file decodes to the same image as the one without DRI."""
+    import numpy as np
+
+    from pandas_db_sdk_spark.multimodal import (
+        _JPEG_YCC420,
+        _jpeg_decode_color_420,
+        _jpeg_encode,
+    )
+
+    ql = np.full((8, 8), 16, dtype=np.int64)
+    qc = np.full((8, 8), 8, dtype=np.int64)
+    script = [((0, 1, 2), 0, 63, 0, 0)]
+    rng = np.random.RandomState(17)
+    for i in range(6):
+        mx, my = 1 + i % 2, 2
+        grids = [
+            rng.randint(-20, 20, size=(2 * my, 2 * mx, 8, 8)).astype(np.int64),
+            rng.randint(-12, 12, size=(my, mx, 8, 8)).astype(np.int64),
+            rng.randint(-12, 12, size=(my, mx, 8, 8)).astype(np.int64),
+        ]
+        plain = _jpeg_decode_color_420(
+            _jpeg_encode(grids, _JPEG_YCC420, [ql, qc], script)
+        )
+        assert plain is not None
+        for ri in (1, 2, 3):
+            enc = _jpeg_encode(
+                grids, _JPEG_YCC420, [ql, qc], script, restart_interval=ri
+            )
+            assert b"\xff\xdd\x00\x04" + bytes([0, ri]) in enc
+            got = _jpeg_decode_color_420(enc)
+            assert got is not None and (got == plain).all(), (i, ri)
+
+
+def test_jpeg_color_progressive_band_splits_match_baseline():
+    """Color progressive AC scans may split 1..63 into any bands, with
+    or without successive approximation: each script decodes to the
+    baseline image of the same coefficients."""
+    import numpy as np
+
+    from pandas_db_sdk_spark.multimodal import (
+        _JPEG_YCC420,
+        _jpeg_decode_color_420,
+        _jpeg_decode_color_420_progressive,
+        _jpeg_encode,
+        _jpeg_encode_color_420,
+        _jpeg_progressive_script,
+    )
+
+    ql = np.full((8, 8), 16, dtype=np.int64)
+    qc = np.full((8, 8), 8, dtype=np.int64)
+    rng = np.random.RandomState(29)
+    for i in range(4):
+        mx, my = 1 + i % 2, 1 + i // 2
+        yc = rng.randint(-20, 20, size=(2 * my, 2 * mx, 8, 8)).astype(np.int64)
+        cbc = rng.randint(-12, 12, size=(my, mx, 8, 8)).astype(np.int64)
+        crc = rng.randint(-12, 12, size=(my, mx, 8, 8)).astype(np.int64)
+        base = _jpeg_decode_color_420(_jpeg_encode_color_420(yc, cbc, crc, ql, qc))
+        assert base is not None
+        for bands in (((1, 5), (6, 63)), ((1, 2), (3, 20), (21, 63))):
+            for al in (0, 1):
+                enc = _jpeg_encode(
+                    [yc, cbc, crc], _JPEG_YCC420, [ql, qc],
+                    _jpeg_progressive_script(3, bands, al),
+                )
+                got = _jpeg_decode_color_420_progressive(enc)
+                assert got is not None and (got == base).all(), (i, bands, al)
