@@ -17,9 +17,7 @@ this engine, with no image/audio library installed:
 
 Each stage is two chained Arrow-batched mapInPandas passes (synth →
 decode) with ZERO shuffles — payload bytes never cross an exchange, which
-is what makes heavy media columns viable at 100 TB. The only remaining
-stubs are chroma/progressive JPEG and non-rational resampling
-(multimodal.decode_real).
+is what makes heavy media columns viable at 100 TB.
 """
 
 import os

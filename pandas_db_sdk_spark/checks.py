@@ -4,8 +4,9 @@ The reference trusts its inputs (client-side pandas, no validation beyond
 parameter checks, reference ``client.py:99-110``); a 100 TB ingest cannot.
 ``check`` evaluates a set of row-level rules in ONE aggregate pass (each
 rule a conditional count riding the same partial+final hash aggregation —
-no per-rule scans) and returns one row per rule; ``assert_valid`` raises if
-any rule has violations, for pipeline gating.
+no per-rule scans) and returns one row per rule; ``attach_checks`` rides
+the same counters on a write job, which ``save(expectations=...)`` uses to
+gate a commit.
 """
 
 from __future__ import annotations
@@ -74,20 +75,6 @@ def attach_checks(df: DataFrame, rules: Mapping[str, Column]):
         return dict(obs.get)
 
     return observed, results
-
-
-def assert_valid(df: DataFrame, rules: Mapping[str, Column]) -> None:
-    """Raise ValueError listing failing rules (pipeline gate)."""
-    failing = [
-        (r.rule, r.n_violations)
-        for r in check(df, rules).collect()
-        if r.n_violations > 0
-    ]
-    if failing:
-        raise ValueError(
-            "data-quality violations: "
-            + ", ".join(f"{name} ({n} rows)" for name, n in failing)
-        )
 
 
 def profile(df: DataFrame) -> DataFrame:

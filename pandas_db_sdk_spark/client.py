@@ -14,10 +14,7 @@ class with three methods; a user switching to this engine keeps their code:
   column, ``client.py:99-110``), same metadata-dict return shape.
 * ``get_dataframe(dataframe_name, external_key, use_last) ->
   pd.DataFrame`` (``client.py:139-183``) — returns a real pandas frame via
-  Arrow. For results too big for one machine, ``get_dataframe_spark`` /
-  ``get_dataframe_pandas_api`` return the distributed frame instead; the
-  reference has no such escape because its wire format forces full
-  materialization (``client.py:176``).
+  Arrow (``client.py:176``).
 * ``list_dataframes(prefix) -> Dict`` (``client.py:185-215``) — same
   ``{'dataframes': …, 'count': …}`` shape.
 
@@ -104,29 +101,6 @@ class DataFrameClient:
         return self._engine.load(
             dataframe_name, external_key=external_key, use_last=use_last
         ).toPandas()
-
-    def get_dataframe_spark(
-        self,
-        dataframe_name: str,
-        external_key: Optional[str] = None,
-        use_last: bool = False,
-    ):
-        """Distributed exit: the same dataset as a Spark DataFrame (no
-        driver materialization — use this beyond single-machine sizes)."""
-        return self._engine.load(
-            dataframe_name, external_key=external_key, use_last=use_last
-        )
-
-    def get_dataframe_pandas_api(
-        self,
-        dataframe_name: str,
-        external_key: Optional[str] = None,
-        use_last: bool = False,
-    ):
-        """Distributed exit with pandas ergonomics (pandas-on-Spark)."""
-        return self._engine.load_pandas(
-            dataframe_name, external_key=external_key, use_last=use_last
-        )
 
     # ------------------------------------------------------------- list
 

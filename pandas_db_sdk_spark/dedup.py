@@ -95,10 +95,10 @@ def _min_hash_exprs(n_hashes: int):
 
 def _band_keys(n_hashes: int, bands: int):
     """The LSH band-key array over the ``__mh*`` signature columns: band b
-    is ``xxhash64(b, __mh{b*rows} .. __mh{b*rows + rows-1})``. This is the
-    layout persisted in every ``__near_bands`` index, so every writer and
-    probe builds it here. Pure column arithmetic over plan-time constants
-    (stays in whole-stage codegen), parsed server-side in one call."""
+    is ``xxhash64(b, __mh{b*rows} .. __mh{b*rows + rows-1})``. Every
+    banding caller builds it here, so the layout has one definition. Pure
+    column arithmetic over plan-time constants (stays in whole-stage
+    codegen), parsed server-side in one call."""
     rows = n_hashes // bands
     return F.expr(
         "array("

@@ -45,7 +45,7 @@ try:
 except ImportError:  # non-POSIX: degrade to unlocked (single-writer) mode
     fcntl = None
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from ._localrel import local_rows_df
 
@@ -226,9 +226,7 @@ class DataFrameEngine:
 
     def _derive_partition_cols(self, df: DataFrame, columns_keys: Dict[str, str]):
         """Append the derived ``__p_*`` partition columns for a key layout
-        (Date → yyyy-MM-dd dirs, ID → range buckets, README.md:191-207) —
-        shared by save() and repartition_dataset() so the two derivations
-        can never diverge."""
+        (Date → yyyy-MM-dd dirs, ID → range buckets, README.md:191-207)."""
         out = df
         partition_cols = []
         for col, key_type in columns_keys.items():
@@ -311,12 +309,12 @@ class DataFrameEngine:
             if col not in df.columns:
                 raise ValueError(f"partition column {col!r} not in DataFrame")
 
-        # Appends follow the manifest's path (compact() relocates datasets);
-        # only a brand-new dataset gets a freshly derived directory.
+        # Appends follow the manifest's recorded path; only a brand-new
+        # dataset gets a freshly derived directory.
         path = existing["path"] if existing is not None else self._dataset_path(dataframe_name)
         if external_key == "NOW":
             # The millisecond clock can tick the same value twice (two
-            # merge() calls in one ms): reusing a version label would make
+            # saves in one ms): reusing a version label would make
             # the second save APPEND into the first's version dir —
             # keep_last never prunes the live version, so the duplication
             # would persist. Bump past manifest AND on-disk labels (a
@@ -378,11 +376,6 @@ class DataFrameEngine:
                 # saw it, so clearing in place is safe and keeps the
                 # replay-idempotent contract.
                 shutil.rmtree(version_dir, ignore_errors=True)
-        # persistent dataset constraints (set_constraints) gate every
-        # append; per-call expectations add to them (same name: the call's
-        # rule wins for this save only)
-        if existing is not None and existing.get("constraints"):
-            expectations = {**existing["constraints"], **(expectations or {})}
         results = None
         if expectations:
             from .checks import attach_checks
@@ -432,15 +425,6 @@ class DataFrameEngine:
                 # rather than abandoning the write on a FileNotFoundError
                 os.rename(write_dir, version_dir)
 
-        # Data-skipping sidecar (Delta-stats analogue): per-file column
-        # min/max from the freshly written parquet footers. Metadata-only —
-        # a failure here must never fail the save (same policy as
-        # provenance); load_pruned treats missing stats as "read the file".
-        try:
-            self._collect_file_stats(path, version)
-        except Exception:
-            pass
-
         # Provenance (bounded): where this version came from — the source
         # files feeding the plan (metadata-only; empty for synthesized
         # frames) and the canonicalized-plan fingerprint. Capped at 20
@@ -460,6 +444,7 @@ class DataFrameEngine:
             "schema_cols": sorted(df.columns),
         }
 
+        stale = []
         with self._commit() as manifest:
             ds = manifest["datasets"].setdefault(
                 dataframe_name,
@@ -485,10 +470,9 @@ class DataFrameEngine:
             ds["latest"] = version
 
             if keep_last:
-                # Retention pruning (README.md:85-88): drop superseded version dirs.
+                # Retention pruning (README.md:85-88): unlist the superseded
+                # versions here; their dirs go once this commit has landed.
                 stale = [v for v in ds["versions"] if v != version]
-                for v in stale:
-                    self._delete_version_dirs(path, v)
                 ds["versions"] = [version]
                 # provenance follows retention — dead-version entries would
                 # otherwise accumulate in the manifest forever
@@ -497,6 +481,7 @@ class DataFrameEngine:
                     for k, v in ds.get("provenance", {}).items()
                     if k == str(version)
                 }
+        self._reap(self._version_dir(path, v) for v in stale)
         return {
             "dataframe_name": dataframe_name,
             "version": version,
@@ -557,176 +542,7 @@ class DataFrameEngine:
             else:
                 pinned = self.load(ds_name, use_last=use_last)
             pinned.createOrReplaceTempView(view)
-        # saved views layer on top of the dataset views, in definition
-        # order (a later view may reference an earlier one; stored as an
-        # ordered pair list because the manifest serializes sort_keys)
-        for vname, vsql in self._read_manifest().get("views", []):
-            self.spark.sql(
-                f"CREATE OR REPLACE TEMPORARY VIEW {vname} AS {vsql}"
-            )
         return self.spark.sql(query)
-
-    def define_view(self, view_name: str, view_sql: str) -> None:
-        """Persist a named SQL view in the catalog — the virtual-dataset
-        layer: every subsequent ``sql()`` call (this engine or a fresh one
-        on the same warehouse) resolves it against the then-current
-        catalog state. Views store TEXT in the manifest (zero data, zero
-        maintenance cost — contrast ``define_rollup`` for the materialized
-        form); a view may reference dataset views and previously defined
-        views. The name must be a valid SQL identifier and not collide
-        with a dataset's view name."""
-        import re as _re
-
-        if not _re.fullmatch(r"[A-Za-z_][A-Za-z0-9_]*", view_name or ""):
-            raise ValueError("view_name must be a SQL identifier")
-        if not view_sql or not isinstance(view_sql, str):
-            raise ValueError("view_sql must be a non-empty SQL string")
-        with self._commit() as manifest:
-            ds_views = {n.replace("/", "_") for n in manifest["datasets"]}
-            if view_name in ds_views:
-                raise ValueError(
-                    f"{view_name!r} collides with a dataset view name"
-                )
-            views = [v for v in manifest.get("views", []) if v[0] != view_name]
-            views.append([view_name, view_sql])
-            manifest["views"] = views
-
-    def drop_view(self, view_name: str) -> None:
-        with self._commit() as manifest:
-            views = manifest.get("views", [])
-            if view_name not in {v[0] for v in views}:
-                raise DatasetNotFound(f"view {view_name!r} is not defined")
-            manifest["views"] = [v for v in views if v[0] != view_name]
-
-    def list_views(self) -> Dict[str, str]:
-        return {name: sql for name, sql in self._read_manifest().get("views", [])}
-
-    # ---------------------------------------------------------------- merge
-
-    def merge(
-        self,
-        source: DataFrame,
-        dataframe_name: str,
-        keys: list,
-        when_matched: str = "update",
-        external_key: str = "NOW",
-        keep_last: bool = False,
-    ) -> Dict[str, Any]:
-        """MERGE/upsert into a dataset — the CDC primitive the reference SDK
-        lacks entirely (SURVEY §2.5: "no delete/update of rows"): apply a
-        batch of changes keyed by ``keys`` to the latest version and commit
-        the result as a NEW version (history stays time-travelable; pass
-        ``keep_last=True`` for overwrite-in-place retention).
-
-        ``when_matched``:
-
-        * ``"update"`` — source rows replace matched rows; unmatched source
-          rows insert (classic upsert).
-        * ``"ignore"``  — matched rows keep their stored values; only
-          new-key source rows insert (idempotent backfill).
-        * ``"delete"``  — matched rows are removed; source carries keys
-          only (CDC tombstones).
-
-        Scale shape: copy-on-write — one anti/semi join on the key columns
-        (hashed, AQE-planned: the change batch is typically small and
-        broadcasts) plus a full rewrite of the new version. That is the
-        honest non-table-format contract; with Delta/Iceberg jars present
-        the same call maps onto a metadata-level MERGE INTO rewriting only
-        matched files (COVERAGE.md "Environment-forced omissions"). Keys
-        that include the dataset's partition column keep the join AND the
-        rewrite partition-pruned.
-        """
-        if when_matched not in ("update", "ignore", "delete"):
-            raise ValueError("when_matched must be 'update', 'ignore', or 'delete'")
-        if not keys:
-            raise ValueError("merge requires at least one key column")
-        current = self.load(dataframe_name, use_last=True)
-        for k in keys:
-            if k not in source.columns:
-                raise ValueError(f"merge key {k!r} not in source DataFrame")
-            if k not in current.columns:
-                raise ValueError(f"merge key {k!r} not in dataset {dataframe_name!r}")
-        if when_matched == "delete":
-            result = current.join(source.select(*keys), keys, "left_anti")
-        elif when_matched == "update":
-            result = current.join(source, keys, "left_anti").unionByName(
-                source, allowMissingColumns=True
-            )
-        else:  # ignore
-            result = current.unionByName(
-                source.join(current, keys, "left_anti"), allowMissingColumns=True
-            )
-        out = self.save(
-            result,
-            dataframe_name,
-            external_key=external_key,
-            keep_last=keep_last,
-        )
-        out["when_matched"] = when_matched
-        return out
-
-    def delete_where(
-        self,
-        dataframe_name: str,
-        condition,
-        external_key: str = "NOW",
-        keep_last: bool = False,
-    ) -> Dict[str, Any]:
-        """Predicate DELETE (``DELETE FROM t WHERE cond``) — the row-level
-        twin of :meth:`merge`'s key-tombstone mode, for conditions that
-        aren't key lists. ``condition`` is a Column or SQL string.
-
-        Copy-on-write: rows NOT matching the predicate rewrite into a new
-        version (history stays time-travelable unless ``keep_last``).
-        The negated predicate pushes into the scan of the current
-        version, so the rewrite reads only surviving rows' columns.
-        """
-        cond = F.expr(condition) if isinstance(condition, str) else condition
-        current = self.load(dataframe_name, use_last=True)
-        out = self.save(
-            current.filter(~cond),
-            dataframe_name,
-            external_key=external_key,
-            keep_last=keep_last,
-        )
-        out["deleted_where"] = str(condition)
-        return out
-
-    def update_where(
-        self,
-        dataframe_name: str,
-        condition,
-        assignments: Dict[str, Any],
-        external_key: str = "NOW",
-        keep_last: bool = False,
-    ) -> Dict[str, Any]:
-        """Predicate UPDATE (``UPDATE t SET c = expr WHERE cond``).
-        ``assignments`` maps column → Column / SQL-expression string;
-        non-matching rows pass through unchanged. With delete_where,
-        merge, and append-mode save this completes the DML quartet the
-        reference SDK lacks entirely (SURVEY §2.5: "no delete/update of
-        rows").
-
-        Copy-on-write single pass: one projection with ``CASE WHEN cond
-        THEN expr ELSE col END`` per assigned column — no join, no second
-        read, fully codegen'd.
-        """
-        cond = F.expr(condition) if isinstance(condition, str) else condition
-        current = self.load(dataframe_name, use_last=True)
-        for col, expr in assignments.items():
-            if col not in current.columns:
-                raise ValueError(f"update column {col!r} not in dataset {dataframe_name!r}")
-        updated = current
-        for col, expr in assignments.items():
-            val = F.expr(expr) if isinstance(expr, str) else expr
-            updated = updated.withColumn(
-                col, F.when(cond, val).otherwise(F.col(col))
-            )
-        out = self.save(
-            updated, dataframe_name, external_key=external_key, keep_last=keep_last
-        )
-        out["updated_where"] = str(condition)
-        return out
 
     # ---------------------------------------------------------------- bucketed
 
@@ -828,137 +644,6 @@ class DataFrameEngine:
             df = df.drop(*[c for c in df.columns if _is_internal(c)])
         return df
 
-    def _collect_file_stats(self, path: str, version, max_files: int = 4096) -> None:
-        """Write one version directory's data-skipping sidecar
-        (``.stats.json``, dot-prefixed so Spark partition discovery and
-        ``_versions_on_disk`` never see it): per data file, each leaf
-        column's [min, max] folded over the parquet footer's row-group
-        statistics. Driver-side footer reads are ~KBs per file — the Delta
-        checkpoint-stats economics — and are capped at ``max_files``
-        (beyond that a version is left sidecar-less and ``load_pruned``
-        degrades to reading it fully; at that file count the answer is
-        ``compact()``, which re-collects). Columns missing stats in ANY
-        row group (or with non-orderable/JSON-unsafe types) are omitted
-        for that file, which load_pruned treats as "must read"."""
-        import pyarrow.parquet as pq
-
-        version_dir = self._version_dir(path, version)
-        files = self._version_files(path, version)
-        if not files or len(files) > max_files:
-            return
-        out: Dict[str, Any] = {}
-        for rel in files:
-            md = pq.ParquetFile(os.path.join(version_dir, rel)).metadata
-            per: Dict[str, Any] = {}
-            bad = set()
-            for rg in range(md.num_row_groups):
-                row = md.row_group(rg)
-                for ci in range(row.num_columns):
-                    col = row.column(ci)
-                    name = col.path_in_schema
-                    if name in bad:
-                        continue
-                    st = col.statistics
-                    mn = st.min if st is not None and st.has_min_max else None
-                    mx = st.max if st is not None and st.has_min_max else None
-                    ok = (
-                        mn is not None
-                        and mx is not None
-                        and isinstance(mn, (int, float, str))
-                        and not isinstance(mn, bool)
-                    )
-                    if not ok:
-                        bad.add(name)
-                        per.pop(name, None)
-                        continue
-                    if name in per:
-                        per[name] = [min(per[name][0], mn), max(per[name][1], mx)]
-                    else:
-                        per[name] = [mn, mx]
-            out[rel] = per
-        tmp = os.path.join(version_dir, f".stats.{uuid.uuid4().hex[:8]}.tmp")
-        with open(tmp, "w") as fh:
-            json.dump({"files": out}, fh)
-        os.replace(tmp, os.path.join(version_dir, ".stats.json"))
-
-    def load_pruned(
-        self,
-        dataframe_name: str,
-        col: str,
-        lo=None,
-        hi=None,
-        external_key: Optional[str] = None,
-        use_last: bool = False,
-        drop_internal: bool = True,
-    ) -> DataFrame:
-        """Data-skipping load: semantically ``load().filter(lo <= col <= hi)``,
-        but files whose sidecar [min, max] range for ``col`` cannot
-        intersect the bound are never even OPENED — scan planning from
-        save-time footer stats (the table-format data-skipping pattern;
-        pair with ``compact(zorder_by=[col, …])`` so file ranges are tight
-        on the skipped columns). Files or versions without recorded stats
-        are always read (stale or missing sidecars only cost bytes, never
-        rows — file names are write-unique, so a rewritten version's new
-        files simply don't appear in an old sidecar), and the exact
-        predicate is re-applied to the surviving rows."""
-        ds = self._dataset_entry(dataframe_name)
-        if use_last:
-            external_key = ds.get("latest")
-        versions = (
-            [str(external_key)]
-            if external_key is not None
-            else [str(v) for v in ds["versions"]]
-        )
-        keep: list = []
-        for v in versions:
-            vdir = self._version_dir(ds["path"], v)
-            stats = {}
-            try:
-                with open(os.path.join(vdir, ".stats.json")) as fh:
-                    stats = json.load(fh).get("files", {})
-            except (OSError, ValueError):
-                pass
-            for rel in self._version_files(ds["path"], v):
-                rng = stats.get(rel, {}).get(col)
-                if rng is not None:
-                    if lo is not None and rng[1] < lo:
-                        continue
-                    if hi is not None and rng[0] > hi:
-                        continue
-                keep.append(os.path.join(vdir, rel))
-        schema = self._full_schema(ds)
-        if not keep:
-            df = local_rows_df(self.spark, [], schema)
-        else:
-            df = (
-                self.spark.read.schema(schema)
-                .option("basePath", ds["path"])
-                .parquet(*keep)
-            )
-        if lo is not None:
-            df = df.filter(F.col(col) >= lo)
-        if hi is not None:
-            df = df.filter(F.col(col) <= hi)
-        if drop_internal:
-            df = df.drop(*[c for c in df.columns if _is_internal(c)])
-        return df
-
-    def load_pandas(
-        self,
-        dataframe_name: str,
-        external_key: Optional[str] = None,
-        use_last: bool = False,
-    ):
-        """Retrieve a dataset as a pandas-on-Spark frame
-        (``pyspark.pandas.DataFrame``) — the distributed drop-in for the
-        reference's contract of handing the user a pandas object to query
-        client-side (``client.py:176``, "Pandas-Native" ``README.md:11``).
-        Same pandas idioms (boolean masks, ``groupby().agg``, ``merge``,
-        ``sort_values``), but every operation compiles to the same Catalyst
-        plans as the DataFrame API — nothing is collected to one machine.
-        """
-        return self.load(dataframe_name, external_key, use_last).pandas_api()
-
     # ---------------------------------------------------------------- list
 
     def list_datasets(
@@ -996,46 +681,6 @@ class DataFrameEngine:
             "returned": len(names),
         }
 
-    def set_constraints(
-        self, dataframe_name: str, rules: Optional[Dict[str, str]]
-    ) -> Dict[str, Any]:
-        """Attach persistent row constraints to a dataset (the Delta
-        ``ADD CONSTRAINT`` analogue): ``rules`` maps name → SQL boolean
-        expression that must hold for every row. Stored in the manifest
-        and enforced on EVERY subsequent ``save``/``merge`` append via the
-        zero-extra-scan ``observe`` gate (see ``save(expectations=...)``);
-        a violating append aborts before its manifest commit. ``None`` or
-        ``{}`` clears them.
-
-        Like Delta, adding a constraint validates the EXISTING data first
-        (one aggregate scan) — a constraint the current rows already break
-        would make every future append's failure ambiguous.
-        """
-        from .checks import assert_valid
-
-        ds = self._dataset_entry(dataframe_name)  # raises if unknown
-        rules = dict(rules or {})
-        if rules:
-            parsed = {}
-            for name, cond in rules.items():
-                if not isinstance(cond, str):
-                    raise TypeError(
-                        f"constraint {name!r} must be a SQL string (it is "
-                        "persisted in the manifest); pass Column rules per-save "
-                        "via save(expectations=...)"
-                    )
-                parsed[name] = F.expr(cond)
-            assert_valid(self.load(dataframe_name), parsed)
-        with self._commit() as manifest:
-            entry = manifest["datasets"].get(dataframe_name)
-            if entry is None:
-                raise DatasetNotFound(dataframe_name)
-            if rules:
-                entry["constraints"] = rules
-            else:
-                entry.pop("constraints", None)
-        return dict(rules)
-
     def describe_dataset(self, dataframe_name: str) -> Dict[str, Any]:
         """Catalog introspection — the DESCRIBE the reference SDK lacks
         (SURVEY §2.5 lists no metadata beyond names): schema, partition
@@ -1067,7 +712,6 @@ class DataFrameEngine:
             "name": dataframe_name,
             "schema": json.loads(ds["schema"]),
             "columns_keys": ds["columns_keys"],
-            "constraints": dict(ds.get("constraints") or {}),
             "latest": ds.get("latest"),
             "versions": versions,
             "total_rows": sum(v["n_rows"] for v in versions),
@@ -1075,242 +719,12 @@ class DataFrameEngine:
             "branched_from": ds.get("branched_from"),
         }
 
-    # ---------------------------------------------------------------- compact
-
-    def compact(
-        self,
-        dataframe_name: str,
-        target_rows_per_file: int = 1_000_000,
-        zorder_by: Optional[list] = None,
-    ) -> Dict[str, Any]:
-        """Rewrite a dataset's many small files into few large ones —
-        the maintenance op every streaming-ingested table needs (each
-        micro-batch version lands its own files; a day of 1-minute batches
-        is 1440× too many files, and at 100 TB file listing alone starts to
-        dominate planning).
-
-        Rewrites ALL versions in one pass, preserving the partition/version
-        dirs (reads with internal columns, writes partitioned by them into a
-        fresh directory, then atomically swaps the manifest path). The old
-        directory is removed only after the manifest points at the new one,
-        so a crash leaves a readable dataset at every step.
-
-        ``zorder_by=[cols…]`` additionally clusters rows WITHIN each
-        partition dir by Morton z-value (``scale.with_zvalue``) during the
-        same rewrite — successive output files and row groups take compact
-        ranges of every clustered column, so min/max skipping prunes
-        multi-dimensional predicates. The OPTIMIZE … ZORDER BY maintenance
-        pattern, for free inside the compaction pass.
-        """
-        ds = self._dataset_entry(dataframe_name)
-        old_path = ds["path"]
-        df = self.load(dataframe_name, drop_internal=False)
-        # version OUTERMOST — must match save()'s per-version-dir layout so
-        # post-compaction appends keep one consistent partition ordering
-        partition_cols = [VERSION_COL] + [f"__p_{c}" for c in ds["columns_keys"]]
-        new_path = old_path.rstrip("/") + f".compact.{uuid.uuid4().hex[:8]}"
-        sort_cols = list(partition_cols)
-        if zorder_by:
-            from .scale import with_zvalue
-
-            df = with_zvalue(df, zorder_by, z_col="__zv")
-            sort_cols = partition_cols + ["__zv"]
-        (
-            # repartition on the partition columns: all rows of one partition
-            # dir land in one task → one output file (maxRecordsPerFile still
-            # splits genuinely large partitions). Without this, the write
-            # inherits one task per small input file and compacts nothing.
-            df.repartition(*[F.col(c) for c in partition_cols])
-            .sortWithinPartitions(*sort_cols)
-            .drop(*(["__zv"] if zorder_by else []))
-            .write.mode("overwrite")
-            .option("maxRecordsPerFile", target_rows_per_file)
-            .partitionBy(*partition_cols)
-            .parquet(new_path)
-        )
-        # fresh files → fresh data-skipping sidecars (a zorder_by rewrite is
-        # exactly when the per-file ranges become worth pruning on)
-        for v in self._versions_on_disk(new_path):
-            try:
-                self._collect_file_stats(new_path, v)
-            except Exception:
-                pass
-        with self._commit() as manifest:
-            manifest["datasets"][dataframe_name]["path"] = new_path
-        shutil.rmtree(old_path, ignore_errors=True)
-        return {
-            "dataframe_name": dataframe_name,
-            "path": new_path,
-            "target_rows_per_file": target_rows_per_file,
-        }
-
-    # ---------------------------------------------------------------- delete
 
 
-
-
-    def scd2_history(self, dataframe_name, keys):
-        """Flatten the version history into an SCD-2 (slowly-changing-
-        dimension) view: one row per (key, unchanged-state run) with
-        ``valid_from``/``valid_to`` version labels (``valid_to`` NULL =
-        state current in the latest version). Rows re-inserted after an
-        absence start a NEW run — deletions close intervals.
-
-        All windows re-key on the dimension KEYS (per-task state is one
-        run counter); versions map to dense indexes through a tiny
-        broadcast table, so the pass costs one shuffle however long the
-        history is."""
-        ds = self._dataset_entry(dataframe_name)
-        # manifest order IS commit order — labelled versions ('epoch-10')
-        # don't sort lexicographically, so never re-sort them
-        versions = [str(v) for v in ds["versions"]]
-        if not versions:
-            raise DatasetNotFound(f"{dataframe_name!r} has no committed versions")
-        vindex = local_rows_df(self.spark,
-            [(v, i) for i, v in enumerate(versions)], f"{VERSION_COL} string, __vi int"
-        )
-        df = self.load(dataframe_name, drop_internal=False)
-        value_cols = [c for c in df.columns if c not in keys and not _is_internal(c)]
-        # Change detection hashes to_json(struct(values)) — canonicalize
-        # the representation-unstable types first, else semantically equal
-        # states open spurious runs: map values serialize in PHYSICAL key
-        # order (sort the entry list), and -0.0 == 0.0 but their JSON
-        # differs (normalize by + 0.0; NaN stays NaN). Top-level columns
-        # only — states with maps/floats NESTED inside structs/arrays are
-        # compared representation-exact (documented contract).
-        dtypes = dict(df.dtypes)
-
-        def canon(c):
-            t = dtypes[c]
-            if t.startswith("map<"):
-                return F.array_sort(F.map_entries(F.col(c))).alias(c)
-            if t in ("double", "float"):
-                return (F.col(c) + F.lit(0.0)).alias(c)
-            return F.col(c)
-
-        h = F.sha2(F.to_json(F.struct(*[canon(c) for c in sorted(value_cols)])), 256)
-        base = (
-            df.join(F.broadcast(vindex), VERSION_COL)
-            .select(*keys, F.col("__vi"), h.alias("__h"), *value_cols)
-        )
-        dup = (
-            base.groupBy(*keys, "__vi")
-            .count()
-            .filter(F.col("count") > 1)
-            .limit(1)
-            .collect()
-        )
-        if dup:
-            raise ValueError(
-                f"scd2_history needs one row per (key, version); "
-                f"{dict((k, dup[0][k]) for k in keys)} has {dup[0]['count']} rows "
-                f"in version index {dup[0]['__vi']} — deduplicate or widen the key"
-            )
-        w = Window.partitionBy(*keys).orderBy("__vi")
-        runs = (
-            base.withColumn("__prev_h", F.lag("__h").over(w))
-            .withColumn("__prev_vi", F.lag("__vi").over(w))
-            .withColumn(
-                "__new_run",
-                (
-                    F.col("__prev_h").isNull()
-                    | (F.col("__prev_h") != F.col("__h"))
-                    | (F.col("__prev_vi") != F.col("__vi") - 1)
-                ).cast("int"),
-            )
-            .withColumn(
-                "__run",
-                F.sum("__new_run").over(w.rowsBetween(Window.unboundedPreceding, 0)),
-            )
-        )
-        grouped = runs.groupBy(*keys, "__run").agg(
-            F.min("__vi").alias("__from_vi"),
-            F.max("__vi").alias("__to_vi"),
-            *[F.first(c).alias(c) for c in value_cols],
-        )
-        last_vi = len(versions) - 1
-        # JVM-side label lookup: element_at over a literal array (no Python
-        # UDF in the engine path; history length = array length, tiny)
-        varr = F.array(*[F.lit(v) for v in versions])
-        return grouped.select(
-            *keys,
-            *value_cols,
-            F.element_at(varr, F.col("__from_vi") + 1).alias("valid_from"),
-            F.when(
-                F.col("__to_vi") < last_vi,
-                F.element_at(varr, F.col("__to_vi") + 2),
-            ).alias("valid_to"),
-        )
-
-    def diff_versions(self, dataframe_name, version_a, version_b):
-        """What changed between two committed versions: row/byte/file
-        deltas (footer-statistics pass, same cost model as DESCRIBE) plus
-        the schema columns added/removed between the versions' recorded
-        write schemas (provenance plan hashes shown when captured). The
-        upgrade/rollback decision read."""
-        desc = self.describe_dataset(dataframe_name)
-        by_v = {v["version"]: v for v in desc["versions"]}
-        a, b = str(version_a), str(version_b)
-        missing = [v for v in (a, b) if v not in by_v]
-        if missing:
-            raise ValueError(
-                f"version(s) {missing} not committed for {dataframe_name!r}; "
-                f"have {sorted(by_v)}"
-            )
-        def _schema_cols(v):
-            prov = by_v[v].get("provenance") or {}
-            got = prov.get("schema_cols")
-            return None if got is None else set(got)
-
-        ca, cb = _schema_cols(a), _schema_cols(b)
-        schema_known = ca is not None and cb is not None
-        return {
-            "dataset": dataframe_name,
-            "from_version": a,
-            "to_version": b,
-            "row_delta": by_v[b]["n_rows"] - by_v[a]["n_rows"],
-            "byte_delta": by_v[b]["n_bytes"] - by_v[a]["n_bytes"],
-            "file_delta": by_v[b]["n_files"] - by_v[a]["n_files"],
-            # None = unknown (version predates schema provenance) — never
-            # report a false 'no change'
-            "columns_added": sorted(cb - ca) if schema_known else None,
-            "columns_removed": sorted(ca - cb) if schema_known else None,
-            "plan_hash_changed": (
-                (by_v[a].get("provenance") or {}).get("plan_hash")
-                != (by_v[b].get("provenance") or {}).get("plan_hash")
-            ),
-        }
-
-    def diff_branches(self, branch_name: str, other_name: str):
-        """What diverged between two datasets sharing history (the
-        branch-review read before :func:`merge_branch`): versions only
-        on each side, shared labels whose CONTENT differs (the
-        merge-blocking conflicts, detected by the same file-inventory
-        compare merge_branch uses), and the fork point recorded at
-        branch time.  Metadata-only — directory listings, no data
-        read."""
-        a = self._dataset_entry(branch_name)
-        b = self._dataset_entry(other_name)
-        va = {str(v) for v in a["versions"]}
-        vb = {str(v) for v in b["versions"]}
-        conflicts = [
-            v
-            for v in sorted(va & vb)
-            if self._version_files(a["path"], v) != self._version_files(b["path"], v)
-        ]
-        return {
-            "branch": branch_name,
-            "other": other_name,
-            "only_on_branch": [str(v) for v in a["versions"] if str(v) not in vb],
-            "only_on_other": [str(v) for v in b["versions"] if str(v) not in va],
-            "conflicting_labels": conflicts,
-            "branched_from": a.get("branched_from"),
-        }
 
     def branch_card(self, dataframe_name: str) -> DataFrame:
         """Branch-aware DATA CARD (r12, VERDICT r11 #8) — the queryable
-        face of the branching trio (:func:`branch_dataset` /
-        :func:`merge_branch` / :func:`diff_branches`): one row per
+        face of :func:`branch_dataset`: one row per
         committed version with its row count and its lineage position —
         ``branched_from`` (the fork source recorded at branch time),
         ``at_fork`` = 1 for versions shared with the fork point,
@@ -1410,8 +824,8 @@ class DataFrameEngine:
         BEFORE its manifest commit is invisible to ``load`` yet WILL
         surface here — consumers needing strict manifest semantics join
         against ``list_versions``. Retention (``keep_last`` /
-        ``retain_last``) retires old dirs by rename; rows already
-        delivered are unaffected.
+        ``retain_last``) removes old dirs after unlisting them; rows
+        already delivered are unaffected.
 
         Scale: the file source lists only NEW files per trigger (no
         corpus rescan); ``max_files_per_trigger`` bounds a catching-up
@@ -1427,41 +841,6 @@ class DataFrameEngine:
         if drop_internal:
             df = df.drop(*[c for c in df.columns if _is_internal(c) and c != VERSION_COL])
         return df
-
-    def load_incremental(
-        self,
-        dataframe_name: str,
-        cursor=None,
-        drop_internal: bool = True,
-    ):
-        """Batch change-data capture — the non-streaming twin of
-        ``stream_changes`` for consumers that run on a schedule instead
-        of holding a query open: returns ``(df, new_cursor)`` where
-        ``df`` holds exactly the rows of committed versions NOT covered
-        by ``cursor`` (a collection of already-processed version labels,
-        e.g. the previous call's ``new_cursor``; None = everything) and
-        ``new_cursor`` covers all versions visible now. Feeding
-        ``new_cursor`` back makes repeated calls append-proportional —
-        the same partition-pruned economics ``refresh_rollup`` uses
-        internally, exposed for ANY downstream job.
-
-        Strictly manifest read-committed (unlike the streaming feed's
-        documented crash-window gap): only manifest-listed versions are
-        ever visible or recorded in the cursor, so a version committed
-        mid-stride is simply picked up by the next call. The version
-        filter is a partition-column predicate — Catalyst prunes to the
-        unprocessed dirs, never a corpus rescan. ``df`` keeps the
-        ``__version`` label (the change metadata); ``drop_internal``
-        removes only bucketing internals.
-        """
-        ds = self._dataset_entry(dataframe_name)
-        done = {str(v) for v in (cursor or [])}
-        visible = [str(v) for v in ds["versions"]]
-        new = [v for v in visible if v not in done]
-        df = self._scan(ds).filter(F.col(VERSION_COL).isin(new))
-        if drop_internal:
-            df = df.drop(*[c for c in df.columns if _is_internal(c) and c != VERSION_COL])
-        return df, sorted(done | set(new))
 
     def fsck(self, dataframe_name=None, repair=False, min_age_seconds=3600.0):
         """Manifest ↔ disk consistency check (and optional repair) — the
@@ -1547,52 +926,6 @@ class DataFrameEngine:
                 }
         return report
 
-    def repartition_dataset(
-        self, dataframe_name: str, new_columns_keys: Dict[str, str]
-    ) -> Dict[str, Any]:
-        """Partition-layout EVOLUTION: rewrite the dataset under a new
-        Date/ID key layout. ``save`` refuses a conflicting layout on
-        append (a mixed tree would corrupt pruning); this is the explicit
-        migration path — every version's rows re-derive their ``__p_*``
-        columns under the new keys in one rewrite, version labels and
-        history intact, and the manifest swaps atomically (compact()'s
-        crash contract: the old tree is removed only after the manifest
-        points at the new one)."""
-        for col, key_type in new_columns_keys.items():
-            if key_type not in KEY_TYPES:
-                raise ValueError(f"key type for {col!r} must be one of {KEY_TYPES}")
-        ds = self._dataset_entry(dataframe_name)
-        old_path = ds["path"]
-        df = self.load(dataframe_name, drop_internal=False)
-        missing = [c for c in new_columns_keys if c not in df.columns]
-        if missing:
-            raise ValueError(f"partition columns {missing} not in dataset schema")
-        old_pcols = [f"__p_{c}" for c in ds["columns_keys"]]
-        out, new_pcols = self._derive_partition_cols(
-            df.drop(*old_pcols), new_columns_keys
-        )
-        partition_cols = [VERSION_COL] + new_pcols
-        new_path = old_path.rstrip("/") + f".repart.{uuid.uuid4().hex[:8]}"
-        (
-            out.repartition(*[F.col(c) for c in partition_cols])
-            .write.mode("overwrite")
-            .option("maxRecordsPerFile", 100_000)
-            .partitionBy(*partition_cols)
-            .parquet(new_path)
-        )
-        with self._commit() as manifest:
-            entry = manifest["datasets"].get(dataframe_name)
-            if entry is None:
-                raise DatasetNotFound(dataframe_name)
-            entry["path"] = new_path
-            entry["columns_keys"] = dict(new_columns_keys)
-        shutil.rmtree(old_path, ignore_errors=True)
-        return {
-            "dataframe_name": dataframe_name,
-            "path": new_path,
-            "columns_keys": dict(new_columns_keys),
-        }
-
     def restore(
         self, dataframe_name: str, external_key: str, new_key: str = "NOW"
     ) -> Dict[str, Any]:
@@ -1601,7 +934,7 @@ class DataFrameEngine:
         history stays intact and auditable — nothing is deleted, the
         latest pointer simply moves forward onto old data). The restored
         copy re-partitions under the dataset's own keys and carries
-        provenance like any save, so ``diff_versions`` shows exactly what
+        provenance like any save, so ``describe_dataset`` shows exactly what
         the rollback changed.
         """
         ds = self._dataset_entry(dataframe_name)
@@ -1616,21 +949,18 @@ class DataFrameEngine:
         """Retention maintenance: keep only the newest ``n`` committed
         versions (manifest order = commit order), delete the rest — the
         between-saves form of ``save(keep_last=True)`` (which keeps 1) /
-        the VACUUM-with-retention analogue. Manifest updates under the
-        lock AFTER the directories are gone, so a crash mid-prune leaves
-        extra-but-listed versions (fsck-visible), never dangling catalog
-        entries."""
+        the VACUUM-with-retention analogue. The manifest stops listing the
+        doomed versions BEFORE their directories go (``_reap``), so a crash
+        mid-prune leaves unlisted orphan dirs (``fsck`` reports and repairs
+        them), never listed-but-missing versions."""
         if n < 1:
             raise ValueError("retain_last needs n >= 1")
-        ds = self._dataset_entry(dataframe_name)
-        doomed = [str(v) for v in ds["versions"][:-n]]
-        for v in doomed:
-            self._delete_version_dirs(ds["path"], v)
         with self._commit() as manifest:
             entry = manifest["datasets"].get(dataframe_name)
             if entry is None:
                 raise DatasetNotFound(dataframe_name)
-            entry["versions"] = [v for v in entry["versions"] if str(v) not in set(doomed)]
+            doomed = [str(v) for v in entry["versions"][:-n]]
+            entry["versions"] = entry["versions"][-n:]
             entry["provenance"] = {
                 k: p
                 for k, p in entry.get("provenance", {}).items()
@@ -1638,7 +968,9 @@ class DataFrameEngine:
             }
             if entry["versions"]:
                 entry["latest"] = entry["versions"][-1]
-        return {"deleted_versions": doomed, "kept": len(ds["versions"]) - len(doomed)}
+            path, kept = entry["path"], len(entry["versions"])
+        self._reap(self._version_dir(path, v) for v in doomed)
+        return {"deleted_versions": doomed, "kept": kept}
 
     def branch_dataset(
         self, source_name: str, branch_name: str
@@ -1684,72 +1016,10 @@ class DataFrameEngine:
                     "at_versions": [str(v) for v in src["versions"]],
                 },
             }
-            if "constraints" in src:
-                manifest["datasets"][branch_name]["constraints"] = dict(
-                    src["constraints"]
-                )
         return {
             "dataframe_name": branch_name,
             "branched_from": source_name,
             "versions": [str(v) for v in src["versions"]],
-        }
-
-    def merge_branch(
-        self, branch_name: str, into_name: str
-    ) -> Dict[str, Any]:
-        """FAST-FORWARD a branch back into another dataset (the
-        complement of :func:`branch_dataset`): every version the branch
-        has that the target lacks is appended to the target, in the
-        branch's commit order — files hardlink across (zero-copy, same
-        contract as branching), the target's latest pointer moves to
-        the newest merged version, and provenance travels.
-
-        A version LABEL present on both sides is only skipped when it
-        is the SAME commit (identical file inventory — the shared
-        fork-point versions); a label collision with different content
-        raises listing the conflicts, because silently preferring
-        either side would rewrite committed history (resolve by
-        restoring one side under a new key first).  Schema merges
-        through the same evolution rule as append."""
-        src = self._dataset_entry(branch_name)
-        dst = self._dataset_entry(into_name)
-        dst_versions = {str(v) for v in dst["versions"]}
-        to_merge, conflicts = [], []
-        for v in src["versions"]:
-            if str(v) not in dst_versions:
-                to_merge.append(str(v))
-            elif self._version_files(src["path"], v) != self._version_files(dst["path"], v):
-                conflicts.append(str(v))
-        if conflicts:
-            raise ValueError(
-                f"merge_branch: version label(s) {conflicts} exist on both "
-                f"{branch_name!r} and {into_name!r} with DIFFERENT content — "
-                "restore one side under a new key, then merge"
-            )
-        for v in to_merge:
-            self._link_version(src["path"], dst["path"], v)
-        from pyspark.sql import types as T
-
-        with self._commit() as manifest:
-            entry = manifest["datasets"].get(into_name)
-            if entry is None:
-                raise DatasetNotFound(into_name)
-            src_entry = manifest["datasets"].get(branch_name) or src
-            entry["schema"] = self._merge_schema(
-                entry["schema"], T.StructType.fromJson(json.loads(src_entry["schema"]))
-            ).json()
-            for v in to_merge:
-                if v not in {str(x) for x in entry["versions"]}:
-                    entry["versions"].append(v)
-                prov = src_entry.get("provenance", {}).get(v)
-                if prov is not None:
-                    entry.setdefault("provenance", {})[v] = prov
-            if to_merge:
-                entry["latest"] = to_merge[-1]
-        return {
-            "merged_versions": to_merge,
-            "into": into_name,
-            "from": branch_name,
         }
 
     def delete_dataset(self, dataframe_name: str) -> Dict[str, Any]:
@@ -1757,12 +1027,15 @@ class DataFrameEngine:
 
         An extension beyond the reference (its SDK has no deletion method,
         SURVEY §2.5) — without it a versioned warehouse can only grow.
-        Manifest is updated AFTER the data is gone, so a crash mid-delete
-        leaves a listed-but-shrinking dataset, never a dangling catalog
-        entry pointing at nothing.
+        The catalog entry goes BEFORE the data (``_reap``), so a crash
+        mid-delete leaves either the intact dataset or an unlisted
+        directory, never a listed dataset with missing files.
         """
-        ds = self._dataset_entry(dataframe_name)
-        shutil.rmtree(ds["path"], ignore_errors=True)
+        with self._commit() as manifest:
+            ds = manifest["datasets"].pop(dataframe_name, None)
+            if ds is None:
+                raise DatasetNotFound(dataframe_name)
+        self._reap([ds["path"]])
         # Prune now-empty name directories up to (never including) the
         # warehouse root; a nested sibling like 'a/b' keeps 'a/' alive.
         parent = os.path.dirname(ds["path"])
@@ -1773,8 +1046,6 @@ class DataFrameEngine:
             except OSError:
                 break
             parent = os.path.dirname(parent)
-        with self._commit() as manifest:
-            manifest["datasets"].pop(dataframe_name, None)
         return {"dataframe_name": dataframe_name, "deleted": True}
 
     # ---------------------------------------------------------------- scoping
@@ -2087,8 +1358,13 @@ class DataFrameEngine:
             raise ValueError(f"dataset name {name!r} escapes the warehouse root")
         return path
 
-    def _delete_version_dirs(self, root: str, version: str) -> None:
-        # every writer (save, compact, repartition) puts the version dir
-        # at the top level of the dataset path
-        shutil.rmtree(self._version_dir(root, version), ignore_errors=True)
-
+    @staticmethod
+    def _reap(dirs) -> None:
+        """Remove directories that a ``_commit()`` which has already
+        returned stopped listing — the one place retention and deletion
+        touch data files. Commit first, reap second: a crash before the
+        commit leaves catalog and files as they were, and a crash during
+        the reap leaves unlisted orphans, never listed-but-missing
+        versions."""
+        for d in dirs:
+            shutil.rmtree(d, ignore_errors=True)

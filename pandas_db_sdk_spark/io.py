@@ -80,10 +80,6 @@ class Tables:
             return _HOT_CACHE[key]
         return df
 
-    def register_views(self) -> None:
-        for name in TABLES:
-            self(name).createOrReplaceTempView(name)
-
 
 def tables(spark: SparkSession, sf_dir: str) -> Tables:
     return Tables(spark, sf_dir)

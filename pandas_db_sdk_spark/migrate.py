@@ -1,4 +1,4 @@
-"""Migration bridge to/from the reference's documented storage layout.
+"""Migration bridge to the reference's documented storage layout.
 
 The reference stores datasets as gzip-CSV chunk trees
 (``README.md:189-218``)::
@@ -6,16 +6,13 @@ The reference stores datasets as gzip-CSV chunk trees
     bucket/dataframe_name/<partition_column>/<value>/chunk_uuid.csv.gz
 
 with Date values as ``2024-01-01`` dirs and ID values as ``from_X_to_Y``
-range dirs. A user switching engines has terabytes in that layout;
-``import_reference_layout`` reads it straight into a
-:class:`~pandas_db_sdk_spark.engine.DataFrameEngine` dataset, and
-``export_reference_layout`` writes a dataset back out byte-compatible
-(gzip CSV, ≤100K-row chunks, uuid names — ``README.md:20-21,197``).
+range dirs. ``export_reference_layout`` writes a
+:class:`~pandas_db_sdk_spark.engine.DataFrameEngine` dataset out
+byte-compatible (gzip CSV, ≤100K-row chunks, uuid names —
+``README.md:20-21,197``) so reference-side tooling can consume it.
 
-Scale shape: both directions are one distributed Spark job over the chunk
-files (csv.gz is not splittable, so parallelism = chunk count — which the
-reference's own 100K-row chunking guarantees is high). The only driver-side
-work is directory listing and renames (metadata ops).
+Scale shape: one distributed Spark job writes the chunk files. The only
+driver-side work is directory listing and renames (metadata ops).
 """
 
 from __future__ import annotations
@@ -27,52 +24,7 @@ import urllib.parse
 import uuid
 from typing import Dict, Optional
 
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
-
 from .engine import DataFrameEngine, _is_internal
-
-
-def import_reference_layout(
-    spark: SparkSession,
-    root: str,
-    partition_column: Optional[str] = None,
-    schema: Optional[str] = None,
-) -> DataFrame:
-    """Read a reference-layout chunk tree into one DataFrame.
-
-    ``root`` is the ``dataframe_name`` directory. The single partition level
-    (``README.md:191-207``) is re-derived from each file's path via
-    ``input_file_name`` — no listing loop, one distributed read. Partition
-    values land in ``partition_column`` (defaults to the directory name the
-    reference uses, i.e. the column itself).
-    """
-    level_dirs = sorted(
-        d for d in os.listdir(root) if os.path.isdir(os.path.join(root, d))
-    )
-    if len(level_dirs) != 1:
-        raise ValueError(
-            f"expected one partition-column dir under {root!r} "
-            f"(README.md:191-207 layout), found {level_dirs}"
-        )
-    col_dir = level_dirs[0]
-    out_col = partition_column or col_dir
-    reader = spark.read.option("header", True)
-    if schema is not None:
-        reader = reader.schema(schema)
-    else:
-        reader = reader.option("inferSchema", True)
-    df = reader.csv(os.path.join(root, col_dir, "*", "*.csv.gz"))
-    if out_col in df.columns:
-        # chunks already carry the column (our own exports do) — the dir
-        # value is redundant; keep the typed in-file values.
-        return df
-    # .../<col_dir>/<value>/<chunk>.csv.gz → value. ID range dirs carry
-    # derived bucket labels (README.md:200-207), Date dirs the date itself.
-    part_val = F.regexp_extract(
-        F.input_file_name(), f"/{col_dir}/([^/]+)/[^/]+$", 1
-    )
-    return df.withColumn(out_col, part_val)
 
 
 def export_reference_layout(

@@ -23,10 +23,8 @@ round 10 the modeled-format ladder is closed:
   windowed-sinc resample (160/147);
 * signatures: perceptual average-hash (the image near-dup key).
 
-`decode_features` ships a deterministic fake decoder and `decode_real`
-remains the explicitly marked stub (`NotImplementedError`) for
-real-world LIBRARY integration (PIL/libav-class formats beyond the
-modeled ladder) — the Spark-side plumbing is identical either way.
+Formats beyond the modeled ladder (PIL/libav-class libraries) are out of
+scope: no codec library ships here.
 """
 
 from __future__ import annotations
@@ -37,8 +35,6 @@ import pandas as pd
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-FEATURE_DIM = 8
 
 
 def attach_binary_payload(df: DataFrame, text_col: str = "text") -> DataFrame:
@@ -53,59 +49,6 @@ def attach_binary_payload(df: DataFrame, text_col: str = "text") -> DataFrame:
             F.sha2(payload, 256).alias("sha256"),
         ),
     )
-
-
-def decode_features(df: DataFrame, payload_col: str = "payload", id_col: str = "doc_id") -> DataFrame:
-    """Fake 'decode + featurize' over binary payloads via mapInPandas.
-
-    Deterministic stand-in for an image/audio decoder: features are simple
-    byte statistics, so tests can assert exact values. Batch shape, Arrow
-    transfer, and output schema are identical to what a real decoder needs.
-    """
-
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        for pdf in batches:
-            feats = []
-            for blob in pdf[payload_col]:
-                # FEATURE_DIM bucketed byte-mean "embedding" — deterministic
-                # fake; bucket sums run in numpy, not a per-byte Python loop,
-                # so the measured mapInPandas plumbing cost is honest.
-                a = np.frombuffer(bytes(blob), dtype=np.uint8)
-                n = a.size
-                step = max(n // FEATURE_DIM, 1)
-                bound = (min(n, step * FEATURE_DIM) // step) * step
-                vec = a[:bound].reshape(-1, step).mean(axis=1, dtype=np.float64)
-                out = np.zeros(FEATURE_DIM)
-                out[: vec.size] = vec[:FEATURE_DIM]
-                feats.append(out.tolist())
-            yield pd.DataFrame({"doc_id": pdf[id_col], "n_bytes": pdf[payload_col].map(len), "features": feats})
-
-    return df.mapInPandas(decode, f"doc_id long, n_bytes long, features array<double>")
-
-
-def decode_real(df: DataFrame, payload_col: str = "payload"):
-    """STUB — real media decode (PIL/librosa/av are not installed here).
-
-    Intended contract: mapInPandas over `payload_col`, yielding
-    (id, width/height or sample_rate/duration, features array<float>) with
-    the same batch shape as :func:`decode_features`.
-    """
-    raise NotImplementedError(
-        "media codecs unavailable in this environment; use decode_features "
-        "(deterministic fake) — the Spark plumbing is identical"
-    )
-
-
-def frame_sample_plan(df: DataFrame, every_n: int = 10) -> DataFrame:
-    """Video-frame-sampling plumbing: given (doc_id, payload) pretend each
-    payload is a container of frames; emit one row per sampled frame index.
-    The index arithmetic is real; the frame extraction would live in the
-    decoder stub."""
-    n_frames = (F.octet_length("payload") / 16).cast("int")  # fake: 16 bytes/frame
-    idx = F.sequence(F.lit(0), F.greatest(n_frames - 1, F.lit(0)), F.lit(every_n))
-    return df.select("doc_id", F.explode(idx).alias("frame_idx"))
 
 
 def _synth_payloads(df: DataFrame, id_col: str, make) -> DataFrame:
@@ -246,8 +189,7 @@ def parse_media_headers(
     and RIFF/WAVE fmt (channels/sample rate/bits, duration from the data
     chunk). This is the resolution/duration gating tier every multimodal
     training pipeline runs BEFORE decode — and the one tier that needs no
-    codecs, so it is fully real here (decode stays `decode_real`'s
-    documented stub).
+    codecs.
 
     Arrow-batched mapInPandas; unparseable payloads degrade to
     format='unknown' with null fields, never an executor error."""
@@ -927,9 +869,7 @@ def decode_png_stats(
     (y, x, channel) pixel grid, and the same per-channel statistics +
     position-weighted checksum as :func:`decode_bmp_ppm_stats` — a
     mis-unfiltered row corrupts every later Sub/Average/Paeth row, so
-    pos_sum certifies the filter chain end-to-end. After this tier the
-    only remaining multimodal stub is LOSSY codecs (JPEG entropy
-    decode, audio resample — `decode_real`).
+    pos_sum certifies the filter chain end-to-end.
 
     Scope: 8-bit truecolor (color type 2), non-interlaced — the shape
     `synth_png` emits; anything else (and any CRC/zlib/structure error)
@@ -963,9 +903,7 @@ def decode_bmp_ppm_stats(
     certify the channel order but not the geometry (a row flip permutes
     pixels within a channel, leaving every order-free statistic
     unchanged); pos_sum is the statistic a mis-flipped, mis-padded or
-    mis-strided decode cannot fake. With this tier the only remaining
-    multimodal stub is COMPRESSED codecs (JPEG/PNG entropy coding —
-    `decode_real`); container→raw-pixel decode is now real end-to-end.
+    mis-strided decode cannot fake.
 
     Integer sums are exact (≤ 255·12·13·144 per cell), so the oracle
     replays them arithmetically — the d48/d93 certification pattern.

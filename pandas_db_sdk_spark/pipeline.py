@@ -382,9 +382,8 @@ def crawl_corpus(
     signature bands. Every frame is lazy — materialize counts off the
     returned dict, nothing is collected here.
 
-    ``persist=False`` skips the slot-pooled stage caches — the
-    streaming wrapper (``streaming.ingest.stream_crawl_into_engine``)
-    runs these gates once per micro-batch, where caching a
+    ``persist=False`` skips the slot-pooled stage caches — for a
+    caller that runs these gates once per micro-batch, caching a
     never-reread batch frame is pure overhead."""
     stages = crawl_gates(
         records, robots,

@@ -3,9 +3,8 @@
 The reference service stores every dataset as
 ``<name>/<partition_col>/<value>/chunk_<uuid>.csv.gz`` (reference
 ``README.md:189-218``): one directory level per partition value, many
-gzipped CSV chunks per value. ``migrate.import_reference_layout`` already
-reads such trees through a driver-side glob; this module makes the layout a
-first-class Spark 4 Python DataSource instead —
+gzipped CSV chunks per value. This module makes the layout a first-class
+Spark 4 Python DataSource —
 
     spark.dataSource.register(RefLayoutDataSource)
     df = (spark.read.format("pandas_db_ref")

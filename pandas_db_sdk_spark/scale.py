@@ -1,10 +1,10 @@
-"""Explicit skew-mitigation operators — the 100 TB toolbox.
+"""Global-order and skew operators — the 100 TB toolbox.
 
-AQE's skew-join splitting handles most runtime skew automatically
-(session.py turns it on), but two patterns still need the query author:
-a *salted aggregation* when one group key carries a disproportionate share
-of rows, and a *salted join* when a skewed fact key meets a small-but-not-
-broadcastable dimension. Both are pure DataFrame compositions.
+``global_row_index``, ``exact_ntile`` and ``global_cumsum`` compute global
+order statistics without routing every row through one window task;
+``skew_report`` diagnoses key skew before a join or aggregation (AQE's
+skew-join splitting, which session.py turns on, handles most runtime skew
+automatically). All are pure DataFrame compositions.
 """
 
 from __future__ import annotations
@@ -13,72 +13,6 @@ from typing import Sequence
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-def salted_agg(
-    df: DataFrame,
-    keys: Sequence[str],
-    aggs: dict,
-    n_salts: int = 16,
-) -> DataFrame:
-    """Two-phase aggregation over salted keys.
-
-    Phase 1 groups by (keys…, salt) so a hot key's rows spread over n_salts
-    reducers; phase 2 merges the partials by the real keys. Supported aggs
-    (value per output column name): ("sum", col), ("count",), ("min", col),
-    ("max", col) — the merge of each is itself (sum of sums, sum of counts,
-    min of mins, max of maxes), which is what makes two-phase legal.
-
-    Spark's partial aggregation already does this *within* a partition; the
-    salt extends it *across* reducers, which matters when one key exceeds a
-    single reducer's share — at 1000 executors a key holding 1% of 100 TB
-    is 1 TB on one reducer without it.
-    """
-    salted = df.withColumn("__salt", F.pmod(F.spark_partition_id(), F.lit(n_salts)))
-    phase1 = []
-    merge = []
-    for out_name, spec in aggs.items():
-        op = spec[0]
-        if op == "sum":
-            phase1.append(F.sum(spec[1]).alias(out_name))
-            merge.append(F.sum(out_name).alias(out_name))
-        elif op == "count":
-            phase1.append(F.count("*").alias(out_name))
-            merge.append(F.sum(out_name).alias(out_name))
-        elif op == "min":
-            phase1.append(F.min(spec[1]).alias(out_name))
-            merge.append(F.min(out_name).alias(out_name))
-        elif op == "max":
-            phase1.append(F.max(spec[1]).alias(out_name))
-            merge.append(F.max(out_name).alias(out_name))
-        else:
-            raise ValueError(f"unsupported two-phase agg {op!r}")
-    partial = salted.groupBy(*keys, "__salt").agg(*phase1)
-    return partial.groupBy(*keys).agg(*merge)
-
-
-def salted_join(
-    fact: DataFrame,
-    dim: DataFrame,
-    on: str,
-    n_salts: int = 16,
-    how: str = "inner",
-) -> DataFrame:
-    """Equi-join with the fact side salted and the dimension side replicated.
-
-    Each fact row gets a random-ish salt (deterministic: hash of all its
-    columns), each dim row is exploded n_salts times, and the join key
-    becomes (key, salt) — a hot fact key now lands on n_salts reducers
-    instead of one. Use when the dim is too big to broadcast but small
-    enough to replicate n_salts×; otherwise prefer AQE's skew handling.
-    """
-    f = fact.withColumn(
-        "__salt", F.pmod(F.xxhash64(*fact.columns), F.lit(n_salts)).cast("int")
-    )
-    d = dim.withColumn(
-        "__salt", F.explode(F.sequence(F.lit(0), F.lit(n_salts - 1)))
-    )
-    return f.join(d, [on, "__salt"], how).drop("__salt")
 
 
 def global_row_index(
@@ -180,86 +114,6 @@ def exact_ntile(
     )
 
 
-def zorder(
-    df: DataFrame,
-    cols: Sequence[str],
-    bits: int = 6,
-    n_partitions: int | None = None,
-) -> DataFrame:
-    """Z-order (Morton-curve) layout for multi-dimensional data skipping —
-    the OPTIMIZE ZORDER BY pattern, as a pure DataFrame transform.
-
-    Parquet prunes row groups/files from column min/max statistics; a
-    layout sorted on one column gives tight stats for that column only.
-    Interleaving the bits of rank-bucketed columns clusters rows so EVERY
-    z-ordered column's min/max range per file is ~domain/√files (2-D) —
-    point/range predicates on any of the columns skip most files.
-
-    Mechanics (all codegen'd, no Python in the row path):
-
-    1. per column: 2^bits quantile boundaries via one approx-quantile
-       aggregate (a bounded sketch — the only data reaching the driver);
-    2. bucket = #boundaries ≤ value, via a broadcast boundary array and a
-       filter/size HOF (rank-based, so skewed distributions still spread
-       across buckets);
-    3. z-value = bitwise interleave of the bucket bits (shift/or —
-       ANSI-safe, no overflow);
-    4. ``repartitionByRange(z)`` + ``sortWithinPartitions(z)`` — each
-       output file covers one compact z-range.
-
-    ``bits`` trades bucket-search cost (the boundary array scan is
-    O(2^bits) per row per column) against cell granularity; the default
-    64 buckets/column (4096 cells in 2-D) out-resolves any practical
-    file count — skipping happens at file/row-group granularity, so
-    extra bits past ~4× the file count buy nothing.
-
-    Write the result with ``DataFrameEngine.save`` (order is preserved
-    within partitions) and filters on any clustered column prune at plan
-    time. The helper column is dropped; only layout changes.
-    """
-    if n_partitions is None:
-        n_partitions = df.sparkSession.sparkContext.defaultParallelism
-    return (
-        with_zvalue(df, cols, bits=bits, z_col="__z")
-        .repartitionByRange(n_partitions, "__z")
-        .sortWithinPartitions("__z")
-        .drop("__z")
-    )
-
-
-def with_zvalue(
-    df: DataFrame, cols: Sequence[str], bits: int = 6, z_col: str = "__z"
-) -> DataFrame:
-    """Append the Morton z-value column ``zorder`` clusters by, without the
-    relayout — for callers that fold z-clustering into their own shuffle
-    (``DataFrameEngine.compact(zorder_by=…)`` sorts by it WITHIN partition
-    dirs so row groups inside each file take compact z-ranges)."""
-    if not cols:
-        raise ValueError("zorder requires at least one column")
-    if bits * len(cols) > 62:
-        raise ValueError("bits × columns must fit in a signed 64-bit z-value")
-    n_buckets = 1 << bits
-    # one pass: approx quantiles for every clustered column together
-    qs = [i / n_buckets for i in range(1, n_buckets)]
-    bounds = df.agg(
-        *[
-            F.percentile_approx(F.col(c).cast("double"), qs, 10_000).alias(c)
-            for c in cols
-        ]
-    ).first()
-    z = F.lit(0).cast("long")
-    for ci, c in enumerate(cols):
-        barr = F.array(*[F.lit(float(b)) for b in bounds[ci]])
-        bucket = F.size(
-            F.filter(barr, lambda b: b <= F.col(c).cast("double"))
-        ).cast("long")
-        # interleave: bit i of this column lands at z-bit (i*len(cols)+ci)
-        for i in range(bits):
-            bit = F.shiftrightunsigned(bucket, i).bitwiseAND(F.lit(1))
-            z = z.bitwiseOR(F.shiftleft(bit, i * len(cols) + ci))
-    return df.withColumn(z_col, z)
-
-
 def global_cumsum(
     df: DataFrame,
     order_by: Sequence[str],
@@ -321,8 +175,8 @@ def skew_report(df: DataFrame, key_col: str) -> DataFrame:
     distribution of ``key_col`` — distinct keys, total rows, hottest-key
     count, p50/p99 per-key counts (exact interpolated percentiles), and
     the hottest key's share of all rows. Reading it answers the 100 TB
-    planning questions: does this key need salting (`salted_agg`/
-    `salted_join`)? will AQE's skew-join threshold trigger?
+    planning questions: does this key need salting? will AQE's
+    skew-join threshold trigger?
 
     Movement: one partial+final count agg over the keys, then a single
     global agg whose input is one row PER KEY (counts, not rows); the

@@ -811,8 +811,7 @@ def assign_to_centroid_table(
     table in :func:`label_centroids`' long form (label, pos, centroid)
     — the form an INCREMENTAL index needs: the quantizer is FROZEN at
     index-build time and new vectors route against it without
-    retraining (``streaming.ingest.stream_embeddings_into_ivf``'s
-    contract, and :func:`ivf_drift_card`'s reference frame).  Same
+    retraining (:func:`ivf_drift_card`'s reference frame).  Same
     exact-decimal distance, same (dist, label) argmin tie-break, same
     broadcast O(labels × dim) plan as the self-trained form (which
     delegates here)."""
@@ -1349,8 +1348,8 @@ def mmr_select(
 
 
 def compact_ivf_pq_index(spark, path: str) -> dict:
-    """Housekeeping for a streamed-into inverted file
-    (``stream_into_ann_index``): micro-batch appends fragment each cell
+    """Housekeeping for an appended-to inverted file
+    (``write_ivf_pq_index(mode="append")``): appends fragment each cell
     directory (one file per batch per cell) and a replayed batch can leave
     duplicate (id, codes) rows. Rewrite the tree to one file per cell with
     the NEWEST codes row per neighbor kept — recency comes from the
@@ -1360,10 +1359,9 @@ def compact_ivf_pq_index(spark, path: str) -> dict:
     are byte-identical either way (codes are a pure function of the
     frozen quantizers), so any order is safe for them.
 
-    Same atomic-swap contract as ``engine.compact``: the rewrite lands in
-    a sibling temp dir and replaces the old tree only after success, so a
-    crash mid-compact leaves the readable original. Returns before/after
-    file and row counts.
+    Atomic swap: the rewrite lands in a sibling temp dir and replaces the
+    old tree only after success, so a crash mid-compact leaves the
+    readable original. Returns before/after file and row counts.
     """
     import os
     import shutil

@@ -73,108 +73,3 @@ def running_max_stateful(events: DataFrame) -> DataFrame:
 
     return src.groupBy("user_id").applyInPandas(batch_fn, OUTPUT_SCHEMA)
 
-
-# --------------------------------------------------------- transformWithState
-
-EMA_ALPHA = 0.2
-EMA_SCHEMA = "event_id long, user_id long, ema double"
-
-
-def _has_protobuf() -> bool:
-    """transformWithStateInPandas speaks a protobuf-framed state protocol;
-    fall back to applyInPandasWithState where the package is missing."""
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
-def _ema_series(values, ema):
-    out = []
-    for v in values:
-        ema = float(v) if ema is None else EMA_ALPHA * float(v) + (1 - EMA_ALPHA) * ema
-        out.append(ema)
-    return out, ema
-
-
-def ema_stateful(events: DataFrame, spark=None) -> DataFrame:
-    """Per-user exponential moving average of ``value`` — a sequential
-    recurrence no window aggregate expresses. Streaming path prefers Spark
-    4's transformWithStateInPandas (StatefulProcessor + ValueState, the
-    successor of applyInPandasWithState) and falls back to
-    applyInPandasWithState when protobuf is unavailable; batch path is the
-    applyInPandas twin used as its oracle. State is one double per user —
-    O(#keys) forever."""
-    src = events.select("event_id", "user_id", "value")
-    if events.isStreaming and _has_protobuf():
-        from pyspark.sql.streaming import StatefulProcessor, StatefulProcessorHandle
-
-        class EMAProcessor(StatefulProcessor):
-            def init(self, handle: StatefulProcessorHandle) -> None:
-                self._state = handle.getValueState("ema", "ema double")
-
-            def handleInputRows(self, key, rows, timerValues):
-                ema = self._state.get()[0] if self._state.exists() else None
-                (user_id,) = key
-                for pdf in rows:
-                    pdf = pdf.sort_values("event_id")
-                    emas, ema = _ema_series(pdf["value"], ema)
-                    yield pd.DataFrame(
-                        {
-                            "event_id": pdf["event_id"].astype("int64"),
-                            "user_id": int(user_id),
-                            "ema": emas,
-                        }
-                    )
-                self._state.update((ema,))
-
-            def close(self) -> None:
-                pass
-
-        return src.groupBy("user_id").transformWithStateInPandas(
-            statefulProcessor=EMAProcessor(),
-            outputStructType=EMA_SCHEMA,
-            outputMode="append",
-            timeMode="none",
-        )
-
-    if events.isStreaming:
-        # transformWithState's Arrow protocol needs protobuf, absent here —
-        # same recurrence via the older applyInPandasWithState API.
-        def update(key, pdfs: Iterator[pd.DataFrame], state: GroupState):
-            (user_id,) = key
-            ema = state.get[0] if state.exists else None
-            for pdf in pdfs:
-                pdf = pdf.sort_values("event_id")
-                emas, ema = _ema_series(pdf["value"], ema)
-                yield pd.DataFrame(
-                    {
-                        "event_id": pdf["event_id"].astype("int64"),
-                        "user_id": int(user_id),
-                        "ema": emas,
-                    }
-                )
-            state.update((ema,))
-
-        return src.groupBy("user_id").applyInPandasWithState(
-            update,
-            outputStructType=EMA_SCHEMA,
-            stateStructType="ema double",
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-
-    def batch_fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("event_id")
-        emas, _ = _ema_series(pdf["value"], None)
-        return pd.DataFrame(
-            {
-                "event_id": pdf["event_id"].astype("int64"),
-                "user_id": pdf["user_id"].astype("int64"),
-                "ema": emas,
-            }
-        )
-
-    return src.groupBy("user_id").applyInPandas(batch_fn, EMA_SCHEMA)

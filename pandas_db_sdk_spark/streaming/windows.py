@@ -128,59 +128,3 @@ def interval_join(
         F.unix_micros("v_ts").alias("view_ts_us"),
         F.unix_micros("c_ts").alias("click_ts_us"),
     )
-
-
-def enriched_type_counts(
-    events: DataFrame,
-    dim: DataFrame,
-    width: str = "5 minutes",
-    watermark: str = "10 minutes",
-) -> DataFrame:
-    """Stream-static enrichment + windowed agg: join each event against a
-    STATIC dimension (broadcast per micro-batch — stream-static joins are
-    stateless, no watermark bookkeeping on the dim side), then count per
-    (window, category). Same expression works batch-side, which is the
-    parity oracle."""
-    e = events.withWatermark("ts", watermark) if events.isStreaming else events
-    j = e.join(F.broadcast(dim), "event_type")
-    return (
-        j.groupBy(F.window("ts", width), "category")
-        .agg(F.count("*").alias("n"))
-        .select(
-            F.unix_micros(F.col("window.start")).alias("window_start_us"),
-            "category",
-            "n",
-        )
-    )
-
-
-def ohlc_candles(events: DataFrame, width: str = "1 hour", watermark: str = "10 minutes") -> DataFrame:
-    """Live OHLC candle maintenance — c83's market-data rollup as a
-    streaming aggregate: open/close are min_by/max_by on the
-    (ts, event_id) total order INSIDE the windowed aggregation, so the
-    candle is one piece of merge-able per-window state (no ranking
-    window, which streaming cannot express anyway). Late events within
-    the watermark revise their candle in place; the same function body
-    serves batch backfill (parity-tested), the dual-shape contract of
-    this module."""
-    e = events.withWatermark("ts", watermark) if events.isStreaming else events
-    ordk = F.struct("ts", "event_id")
-    return (
-        e.groupBy(F.window("ts", width), "event_type")
-        .agg(
-            F.min_by("value", ordk).alias("open"),
-            F.max("value").alias("high"),
-            F.min("value").alias("low"),
-            F.max_by("value", ordk).alias("close"),
-            F.count("*").alias("volume"),
-        )
-        .select(
-            F.unix_micros(F.col("window.start")).alias("window_start_us"),
-            "event_type",
-            "open",
-            "high",
-            "low",
-            "close",
-            "volume",
-        )
-    )

@@ -624,57 +624,6 @@ def length_percentile_filter(
     )
 
 
-def strip_markup(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
-    """Boilerplate removal for scraped corpora: drop HTML/XML tags, decode
-    the common entities, strip script/style blocks wholesale, collapse the
-    leftover whitespace. Pure regexp codegen — zero shuffle, linear scan.
-
-    (The fixture corpus is plain text, so this op is pinned by
-    constructed-input tests rather than a corpus query.)"""
-    t = F.col(text_col)
-    # script/style blocks go first — their CONTENT is noise, not text
-    t = F.regexp_replace(t, r"(?is)<(script|style)[^>]*>.*?</\1>", " ")
-    t = F.regexp_replace(t, r"(?s)<!--.*?-->", " ")
-    t = F.regexp_replace(t, r"<[^>]+>", " ")
-    for ent, rep in [
-        ("&nbsp;", " "), ("&amp;", "&"), ("&lt;", "<"),
-        ("&gt;", ">"), ("&quot;", "\""), ("&#39;", "'"),
-    ]:
-        t = F.replace(t, F.lit(ent), F.lit(rep))
-    t = F.trim(F.regexp_replace(t, r"\s+", " "))
-    return df.select(F.col(id_col), t.alias("clean_text"))
-
-
-def dedup_lines_within_doc(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    sep: str = "\n",
-) -> DataFrame:
-    """Intra-document line dedup — the repeated-boilerplate scrub (nav bars,
-    cookie banners, repeated headers) that runs BEFORE document-level dedup
-    in scraped-corpus pipelines: keep each line's FIRST occurrence, preserve
-    order, rejoin.
-
-    One aggregate HOF per row (seen-set accumulation, O(lines²) membership
-    checks per document — lines per doc is bounded and small); no shuffle,
-    no Python."""
-    lines = F.split(F.col(text_col), sep)
-    deduped = F.aggregate(
-        lines,
-        F.array().cast("array<string>"),
-        lambda acc, x: F.when(F.array_contains(acc, x), acc).otherwise(
-            F.array_append(acc, x)
-        ),
-    )
-    return df.select(
-        F.col(id_col),
-        F.size(lines).alias("n_lines"),
-        F.size(deduped).alias("n_unique_lines"),
-        F.array_join(deduped, sep).alias("deduped_text"),
-    )
-
-
 def chunk_documents(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -1378,10 +1327,9 @@ _BPE_CKPT_EVERY = 8
 
 
 def _bpe_rewrite_sql(child_sql: str, a: str, b: str) -> str:
-    """SQL-text form of :func:`bpe_rewrite_expr` over ``child_sql`` (a SQL
-    expression producing array<string>) — parses to the identical
-    CaseWhen/aggregate tree (the equivalence is pinned by
-    ``test_bpe_rewrite_sql_matches_column_path``)."""
+    """One BPE merge rule ``(a, b) → a+b`` applied left to right over
+    ``child_sql`` (a SQL expression producing array<string>) as a single
+    ``aggregate`` fold — a codegen'd expression, no UDF."""
     pa, pb, pm = _sql_str(a), _sql_str(b), _sql_str(a + b)
     step = (
         "(acc, x) -> CASE "
@@ -1397,9 +1345,9 @@ def _bpe_rewrite_sql(child_sql: str, a: str, b: str) -> str:
 
 
 def _bpe_rewrite_multi_sql(child_sql: str, rules) -> str:
-    """SQL-text form of :func:`bpe_rewrite_multi_expr` (same equivalence
-    contract as :func:`_bpe_rewrite_sql`; batch must be symbol-disjoint,
-    enforced by the caller exactly as for the Column form)."""
+    """A batch of merge rules in one fold, looked up in a literal map (same
+    shape as :func:`_bpe_rewrite_sql`; the batch must be symbol-disjoint,
+    which the caller enforces)."""
     sep = "\x1f"
     entries = ", ".join(
         f"{_sql_str(a + sep + b)}, {_sql_str(a + b)}" for a, b in rules
@@ -1416,49 +1364,6 @@ def _bpe_rewrite_multi_sql(child_sql: str, rules) -> str:
     return (
         f"aggregate({child_sql}, {_BPE_INIT_SQL}, {step}, {_BPE_FINISH_SQL})"
     )
-
-
-def bpe_rewrite_expr(syms_col, a: str, b: str):
-    """The greedy left-to-right non-overlapping BPE merge of adjacent
-    (a, b) into a+b over a symbol array, as a whole-stage-codegen
-    ``aggregate`` HOF — the accumulator carries (out, pending): pend==a ∧
-    x==b → emit merged, else flush pend. Shared by the merge-LEARNING
-    loop (:func:`bpe_merges`) and the merge-APPLICATION encoder
-    (:func:`bpe_encode_stats`); a pure column expression, so applying k
-    merges is k nested projections in ONE scan, no shuffle."""
-    pa, pb = F.lit(a), F.lit(b)
-    init = F.struct(
-        F.expr("cast(array() as array<string>)").alias("out"),
-        F.lit(None).cast("string").alias("pend"),
-    )
-
-    def step(acc, x):
-        return (
-            F.when(
-                acc["pend"].isNull(),
-                F.struct(acc["out"].alias("out"), x.alias("pend")),
-            )
-            .when(
-                (acc["pend"] == pa) & (x == pb),
-                F.struct(
-                    F.array_append(acc["out"], F.concat(pa, pb)).alias("out"),
-                    F.lit(None).cast("string").alias("pend"),
-                ),
-            )
-            .otherwise(
-                F.struct(
-                    F.array_append(acc["out"], acc["pend"]).alias("out"),
-                    x.alias("pend"),
-                )
-            )
-        )
-
-    def finish(acc):
-        return F.when(acc["pend"].isNull(), acc["out"]).otherwise(
-            F.array_append(acc["out"], acc["pend"])
-        )
-
-    return F.aggregate(syms_col, init, step, finish)
 
 
 def bpe_merges(
@@ -1553,63 +1458,6 @@ def bpe_merges(
     )
 
 
-def bpe_rewrite_multi_expr(syms_col, rules):
-    """One-pass greedy merge of a BATCH of symbol-disjoint BPE rules over
-    a symbol array — the multi-rule generalization of
-    :func:`bpe_rewrite_expr`: the accumulator still carries (out, pend),
-    but the match test is a constant-map lookup ``(pend, x) → merged``
-    instead of a single (a, b) comparison, so applying a batch of k rules
-    is ONE codegen ``aggregate`` pass regardless of k. Correctness
-    requires the batch to be symbol-disjoint (no symbol of any rule —
-    including the merged output — appears in another rule; enforced by
-    :func:`bpe_merges_batched`'s greedy admission): then every adjacent
-    occurrence is claimed by at most one rule and the single left-to-
-    right scan equals applying the rules one-at-a-time in any order.
-    chr(31) keys the lookup (cannot appear in symbols — the d98c
-    sentinel argument)."""
-    sep = "\x1f"
-    pairs = []
-    for a, b in rules:
-        pairs.append(F.lit(a + sep + b))
-        pairs.append(F.lit(a + b))
-    mapping = F.create_map(*pairs)
-    init = F.struct(
-        F.expr("cast(array() as array<string>)").alias("out"),
-        F.lit(None).cast("string").alias("pend"),
-    )
-
-    def step(acc, x):
-        merged = F.try_element_at(
-            mapping, F.concat(acc["pend"], F.lit(sep), x)
-        )
-        return (
-            F.when(
-                acc["pend"].isNull(),
-                F.struct(acc["out"].alias("out"), x.alias("pend")),
-            )
-            .when(
-                merged.isNotNull(),
-                F.struct(
-                    F.array_append(acc["out"], merged).alias("out"),
-                    F.lit(None).cast("string").alias("pend"),
-                ),
-            )
-            .otherwise(
-                F.struct(
-                    F.array_append(acc["out"], acc["pend"]).alias("out"),
-                    x.alias("pend"),
-                )
-            )
-        )
-
-    def finish(acc):
-        return F.when(acc["pend"].isNull(), acc["out"]).otherwise(
-            F.array_append(acc["out"], acc["pend"])
-        )
-
-    return F.aggregate(syms_col, init, step, finish)
-
-
 def bpe_merges_batched(
     df: DataFrame,
     text_col: str = "text",
@@ -1625,7 +1473,7 @@ def bpe_merges_batched(
     (count desc, pair) order over ``candidate_factor·batch`` collected
     candidates; a pair is admitted only if none of {a, b, a+b} touches an
     already-admitted rule), and rewrites the vocabulary with ALL admitted
-    rules in one :func:`bpe_rewrite_multi_expr` codegen pass.
+    rules in one :func:`_bpe_rewrite_multi_sql` codegen pass.
 
     Scale budget (SCALE.md "BPE"): rounds ≈ n_merges/batch_effective;
     per round = one vocabulary-sized pair-count aggregate (map-side
@@ -1802,7 +1650,7 @@ def bpe_encode_stats(
     Distributed shape: rules are learned once (the d98 loop — driver
     holds n_merges (a, b) pairs); encoding is then ONE per-(group, word)
     frequency aggregation followed by n_merges NESTED
-    :func:`bpe_rewrite_expr` projections — pure codegen column
+    :func:`_bpe_rewrite_sql` projections — pure codegen column
     expressions, so the whole merge chain applies in a single scan with
     no per-rule shuffle — and a group-keyed final aggregate over exact
     integers. At 100 TB: the word-freq agg is the only corpus-sized
@@ -2673,8 +2521,8 @@ def dedup_lines_corpus(
     every distinct line survives exactly once across the WHOLE corpus —
     at its globally first occurrence (lowest (doc, line_no)) — and
     documents are reassembled from their surviving lines.  This is the
-    boilerplate killer intra-doc dedup (:func:`dedup_lines_within_doc`)
-    cannot reach: nav bars and cookie banners repeat across PAGES.
+    boilerplate killer a within-document dedup cannot reach: nav bars
+    and cookie banners repeat across PAGES.
 
     Input is the exploded line table (id, line_no, line); returns
     (id, n_lines, n_kept_lines, dedup_text) for every document (a doc

@@ -99,15 +99,6 @@ def test_list_dataframes_prefix(client):
     assert set(out["dataframes"]) == {"a/one", "a/two"}
 
 
-def test_distributed_exits(client):
-    """Beyond the reference: same dataset as Spark / pandas-on-Spark frames."""
-    client.load_dataframe(_sample(), "big/one")
-    sdf = client.get_dataframe_spark("big/one")
-    assert sdf.count() == 2 and not isinstance(sdf, pd.DataFrame)
-    psdf = client.get_dataframe_pandas_api("big/one")
-    assert float(psdf["value"].sum()) == 300.0
-
-
 def test_per_user_isolation(spark, tmp_path):
     """B9: different auth identities see disjoint catalogs; the same
     identity shares one (reference service semantics, README.md:23-26)."""

@@ -45,46 +45,6 @@ def test_payload_survives_parquet_roundtrip(spark, docs, tmp_path):
     assert a == b
 
 
-def test_decode_features_deterministic(spark, docs):
-    out = multimodal.decode_features(multimodal.attach_binary_payload(docs))
-    assert dict(out.dtypes) == {
-        "doc_id": "bigint", "n_bytes": "bigint", "features": "array<double>"
-    }
-    r1 = {r.doc_id: r for r in out.collect()}
-    r2 = {r.doc_id: r for r in multimodal.decode_features(
-        multimodal.attach_binary_payload(docs)).collect()}
-    for k in r1:
-        assert len(r1[k].features) == multimodal.FEATURE_DIM
-        assert r1[k].features == r2[k].features
-    assert r1[2].n_bytes == 100
-    # 100 'x' bytes → every bucket mean is ord('x')
-    assert r1[2].features == [float(ord("x"))] * multimodal.FEATURE_DIM
-
-
-def test_decode_real_is_marked_stub(spark, docs):
-    with pytest.raises(NotImplementedError, match="codecs unavailable"):
-        multimodal.decode_real(multimodal.attach_binary_payload(docs))
-
-
-@pytest.mark.skip(reason="media codecs (PIL/librosa/av) not installed in this container")
-def test_decode_real_contract(spark, docs):
-    """INTENDED CONTRACT for decode_real once codecs exist: mapInPandas over
-    the payload column yielding one row per input with (doc_id, modality
-    dimensions, features array<float>) — same Arrow batch shape as
-    decode_features, exercised here against a real PNG payload."""
-    df = multimodal.attach_binary_payload(docs)
-    out = multimodal.decode_real(df)
-    assert out.count() == df.count()
-    assert "features" in out.columns
-
-
-def test_frame_sample_indices(spark):
-    # 64-byte payload → 4 fake frames; every_n=2 → indices 0, 2
-    df = spark.createDataFrame([(1, b"\x00" * 64)], "doc_id long, payload binary")
-    out = multimodal.frame_sample_plan(df, every_n=2)
-    assert [r.frame_idx for r in out.orderBy("frame_idx").collect()] == [0, 2]
-
-
 def test_media_column_pruned_when_untouched(spark, docs, tmp_path):
     """Queries that don't reference the payload must not read it from
     parquet — the property that makes heavy media columns viable at 100 TB."""

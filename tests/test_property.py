@@ -209,101 +209,6 @@ def test_shard_assign_total_and_deterministic(spark, ids):
 
 
 @given(
-    rows=st.lists(
-        st.tuples(VALS, VALS), min_size=1, max_size=40
-    )
-)
-@SETTINGS
-def test_zorder_is_a_pure_permutation(spark, rows):
-    """zorder may only relayout: the multiset of rows out equals the
-    multiset in, for any value distribution (duplicates, negatives,
-    constants — where every quantile boundary collapses)."""
-    from pandas_db_sdk_spark import scale
-
-    df = spark.createDataFrame(rows, "x long, y long")
-    out = scale.zorder(df, ["x", "y"], bits=4, n_partitions=4)
-    assert sorted(map(tuple, out.collect())) == sorted(rows)
-
-
-@given(
-    base=st.lists(st.tuples(VALS, VALS), min_size=0, max_size=15, unique_by=lambda t: t[0]),
-    change=st.lists(st.tuples(VALS, VALS), min_size=1, max_size=10, unique_by=lambda t: t[0]),
-)
-@SETTINGS
-def test_merge_update_is_idempotent_and_matches_dict_semantics(
-    spark, tmp_path_factory, base, change
-):
-    """merge(update) must behave exactly like dict.update on the key
-    column, and re-applying the same change batch must be a no-op on
-    CONTENT (a new version, same rows)."""
-    from pandas_db_sdk_spark.engine import DataFrameEngine
-
-    eng = DataFrameEngine(spark, str(tmp_path_factory.mktemp("mwh")))
-    eng.save(spark.createDataFrame(base, "k long, v long"), "p/m")
-    cdf = spark.createDataFrame(change, "k long, v long")
-    eng.merge(cdf, "p/m", keys=["k"])
-    expected = dict(base)
-    expected.update(dict(change))
-    got1 = {r.k: r.v for r in eng.load("p/m", use_last=True).collect()}
-    assert got1 == expected
-    eng.merge(cdf, "p/m", keys=["k"])  # idempotent re-apply
-    got2 = {r.k: r.v for r in eng.load("p/m", use_last=True).collect()}
-    assert got2 == expected
-
-
-HTMLISH = st.text(
-    alphabet="abc <>/&;#xmp!-\"'\n", min_size=0, max_size=80
-)
-
-
-@given(docs=st.lists(HTMLISH, min_size=1, max_size=6))
-@SETTINGS
-def test_strip_markup_idempotent_and_tag_free(spark, docs):
-    """Stripping twice equals stripping once, and no '<tag>' survives."""
-    import re
-
-    from pandas_db_sdk_spark import text
-
-    df = spark.createDataFrame(
-        list(enumerate(docs)), "doc_id long, text string"
-    )
-    once = {r.doc_id: r.clean_text for r in text.strip_markup(df).collect()}
-    again_in = spark.createDataFrame(
-        [(k, v) for k, v in once.items()], "doc_id long, text string"
-    )
-    twice = {r.doc_id: r.clean_text for r in text.strip_markup(again_in).collect()}
-    assert twice == once
-    for v in once.values():
-        assert not re.search(r"<[^>]+>", v)
-
-
-@given(
-    lines=st.lists(
-        st.text(alphabet="abcd ", min_size=0, max_size=8), min_size=1, max_size=12
-    )
-)
-@SETTINGS
-def test_dedup_lines_idempotent_unique_ordered(spark, lines):
-    from pandas_db_sdk_spark import text
-
-    doc = "\n".join(lines)
-    df = spark.createDataFrame([(1, doc)], "doc_id long, text string")
-    r1 = text.dedup_lines_within_doc(df).first()
-    out_lines = r1.deduped_text.split("\n")
-    assert len(out_lines) == len(set(out_lines)) == r1.n_unique_lines
-    # first-occurrence order preserved
-    seen = []
-    for ln in lines:
-        if ln not in seen:
-            seen.append(ln)
-    assert out_lines == seen
-    # idempotent
-    df2 = spark.createDataFrame([(1, r1.deduped_text)], "doc_id long, text string")
-    r2 = text.dedup_lines_within_doc(df2).first()
-    assert r2.deduped_text == r1.deduped_text
-
-
-@given(
     docs=st.lists(
         st.lists(st.sampled_from("abcdefgh"), min_size=1, max_size=14).map(" ".join),
         min_size=1,

@@ -26,25 +26,6 @@ def skewed(spark):
     return hot.unionByName(rest)
 
 
-def test_salted_agg_equals_plain(spark, skewed):
-    plain = {
-        (r.k,): (r.s, r.n, r.mn, r.mx)
-        for r in skewed.groupBy("k")
-        .agg(F.sum("v").alias("s"), F.count("*").alias("n"),
-             F.min("v").alias("mn"), F.max("v").alias("mx"))
-        .collect()
-    }
-    salted = {
-        (r.k,): (r.s, r.n, r.mn, r.mx)
-        for r in scale.salted_agg(
-            skewed, ["k"],
-            {"s": ("sum", "v"), "n": ("count",), "mn": ("min", "v"), "mx": ("max", "v")},
-            n_salts=8,
-        ).collect()
-    }
-    assert salted == plain
-
-
 def test_salted_agg_spreads_hot_key(spark, skewed):
     """Phase 1 must produce multiple partials for the hot key."""
     salted = skewed.repartition(8).withColumn(
@@ -54,25 +35,6 @@ def test_salted_agg_spreads_hot_key(spark, skewed):
         salted.groupBy("k", "__salt").count().filter(F.col("k") == "hot").count()
     )
     assert partials > 1
-
-
-def test_salted_join_equals_plain(spark, skewed):
-    dim = spark.createDataFrame(
-        [("hot", "H")] + [(f"k{i}", f"D{i}") for i in range(10)], "k string, label string"
-    )
-    plain = sorted((r.k, r.v, r.label) for r in skewed.join(dim, "k").collect())
-    salted = sorted(
-        (r.k, r.v, r.label) for r in scale.salted_join(skewed, dim, "k", n_salts=4).collect()
-    )
-    assert salted == plain
-
-
-def test_salted_join_unsupported_rows_preserved(spark, skewed):
-    """Left join keeps unmatched fact rows exactly once."""
-    dim = spark.createDataFrame([("hot", "H")], "k string, label string")
-    out = scale.salted_join(skewed, dim, "k", n_salts=4, how="left")
-    assert out.count() == skewed.count()
-    assert out.filter(F.col("label").isNull()).count() == 100
 
 
 def test_engine_save_accepts_pandas(spark, tmp_path):
@@ -123,57 +85,6 @@ def test_exact_ntile_distributed_matches_window(spark):
             ).collect()
         }
         assert got == want, (N, n)
-
-
-def test_zorder_tightens_file_stats_on_both_dimensions(spark, tmp_path):
-    """Write a 2-D uniform grid z-ordered across 16 files and read back the
-    parquet footer min/max per file: each file must cover a small sub-
-    rectangle of BOTH dimensions (that is what row-group skipping prunes
-    with). A plain x-sorted layout — the baseline a single-column sort
-    gives — has full-range y stats in every file, so any y-predicate scans
-    everything."""
-    import glob
-
-    import pyarrow.parquet as pq
-
-    from pandas_db_sdk_spark import scale
-
-    df = spark.range(10_000).select(
-        (F.col("id") % 100).alias("x"),
-        (F.floor(F.col("id") / 100)).alias("y"),
-    )
-
-    def avg_spans(path):
-        spans = {"x": [], "y": []}
-        for f in glob.glob(f"{path}/*.parquet"):
-            md = pq.ParquetFile(f).metadata
-            lo = {"x": None, "y": None}
-            hi = {"x": None, "y": None}
-            for rg in range(md.num_row_groups):
-                for c in range(md.num_columns):
-                    col = md.row_group(rg).column(c)
-                    name = col.path_in_schema
-                    st = col.statistics
-                    lo[name] = st.min if lo[name] is None else min(lo[name], st.min)
-                    hi[name] = st.max if hi[name] is None else max(hi[name], st.max)
-            for name in ("x", "y"):
-                spans[name].append(hi[name] - lo[name])
-        return {k: sum(v) / len(v) for k, v in spans.items()}
-
-    zpath = str(tmp_path / "z")
-    scale.zorder(df, ["x", "y"], n_partitions=16).write.parquet(zpath)
-    xpath = str(tmp_path / "plain_x")
-    df.repartitionByRange(16, "x").sortWithinPartitions("x").write.parquet(xpath)
-
-    zs = avg_spans(zpath)
-    xs = avg_spans(xpath)
-    # x-sorted baseline: x tight, y spans ~the whole 0..99 domain
-    assert xs["y"] > 90
-    # z-order: BOTH dimensions tight — each file covers ~a 25×25 cell
-    # (16 files over a 100×100 grid), stretching to ~2 cells where the
-    # range partitioner cuts mid-cell or the approx quantiles fuzz a
-    # boundary. Still ~half the domain at worst vs the baseline's full span.
-    assert zs["x"] < 55 and zs["y"] < 55, zs
 
 
 # ---------------------------------------------------------------- adversarial skew

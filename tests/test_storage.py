@@ -265,102 +265,6 @@ def test_delete_dataset_removes_data_and_listing(engine, spark, tmp_path):
         engine.load("doomed")
 
 
-def test_load_pandas_api_runs_pandas_idioms_distributed(engine, spark):
-    """The pandas-on-Spark exit: reference users keep their pandas code, the
-    engine keeps the execution distributed (same Catalyst plans)."""
-    from pyspark.sql import functions as F
-
-    df = spark.range(100).select(
-        F.col("id"),
-        (F.col("id") % 4).alias("grp"),
-        (F.col("id") * 1.5).alias("val"),
-    )
-    engine.save(df, "ps/demo")
-    psdf = engine.load_pandas("ps/demo")
-    # pandas idioms: mask filter, groupby-agg, sort
-    out = (
-        psdf[psdf["val"] > 30.0]
-        .groupby("grp")
-        .agg({"val": "sum", "id": "count"})
-        .sort_index()
-    )
-    expected = (
-        engine.load("ps/demo")
-        .filter(F.col("val") > 30.0)
-        .groupBy("grp")
-        .agg(F.sum("val").alias("val"), F.count("id").alias("id"))
-        .orderBy("grp")
-        .collect()
-    )
-    got = out.reset_index().to_pandas().sort_values("grp").reset_index(drop=True)
-    for i, row in enumerate(expected):
-        assert got["grp"][i] == row["grp"]
-        assert abs(got["val"][i] - row["val"]) < 1e-9
-        assert got["id"][i] == row["id"]
-
-
-def test_reference_layout_roundtrip(engine, spark, tmp_path):
-    """migrate.py: export a Date-keyed dataset as the reference's
-    `name/<col>/<value>/chunk_uuid.csv.gz` tree (README.md:189-198), then
-    import the tree back — same rows, layout byte-compatible (gzip CSV,
-    uuid chunk names, one dir per date)."""
-    import glob
-    import gzip
-    import os
-
-    from pyspark.sql import functions as F
-
-    from pandas_db_sdk_spark import migrate
-
-    df = spark.createDataFrame(
-        [("2024-01-01", 1, 100.0), ("2024-01-01", 2, 200.0), ("2024-01-02", 3, 300.0)],
-        "date string, id long, value double",
-    )
-    engine.save(df, "mig/out", columns_keys={"date": "Date"})
-    dest = str(tmp_path / "reftree")
-    out = migrate.export_reference_layout(engine, "mig/out", dest)
-    assert out["partitions"] == 2 and out["chunks"] >= 2
-    chunks = glob.glob(f"{dest}/date/*/chunk_*.csv.gz")
-    assert len(chunks) == out["chunks"]
-    with gzip.open(chunks[0], "rt") as f:  # gzip CSV with header (README.md:20)
-        assert "id" in f.readline()
-    assert {os.path.basename(os.path.dirname(c)) for c in chunks} == {
-        "2024-01-01",
-        "2024-01-02",
-    }
-    back = migrate.import_reference_layout(spark, dest)
-    assert back.count() == 3
-    got = sorted(
-        (r["date"], r["id"], r["value"])
-        for r in back.select(F.col("date").cast("string"), "id", "value").collect()
-    )
-    assert got == [("2024-01-01", 1, 100.0), ("2024-01-01", 2, 200.0), ("2024-01-02", 3, 300.0)]
-
-
-def test_reference_layout_import_external_tree(spark, tmp_path):
-    """Import a hand-built reference tree (as a reference user's bucket
-    would look) where chunks do NOT carry the partition column — the value
-    must be re-derived from the directory (README.md:191-198)."""
-    import gzip
-    import os
-
-    from pandas_db_sdk_spark import migrate
-
-    root = tmp_path / "extern" / "mydata"
-    for day, rows in [("2024-01-01", [(1, 10.5)]), ("2024-01-02", [(2, 20.5), (3, 30.5)])]:
-        d = root / "event_date" / day
-        os.makedirs(d)
-        with gzip.open(d / "chunk_abc.csv.gz", "wt") as f:
-            f.write("id,value\n")
-            for i, v in rows:
-                f.write(f"{i},{v}\n")
-    got = migrate.import_reference_layout(spark, str(root))
-    assert got.count() == 3
-    assert set(got.columns) == {"id", "value", "event_date"}
-    rows = sorted((r.event_date, r.id) for r in got.collect())
-    assert rows == [("2024-01-01", 1), ("2024-01-02", 2), ("2024-01-02", 3)]
-
-
 def test_load_is_read_committed(engine, spark, tmp_path):
     """Files from a save that died before its manifest commit must be
     invisible: load() returns only manifest-listed versions."""
@@ -457,16 +361,6 @@ def test_overwrite_tolerates_missing_version_dir(engine, spark):
     assert engine.load("ghost").count() == 9
 
 
-def test_append_after_compact_lands_in_relocated_dir(engine, spark):
-    """compact() moves the dataset directory; a later append must follow the
-    manifest path, not resurrect the deleted original dir."""
-    engine.save(spark.range(10), "cmp", external_key="v1")
-    engine.compact("cmp")
-    engine.save(spark.range(5), "cmp", external_key="v2")
-    assert engine.load("cmp").count() == 15
-    assert engine.load("cmp", external_key="v2").count() == 5
-
-
 def test_as_of_time_travel(engine, spark):
     """load(as_of=t) resolves the newest NOW-stamped version <= t."""
     engine.save(spark.range(10), "tt")          # clock → t1
@@ -521,9 +415,6 @@ def test_checks_one_pass_and_assert_gate(spark):
     ).collect()}
     assert out["v_positive"] == (2, 0.333333)  # -1 fails, NULL counts as violation
     assert out["id_set"] == (0, 1.0)
-    import pytest as _pytest
-    with _pytest.raises(ValueError, match="v_positive"):
-        checks.assert_valid(df, {"v_positive": F.col("v") > 0})
 
 
 def test_attach_checks_rides_the_write_job(engine, spark, tmp_path):
@@ -542,111 +433,6 @@ def test_attach_checks_rides_the_write_job(engine, spark, tmp_path):
 
 
 # ---------------------------------------------------------------- merge
-
-def test_merge_update_upserts_and_keeps_history(engine, spark, sample):
-    meta0 = engine.save(sample, "m/upd")
-    changes = spark.createDataFrame(
-        [(1, "2024-01-09", 999, 9.9, "updated_1"), (99, "2024-01-09", 99, 0.9, "new_99")],
-        sample.schema,
-    )
-    meta1 = engine.merge(changes, "m/upd", keys=["id"])
-    assert meta1["when_matched"] == "update"
-    latest = engine.load("m/upd", use_last=True)
-    assert latest.count() == 21  # 20 originals, 1 replaced, 1 inserted
-    byid = {r.id: r for r in latest.collect()}
-    assert byid[1].name == "updated_1" and byid[1].acct == 999
-    assert byid[99].name == "new_99"
-    assert byid[2].name == "name_2"  # untouched rows survive
-    # history: the pre-merge version is still loadable (time travel)
-    old = engine.load("m/upd", external_key=meta0["version"])
-    assert old.count() == 20
-    assert {r.id: r.name for r in old.collect()}[1] == "name_1"
-
-
-def test_merge_ignore_only_inserts_new_keys(engine, spark, sample):
-    engine.save(sample, "m/ign")
-    changes = spark.createDataFrame(
-        [(1, "x", 0, 0.0, "should_not_win"), (50, "y", 1, 1.0, "new_50")],
-        sample.schema,
-    )
-    engine.merge(changes, "m/ign", keys=["id"], when_matched="ignore")
-    byid = {r.id: r for r in engine.load("m/ign", use_last=True).collect()}
-    assert len(byid) == 21
-    assert byid[1].name == "name_1"  # existing row wins
-    assert byid[50].name == "new_50"
-
-
-def test_merge_delete_removes_matched_keys(engine, spark, sample):
-    engine.save(sample, "m/del")
-    tombstones = spark.createDataFrame([(1,), (2,), (404,)], "id long")
-    engine.merge(tombstones, "m/del", keys=["id"], when_matched="delete")
-    latest = engine.load("m/del", use_last=True)
-    ids = {r.id for r in latest.collect()}
-    assert ids == set(range(3, 21))  # 1 and 2 gone; unknown key 404 is a no-op
-
-
-def test_merge_validation(engine, spark, sample):
-    engine.save(sample, "m/val")
-    with pytest.raises(ValueError, match="when_matched"):
-        engine.merge(sample, "m/val", keys=["id"], when_matched="replace")
-    with pytest.raises(ValueError, match="at least one key"):
-        engine.merge(sample, "m/val", keys=[])
-    with pytest.raises(ValueError, match="not in source"):
-        engine.merge(sample.drop("id"), "m/val", keys=["id"])
-    with pytest.raises(DatasetNotFound):
-        engine.merge(sample, "m/absent", keys=["id"])
-
-
-def test_merge_inherits_partition_layout(engine, spark, sample):
-    """Merging into a Date-partitioned dataset keeps the layout: the new
-    version is partitioned the same way and loads identically."""
-    engine.save(sample, "m/part", columns_keys={"dt": "Date"})
-    changes = spark.createDataFrame(
-        [(1, "2024-01-01", 7, 7.7, "upd")], sample.schema
-    )
-    engine.merge(changes, "m/part", keys=["id"])
-    latest = engine.load("m/part", use_last=True)
-    assert latest.count() == 20
-    assert {r.id: r.name for r in latest.collect()}[1] == "upd"
-
-
-def test_compact_zorder_by_tightens_row_group_stats(engine, spark):
-    """compact(zorder_by=[x,y]): after compaction, successive output files /
-    row groups must cover compact ranges of BOTH clustered columns (footer
-    min/max), vs the unclustered compaction whose files span the domain."""
-    import glob
-
-    import pyarrow.parquet as pq
-
-    df = spark.range(8_000).select(
-        (F.col("id") % 89).alias("x"),
-        F.floor(F.col("id") / 89).alias("y"),
-        F.col("id").alias("payload"),
-    ).repartition(16)
-    engine.save(df, "zc/t")
-    engine.compact("zc/t", target_rows_per_file=1_000, zorder_by=["x", "y"])
-    # data intact after the clustered rewrite
-    got = engine.load("zc/t")
-    assert got.count() == 8_000
-    assert got.agg(F.sum("payload")).first()[0] == sum(range(8_000))
-
-    path = engine._dataset_entry("zc/t")["path"]
-    spans = {"x": [], "y": []}
-    for f in glob.glob(f"{path}/**/*.parquet", recursive=True):
-        md = pq.ParquetFile(f).metadata
-        for rg in range(md.num_row_groups):
-            st = {}
-            for c in range(md.num_columns):
-                col = md.row_group(rg).column(c)
-                if col.path_in_schema in spans:
-                    st[col.path_in_schema] = (col.statistics.min, col.statistics.max)
-            for k, (lo, hi) in st.items():
-                spans[k].append(hi - lo)
-    assert len(spans["x"]) >= 8  # target_rows_per_file split into many files
-    # average span well under the full domain on BOTH dimensions
-    assert sum(spans["x"]) / len(spans["x"]) < 60, spans["x"]
-    assert sum(spans["y"]) / len(spans["y"]) < 60, spans["y"]
-
 
 # ---------------------------------------------------------------- sql
 
@@ -708,63 +494,7 @@ def test_now_version_unique_under_frozen_clock(spark, tmp_path):
     assert eng.load("froz").count() == 12
 
 
-def test_merge_same_millisecond_no_duplication(spark, tmp_path):
-    """ADVICE r3: merge() versions with the clock; two merges landing in
-    the same ms must not double the table inside one version dir."""
-    frozen = lambda: 1_700_000_000_000
-    eng = DataFrameEngine(spark, str(tmp_path / "whm"), clock=frozen)
-    eng.save(spark.range(10).withColumnRenamed("id", "k"), "m/t")
-    src = spark.createDataFrame([(1,), (100,)], "k long")
-    eng.merge(src, "m/t", keys=["k"], keep_last=True)
-    eng.merge(src, "m/t", keys=["k"], keep_last=True)
-    got = eng.load("m/t", use_last=True)
-    assert got.count() == 11  # 10 originals + inserted k=100, each exactly once
-    assert got.filter(F.col("k") == 100).count() == 1
-
-
 # ---------------------------------------------------------------- DML quartet
-
-
-def test_delete_where_removes_matching_rows_keeps_history(engine, spark):
-    engine.save(spark.range(20).withColumn("flag", F.col("id") % 2), "dml/d")
-    engine.delete_where("dml/d", F.col("flag") == 1)
-    latest = engine.load("dml/d", use_last=True)
-    assert latest.count() == 10
-    assert latest.filter(F.col("flag") == 1).count() == 0
-    # history retained: the pre-delete version is still loadable
-    versions = engine.list_datasets()["dataframes"]["dml/d"]["versions"]
-    assert len(versions) == 2
-    assert engine.load("dml/d", external_key=versions[0]).count() == 20
-
-
-def test_delete_where_accepts_sql_string(engine, spark):
-    engine.save(spark.range(10), "dml/s")
-    engine.delete_where("dml/s", "id >= 7", keep_last=True)
-    got = engine.load("dml/s", use_last=True)
-    assert sorted(r.id for r in got.collect()) == list(range(7))
-    # keep_last pruned the old version
-    assert len(engine.list_datasets()["dataframes"]["dml/s"]["versions"]) == 1
-
-
-def test_update_where_sets_only_matching_rows(engine, spark):
-    engine.save(
-        spark.range(10).withColumn("v", F.lit(1.0)).withColumn("tag", F.lit("a")),
-        "dml/u",
-    )
-    engine.update_where(
-        "dml/u", "id >= 5", {"v": "v * 10", "tag": F.lit("big")}
-    )
-    got = {r.id: (r.v, r.tag) for r in engine.load("dml/u", use_last=True).collect()}
-    for i in range(5):
-        assert got[i] == (1.0, "a")
-    for i in range(5, 10):
-        assert got[i] == (10.0, "big")
-
-
-def test_update_where_unknown_column_raises(engine, spark):
-    engine.save(spark.range(5), "dml/bad")
-    with pytest.raises(ValueError, match="nope"):
-        engine.update_where("dml/bad", "id > 1", {"nope": F.lit(0)})
 
 
 def test_list_datasets_pagination(engine, spark):
@@ -924,96 +654,6 @@ def test_fsck_reports_and_repairs_orphans(spark, tmp_path):
     assert eng.fsck("ds")["ds"]["orphan_versions"] == []
 
 
-def test_diff_versions_reports_deltas_and_schema_evolution(spark):
-    """diff_versions: row/byte deltas from footer stats, schema add/remove
-    from per-version provenance, plan-hash change flag."""
-    import tempfile
-
-    from pyspark.sql import functions as F
-
-    from pandas_db_sdk_spark.engine import DataFrameEngine
-
-    ticks = iter(range(5000, 5010)).__next__
-    eng = DataFrameEngine(spark, tempfile.mkdtemp(), clock=ticks)
-    eng.save(spark.range(10).select(F.col("id").alias("v")), "ds")
-    eng.save(
-        spark.range(25).select(F.col("id").alias("v"), F.lit("x").alias("tag")),
-        "ds",
-    )
-    d = eng.diff_versions("ds", 5000, 5001)
-    assert d["row_delta"] == 15
-    assert d["columns_added"] == ["tag"] and d["columns_removed"] == []
-    assert d["byte_delta"] != 0 and d["plan_hash_changed"]
-
-    import pytest
-
-    with pytest.raises(ValueError, match="not committed"):
-        eng.diff_versions("ds", 5000, 9999)
-
-
-def test_scd2_history_intervals_and_deletions(spark):
-    """SCD2 flattening: unchanged runs collapse, changes open new
-    intervals, deletion closes valid_to, re-insert starts a new run,
-    current state has NULL valid_to."""
-    import tempfile
-
-    from pandas_db_sdk_spark.engine import DataFrameEngine
-
-    ticks = iter(range(7000, 7010)).__next__
-    eng = DataFrameEngine(spark, tempfile.mkdtemp(), clock=ticks)
-    mk = lambda rows: spark.createDataFrame(rows, "id long, val string")
-    eng.save(mk([(1, "a"), (2, "x")]), "dim")          # v7000
-    eng.save(mk([(1, "a"), (2, "y")]), "dim")          # v7001: 2 changes
-    eng.save(mk([(1, "a")]), "dim")                    # v7002: 2 deleted
-    eng.save(mk([(1, "b"), (2, "y")]), "dim")          # v7003: 1 changes, 2 back
-
-    out = {
-        (r.id, r.val): (r.valid_from, r.valid_to)
-        for r in eng.scd2_history("dim", ["id"]).collect()
-    }
-    assert out[(1, "a")] == ("7000", "7003")
-    assert out[(1, "b")] == ("7003", None)
-    assert out[(2, "x")] == ("7000", "7001")
-    assert (2, "y") in out  # two runs for (2,'y'): changed then re-inserted
-    # the re-inserted run is current
-    rows = [r for r in eng.scd2_history("dim", ["id"]).collect() if r.id == 2 and r.val == "y"]
-    tos = sorted((r.valid_from, r.valid_to) for r in rows)
-    assert tos == [("7001", "7002"), ("7003", None)]
-
-
-def test_scd2_history_rejects_duplicate_key_rows(spark):
-    """Two rows for one key inside one version are ambiguous SCD2 input —
-    loud error, never overlapping nondeterministic intervals."""
-    import tempfile
-
-    import pytest
-
-    from pandas_db_sdk_spark.engine import DataFrameEngine
-
-    eng = DataFrameEngine(spark, tempfile.mkdtemp(), clock=iter([8000]).__next__)
-    eng.save(
-        spark.createDataFrame([(1, "a"), (1, "b")], "id long, val string"), "dim"
-    )
-    with pytest.raises(ValueError, match="one row per"):
-        eng.scd2_history("dim", ["id"])
-
-
-def test_scd2_history_labelled_versions_use_commit_order(spark):
-    """'epoch-9' → 'epoch-10' labelled saves: SCD2 must follow COMMIT
-    order, not lexicographic label order."""
-    import tempfile
-
-    from pandas_db_sdk_spark.engine import DataFrameEngine
-
-    eng = DataFrameEngine(spark, tempfile.mkdtemp(), clock=iter([0]).__next__)
-    mk = lambda v: spark.createDataFrame([(1, v)], "id long, val string")
-    eng.save(mk("old"), "dim", external_key="epoch-9")
-    eng.save(mk("new"), "dim", external_key="epoch-10")
-    out = {r.val: (r.valid_from, r.valid_to) for r in eng.scd2_history("dim", ["id"]).collect()}
-    assert out["old"] == ("epoch-9", "epoch-10")
-    assert out["new"] == ("epoch-10", None)
-
-
 def test_save_expectations_gate_commit(spark, tmp_path):
     """save(expectations=...): counters ride the write job (observe — no
     extra scan); a violation deletes the staged version dir and raises
@@ -1034,31 +674,6 @@ def test_save_expectations_gate_commit(spark, tmp_path):
     eng.save(good, "gated", expectations={"v_not_null": "v IS NOT NULL", "v_even": "v % 2 = 0"})
     assert eng.load("gated").count() == 10
     assert eng.fsck("gated")["gated"]["orphan_versions"] == []
-
-
-def test_dataset_constraints_persist_and_gate_appends(spark, tmp_path):
-    """set_constraints: validated against existing data on ADD (Delta
-    semantics), persisted in the manifest, enforced on every later append,
-    surfaced by DESCRIBE, clearable."""
-    from pandas_db_sdk_spark.engine import DataFrameEngine, DataQualityError
-
-    eng = DataFrameEngine(spark, str(tmp_path / "wh"))
-    eng.save(spark.range(5).selectExpr("id", "id + 1 AS v"), "cst")
-    # adding a constraint the current data breaks must fail
-    with pytest.raises(ValueError, match="v_big"):
-        eng.set_constraints("cst", {"v_big": "v > 100"})
-    eng.set_constraints("cst", {"v_pos": "v > 0"})
-    assert eng.describe_dataset("cst")["constraints"] == {"v_pos": "v > 0"}
-    # violating append aborts; dataset still shows only the first version's rows
-    with pytest.raises(DataQualityError, match="v_pos"):
-        eng.save(spark.range(3).selectExpr("id", "id - 10 AS v"), "cst")
-    assert eng.load("cst").count() == 5
-    # clean append passes; clearing removes the gate
-    eng.save(spark.range(3).selectExpr("id + 100 AS id", "id + 50 AS v"), "cst")
-    assert eng.load("cst").count() == 8
-    eng.set_constraints("cst", None)
-    eng.save(spark.range(2).selectExpr("id", "id - 99 AS v"), "cst")
-    assert eng.load("cst").count() == 10
 
 
 def test_sql_version_pinning(spark, tmp_path):
@@ -1174,60 +789,6 @@ def test_fsck_orphan_age_uses_tree_mtime(spark, tmp_path):
     assert os.path.isdir(live) and not os.path.isdir(dead)
 
 
-def test_scd2_hash_canonicalizes_maps_and_negative_zero(spark, tmp_path):
-    """ADVICE r4 #4: semantically identical states must not open spurious
-    SCD2 runs — map values compare by CONTENT (physical key order differs
-    across versions) and -0.0 equals 0.0."""
-    from pandas_db_sdk_spark.engine import DataFrameEngine
-
-    eng = DataFrameEngine(spark, str(tmp_path / "wh"))
-    v1 = spark.sql(
-        "SELECT 1 AS k, map('a', 1, 'b', 2) AS attrs, CAST(0.0 AS DOUBLE) AS score"
-    )
-    v2 = spark.sql(
-        "SELECT 1 AS k, map('b', 2, 'a', 1) AS attrs, CAST(-0.0 AS DOUBLE) AS score"
-    )
-    eng.save(v1, "dim", external_key="t1")
-    eng.save(v2, "dim", external_key="t2")
-    hist = eng.scd2_history("dim", ["k"]).collect()
-    assert len(hist) == 1, hist  # one unbroken run, no spurious state change
-    assert hist[0].valid_from == "t1" and hist[0].valid_to is None
-
-
-def test_repartition_dataset_changes_layout_and_keeps_versions(spark, tmp_path):
-    """Partition evolution: an unpartitioned dataset rewrites under an ID
-    layout — appends under the new keys work, version pinning still
-    prunes, row content is unchanged, and the old tree is gone."""
-    import os
-
-    from pandas_db_sdk_spark.engine import DataFrameEngine
-
-    eng = DataFrameEngine(spark, str(tmp_path / "wh"), id_bucket_width=10)
-    df = spark.range(30).selectExpr("id AS uid", "id * 2 AS v")
-    eng.save(df, "evo", external_key="v1")
-    eng.save(df.limit(5), "evo", external_key="v2")
-    old_path = eng._dataset_entry("evo")["path"]
-
-    report = eng.repartition_dataset("evo", {"uid": "ID"})
-    assert report["columns_keys"] == {"uid": "ID"}
-    assert not os.path.isdir(old_path)
-    new_path = eng._dataset_entry("evo")["path"]
-    assert any(d.startswith("__p_uid=") for d in os.listdir(
-        os.path.join(new_path, "__version=v1")))
-    # history + content intact
-    assert eng.load("evo").count() == 35
-    assert eng.load("evo", external_key="v2").count() == 5
-    assert {r.v for r in eng.load("evo", external_key="v1").collect()} == {
-        i * 2 for i in range(30)
-    }
-    # appends now inherit the NEW layout without restating it
-    eng.save(spark.range(3).selectExpr("id + 100 AS uid", "id AS v"), "evo")
-    assert eng.load("evo").count() == 38
-    # a conflicting explicit layout still errors
-    with pytest.raises(ValueError, match="created with partition keys"):
-        eng.save(df, "evo", columns_keys={"v": "ID"})
-
-
 def test_overwrite_failed_expectations_keeps_committed_version(spark, tmp_path):
     """ADVICE r5 (medium): overwrite_version=True on an ALREADY-COMMITTED
     label must stage the rewrite aside — a failing expectations gate (or
@@ -1291,69 +852,6 @@ def test_fsck_reaps_stale_staging_dirs(spark, tmp_path):
     rep = eng.fsck("stg", repair=True, min_age_seconds=0.0)["stg"]
     assert not os.path.isdir(fake)
     assert eng.load("stg").count() == 5
-
-
-def test_load_pruned_skips_files_and_matches_filter(spark, tmp_path):
-    """Data-skipping sidecars: a range-partitioned write yields tight
-    per-file min/max, so load_pruned OPENS only intersecting files
-    (inputFiles strictly fewer) while returning exactly
-    load().filter(between)."""
-    from pandas_db_sdk_spark.engine import DataFrameEngine
-
-    eng = DataFrameEngine(spark, str(tmp_path / "wh"))
-    df = (
-        spark.range(10_000)
-        .withColumn("v", F.col("id") % 97)
-        .repartitionByRange(8, "id")  # contiguous id ranges per file
-    )
-    eng.save(df, "ds", external_key="v1")
-    full = eng.load("ds")
-    pruned = eng.load_pruned("ds", "id", lo=100, hi=200)
-    assert len(pruned.inputFiles()) < len(full.inputFiles())
-    want = sorted(r.id for r in full.filter(F.col("id").between(100, 200)).collect())
-    got = sorted(r.id for r in pruned.collect())
-    assert got == want
-    # files without stats are read, not silently skipped
-    import os
-
-    vdir = os.path.join(str(tmp_path / "wh"), "ds", "__data", "__version=v1")
-    os.remove(os.path.join(vdir, ".stats.json"))
-    again = eng.load_pruned("ds", "id", lo=100, hi=200)
-    assert len(again.inputFiles()) == len(full.inputFiles())
-    assert sorted(r.id for r in again.collect()) == want
-
-
-def test_load_pruned_version_pinning_and_empty_range(spark, tmp_path):
-    """Pruning composes with version pinning; a fully-out-of-range bound
-    yields an empty frame with the dataset schema."""
-    from pandas_db_sdk_spark.engine import DataFrameEngine
-
-    eng = DataFrameEngine(spark, str(tmp_path / "wh"))
-    eng.save(spark.range(100).withColumn("v", F.lit(1)), "ds", external_key="v1")
-    eng.save(
-        spark.range(100, 200).withColumn("v", F.lit(2)), "ds", external_key="v2"
-    )
-    only_v2 = eng.load_pruned("ds", "id", lo=0, hi=10_000, external_key="v2")
-    assert {r.v for r in only_v2.collect()} == {2}
-    empty = eng.load_pruned("ds", "id", lo=10_000, hi=20_000)
-    assert empty.count() == 0
-    assert set(empty.columns) == {"id", "v"}
-
-
-def test_compact_refreshes_skipping_sidecars(spark, tmp_path):
-    """After compact(zorder_by=...) the rewritten files carry fresh stats
-    and pruning still opens a strict subset."""
-    from pandas_db_sdk_spark.engine import DataFrameEngine
-
-    eng = DataFrameEngine(spark, str(tmp_path / "wh"))
-    df = spark.range(20_000).withColumn("v", (F.col("id") * 13) % 1000)
-    # many small files: repartition round-robin so ranges are LOOSE pre-compact
-    eng.save(df.repartition(16), "ds", external_key="v1")
-    eng.compact("ds", target_rows_per_file=2_000, zorder_by=["v"])
-    full = eng.load("ds")
-    pruned = eng.load_pruned("ds", "v", lo=0, hi=49)
-    assert len(pruned.inputFiles()) < len(full.inputFiles())
-    assert pruned.count() == full.filter(F.col("v").between(0, 49)).count()
 
 
 # ---------------------------------------------------------- incremental rollups
@@ -1530,39 +1028,6 @@ def test_rollup_validation_and_crash_semantics(engine, spark):
 # ------------------------------------------------------------------ saved views
 
 
-def test_saved_views_resolve_in_sql_and_persist(engine, spark, tmp_path):
-    from pandas_db_sdk_spark.engine import DataFrameEngine, DatasetNotFound
-
-    df = spark.createDataFrame(
-        [("a", 1.0), ("a", 3.0), ("b", 2.0)], "k string, v double"
-    )
-    engine.save(df, "facts")
-    engine.define_view("facts_by_k", "SELECT k, sum(v) AS s FROM facts GROUP BY k")
-    # views may stack on earlier views
-    engine.define_view("big_keys", "SELECT k FROM facts_by_k WHERE s > 2.5")
-    got = {r["k"]: r["s"] for r in engine.sql("SELECT * FROM facts_by_k").collect()}
-    assert got == {"a": 4.0, "b": 2.0}
-    assert [r["k"] for r in engine.sql("SELECT * FROM big_keys").collect()] == ["a"]
-    assert set(engine.list_views()) == {"facts_by_k", "big_keys"}
-    # a FRESH engine over the same warehouse sees the views and the
-    # current catalog state
-    eng2 = DataFrameEngine(spark, engine.warehouse)
-    engine.save(spark.createDataFrame([("b", 9.0)], "k string, v double"), "facts")
-    got2 = {r["k"]: r["s"] for r in eng2.sql("SELECT * FROM facts_by_k").collect()}
-    assert got2 == {"a": 4.0, "b": 11.0}
-    # guards
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError):
-        engine.define_view("not an identifier", "SELECT 1")
-    with _pytest.raises(ValueError):
-        engine.define_view("facts", "SELECT 1")  # collides with dataset view
-    with _pytest.raises(DatasetNotFound):
-        engine.drop_view("nope")
-    engine.drop_view("big_keys")
-    assert set(engine.list_views()) == {"facts_by_k"}
-
-
 def test_rollup_approx_distinct_is_mergeable_sketch_state(engine, spark):
     """approx_distinct rollup state is a datasketches HLL sketch: each
     refresh unions the NEW versions' sketches into the stored state, and
@@ -1667,91 +1132,6 @@ def test_rollup_migrate_with_no_source_versions_discards_stale_state(engine, spa
     assert spec["state_version"] is None and spec["processed"] == []
     with _pytest.raises(ValueError, match="never been refreshed"):
         engine.read_rollup("mignov_by_k")
-
-
-def test_load_incremental_cursor_semantics(engine, spark):
-    """Batch CDC: first call delivers everything + a cursor; the next call
-    with that cursor delivers only later appends; an up-to-date cursor
-    yields an empty frame; and the version filter prunes partitions (the
-    refresh_rollup economics, exposed)."""
-    v1 = spark.createDataFrame([(1, "a")], "id long, s string")
-    v2 = spark.createDataFrame([(2, "b"), (3, "c")], "id long, s string")
-    engine.save(v1, "inc", external_key="v1")
-
-    df, cur = engine.load_incremental("inc")
-    assert {(r["id"], r["__version"]) for r in df.collect()} == {(1, "v1")}
-    assert cur == ["v1"]
-
-    engine.save(v2, "inc", external_key="v2")
-    df2, cur2 = engine.load_incremental("inc", cursor=cur)
-    assert {(r["id"], r["__version"]) for r in df2.collect()} == {
-        (2, "v2"), (3, "v2"),
-    }
-    assert cur2 == ["v1", "v2"]
-
-    df3, cur3 = engine.load_incremental("inc", cursor=cur2)
-    assert df3.count() == 0 and cur3 == cur2
-
-    plan = df2._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters" in plan and "__version" in plan.split(
-        "PartitionFilters: [", 1
-    )[1].split("]", 1)[0]
-
-
-def test_load_incremental_consumer_reproduces_full_state(engine, spark):
-    """CDC certification parity (VERDICT r8 #5): a consumer driven by
-    load_incremental cursoring — draining sometimes one, sometimes two
-    versions per call, with retention retiring old versions mid-stream —
-    accumulates EXACTLY the union of every row ever saved, each
-    (row, version) delivered exactly once, and a final drained call
-    yields nothing."""
-    from collections import Counter
-
-    saved = []  # every (id, s, version) ever committed
-    delivered: Counter = Counter()
-
-    def save(rows, key):
-        df = spark.createDataFrame(rows, "id long, s string")
-        engine.save(df, "cdcpar", external_key=key)
-        saved.extend((i, s, key) for i, s in rows)
-
-    def drain(cursor):
-        df, cur = engine.load_incremental("cdcpar", cursor=cursor)
-        delivered.update(
-            (r["id"], r["s"], r["__version"]) for r in df.collect()
-        )
-        return cur
-
-    save([(1, "a"), (2, "b")], "v1")
-    cur = drain(None)                          # drains v1
-    save([(3, "c")], "v2")
-    save([(4, "d"), (5, "e")], "v3")
-    cur = drain(cur)                           # drains v2 + v3 together
-    engine.retain_last("cdcpar", 1)            # retires v1, v2 on disk
-    save([(6, "f")], "v4")
-    cur = drain(cur)                           # drains ONLY v4 — retention
-    #                                            must not re-deliver or drop
-    assert sorted(delivered) == sorted(saved)
-    assert set(delivered.values()) == {1}, "each (row, version) exactly once"
-    df, cur2 = engine.load_incremental("cdcpar", cursor=cur)
-    assert df.count() == 0 and cur2 == cur
-
-
-def test_load_incremental_version_filter_prunes_partitions(engine, spark):
-    """The cursor filter must reach the scan as a partition predicate —
-    at 100 TB the difference between append-proportional and a rescan."""
-    for key in ("v1", "v2", "v3"):
-        engine.save(
-            spark.createDataFrame([(1, key)], "id long, s string"),
-            "cdcprune",
-            external_key=key,
-        )
-    df, _ = engine.load_incremental("cdcprune", cursor=["v1", "v2"])
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    import re
-
-    m = re.search(r"PartitionFilters: \[([^\]]*)\]", plan)
-    assert m and "__version" in m.group(1), plan
 
 
 def test_branch_dataset_zero_copy_fork_and_isolation(spark, tmp_path):
@@ -1876,110 +1256,6 @@ def test_branch_dataset_retry_replaces_truncated_copy(spark, tmp_path):
                 os.path.getsize(os.path.join(root, fn))
 
 
-def test_merge_branch_fast_forward_and_conflicts(spark, tmp_path):
-    """r11 branching round-trip: branch -> diverge -> merge back.
-    Branch-only versions fast-forward into main (order + latest +
-    provenance), shared fork-point labels are recognized as the same
-    commit and skipped, and a label collision with DIFFERENT content
-    refuses with the conflict listed."""
-    import pytest as _pytest
-
-    from pandas_db_sdk_spark.engine import DataFrameEngine
-
-    eng = DataFrameEngine(spark, str(tmp_path / "wh"))
-    eng.save(spark.createDataFrame([(1,)], "id long"), "m", external_key="v1")
-    eng.branch_dataset("m", "f")
-    eng.save(spark.createDataFrame([(2,)], "id long"), "f", external_key="v2")
-    eng.save(spark.createDataFrame([(3,)], "id long"), "f", external_key="v3")
-
-    out = eng.merge_branch("f", "m")
-    assert out["merged_versions"] == ["v2", "v3"]
-    assert {r.id for r in eng.load("m").collect()} == {1, 2, 3}
-    assert eng.load("m", use_last=True).collect()[0].id == 3
-    # idempotent: nothing left to merge, shared labels are same-commit
-    assert eng.merge_branch("f", "m")["merged_versions"] == []
-
-    # conflicting label: same key, different content on both sides
-    eng.save(spark.createDataFrame([(8,)], "id long"), "m", external_key="vX")
-    eng.save(spark.createDataFrame([(9,)], "id long"), "f", external_key="vX")
-    with _pytest.raises(ValueError, match="vX"):
-        eng.merge_branch("f", "m")
-
-
-def test_merge_branch_retry_replaces_truncated_copy(spark, tmp_path):
-    """A merge that fell back to shutil.copy2 and crashed MID-COPY
-    (before its manifest commit) leaves truncated files in the target's
-    version dir; the retry must redo them, not keep the short files —
-    the same inode/size check branch_dataset makes."""
-    import os
-
-    from pandas_db_sdk_spark.engine import VERSION_COL, DataFrameEngine
-
-    eng = DataFrameEngine(spark, str(tmp_path / "wh"))
-    eng.save(spark.createDataFrame([(1, "a")], "id long, v string"),
-             "m4", external_key="v1")
-    eng.branch_dataset("m4", "f4")
-    eng.save(spark.createDataFrame([(2, "b"), (3, "c")], "id long, v string"),
-             "f4", external_key="v2")
-    src = eng._dataset_path("f4")
-    dst = eng._dataset_path("m4")
-    vdir = f"{VERSION_COL}=v2"
-    # simulate the crashed copy: every file exists at dst but truncated
-    for root, _dirs, files in os.walk(os.path.join(src, vdir)):
-        rel = os.path.relpath(root, src)
-        os.makedirs(os.path.join(dst, rel), exist_ok=True)
-        for fn in files:
-            with open(os.path.join(root, fn), "rb") as fh:
-                head = fh.read(max(1, os.path.getsize(fh.name) // 2))
-            with open(os.path.join(dst, rel, fn), "wb") as fh:
-                fh.write(head)
-
-    out = eng.merge_branch("f4", "m4")  # retry must heal the files
-    assert out["merged_versions"] == ["v2"]
-    assert {r.id for r in eng.load("m4", external_key="v2").collect()} == {2, 3}
-    for root, _dirs, files in os.walk(os.path.join(src, vdir)):
-        rel = os.path.relpath(root, src)
-        for fn in files:
-            assert os.path.getsize(os.path.join(dst, rel, fn)) == \
-                os.path.getsize(os.path.join(root, fn))
-
-
-def test_branch_of_constrained_dataset_keeps_constraints(spark, tmp_path):
-    """A branch inherits the source's constraints as the same name → rule
-    mapping: saves to the branch are gated by them, and DESCRIBE on the
-    branch reports them."""
-    from pandas_db_sdk_spark.engine import DataFrameEngine, DataQualityError
-
-    eng = DataFrameEngine(spark, str(tmp_path / "wh"))
-    eng.save(spark.range(3).selectExpr("id", "id + 1 AS v"), "cm",
-             external_key="v1")
-    eng.set_constraints("cm", {"v_pos": "v > 0"})
-    eng.branch_dataset("cm", "cb")
-
-    assert eng.describe_dataset("cb")["constraints"] == {"v_pos": "v > 0"}
-    with pytest.raises(DataQualityError, match="v_pos"):
-        eng.save(spark.range(2).selectExpr("id", "id - 10 AS v"), "cb")
-    eng.save(spark.range(2).selectExpr("id + 10 AS id", "id + 5 AS v"), "cb")
-    assert eng.load("cb").count() == 5
-    assert eng.load("cm").count() == 3
-
-
-def test_diff_branches_reports_divergence_and_conflicts(spark, tmp_path):
-    from pandas_db_sdk_spark.engine import DataFrameEngine
-
-    eng = DataFrameEngine(spark, str(tmp_path / "wh"))
-    eng.save(spark.createDataFrame([(1,)], "id long"), "m", external_key="v1")
-    eng.branch_dataset("m", "f")
-    eng.save(spark.createDataFrame([(2,)], "id long"), "f", external_key="v2")
-    eng.save(spark.createDataFrame([(8,)], "id long"), "m", external_key="vX")
-    eng.save(spark.createDataFrame([(9,)], "id long"), "f", external_key="vX")
-    d = eng.diff_branches("f", "m")
-    assert d["only_on_branch"] == ["v2"]
-    assert d["only_on_other"] == []
-    assert d["conflicting_labels"] == ["vX"]
-    assert d["branched_from"]["source"] == "m"
-
-
 def test_branch_card_lineage_and_retention_deltas(spark, tmp_path):
     """r12 branching trio queryability (VERDICT r11 #8): branch_card
     labels fork-inherited versions at_fork=1, branch-grown versions
@@ -2065,3 +1341,79 @@ def test_schema_history_tracks_adds_and_removes(spark, tmp_path):
     )
     row = eng.schema_history("pds").collect()[0]
     assert row.added == "b,id" and "__p_" not in row.added
+
+
+# ---------------------------------------------------------------- crash safety
+#
+# Retention and deletion commit the manifest first and remove files after
+# it: a crash at the manifest write must leave every committed row readable.
+
+
+def _crash_at(monkeypatch, attr):
+    def crash(*_args, **_kwargs):
+        raise RuntimeError(f"crash at {attr}")
+
+    monkeypatch.setattr(DataFrameEngine, attr, staticmethod(crash))
+
+
+def test_keep_last_crash_at_commit_keeps_before_state(spark, tmp_path, monkeypatch):
+    wh = str(tmp_path / "wh")
+    eng = DataFrameEngine(spark, wh)
+    eng.save(spark.range(3), "ds", external_key="v0")
+    eng.save(spark.range(5), "ds", external_key="v1")
+    with monkeypatch.context() as m:
+        _crash_at(m, "_write_manifest")
+        with pytest.raises(RuntimeError):
+            eng.save(spark.range(7), "ds", external_key="v2", keep_last=True)
+
+    fresh = DataFrameEngine(spark, wh)
+    assert fresh.load("ds").count() == 3 + 5
+    rep = fresh.fsck("ds", min_age_seconds=0)["ds"]
+    assert rep["orphan_versions"] == ["v2"] and rep["missing_versions"] == []
+    assert fresh.fsck("ds", repair=True, min_age_seconds=0)["ds"]["repaired"] == ["v2"]
+    assert fresh.fsck("ds")["ds"]["orphan_versions"] == []
+    assert fresh.load("ds").count() == 3 + 5
+
+
+def test_retain_last_crash_at_commit_or_reap(spark, tmp_path, monkeypatch):
+    wh = str(tmp_path / "wh")
+    eng = DataFrameEngine(spark, wh)
+    for i, n in enumerate((3, 5, 7)):
+        eng.save(spark.range(n), "ds", external_key=f"v{i}")
+    with monkeypatch.context() as m:
+        _crash_at(m, "_write_manifest")
+        with pytest.raises(RuntimeError):
+            eng.retain_last("ds", 1)
+
+    fresh = DataFrameEngine(spark, wh)
+    assert fresh.load("ds").count() == 3 + 5 + 7
+    rep = fresh.fsck("ds", min_age_seconds=0)["ds"]
+    assert rep["orphan_versions"] == [] and rep["missing_versions"] == []
+
+    # a crash after the commit leaves the after state plus unlisted orphans
+    with monkeypatch.context() as m:
+        _crash_at(m, "_reap")
+        with pytest.raises(RuntimeError):
+            fresh.retain_last("ds", 1)
+    fresh = DataFrameEngine(spark, wh)
+    assert fresh.load("ds").count() == 7
+    rep = fresh.fsck("ds", min_age_seconds=0)["ds"]
+    assert rep["orphan_versions"] == ["v0", "v1"] and rep["missing_versions"] == []
+    rep = fresh.fsck("ds", repair=True, min_age_seconds=0)["ds"]
+    assert rep["repaired"] == ["v0", "v1"]
+    assert fresh.load("ds").count() == 7
+
+
+def test_delete_dataset_crash_at_commit_keeps_dataset(spark, tmp_path, monkeypatch):
+    wh = str(tmp_path / "wh")
+    eng = DataFrameEngine(spark, wh)
+    eng.save(spark.range(4), "ds", external_key="v0")
+    with monkeypatch.context() as m:
+        _crash_at(m, "_write_manifest")
+        with pytest.raises(RuntimeError):
+            eng.delete_dataset("ds")
+
+    fresh = DataFrameEngine(spark, wh)
+    assert fresh.load("ds").count() == 4
+    rep = fresh.fsck(min_age_seconds=0)["ds"]
+    assert rep["orphan_versions"] == [] and rep["missing_versions"] == []

@@ -262,28 +262,6 @@ def test_length_percentile_filter_bounds(spark):
     assert vals[0] == 6 and vals[-1] == 95 and len(vals) == 90
 
 
-def test_strip_markup_removes_tags_scripts_entities(spark):
-    html = (
-        "<html><head><style>.x{color:red}</style>"
-        "<script>var a = '<div>';</script></head>"
-        "<body><h1>Title</h1><p>Hello &amp; welcome &lt;here&gt;!</p>"
-        "<!-- comment --><div class='x'>Bye&nbsp;now</div></body></html>"
-    )
-    row = text.strip_markup(
-        spark.createDataFrame([(1, html)], "doc_id long, text string")
-    ).first()
-    assert row.clean_text == "Title Hello & welcome <here>! Bye now"
-
-
-def test_dedup_lines_keeps_first_occurrence_in_order(spark):
-    doc = "nav bar\nreal content one\nnav bar\nreal content two\nfooter\nfooter"
-    row = text.dedup_lines_within_doc(
-        spark.createDataFrame([(1, doc)], "doc_id long, text string")
-    ).first()
-    assert row.n_lines == 6 and row.n_unique_lines == 4
-    assert row.deduped_text == "nav bar\nreal content one\nreal content two\nfooter"
-
-
 def test_token_pmi_known_collocation(spark):
     """A pair that always co-occurs scores PMI = ln(N / max(df)) above
     independent pairs; support below min_pair_count is cut."""
@@ -386,32 +364,6 @@ def test_bpe_merge_is_greedy_left_to_right(spark):
     assert got == [(1, "a", "a", "aa", 3), (2, "aa", "aa", "aaaa", 1)]
 
 
-def test_bpe_rewrite_multi_matches_sequential_for_disjoint_rules(spark):
-    """A symbol-disjoint batch applied in ONE multi-rule pass must equal
-    applying the same rules one-at-a-time (in any order) — including the
-    self-overlap scan semantics ([a,a,a] with (a,a) → [aa, a])."""
-    from pandas_db_sdk_spark import text
-
-    words = ["ababa", "cdcd", "aaab", "xcdy"]
-    rules = [("a", "b"), ("c", "d")]
-    df = spark.createDataFrame([(w,) for w in words], "w string")
-    syms = F.expr("filter(split(w, ''), x -> x != '')")
-    multi = df.select(
-        "w", text.bpe_rewrite_multi_expr(syms, rules).alias("out")
-    )
-    seq = syms
-    for a, b in rules:
-        seq = text.bpe_rewrite_expr(seq, a, b)
-    sequential = df.select("w", seq.alias("out"))
-    got_m = {r.w: r.out for r in multi.collect()}
-    got_s = {r.w: r.out for r in sequential.collect()}
-    assert got_m == got_s
-    assert got_m["ababa"] == ["ab", "ab", "a"]
-    assert got_m["cdcd"] == ["cd", "cd"]
-    assert got_m["aaab"] == ["a", "a", "ab"]
-    assert got_m["xcdy"] == ["x", "cd", "y"]
-
-
 def test_bpe_merges_batched_first_rule_and_invariants(spark):
     """Batched learning agrees with sequential BPE at rank 1 (both take
     the global argmax), batches are symbol-disjoint, within-round counts
@@ -453,48 +405,6 @@ def test_bpe_merges_batched_first_rule_and_invariants(spark):
     # round chaining: mass_after of round N is mass_before of round N+1
     for (r1, *_, a1), (r2, *rest) in zip(rws, rws[1:]):
         assert a1 == rest[-2]
-
-
-def test_bpe_rewrite_sql_matches_column_path(spark):
-    """The r14 optimization builds each round's rewrite as ONE SQL string
-    (text._bpe_rewrite_sql / _bpe_rewrite_multi_sql) instead of a py4j
-    Column tree; this pins the two construction paths to identical
-    results — including symbols that stress the literal escaping (quotes,
-    backslash, the chr(31) map separator, newlines, astral-plane chars)."""
-    from pandas_db_sdk_spark import text
-
-    nasty = ["a'b", 'a"b', "a\\b", "\x1f", "\u00e9", "\U0001d518", "a\nb"]
-    words = ["ababa", "aaab"] + [x + y for x in nasty for y in nasty[:3]]
-    df = spark.createDataFrame([(w,) for w in words], "w string")
-    syms = F.expr("filter(split(w, ''), x -> x != '')")
-    for a, b in [("a", "b"), ("'", '"'), ("\x1f", "\\")]:
-        col_form = df.select(
-            "w", text.bpe_rewrite_expr(syms, a, b).alias("out")
-        )
-        sql_form = df.select(
-            "w",
-            F.expr(
-                text._bpe_rewrite_sql("filter(split(w, ''), x -> x != '')", a, b)
-            ).alias("out"),
-        )
-        assert {r.w: r.out for r in col_form.collect()} == {
-            r.w: r.out for r in sql_form.collect()
-        }
-    rules = [("a", "b"), ("'", '"')]
-    col_multi = df.select(
-        "w", text.bpe_rewrite_multi_expr(syms, rules).alias("out")
-    )
-    sql_multi = df.select(
-        "w",
-        F.expr(
-            text._bpe_rewrite_multi_sql(
-                "filter(split(w, ''), x -> x != '')", rules
-            )
-        ).alias("out"),
-    )
-    assert {r.w: r.out for r in col_multi.collect()} == {
-        r.w: r.out for r in sql_multi.collect()
-    }
 
 
 def test_bpe_merges_batched_exhausts_gracefully(spark):

@@ -150,31 +150,6 @@ def test_rolling_zscore_constant_window_yields_null_not_nan(spark):
     assert (~tail["is_anomaly"]).all()
 
 
-def test_ema_batch_matches_pandas_ewm(spark):
-    """The engine's EMA recurrence (streaming stateful + its batch twin)
-    must equal pandas ``ewm(alpha, adjust=False).mean()`` — pinning the
-    pandas-parity semantics, not just stream/batch self-consistency."""
-    import pandas as pd
-    from pyspark.sql import functions as F
-
-    from pandas_db_sdk_spark.streaming.stateful import EMA_ALPHA, ema_stateful
-
-    df = spark.range(200).select(
-        F.col("id").alias("event_id"),
-        (F.col("id") % 4).alias("user_id"),
-        (F.col("id") % 17).cast("double").alias("value"),
-    )
-    got = ema_stateful(df).toPandas().set_index("event_id")["ema"]
-    pdf = df.toPandas().sort_values("event_id")
-    want = pd.Series(
-        pdf.groupby("user_id")["value"]
-        .transform(lambda s: s.ewm(alpha=EMA_ALPHA, adjust=False).mean())
-        .values,
-        index=pdf["event_id"].values,
-    )
-    assert (got - want).abs().max() < 1e-9
-
-
 def test_overlapping_interval_pairs_matches_bruteforce(spark):
     """Sweep-line pair count == the O(n²) definition on a hand-checkable
     frame: closed intervals, touching endpoints overlap, groups
