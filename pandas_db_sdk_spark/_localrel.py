@@ -104,21 +104,14 @@ def sql_ident(name: str) -> str:
     return "`" + str(name).replace("`", "``") + "`"
 
 
-# applicationIds whose parser conf has been checked this process — the
-# check is one py4j conf read; caching keeps per-query-build cost at zero
-_UNICODE_LITERALS_OK: set = set()
-
-
 def require_unicode_literals(spark: SparkSession) -> None:
     """Fail loudly when ``spark.sql.parser.escapedStringLiterals`` is true
     (the legacy parser mode): :func:`sql_literal` writes every code unit
     as a ``\\uXXXX`` escape, which that mode parses as RAW backslash text
     — wrong merge rules / labels with no error (ADVICE r14).  Call sites
     that hand ``sql_literal`` output to ``F.expr``/``selectExpr`` invoke
-    this first."""
-    app = spark.sparkContext.applicationId
-    if app in _UNICODE_LITERALS_OK:
-        return
+    this first. The conf is runtime-settable, so it is read on every call
+    (one py4j conf read), never cached."""
     try:
         v = spark.conf.get("spark.sql.parser.escapedStringLiterals", "false")
     except Exception:
@@ -129,7 +122,6 @@ def require_unicode_literals(spark: SparkSession) -> None:
             "mode) silently mis-parses the \\uXXXX string literals this "
             "engine builds; unset it or set it to false"
         )
-    _UNICODE_LITERALS_OK.add(app)
 
 
 def sql_literal(s: str) -> str:

@@ -206,15 +206,14 @@ def minhash_lsh_pairs(
     bands, so a generous cap (10³–10⁴) loses ~nothing. Default None keeps
     exact recall for the oracle corpus.
     """
-    # Small inputs often arrive as one parquet split; signature work is
-    # CPU-bound, so spread it across the cluster explicitly — but only when
-    # actually needed: re-keying an already-parallel input is a wasted
-    # corpus shuffle.
-    par = df.sparkSession.sparkContext.defaultParallelism
-    # JVM-side partition count: metadata only (no job, no Python RDD
-    # wrapper + serializer chain that df.rdd would build on this hot path)
-    n_parts = df._jdf.rdd().getNumPartitions()
-    spread = df if n_parts >= par else df.repartition(par, id_col)
+    # Signature work is CPU-bound and small inputs arrive in one partition
+    # (one parquet split, or a shuffle AQE coalesced), so spread the input
+    # by id. Always: under AQE a frame's partition count is known only after
+    # its shuffles run, so asking for it launches a job at plan time. The
+    # signature aggregate groups by the same id, so it plans no second
+    # exchange: the spread replaces its shuffle (text rows instead of
+    # partial signatures) rather than adding one.
+    spread = df.repartition(df.sparkSession.sparkContext.defaultParallelism, id_col)
     # The signature aggregate feeds three plan branches (band-join left and
     # right, estimate join); Spark does not reliably reuse the exchange
     # across self-join re-aliasing, so materialize it once. MEMORY_AND_DISK:

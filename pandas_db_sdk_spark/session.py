@@ -60,6 +60,12 @@ def get_spark(app_name: str = "pandas-db-sdk-spark") -> SparkSession:
     memory knob (``SPARK_DRIVER_MEM``, else ``_driver_memory`` of this
     host's RAM). On a real cluster the same code runs unchanged — nothing
     here assumes single-node except the master URL.
+
+    ``spark.sql.codegen.cache.maxEntries`` is 1000 (Spark's default: 100).
+    One ``prepare_corpus`` plan generates ~140 classes, so under the
+    default LRU each new shard would recompile ~125 of them; at 1000 a warm
+    shard compiles 0–26. The conf is static: it holds only when this call
+    starts the JVM, and a session the caller built keeps its own value.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     builder = (
@@ -73,6 +79,8 @@ def get_spark(app_name: str = "pandas-db-sdk-spark") -> SparkSession:
         )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.files.maxPartitionBytes", "134217728")
+        # static, so not in RUNTIME_CONFS; sized in the docstring
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
     )
     for k, v in RUNTIME_CONFS.items():
         builder = builder.config(k, v)

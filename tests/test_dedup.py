@@ -153,6 +153,23 @@ def test_dedup_corpus_keeps_one_per_cluster(spark, docs):
     assert {i for i in range(10, 40)} <= kept  # uniques untouched
 
 
+def test_minhash_on_exact_dedup_output_builds_without_a_job(spark, docs):
+    """Building the pipeline's dedup stages is planning only: asking a
+    shuffled (AQE) input for its partition count would run its shuffle
+    stages while the DataFrame is still being built."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    before = set(tracker.getJobIdsForGroup("minhash-plan"))
+    sc.setJobGroup("minhash-plan", "plan-time job pin")
+    try:
+        dedup.minhash_lsh_pairs(
+            dedup.exact_dedup(docs, "text", "doc_id"), "doc_id", "text", jaccard_threshold=0.9
+        )
+    finally:
+        sc.setJobGroup(None, None)
+    assert set(tracker.getJobIdsForGroup("minhash-plan")) - before == set()
+
+
 def test_exact_dups_always_collide_simhash(docs):
     pairs = dedup.simhash_near_pairs(docs, "doc_id", "text", max_hamming=0)
     got = {(r.id_a, r.id_b) for r in pairs.collect()}

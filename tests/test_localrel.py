@@ -52,17 +52,28 @@ def test_sql_literal_roundtrip(spark):
 
 
 def test_require_unicode_literals_rejects_legacy_conf(spark):
-    from pandas_db_sdk_spark import _localrel
-
     key = "spark.sql.parser.escapedStringLiterals"
     old = spark.conf.get(key, "false")
-    app = spark.sparkContext.applicationId
     try:
         spark.conf.set(key, "true")
-        _localrel._UNICODE_LITERALS_OK.discard(app)
         with pytest.raises(ValueError, match="escapedStringLiterals"):
             require_unicode_literals(spark)
     finally:
         spark.conf.set(key, old)
-        _localrel._UNICODE_LITERALS_OK.discard(app)
     require_unicode_literals(spark)  # fine again under the default conf
+
+
+def test_require_unicode_literals_sees_conf_flipped_after_approval(spark):
+    """An approval under the default conf must not outlive it: flipping the
+    parser to legacy mode later in the same application is caught on the
+    next call instead of silently mis-parsing every literal."""
+    key = "spark.sql.parser.escapedStringLiterals"
+    old = spark.conf.get(key, "false")
+    spark.conf.set(key, "false")
+    try:
+        require_unicode_literals(spark)
+        spark.conf.set(key, "true")
+        with pytest.raises(ValueError, match="escapedStringLiterals"):
+            require_unicode_literals(spark)
+    finally:
+        spark.conf.set(key, old)

@@ -75,7 +75,13 @@ def prefetched(spark, request):
     per-test and UNCHANGED; a prefetch exception is re-computed serially
     inside the owning test, so failure attribution and strictness are
     identical to the serial sweep. Only the names pytest actually
-    collected are computed, so ``-k``-subset iteration stays fast."""
+    collected are computed, so ``-k``-subset iteration stays fast.
+
+    Temp views are session-global, so two queries registering the same
+    view name would race on the 8 threads: every DataFrame temp-view
+    registration is recorded per query, and a name registered by two
+    queries fails the prefetch."""
+    import threading
     from concurrent.futures import ThreadPoolExecutor
 
     wanted = set()
@@ -85,25 +91,43 @@ def prefetched(spark, request):
             wanted.add(callspec.params["name"])
     wanted &= set(QUERIES)
 
+    running = threading.local()
+    views: dict[str, set[str]] = {}  # temp-view name → queries registering it
+    views_lock = threading.Lock()
+
     def compute(name):
+        running.name = name
         try:
             return QUERIES[name](spark, SF_ORACLE).toPandas()
         except Exception as exc:  # pragma: no cover - retried in-test
             return exc
 
     def compute_rows_only(name):
+        running.name = name
         try:
             df = QUERIES[name](spark, SF_ORACLE)
             return (len(df.columns), df.count())
         except Exception as exc:  # pragma: no cover - retried in-test
             return exc
 
-    with ThreadPoolExecutor(max_workers=8) as pool:
-        futs = {
-            n: pool.submit(compute if n in ORACLES else compute_rows_only, n)
-            for n in sorted(wanted)
-        }
-        return {n: f.result() for n, f in futs.items()}
+    frame_type = type(spark.range(1))
+    with pytest.MonkeyPatch.context() as mp:
+        for attr in ("createTempView", "createOrReplaceTempView"):
+            def recording(self, view, _register=getattr(frame_type, attr)):
+                with views_lock:
+                    views.setdefault(view, set()).add(running.name)
+                return _register(self, view)
+
+            mp.setattr(frame_type, attr, recording)
+        with ThreadPoolExecutor(max_workers=8) as pool:
+            futs = {
+                n: pool.submit(compute if n in ORACLES else compute_rows_only, n)
+                for n in sorted(wanted)
+            }
+            out = {n: f.result() for n, f in futs.items()}
+    shared = {v: sorted(qs) for v, qs in views.items() if len(qs) > 1}
+    assert not shared, f"queries share temp-view names under concurrent prefetch: {shared}"
+    return out
 
 
 @pytest.mark.parametrize("name", sorted(ORACLES))
