@@ -88,6 +88,80 @@ def _wav_pcm16(data: bytes, sr: int, ch: int = 1) -> bytes:
     return b"RIFF" + struct.pack("<I", len(body)) + body
 
 
+def _wav_chunks(b: bytes):
+    """The one RIFF/WAVE chunk walk: ``(codec, channels, sample_rate,
+    bits, data_offset, data_len)`` from the ``fmt `` and ``data``
+    chunks, or None when ``b`` is not RIFF/WAVE, lacks either chunk, or
+    its ``fmt `` chunk is cut short. ``data_len`` is the DECLARED length;
+    the data chunk may run past the end of ``b`` (readers of samples
+    check that). When a file holds several ``fmt `` (or ``data``) chunks,
+    the last one wins. ``fmt `` chunks shorter than 16 bytes are skipped.
+    Never raises."""
+    import struct
+
+    if b[:4] != b"RIFF" or b[8:12] != b"WAVE":
+        return None
+    pos, fmt, data = 12, None, None
+    while pos + 8 <= len(b):
+        cid = b[pos : pos + 4]
+        (clen,) = struct.unpack_from("<I", b, pos + 4)
+        if cid == b"fmt " and clen >= 16:
+            if pos + 24 > len(b):
+                return None
+            fmt = struct.unpack_from("<HHIIHH", b, pos + 8)
+        elif cid == b"data":
+            data = (pos + 8, clen)
+        pos += 8 + clen + (clen & 1)
+    if fmt is None or data is None:
+        return None
+    codec, ch, sr, _, _, bits = fmt
+    return codec, ch, sr, bits, data[0], data[1]
+
+
+def _wav_pcm16_mono(b: bytes):
+    """``(sample_rate, int16 samples)`` of a PCM, mono, 16-bit WAV whose
+    data chunk is complete (and a whole number of samples), else None —
+    the sample reader every audio operator uses."""
+    import numpy as np
+
+    got = _wav_chunks(b)
+    if got is None:
+        return None
+    codec, ch, sr, bits, off, n = got
+    if codec != 1 or ch != 1 or bits != 16 or off + n > len(b) or n % 2:
+        return None
+    return sr, np.frombuffer(b, dtype="<i2", count=n // 2, offset=off)
+
+
+def _check_dft_frame_len(op: str, frame_len: int) -> None:
+    """Exact-int64 bound of the integer DFT: |re| <= 32768 (int16) ·
+    10^6 (basis scale) · frame_len must stay under 2^63 — beyond it
+    numpy wraps silently."""
+    if frame_len > (2**63 - 1) // (32768 * 10**6):
+        raise ValueError(
+            f"{op}: frame_len > 281474 overflows the exact-int64 DFT "
+            "accumulator (|re| <= 32768 * 1e6 * frame_len); use a shorter "
+            "window"
+        )
+
+
+def _int_dft_basis(n_bins: int, frame_len: int):
+    """The integer Fourier basis (cos_i, sin_i), each (n_bins, frame_len)
+    int64: Ck[t] = round_half_away(cos(2·pi·k·t/frame_len) · 10^6)
+    (resp. sin), so a frame's re/im at bins 0..n_bins-1 are exact int64
+    matmuls an oracle replays."""
+    import numpy as np
+
+    k = np.arange(n_bins).reshape(-1, 1).astype(np.float64)
+    t = np.arange(frame_len).reshape(1, -1).astype(np.float64)
+    ang = 2 * np.pi * k * t / frame_len
+    cos_t = np.cos(ang) * 1e6
+    sin_t = np.sin(ang) * 1e6
+    cos_i = (np.sign(cos_t) * np.floor(np.abs(cos_t) + 0.5)).astype(np.int64)
+    sin_i = (np.sign(sin_t) * np.floor(np.abs(sin_t) + 0.5)).astype(np.int64)
+    return cos_i, sin_i
+
+
 def synth_media_payload(
     df: DataFrame, id_col: str = "doc_id", kinds: int = 3
 ) -> DataFrame:
@@ -203,8 +277,13 @@ def parse_media_headers(
             if b[:8] == b"\x89PNG\r\n\x1a\n" and len(b) >= 33:
                 (ln,) = struct.unpack(">I", b[8:12])
                 chunk = b[12 : 16 + ln]
-                (crc,) = struct.unpack(">I", b[16 + ln : 20 + ln])
-                if chunk[:4] == b"IHDR" and zlib.crc32(chunk) & 0xFFFFFFFF == crc:
+                crc = b[16 + ln : 20 + ln]
+                if (
+                    len(crc) == 4
+                    and chunk[:4] == b"IHDR"
+                    and zlib.crc32(chunk) & 0xFFFFFFFF
+                    == struct.unpack(">I", crc)[0]
+                ):
                     w, h, depth = struct.unpack(">IIB", chunk[4:13])
                     return ("png", w, h, depth, None, None, None)
             # JPEG: the first start-of-frame (SOF0/1/2) header
@@ -213,18 +292,12 @@ def parse_media_headers(
                     prec = b[pos + 4]
                     h, w = struct.unpack(">HH", b[pos + 5 : pos + 9])
                     return ("jpeg", w, h, prec, None, None, None)
-            if b[:4] == b"RIFF" and b[8:12] == b"WAVE":
-                pos, sr, ch, bits, data_len = 12, None, None, None, None
-                while pos + 8 <= len(b):
-                    cid, clen = b[pos : pos + 4], struct.unpack("<I", b[pos + 4 : pos + 8])[0]
-                    if cid == b"fmt " and clen >= 16:
-                        _, ch, sr, _, _, bits = struct.unpack(
-                            "<HHIIHH", b[pos + 8 : pos + 24]
-                        )
-                    elif cid == b"data":
-                        data_len = clen
-                    pos += 8 + clen + (clen & 1)
-                if sr and ch and bits and data_len is not None:
+            wav = _wav_chunks(b)
+            if wav is not None:
+                # header only: any codec; duration from the declared
+                # data length, so a cut-short data chunk still reports
+                _, ch, sr, bits, _, data_len = wav
+                if sr and ch and bits >= 8:
                     dur = data_len / (sr * ch * (bits // 8))
                     return ("wav", None, None, None, sr, ch, round(dur, 6))
             if len(b) >= 12 and b[4:8] == b"ftyp":
@@ -247,8 +320,9 @@ def parse_media_headers(
                     kids = walk(*top[b"moov"])
                     ts = dur = w = h = None
                     if b"mvhd" in kids:
-                        lo, _ = kids[b"mvhd"]
-                        ts, dur = struct.unpack(">II", b[lo + 12 : lo + 20])
+                        lo, hi2 = kids[b"mvhd"]
+                        if lo + 20 <= hi2:
+                            ts, dur = struct.unpack(">II", b[lo + 12 : lo + 20])
                     if b"trak" in kids:
                         tk = walk(*kids[b"trak"])
                         if b"tkhd" in tk:
@@ -2170,36 +2244,15 @@ def vad_segments(
         )
 
     def segs(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import struct
-
         import numpy as np
-
-        def parse(b: bytes):
-            if b[:4] != b"RIFF" or b[8:12] != b"WAVE":
-                return None
-            pos, ch, bits, codec, data = 12, None, None, None, None
-            while pos + 8 <= len(b):
-                cid = b[pos : pos + 4]
-                (clen,) = struct.unpack("<I", b[pos + 4 : pos + 8])
-                if cid == b"fmt " and clen >= 16:
-                    codec, ch, _, _, _, bits = struct.unpack(
-                        "<HHIIHH", b[pos + 8 : pos + 24]
-                    )
-                elif cid == b"data":
-                    data = b[pos + 8 : pos + 8 + clen]
-                    if len(data) != clen:
-                        return None
-                pos += 8 + clen + (clen & 1)
-            if codec != 1 or ch != 1 or bits != 16 or data is None:
-                return None
-            return np.frombuffer(data, dtype="<i2").astype(np.int64)
 
         for pdf in batches:
             rows = []
             for i, buf in zip(pdf[id_col], pdf[payload_col]):
-                s = parse(bytes(buf))
-                if s is None or s.size < frame_len:
+                got = _wav_pcm16_mono(bytes(buf))
+                if got is None or got[1].size < frame_len:
                     continue
+                s = got[1].astype(np.int64)
                 nf = s.size // frame_len
                 e = (
                     (s[: nf * frame_len] ** 2)
@@ -2302,45 +2355,16 @@ def resample_pcm_stats(
     order-sensitive checksum a mis-phased resampler cannot fake."""
 
     def stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import struct
-
         import numpy as np
-
-        def parse(b: bytes):
-            if b[:4] != b"RIFF" or b[8:12] != b"WAVE":
-                return None
-            pos, sr, ch, bits, data = 12, None, None, None, None
-            while pos + 8 <= len(b):
-                cid = b[pos : pos + 4]
-                (clen,) = struct.unpack("<I", b[pos + 4 : pos + 8])
-                if cid == b"fmt " and clen >= 16:
-                    codec, ch, sr, _, _, bits = struct.unpack(
-                        "<HHIIHH", b[pos + 8 : pos + 24]
-                    )
-                    if codec != 1:
-                        return None
-                elif cid == b"data":
-                    data = b[pos + 8 : pos + 8 + clen]
-                    if len(data) != clen:
-                        return None
-                pos += 8 + clen + (clen & 1)
-            if sr is None or data is None or ch != 1 or bits != 16:
-                return None
-            return sr, np.frombuffer(data, dtype="<i2").astype(np.int64)
 
         for pdf in batches:
             rows = []
             for i, buf in zip(pdf[id_col], pdf[payload_col]):
-                try:
-                    got = parse(bytes(buf))
-                except Exception:
-                    got = None
-                if got is None:
+                got = _wav_pcm16_mono(bytes(buf))
+                if got is None or got[1].size < 2:
                     continue
-                sr, s = got
+                sr, s = got[0], got[1].astype(np.int64)
                 n = s.size
-                if n < 2:
-                    continue
                 j, ys = _resample_scaled(s, up, down)
                 n_out = j.size
                 rows.append(
@@ -2430,48 +2454,19 @@ def resample_fir_stats(
         taps = sinc_taps(up, down)
 
     def stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import struct
-
         import numpy as np
 
         C = np.asarray(taps, dtype=np.int64)  # (up, 2*half)
         half = C.shape[1] // 2
 
-        def parse(b: bytes):
-            if b[:4] != b"RIFF" or b[8:12] != b"WAVE":
-                return None
-            pos, sr, ch, bits, data = 12, None, None, None, None
-            while pos + 8 <= len(b):
-                cid = b[pos : pos + 4]
-                (clen,) = struct.unpack("<I", b[pos + 4 : pos + 8])
-                if cid == b"fmt " and clen >= 16:
-                    codec, ch, sr, _, _, bits = struct.unpack(
-                        "<HHIIHH", b[pos + 8 : pos + 24]
-                    )
-                    if codec != 1:
-                        return None
-                elif cid == b"data":
-                    data = b[pos + 8 : pos + 8 + clen]
-                    if len(data) != clen:
-                        return None
-                pos += 8 + clen + (clen & 1)
-            if sr is None or data is None or ch != 1 or bits != 16:
-                return None
-            return sr, np.frombuffer(data, dtype="<i2").astype(np.int64)
-
         for pdf in batches:
             rows = []
             for i, buf in zip(pdf[id_col], pdf[payload_col]):
-                try:
-                    got = parse(bytes(buf))
-                except Exception:
-                    got = None
-                if got is None:
+                got = _wav_pcm16_mono(bytes(buf))
+                if got is None or got[1].size < 2:
                     continue
-                sr, s = got
+                sr, s = got[0], got[1].astype(np.int64)
                 n = s.size
-                if n < 2:
-                    continue
                 n_out = ((n - 1) * up) // down + 1
                 j = np.arange(n_out, dtype=np.int64)
                 num = j * down
@@ -3551,48 +3546,12 @@ def stft_frame_features(
             "2 <= n_bins <= frame_len (bin 0 is DC; the peak needs a "
             "non-DC bin to point at)"
         )
-    # exact-int64 bound: |re| <= 32768 (int16) * 1e6 (basis scale) *
-    # frame_len must stay under 2^63 — beyond it numpy wraps silently
-    if frame_len > (2**63 - 1) // (32768 * 10**6):
-        raise ValueError(
-            "stft_frame_features: frame_len > 281474 overflows the "
-            "exact-int64 accumulator (|re| <= 32768 * 1e6 * frame_len); "
-            "use a shorter window"
-        )
+    _check_dft_frame_len("stft_frame_features", frame_len)
 
     def feats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import struct
-
         import numpy as np
 
-        k = np.arange(n_bins).reshape(-1, 1).astype(np.float64)
-        t = np.arange(frame_len).reshape(1, -1).astype(np.float64)
-        ang = 2 * np.pi * k * t / frame_len
-        cos_t = np.cos(ang) * 1e6
-        sin_t = np.sin(ang) * 1e6
-        cos_i = (np.sign(cos_t) * np.floor(np.abs(cos_t) + 0.5)).astype(np.int64)
-        sin_i = (np.sign(sin_t) * np.floor(np.abs(sin_t) + 0.5)).astype(np.int64)
-
-        def parse(b: bytes):
-            if b[:4] != b"RIFF" or b[8:12] != b"WAVE":
-                return None
-            pos, ch, bits, codec, data = 12, None, None, None, None
-            while pos + 8 <= len(b):
-                cid = b[pos : pos + 4]
-                (clen,) = struct.unpack("<I", b[pos + 4 : pos + 8])
-                if cid == b"fmt " and clen >= 16:
-                    codec, ch, _, _, _, bits = struct.unpack(
-                        "<HHIIHH", b[pos + 8 : pos + 24]
-                    )
-                elif cid == b"data":
-                    data = b[pos + 8 : pos + 8 + clen]
-                    if len(data) != clen:
-                        return None
-                pos += 8 + clen + (clen & 1)
-            if codec != 1 or ch != 1 or bits != 16 or data is None:
-                return None
-            return np.frombuffer(data, dtype="<i2").astype(np.int64)
-
+        cos_i, sin_i = _int_dft_basis(n_bins, frame_len)
         bin_idx = np.arange(n_bins, dtype=np.int32)
         for pdf in batches:
             # pass 1: parse + frame every file; the DFT and the exact
@@ -3602,9 +3561,10 @@ def stft_frame_features(
             metas: list = []
             wins: list = []
             for i, buf in zip(pdf[id_col], pdf[payload_col]):
-                s = parse(bytes(buf))
-                if s is None or s.size < frame_len:
+                got = _wav_pcm16_mono(bytes(buf))
+                if got is None or got[1].size < frame_len:
                     continue
+                s = got[1].astype(np.int64)
                 win = np.lib.stride_tricks.sliding_window_view(
                     s, frame_len
                 )[::hop]
@@ -3714,46 +3674,13 @@ def audio_fingerprint(
             "2 <= n_bands <= frame_len - 1 (bands are the non-DC bins "
             "1..n_bands; the gradient needs two adjacent bands)"
         )
-    if frame_len > (2**63 - 1) // (32768 * 10**6):
-        raise ValueError(
-            "audio_fingerprint: frame_len > 281474 overflows the "
-            "exact-int64 DFT accumulator; use a shorter window"
-        )
+    _check_dft_frame_len("audio_fingerprint", frame_len)
 
     def fps(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import struct
-
         import numpy as np
 
-        n_bins = n_bands + 1  # DC + bands
-        k = np.arange(n_bins).reshape(-1, 1).astype(np.float64)
-        t = np.arange(frame_len).reshape(1, -1).astype(np.float64)
-        ang = 2 * np.pi * k * t / frame_len
-        cos_t = np.cos(ang) * 1e6
-        sin_t = np.sin(ang) * 1e6
-        cos_i = (np.sign(cos_t) * np.floor(np.abs(cos_t) + 0.5)).astype(np.int64)
-        sin_i = (np.sign(sin_t) * np.floor(np.abs(sin_t) + 0.5)).astype(np.int64)
+        cos_i, sin_i = _int_dft_basis(n_bands + 1, frame_len)  # DC + bands
         max_f = 63 // (n_bands - 1)  # double-diff frames that fit 64 bits
-
-        def parse(b: bytes):
-            if b[:4] != b"RIFF" or b[8:12] != b"WAVE":
-                return None
-            pos, ch, bits, codec, data = 12, None, None, None, None
-            while pos + 8 <= len(b):
-                cid = b[pos : pos + 4]
-                (clen,) = struct.unpack("<I", b[pos + 4 : pos + 8])
-                if cid == b"fmt " and clen >= 16:
-                    codec, ch, _, _, _, bits = struct.unpack(
-                        "<HHIIHH", b[pos + 8 : pos + 24]
-                    )
-                elif cid == b"data":
-                    data = b[pos + 8 : pos + 8 + clen]
-                    if len(data) != clen:
-                        return None
-                pos += 8 + clen + (clen & 1)
-            if codec != 1 or ch != 1 or bits != 16 or data is None:
-                return None
-            return np.frombuffer(data, dtype="<i2").astype(np.int64)
 
         for pdf in batches:
             # batch-wide DFT + exact limb double-difference pass (one
@@ -3762,9 +3689,10 @@ def audio_fingerprint(
             metas: list = []
             wins: list = []
             for i, buf in zip(pdf[id_col], pdf[payload_col]):
-                s = parse(bytes(buf))
-                if s is None or s.size < frame_len:
+                got = _wav_pcm16_mono(bytes(buf))
+                if got is None or got[1].size < frame_len:
                     continue
+                s = got[1].astype(np.int64)
                 n_frames = (s.size - frame_len) // hop + 1
                 nf_used = min(n_frames, max_f + 1)
                 win = np.lib.stride_tricks.sliding_window_view(
@@ -4901,47 +4829,13 @@ def audio_chunk_fingerprints(
         )
     if chunk_hop is not None and chunk_hop < 1:
         raise ValueError("audio_chunk_fingerprints: chunk_hop must be >= 1")
-    if frame_len > (2**63 - 1) // (32768 * 10**6):
-        raise ValueError(
-            "audio_chunk_fingerprints: frame_len > 281474 overflows the "
-            "exact-int64 DFT accumulator; use a shorter window"
-        )
+    _check_dft_frame_len("audio_chunk_fingerprints", frame_len)
 
     def fps(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import struct
-
         import numpy as np
 
-        n_bins = n_bands + 1
-        k = np.arange(n_bins).reshape(-1, 1).astype(np.float64)
-        t = np.arange(frame_len).reshape(1, -1).astype(np.float64)
-        ang = 2 * np.pi * k * t / frame_len
-        cos_t = np.cos(ang) * 1e6
-        sin_t = np.sin(ang) * 1e6
-        cos_i = (np.sign(cos_t) * np.floor(np.abs(cos_t) + 0.5)).astype(np.int64)
-        sin_i = (np.sign(sin_t) * np.floor(np.abs(sin_t) + 0.5)).astype(np.int64)
+        cos_i, sin_i = _int_dft_basis(n_bands + 1, frame_len)
         chunk = 63 // (n_bands - 1) + 1  # frames per 64-bit signature
-
-        def parse(b: bytes):
-            if b[:4] != b"RIFF" or b[8:12] != b"WAVE":
-                return None
-            pos, ch, bits, codec, data = 12, None, None, None, None
-            while pos + 8 <= len(b):
-                cid = b[pos : pos + 4]
-                (clen,) = struct.unpack("<I", b[pos + 4 : pos + 8])
-                if cid == b"fmt " and clen >= 16:
-                    codec, ch, _, _, _, bits = struct.unpack(
-                        "<HHIIHH", b[pos + 8 : pos + 24]
-                    )
-                elif cid == b"data":
-                    data = b[pos + 8 : pos + 8 + clen]
-                    if len(data) != clen:
-                        return None
-                pos += 8 + clen + (clen & 1)
-            if codec != 1 or ch != 1 or bits != 16 or data is None:
-                return None
-            return np.frombuffer(data, dtype="<i2").astype(np.int64)
-
         step = chunk if chunk_hop is None else chunk_hop
 
         nb1 = n_bands - 1
@@ -4954,9 +4848,10 @@ def audio_chunk_fingerprints(
             metas: list = []
             wins: list = []
             for i, buf in zip(pdf[id_col], pdf[payload_col]):
-                s = parse(bytes(buf))
-                if s is None or s.size < frame_len:
+                got = _wav_pcm16_mono(bytes(buf))
+                if got is None or got[1].size < frame_len:
                     continue
+                s = got[1].astype(np.int64)
                 win = np.lib.stride_tricks.sliding_window_view(
                     s, frame_len
                 )[::hop]
@@ -5068,29 +4963,7 @@ def wav_extract_segments(
     ).join(df.select(id_col, payload_col), id_col)
 
     def ext(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import struct
-
         import numpy as np
-
-        def parse(b: bytes):
-            if b[:4] != b"RIFF" or b[8:12] != b"WAVE":
-                return None
-            pos, ch, bits, codec, sr, data = 12, None, None, None, None, None
-            while pos + 8 <= len(b):
-                cid = b[pos : pos + 4]
-                (clen,) = struct.unpack("<I", b[pos + 4 : pos + 8])
-                if cid == b"fmt " and clen >= 16:
-                    codec, ch, sr, _, _, bits = struct.unpack(
-                        "<HHIIHH", b[pos + 8 : pos + 24]
-                    )
-                elif cid == b"data":
-                    data = b[pos + 8 : pos + 8 + clen]
-                    if len(data) != clen:
-                        return None
-                pos += 8 + clen + (clen & 1)
-            if codec != 1 or ch != 1 or bits != 16 or data is None:
-                return None
-            return sr, np.frombuffer(data, dtype="<i2")
 
         for pdf in batches:
             rows = []
@@ -5098,7 +4971,7 @@ def wav_extract_segments(
                 pdf[id_col], pdf["__seg"], pdf["__f0"], pdf["__f1"],
                 pdf[payload_col],
             ):
-                parsed = parse(bytes(buf))
+                parsed = _wav_pcm16_mono(bytes(buf))
                 if parsed is None:
                     continue
                 sr, s = parsed
@@ -5156,34 +5029,10 @@ def wav_trim(
         )
 
     def trim(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import struct
-
-        import numpy as np
-
-        def parse(b: bytes):
-            if b[:4] != b"RIFF" or b[8:12] != b"WAVE":
-                return None
-            pos, ch, bits, codec, sr, data = 12, None, None, None, None, None
-            while pos + 8 <= len(b):
-                cid = b[pos : pos + 4]
-                (clen,) = struct.unpack("<I", b[pos + 4 : pos + 8])
-                if cid == b"fmt " and clen >= 16:
-                    codec, ch, sr, _, _, bits = struct.unpack(
-                        "<HHIIHH", b[pos + 8 : pos + 24]
-                    )
-                elif cid == b"data":
-                    data = b[pos + 8 : pos + 8 + clen]
-                    if len(data) != clen:
-                        return None
-                pos += 8 + clen + (clen & 1)
-            if codec != 1 or ch != 1 or bits != 16 or data is None:
-                return None
-            return sr, np.frombuffer(data, dtype="<i2")
-
         for pdf in batches:
             rows = []
             for i, buf in zip(pdf[id_col], pdf[payload_col]):
-                parsed = parse(bytes(buf))
+                parsed = _wav_pcm16_mono(bytes(buf))
                 if parsed is None:
                     continue
                 sr, s = parsed

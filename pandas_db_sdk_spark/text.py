@@ -168,6 +168,16 @@ def word_ngrams(col, n: int):
     return F.transform(starts, lambda i: F.array_join(F.slice(toks, i, n), " "))
 
 
+def _bigram_pairs(toks):
+    """Adjacent word pairs of a token array as an array of (w1, w2)
+    structs — n−1 pairs, none for documents shorter than two words."""
+    n = F.size(toks)
+    return F.arrays_zip(
+        F.slice(toks, 1, F.greatest(n - 1, F.lit(0))).alias("w1"),
+        F.slice(toks, 2, F.greatest(n - 1, F.lit(0))).alias("w2"),
+    )
+
+
 def decontaminate(
     corpus: DataFrame,
     benchmark: DataFrame,
@@ -251,10 +261,7 @@ def repetition_ratio(df: DataFrame, text_col: str = "text", shingle: int = 3) ->
     duplicates of an earlier shingle in the same document
     (1 − distinct/total). High values flag boilerplate/spam. Pure per-row
     HOF arithmetic — no shuffle."""
-    toks = tokens(text_col)
-    n = F.size(toks)
-    starts = F.sequence(F.lit(1), F.greatest(n - shingle + 1, F.lit(1)))
-    grams = F.transform(starts, lambda i: F.array_join(F.slice(toks, i, shingle), " "))
+    grams = word_ngrams(text_col, shingle)
     total = F.size(grams)
     distinct = F.size(F.array_distinct(grams))
     return df.withColumn(
@@ -389,13 +396,9 @@ def bigram_logprob(
     corpus-sized); the model joins back UNHINTED (bigram vocabulary is
     unbounded at 100 TB — AQE decides). Per-bigram log-probs are rounded,
     then decimal-summed so the mean is aggregation-order-independent."""
-    toks = tokens(text_col)
-    n = F.size(toks)
-    zipped = F.arrays_zip(
-        F.slice(toks, 1, F.greatest(n - 1, F.lit(0))).alias("w1"),
-        F.slice(toks, 2, F.greatest(n - 1, F.lit(0))).alias("w2"),
-    )
-    bg = df.select(F.col(id_col), F.explode(zipped).alias("__b")).select(
+    bg = df.select(
+        F.col(id_col), F.explode(_bigram_pairs(tokens(text_col))).alias("__b")
+    ).select(
         id_col, F.col("__b.w1").alias("w1"), F.col("__b.w2").alias("w2")
     )
     from pyspark.sql import Window
@@ -454,10 +457,7 @@ def fingerprint(
     """North-star document fingerprinting (winnowing-lite): the minimum hash
     over rolling word shingles — one stable 32-hex fingerprint per document,
     computed entirely with HOFs (no shuffle at all)."""
-    toks = tokens(text_col)
-    n = F.size(toks)
-    starts = F.sequence(F.lit(1), F.greatest(n - shingle + 1, F.lit(1)))
-    hashes = F.transform(starts, lambda i: F.md5(F.array_join(F.slice(toks, i, shingle), " ")))
+    hashes = F.transform(word_ngrams(text_col, shingle), F.md5)
     return df.select(
         F.col(id_col),
         F.array_min(hashes).alias("fingerprint"),
@@ -1267,13 +1267,7 @@ def kneser_ney_bigram(
     """
     from pyspark.sql import Window
 
-    toks = tokens(text_col)
-    n = F.size(toks)
-    zipped = F.arrays_zip(
-        F.slice(toks, 1, F.greatest(n - 1, F.lit(0))).alias("w1"),
-        F.slice(toks, 2, F.greatest(n - 1, F.lit(0))).alias("w2"),
-    )
-    bg = df.select(F.explode(zipped).alias("__b")).select(
+    bg = df.select(F.explode(_bigram_pairs(tokens(text_col))).alias("__b")).select(
         F.col("__b.w1").alias("w1"), F.col("__b.w2").alias("w2")
     )
     c12 = bg.groupBy("w1", "w2").agg(F.count("*").alias("c12"))

@@ -7,10 +7,12 @@ frame-sampling index arithmetic.
 
 from __future__ import annotations
 
+import functools
 import hashlib
 
 import pytest
 
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from pandas_db_sdk_spark import multimodal
@@ -420,12 +422,16 @@ def test_resample_pcm_hand_computed(spark):
 
 
 def test_resample_pcm_skips_out_of_scope(spark):
-    """Stereo, 8-bit, non-PCM codecs, truncated data chunks, and
-    sub-2-sample files degrade to skip — never an executor error."""
+    """Stereo, 8-bit, 4-bit, non-PCM codecs, truncated data or fmt
+    chunks, odd-length data, too-short files and broken containers
+    degrade to skip in EVERY WAV reader — never an executor error.
+    ``parse_media_headers`` reads headers only: it reports every row
+    with a readable fmt and data chunk and whole bytes per sample as
+    'wav', and the rest, plus a PNG whose IHDR length runs past the file
+    and an MP4 whose mvhd box is empty, as 'unknown'."""
     import struct
 
-    def wav(codec=1, ch=1, bits=16, n=4, truncate=0):
-        data = b"\x00\x01" * n
+    def wav(codec=1, ch=1, bits=16, data=b"\x00\x01" * 64, truncate=0):
         fmt = struct.pack("<HHIIHH", codec, ch, 8000, 8000 * ch * bits // 8, ch * bits // 8, bits)
         body = (
             b"WAVEfmt " + struct.pack("<I", 16) + fmt
@@ -433,19 +439,48 @@ def test_resample_pcm_skips_out_of_scope(spark):
         )
         return b"RIFF" + struct.pack("<I", len(body)) + body
 
+    def box(btype, payload=b""):
+        return struct.pack(">I", 8 + len(payload)) + btype + payload
+
+    cut_fmt = b"WAVEfmt " + struct.pack("<I", 16) + b"\x01\x00\x01\x00"
     rows = [
-        (1, bytearray(wav())),              # fine — the control
-        (2, bytearray(wav(ch=2))),          # stereo
-        (3, bytearray(wav(bits=8))),        # 8-bit
-        (4, bytearray(wav(codec=3))),       # float PCM
-        (5, bytearray(wav(truncate=2))),    # short data chunk
-        (6, bytearray(wav(n=1))),           # < 2 samples
-        (7, bytearray(b"RIFFxxxxWAVE")),    # no chunks
-        (8, bytearray(b"garbage")),
+        (1, wav()),                       # fine — the control (one 64-sample frame)
+        (2, wav(ch=2)),                   # stereo
+        (3, wav(bits=8)),                 # 8-bit
+        (4, wav(codec=3)),                # float PCM
+        (5, wav(truncate=2)),             # short data chunk
+        (6, wav(data=b"\x00\x01")),       # < 2 samples
+        (7, wav(data=b"\x00\x01\x00")),   # odd-length data chunk
+        (8, b"RIFFxxxxWAVE"),             # no chunks
+        (9, b"garbage"),
+        (10, b"RIFF" + struct.pack("<I", len(cut_fmt)) + cut_fmt),  # fmt cut after 4 bytes
+        (11, b"\x89PNG\r\n\x1a\n" + struct.pack(">I", 0xFFFF) + b"IHDR" + bytes(17)),
+        (12, box(b"ftyp", b"isom") + box(b"moov", box(b"mvhd"))),
+        (13, wav(bits=4)),                # 4-bit: no whole byte per sample
     ]
-    df = spark.createDataFrame(rows, "doc_id long, payload binary")
-    out = multimodal.resample_pcm_stats(df, "payload", "doc_id").collect()
-    assert {r.doc_id for r in out} == {1}
+    df = spark.createDataFrame(
+        [(i, bytearray(b)) for i, b in rows], "doc_id long, payload binary"
+    )
+    segs = spark.createDataFrame(
+        [(i, 1, 0, 0) for i, _ in rows], "doc_id long, seg_no int, f0 int, f1 int"
+    )
+    readers = {
+        "resample_pcm_stats": multimodal.resample_pcm_stats(df),
+        "resample_fir_stats": multimodal.resample_fir_stats(df),
+        "vad_segments": multimodal.vad_segments(df),
+        "stft_frame_features": multimodal.stft_frame_features(df),
+        "audio_fingerprint": multimodal.audio_fingerprint(df),
+        "audio_chunk_fingerprints": multimodal.audio_chunk_fingerprints(df),
+        "wav_extract_segments": multimodal.wav_extract_segments(df, segs),
+        "wav_trim": multimodal.wav_trim(df, start_sample=1),
+    }
+    kept = functools.reduce(
+        DataFrame.unionByName,
+        [out.select(F.lit(name).alias("op"), "doc_id") for name, out in readers.items()],
+    ).collect()
+    assert {(r.op, r.doc_id) for r in kept} == {(name, 1) for name in readers}
+    got = {r.doc_id: r.format for r in multimodal.parse_media_headers(df).collect()}
+    assert got == {i: "wav" if i <= 7 else "unknown" for i, _ in rows}
 
 
 def test_jpeg_color_neutral_chroma_roundtrip_exact(spark):
