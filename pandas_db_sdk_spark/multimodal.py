@@ -327,8 +327,12 @@ def parse_media_headers(
                         tk = walk(*kids[b"trak"])
                         if b"tkhd" in tk:
                             lo, hi2 = tk[b"tkhd"]
-                            wfix, hfix = struct.unpack(">II", b[hi2 - 8 : hi2])
-                            w, h = wfix >> 16, hfix >> 16
+                            # width/height end the box: 84 payload bytes
+                            # in version 0, 96 in version 1
+                            need = 96 if b[lo : lo + 1] == b"\x01" else 84
+                            if hi2 - lo >= need:
+                                wfix, hfix = struct.unpack(">II", b[hi2 - 8 : hi2])
+                                w, h = wfix >> 16, hfix >> 16
                     if ts:
                         return ("mp4", w, h, None, None, None, round(dur / ts, 6))
             return ("unknown", None, None, None, None, None, None)
@@ -3457,8 +3461,6 @@ def _limb_sign_positive(d):
     strictly positive?  Limbs may be non-normalized and negative (|limb|
     < 2^47 after the gradient double-differences).  Carry-normalizes the
     lower limbs into [0, 2^21); the top limb then carries the sign."""
-    import numpy as np
-
     d = d.copy()
     last = d.shape[-1] - 1
     for i in range(last):
@@ -4243,8 +4245,6 @@ def video_shingle_near_dup(
     pairing rather than exploding Σ bucket².  Scale: one window per
     video (lead over frame_no), one equi-join on the shingle, one
     pair aggregate — no cartesian, no driver state."""
-    from pyspark.sql import Window
-
     if shingle_len < 2:
         raise ValueError("video_shingle_near_dup: shingle_len must be >= 2")
     fs = y4m_frame_sample(df, payload_col, id_col, every_n=1).select(

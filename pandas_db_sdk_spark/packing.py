@@ -21,8 +21,7 @@ import pandas as pd
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-
-OUT_SUFFIX = "pack_group int, bin_idx int"
+from pyspark.sql.types import IntegerType, LongType, StructField, StructType
 
 # Multiplicative-hash constants for shard_assign: pure int64 arithmetic so
 # the same expression is computable (and bit-identical) in any SQL engine —
@@ -71,8 +70,16 @@ def pack_greedy(
     """Assign every row a (pack_group, bin_idx) such that the token sum of
     each bin is <= budget; rows larger than the budget get a singleton bin.
 
-    Returns (id_col, tokens_col, pack_group, bin_idx).
+    Returns the input columns, ``tokens_col`` cast to long, plus
+    (pack_group, bin_idx). Carried columns go through Arrow/pandas, so a
+    nullable integer column comes back through a float: pass only the
+    columns the caller needs.
     """
+    clash = {"pack_group", "bin_idx", "__grp"} & set(df.columns)
+    if clash:
+        raise ValueError(
+            f"pack_greedy: input already has column(s) {sorted(clash)}"
+        )
     if n_groups is None:
         # 2× parallelism: enough groups that a straggler can't serialize the
         # stage, few enough that per-group Arrow batch overhead stays small
@@ -80,10 +87,19 @@ def pack_greedy(
         # (bigger groups pack tighter).
         n_groups = df.sparkSession.sparkContext.defaultParallelism * 2
 
-    # id type follows the input schema — dedup stages commonly emit string
-    # ids (uuid/sha), and forcing int64 here would crash them at runtime.
-    id_type = df.schema[id_col].dataType.simpleString()
-    schema = f"{id_col} {id_type}, {tokens_col} long, {OUT_SUFFIX}"
+    # column types follow the input schema — dedup stages commonly emit
+    # string ids (uuid/sha), and forcing int64 here would crash them at
+    # runtime.
+    schema = StructType(
+        [
+            StructField(f.name, LongType() if f.name == tokens_col else f.dataType)
+            for f in df.schema.fields
+        ]
+        + [
+            StructField("pack_group", IntegerType()),
+            StructField("bin_idx", IntegerType()),
+        ]
+    )
 
     def pack_group(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values([tokens_col, id_col], ascending=[False, True])
@@ -101,13 +117,13 @@ def pack_greedy(
                 # ensures nothing joins them)
                 bins.append(budget - t)
                 assigned.append(len(bins) - 1)
-        out = pdf[[id_col, tokens_col]].copy()
+        out = pdf.drop(columns="__grp")
         out[tokens_col] = out[tokens_col].astype("int64")
         out["pack_group"] = int(pdf["__grp"].iloc[0])
         out["bin_idx"] = pd.Series(assigned, index=pdf.index, dtype="int32")
         return out
 
-    salted = df.select(id_col, tokens_col).withColumn(
+    salted = df.withColumn(
         "__grp", F.pmod(F.xxhash64(F.col(id_col)), F.lit(n_groups)).cast("int")
     )
     # explicit width: the packing stage's output is small in BYTES, so AQE

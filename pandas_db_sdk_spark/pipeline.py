@@ -36,7 +36,9 @@ def prepare_corpus(
     """documents → packed training sequences.
 
     Returns (id_col, n_tokens, pack_group, bin_idx, quality_score): one row
-    per surviving document, assigned to a token-budget bin. Pass
+    per surviving document, assigned to a token-budget bin.
+    ``quality_score`` is carried through ``packing.pack_greedy``'s
+    Arrow/pandas step (a double, so it comes back unchanged). Pass
     ``benchmark`` to drop documents sharing any ``decontaminate_ngram``-gram
     with the eval set before dedup (broadcast gram-hash semi-join — the
     hygiene gate belongs before the expensive stages). Pass ``n_shards`` to
@@ -86,10 +88,11 @@ def prepare_corpus(
         F.size(F.split(F.col(text_col), " ")).cast("long").alias("n_tokens"),
         "quality_score",
     )
-    packed = packing.pack_greedy(
-        toks.select(id_col, "n_tokens"), id_col, "n_tokens", token_budget
+    # quality_score rides through the packer: a join back to ``toks`` would
+    # plan the whole dedup lineage a second time
+    out = packing.pack_greedy(toks, id_col, "n_tokens", token_budget).select(
+        id_col, "n_tokens", "pack_group", "bin_idx", "quality_score"
     )
-    out = packed.join(toks.select(id_col, "quality_score"), id_col)
     if n_shards is not None:
         out = packing.shard_assign(out, id_col, n_shards)
     return out

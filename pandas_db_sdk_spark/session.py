@@ -32,6 +32,11 @@ RUNTIME_CONFS = {
     # 1 MiB of explain text is plenty for debugging; past it, truncate
     # instead of allocating gigabytes (r10).
     "spark.sql.maxPlanStringLength": str(1024 * 1024),
+    # Whole-stage classes are named after their codegen stage id, and the
+    # generated-class cache keys on the source, name included: the same
+    # stage shifted to another id (one more stage planned ahead of it)
+    # would recompile. Without the id the cache key is the stage's body.
+    "spark.sql.codegen.useIdInClassName": "false",
 }
 
 
@@ -62,9 +67,10 @@ def get_spark(app_name: str = "pandas-db-sdk-spark") -> SparkSession:
     here assumes single-node except the master URL.
 
     ``spark.sql.codegen.cache.maxEntries`` is 1000 (Spark's default: 100).
-    One ``prepare_corpus`` plan generates ~140 classes, so under the
-    default LRU each new shard would recompile ~125 of them; at 1000 a warm
-    shard compiles 0–26. The conf is static: it holds only when this call
+    One ``prepare_corpus`` plan generates ~100 classes, so under the
+    default LRU each new shard would recompile most of them; at 1000, with
+    class names free of the codegen stage id (``RUNTIME_CONFS``), a warm
+    shard compiles 0–10. The conf is static: it holds only when this call
     starts the JVM, and a session the caller built keeps its own value.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")

@@ -428,7 +428,8 @@ def test_resample_pcm_skips_out_of_scope(spark):
     ``parse_media_headers`` reads headers only: it reports every row
     with a readable fmt and data chunk and whole bytes per sample as
     'wav', and the rest, plus a PNG whose IHDR length runs past the file
-    and an MP4 whose mvhd box is empty, as 'unknown'."""
+    and an MP4 whose mvhd box is empty, as 'unknown'. An MP4 whose tkhd
+    box is too short for its width/height fields gets null dimensions."""
     import struct
 
     def wav(codec=1, ch=1, bits=16, data=b"\x00\x01" * 64, truncate=0):
@@ -443,6 +444,7 @@ def test_resample_pcm_skips_out_of_scope(spark):
         return struct.pack(">I", 8 + len(payload)) + btype + payload
 
     cut_fmt = b"WAVEfmt " + struct.pack("<I", 16) + b"\x01\x00\x01\x00"
+    mvhd = box(b"mvhd", bytes(12) + struct.pack(">II", 600, 600))  # 1 s
     rows = [
         (1, wav()),                       # fine — the control (one 64-sample frame)
         (2, wav(ch=2)),                   # stereo
@@ -457,6 +459,8 @@ def test_resample_pcm_skips_out_of_scope(spark):
         (11, b"\x89PNG\r\n\x1a\n" + struct.pack(">I", 0xFFFF) + b"IHDR" + bytes(17)),
         (12, box(b"ftyp", b"isom") + box(b"moov", box(b"mvhd"))),
         (13, wav(bits=4)),                # 4-bit: no whole byte per sample
+        # an empty tkhd: no width/height fields to read
+        (14, box(b"ftyp", b"isom") + box(b"moov", mvhd + box(b"trak", box(b"tkhd")))),
     ]
     df = spark.createDataFrame(
         [(i, bytearray(b)) for i, b in rows], "doc_id long, payload binary"
@@ -479,8 +483,10 @@ def test_resample_pcm_skips_out_of_scope(spark):
         [out.select(F.lit(name).alias("op"), "doc_id") for name, out in readers.items()],
     ).collect()
     assert {(r.op, r.doc_id) for r in kept} == {(name, 1) for name in readers}
-    got = {r.doc_id: r.format for r in multimodal.parse_media_headers(df).collect()}
-    assert got == {i: "wav" if i <= 7 else "unknown" for i, _ in rows}
+    got = {r.doc_id: r for r in multimodal.parse_media_headers(df).collect()}
+    want = {i: "wav" if i <= 7 else "mp4" if i == 14 else "unknown" for i, _ in rows}
+    assert {i: r.format for i, r in got.items()} == want
+    assert (got[14].width, got[14].height, got[14].duration_s) == (None, None, 1.0)
 
 
 def test_jpeg_color_neutral_chroma_roundtrip_exact(spark):

@@ -3,6 +3,7 @@
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from pandas_db_sdk_spark import dedup, packing
@@ -49,6 +50,32 @@ def test_packing_beats_one_doc_per_bin(spark):
     n_bins = packed.select("pack_group", "bin_idx").distinct().count()
     n_docs = toks.count()
     assert n_bins < n_docs * 0.6, (n_bins, n_docs)
+
+
+def test_packing_carries_extra_columns(spark):
+    """Columns beyond (id, tokens) come back row for row, and the bins are
+    those of the plain two-column call; an input that already has an
+    output column is rejected."""
+    toks = _tokens(spark)
+    wide = toks.select(
+        "*",
+        F.concat(F.lit("doc-"), F.col("doc_id")).alias("tag"),
+        (F.col("doc_id") / 7.0).alias("score"),
+    )
+    packed = packing.pack_greedy(wide, "doc_id", "n_tokens", BUDGET)
+    assert packed.columns == [
+        "doc_id", "n_tokens", "tag", "score", "pack_group", "bin_idx"
+    ]
+    rows = lambda df, *cols: sorted(tuple(r) for r in df.select(*cols).collect())
+    extra = ("doc_id", "tag", "score")
+    assert rows(packed, *extra) == rows(wide, *extra)
+    plain = packing.pack_greedy(toks, "doc_id", "n_tokens", BUDGET)
+    key = ("doc_id", "n_tokens", "pack_group", "bin_idx")
+    assert rows(packed, *key) == rows(plain, *key)
+    with pytest.raises(ValueError, match="bin_idx"):
+        packing.pack_greedy(
+            toks.withColumn("bin_idx", F.lit(0)), "doc_id", "n_tokens", BUDGET
+        )
 
 
 def test_incremental_exact_dedup_removes_known_content(spark):

@@ -229,6 +229,12 @@ SHUFFLE_BUDGET = {
                                # the melt regroup's set-shuffle with it.
     "d05_tfidf": 7,            # term counts + df join + norm
     "d17_sequence_packing": 1, # salt re-key only
+    "d18_prep_pipeline": 54,   # static count, inflated like d02 by the
+                               # persisted MinHash subtrees printing inside
+                               # each InMemoryRelation branch; the dedup
+                               # lineage is planned once (packing carries
+                               # quality_score instead of a join back to
+                               # the survivors, which printed it twice: 108)
     "x01_shipping_priority": 3,
     "x03_returned_items": 4,
     "d19_decontaminate": 4,    # bench gram distinct + corpus distinct + flag join

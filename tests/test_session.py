@@ -1,10 +1,12 @@
 """Session sizing: the default driver heap follows the host's RAM, and the
-generated-class cache holds a whole prepare_corpus plan."""
+generated-class cache holds a whole prepare_corpus plan and does not key
+on codegen stage ids."""
 
 from __future__ import annotations
 
 import pandas as pd
 import pytest
+from pyspark.sql import functions as F
 
 from pandas_db_sdk_spark.session import _driver_memory
 
@@ -72,3 +74,24 @@ def test_warm_prepare_corpus_shard_reuses_generated_classes(spark):
         assert 0 < len(out) < 220  # the exact copies are gone
     first, second = compiled
     assert second * 4 < first, f"compiles per run: {compiled}"
+
+
+def test_shifted_codegen_stage_reuses_generated_classes(spark):
+    """An aggregate planned after one more codegen stage gets other stage
+    ids; its generated classes must still come from the cache."""
+    agg = (
+        spark.range(5000)
+        .select((F.col("id") % 7907).alias("k"), F.col("id").alias("v"))
+        .groupBy("k")
+        .agg(F.sum("v").alias("s"))
+    )
+    ahead = (
+        spark.range(50)
+        .select(F.col("id").alias("k"), (F.col("id") * 7907).alias("s"))
+        .filter(F.col("s") > 3)
+    )
+    agg.collect()
+    ahead.collect()
+    before = _compiles(spark)
+    ahead.unionByName(agg).collect()
+    assert _compiles(spark) - before == 0
