@@ -17,7 +17,6 @@ all codegen'd Catalyst expressions.
 
 from __future__ import annotations
 
-from pyspark import StorageLevel
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -145,16 +144,6 @@ def minhash_signatures_with_sets(
     )
 
 
-def _minhash_signature_agg(
-    df: DataFrame, id_col: str, text_col: str, n_hashes: int, shingle: int
-) -> DataFrame:
-    """(__id, __mh0..__mhN-1): signatures ONLY — no shingle sets. The wide
-    per-document sets are never materialized corpus-wide; minhash_lsh_pairs
-    computes them in a second pass restricted to candidate-surviving docs."""
-    exploded = _shingle_hash_rows(df, id_col, text_col, shingle)
-    return exploded.groupBy("__id").agg(*_min_hash_exprs(n_hashes))
-
-
 def minhash_lsh_pairs(
     df: DataFrame,
     id_col: str,
@@ -173,22 +162,32 @@ def minhash_lsh_pairs(
     The reported jaccard is always the EXACT set overlap (pinned by
     tests/test_dedup.py::test_minhash_jaccard_is_exact_set_overlap).
 
-    Two-pass shape, sized for 100 TB:
+    One pass over the input:
 
-    1. Signatures only. The first corpus pass aggregates n_hashes 8-byte
-       mins per doc — the per-document shingle SETS (≈ the corpus itself,
-       re-expressed as 8-byte hashes) are never materialized corpus-wide,
-       never shuffled, never persisted. Banding + candidate self-join move
-       16-byte rows.
-    2. Exact verify, candidates only. Candidate pairs are pre-filtered by
-       the signature-estimated Jaccard (matching-component fraction — free,
-       the signatures are already joined for banding), then the exact
-       shingle sets are built in a second pass over ONLY the documents that
-       survive (a semi-join pushdown). Verify cost scales with near-dup
+    1. One aggregate per document, persisted:
+       ``minhash_signatures_with_sets`` yields the n_hashes 8-byte mins
+       and the exact shingle-hash set (``collect_set``) from the same
+       shuffle. Banding + candidate self-join move 16-byte rows.
+    2. Exact verify, candidates only. The deduplicated candidate pairs
+       join the persisted aggregate once per side, carrying each side's
+       signature and shingle set; one filter drops the pairs whose
+       signature estimate misses the cutoff and then those whose exact
+       Jaccard misses the threshold. Verify cost scales with near-dup
        density, not corpus size.
 
-    ``est_margin``: pairs whose estimate falls below
-    ``jaccard_threshold - est_margin`` skip exact verification. The
+    The trade: the persisted aggregate holds every document's shingle-hash
+    set (≈ the input re-expressed as 8-byte hashes; MEMORY_AND_DISK, so it
+    spills rather than OOMs). In exchange the input lineage is planned
+    once. Rebuilding the sets only for the documents in a surviving pair
+    would semi-join back into ``df`` once per verify side, so the input
+    (in ``pipeline.prepare_corpus``: the quality score plus the
+    exact-dedup shuffle) would be planned three times.
+
+    ``est_margin``: pairs whose signature-estimated Jaccard (the
+    matching-component fraction, an unbiased estimate of J) falls below
+    ``jaccard_threshold - est_margin`` are dropped before the exact set
+    intersection and union are computed. The signatures ride the verify
+    join with the sets, so the estimate needs no join of its own. The
     estimator's std is sqrt(J(1-J)/n_hashes) <= 0.5/sqrt(n_hashes) (0.088
     at n=32), so the default 0.25 margin is ~3σ: by Hoeffding the chance a
     truly-qualifying pair is dropped is <= exp(-2·n_hashes·margin²) (<2%
@@ -214,14 +213,14 @@ def minhash_lsh_pairs(
     # exchange: the spread replaces its shuffle (text rows instead of
     # partial signatures) rather than adding one.
     spread = df.repartition(df.sparkSession.sparkContext.defaultParallelism, id_col)
-    # The signature aggregate feeds three plan branches (band-join left and
-    # right, estimate join); Spark does not reliably reuse the exchange
+    # The aggregate feeds four plan branches (band-join left and right, one
+    # verify join per side); Spark does not reliably reuse the exchange
     # across self-join re-aliasing, so materialize it once. MEMORY_AND_DISK:
     # spills rather than OOMs, and recomputing it costs a corpus text pass.
     # Slot-pooled (see _scratch): identical re-invocations reuse the cached
-    # signatures; parameter/input changes evict the stale generation.
+    # aggregate; parameter/input changes evict the stale generation.
     agg = scratch_persist(
-        _minhash_signature_agg(spread, id_col, text_col, n_hashes, shingle),
+        minhash_signatures_with_sets(spread, id_col, text_col, n_hashes, shingle),
         "minhash_lsh_pairs/agg",
     )
     band_entries = _cap_buckets(
@@ -237,65 +236,26 @@ def minhash_lsh_pairs(
         left.join(right, ["band_idx", "band_key"])
         .filter(F.col("id_a") < F.col("id_b"))
         .select("id_a", "id_b")
-        # multi-band collisions pair up once, before the estimate join
+        # multi-band collisions pair up once, before the verify joins
         .dropDuplicates(["id_a", "id_b"])
     )
-    # Signature-estimated Jaccard pre-filter: the matching-component
-    # fraction is an unbiased estimate of J; pairs estimated well below the
-    # threshold never touch the (expensive) exact-set stage. Signature rows
-    # are n_hashes longs — the join moves narrow fixed-width rows, and AQE
-    # picks the strategy (no hints: the candidate set's size is
-    # data-dependent, the exact trap VERDICT r2 flagged for the old
-    # broadcast of the melted pair set).
-    sig_tbl = agg.select(
-        "__id", F.array(*[f"__mh{i}" for i in range(n_hashes)]).alias("__sig")
+    # Attach both sides' signature and set with two equi-joins on the
+    # persisted aggregate. No broadcast hint in either direction: candidate
+    # volume is data-dependent (quadratic in bucket size), and a forced
+    # broadcast of it can exhaust the driver on a dup-heavy corpus, so AQE
+    # chooses, degrading gracefully to shuffled joins.
+    side = agg.select(
+        "__id", F.array(*[f"__mh{i}" for i in range(n_hashes)]), "__shset"
     )
-    cand = cand.join(
-        sig_tbl.select(F.col("__id").alias("id_a"), F.col("__sig").alias("__sig_a")), "id_a"
-    ).join(
-        sig_tbl.select(F.col("__id").alias("id_b"), F.col("__sig").alias("__sig_b")), "id_b"
+    pairs = cand.join(side.toDF("id_a", "sig_a", "sh_a"), "id_a").join(
+        side.toDF("id_b", "sig_b", "sh_b"), "id_b"
     )
     if est_margin is not None:
         matches = F.size(
-            F.filter(
-                F.zip_with("__sig_a", "__sig_b", lambda x, y: x == y), lambda m: m
-            )
+            F.filter(F.zip_with("sig_a", "sig_b", lambda x, y: x == y), lambda m: m)
         )
         cutoff = max(0.0, jaccard_threshold - est_margin)
-        cand = cand.filter(matches / F.lit(float(n_hashes)) >= F.lit(cutoff))
-    pre = scratch_persist(cand.select("id_a", "id_b"), "minhash_lsh_pairs/pre")
-    # Second pass, survivors only: exact shingle sets for just the documents
-    # that appear in a surviving pair (left-semi pushdown into the scan),
-    # then one melt join + pair regroup for the exact Jaccard. At 100 TB
-    # this re-reads the corpus but aggregates sets only for the ~dup-dense
-    # fraction — vs. the old single-pass design that collect_set-ed and
-    # persisted every document's shingle set (a corpus-sized intermediate).
-    # left-semi build sides need no pre-distinct — the join itself dedups
-    need = pre.select(F.explode(F.array("id_a", "id_b")).alias(id_col))
-    subset = df.join(need, id_col, "left_semi")
-    shingle_tbl = (
-        _shingle_hash_rows(subset, id_col, text_col, shingle)
-        .groupBy("__id")
-        .agg(F.collect_set("__h").alias("__shingles"))
-    )
-    # Attach both sides' sets with two equi-joins on the survivor-only
-    # shingle table. No broadcast hint in either direction: candidate
-    # volume is data-dependent (quadratic in bucket size) and the shingle
-    # side scales with near-dup density — AQE chooses, degrading
-    # gracefully to shuffled joins. (An earlier melt/explode/regroup
-    # variant scanned shingle_tbl once but paid an extra shuffle-agg OF
-    # THE SETS — the widest rows in the job — plus two more stages.)
-    pairs = pre.join(
-        shingle_tbl.select(
-            F.col("__id").alias("id_a"), F.col("__shingles").alias("sh_a")
-        ),
-        "id_a",
-    ).join(
-        shingle_tbl.select(
-            F.col("__id").alias("id_b"), F.col("__shingles").alias("sh_b")
-        ),
-        "id_b",
-    )
+        pairs = pairs.filter(matches / F.lit(float(n_hashes)) >= F.lit(cutoff))
     inter = F.size(F.array_intersect("sh_a", "sh_b")).cast("double")
     union = F.size(F.array_union("sh_a", "sh_b")).cast("double")
     return (
@@ -908,8 +868,9 @@ def set_similarity_join(
     the RAREST shingles, candidate volume is Σ over rare shingles of
     df_prefix² — the high-df head that dominates a naive inverted-index
     join (Σ df² over everything) never enters the join. Candidates then
-    verify exactly on the full shingle sets (the minhash two-pass
-    economics). Returns (id_a, id_b, jaccard) with id_a < id_b.
+    verify exactly on the full shingle sets, read from the same persisted
+    per-doc table (as minhash_lsh_pairs verifies from its persisted
+    aggregate). Returns (id_a, id_b, jaccard) with id_a < id_b.
     """
     rows = scratch_persist(
         _shingle_hash_rows(df, id_col, text_col, shingle),
@@ -1237,8 +1198,8 @@ def containment_join(
     df_prefix(h) * df_all(h); because prefixes hold each doc's RAREST
     shingles, df_prefix collapses on the high-df head that dominates a
     naive index join. Verification is exact on the full hash sets (the
-    same two-pass economics as set_similarity_join; both passes reuse one
-    scratch-persisted frequency-sorted shingle table).
+    same shape as set_similarity_join: the probe and the verify both read
+    one scratch-persisted frequency-sorted shingle table).
 
     Returns (id_a, id_b, containment) with id_a != id_b: id_a's shingles
     are >= threshold contained in id_b's.

@@ -25,6 +25,15 @@ def _doc(i: int, seed: int) -> str:
     return f"doc{i} marker{i} uniq{i} " + body
 
 
+def _shingles(t: str) -> set:
+    """Word 3-shingle set as the dedup operators define it: split on single
+    spaces; a doc shorter than the width is one shingle of all its words."""
+    ws = t.split(" ")
+    if len(ws) < 3:
+        return {tuple(ws)}
+    return {tuple(ws[i : i + 3]) for i in range(len(ws) - 2)}
+
+
 @pytest.fixture(scope="module")
 def docs(spark):
     rows = [(i, _doc(i, seed=3)) for i in range(40)]
@@ -168,6 +177,103 @@ def test_minhash_on_exact_dedup_output_builds_without_a_job(spark, docs):
     finally:
         sc.setJobGroup(None, None)
     assert set(tracker.getJobIdsForGroup("minhash-plan")) - before == set()
+
+
+def test_minhash_on_exact_dedup_plans_its_input_once(docs, monkeypatch):
+    """The verify joins read the persisted signature + shingle-set
+    aggregate, so the input lineage (here the exact_dedup window) is planned
+    in one place: inside that one cached relation. Rebuilding the sets from
+    the input for the surviving pairs would take a second scratch slot and
+    semi-join back into the input once per verify side."""
+    from pandas_db_sdk_spark._scratch import scratch_persist
+
+    slots = []
+
+    def recording(df, slot, *args, **kwargs):
+        slots.append(slot)
+        return scratch_persist(df, slot, *args, **kwargs)
+
+    monkeypatch.setattr(dedup, "scratch_persist", recording)
+    pairs = dedup.minhash_lsh_pairs(
+        dedup.exact_dedup(docs, "text", "doc_id"), "doc_id", "text", jaccard_threshold=0.9
+    )
+    assert slots == ["minhash_lsh_pairs/agg"]
+    # walk the plan with cached relations substituted: an InMemoryRelation
+    # is a leaf there, so a Window outside it is a re-planned input
+    nodes = []
+
+    def walk(p):
+        nodes.append(p)
+        ch = p.children()
+        for i in range(ch.size()):
+            walk(ch.apply(i))
+
+    walk(pairs._jdf.queryExecution().withCachedData())
+    names = [p.nodeName() for p in nodes]
+    assert names.count("Window") == 0, names
+    cached = {
+        p.cacheBuilder().cachedPlan().toString()
+        for p in nodes
+        if p.nodeName() == "InMemoryRelation"
+    }
+    assert len(cached) == 1 and "row_number()" in cached.pop()
+
+
+# normalised-row hashes (sorted row reprs, sha256) at sf0.01: a change
+# detector for the queries' output; d18 drops its bin layout (pack_group,
+# bin_idx), which follows the session's default parallelism
+_PINNED_ROWS = {
+    "d02_minhash_lsh": (25, "887a409e1d6df81267d7d9af3ec40f07923b9bc228a2335d63fc422f18ae6b2f"),
+    "d02d_dedup_corpus": (476, "8b532a48bd0886ad59f5ee3cbe4187e171f4c7e678b2587361d88db95dece844"),
+    "d18_prep_pipeline": (476, "5d76ad5e3ad4a323ccb2f4cae2c7ed29512d465f66f46c9e333ae37b53a5d609"),
+}
+
+
+def test_minhash_queries_exact_against_brute_force(spark):
+    """d02's pairs against an independent brute force over word 3-shingle
+    sets at sf0.01: every pair is a true pair at Jaccard >= 0.5 with its
+    exact Jaccard, and every true pair at Jaccard >= 0.9 is found (a pair
+    at J collides in one of d02's 8 bands of 4 rows with probability
+    1 - (1 - J^4)^8, >= 0.9998 at 0.9). d02, d02d and d18 also match their
+    pinned row hashes."""
+    import hashlib
+
+    from pandas_db_sdk_spark.corpus import all_queries
+    from pandas_db_sdk_spark.io import tables
+
+    sf = "/root/testdata/sf0.01"
+    qs = all_queries()
+    frames = {
+        "d02_minhash_lsh": qs["d02_minhash_lsh"](spark, sf),
+        "d02d_dedup_corpus": qs["d02d_dedup_corpus"](spark, sf),
+        "d18_prep_pipeline": qs["d18_prep_pipeline"](spark, sf).select(
+            "doc_id", "n_tokens", "quality_score"
+        ),
+    }
+    rows = {name: df.collect() for name, df in frames.items()}
+    text = tables(spark, sf)("documents").select("doc_id", "text").collect()
+    sets_ = {r.doc_id: _shingles(r.text) for r in text}
+    got = {(r.id_a, r.id_b): r.jaccard for r in rows["d02_minhash_lsh"]}
+    for (a, b), j in got.items():
+        assert a < b
+        exact = len(sets_[a] & sets_[b]) / len(sets_[a] | sets_[b])
+        assert exact >= 0.5 and j == round(exact, 6), (a, b, j, exact)
+    ids = sorted(sets_)
+    for i, a in enumerate(ids):
+        for b in ids[i + 1 :]:
+            inter = len(sets_[a] & sets_[b])
+            if inter and inter / len(sets_[a] | sets_[b]) >= 0.9:
+                assert (a, b) in got, (a, b)
+    hashes = {
+        name: (
+            len(rs),
+            hashlib.sha256(
+                "\n".join(sorted(repr(tuple(r)) for r in rs)).encode()
+            ).hexdigest(),
+        )
+        for name, rs in rows.items()
+    }
+    assert hashes == _PINNED_ROWS
 
 
 def test_exact_dups_always_collide_simhash(docs):
@@ -348,14 +454,7 @@ def test_set_similarity_join_exact_vs_brute_force(spark):
     rows += [(200 + i, _doc(i, seed=3)) for i in range(5)]      # exact dups
     rows += [(300 + i, _doc(i, seed=3) + " tail extra") for i in range(5)]
     df = spark.createDataFrame(rows, "doc_id long, text string")
-
-    def shingles(t):
-        ws = t.split(" ")
-        if len(ws) < 3:
-            return {tuple(ws)}
-        return {tuple(ws[i : i + 3]) for i in range(len(ws) - 2)}
-
-    sets_ = {i: shingles(t) for i, t in rows}
+    sets_ = {i: _shingles(t) for i, t in rows}
     for t in (0.5, 0.8, 0.95):
         got = {
             (r.id_a, r.id_b): r.jaccard

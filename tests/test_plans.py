@@ -213,28 +213,23 @@ SHUFFLE_BUDGET = {
     "c21_asof_join": 1,        # union trick: single re-key, no range explosion
     "c22_broadcast_join": 2,   # fact re-key for agg + broadcast exchange
     "d01_exact_dedup": 1,      # hash re-key on content hash
-    "d02_minhash_lsh": 30,     # static count, inflated ~3× by the persisted
-                               # (30 after the scratch pool learned to
-                               # re-persist post-clearCache: the re-registered
-                               # relation prints its child subtree once more)
-                               # signature/shingle subtrees printing inside
-                               # each InMemoryRelation branch (the two-join
-                               # verify prints the shingle subtree twice);
-                               # semantically: sig agg (corpus-sized, once),
-                               # band self-join, estimate joins, survivor
-                               # semi-join + set agg, two verify joins —
-                               # all candidate-sized. The corpus-wide
-                               # collect_set shuffle of the old one-pass
-                               # design is GONE (the r2 scale flag), and
-                               # the melt regroup's set-shuffle with it.
+    "d02_minhash_lsh": 8,      # static count: the spread re-key that the
+                               # persisted signature/set agg rides, printed
+                               # inside each of the 4 InMemoryRelation
+                               # branches (4), the candidate dedup (1), and
+                               # the band self-join plus one verify join per
+                               # side, broadcast at sf0.01 (3). The verify
+                               # reads the persisted sets: no survivor
+                               # semi-join rebuilding them per side (30
+                               # while it did).
     "d05_tfidf": 7,            # term counts + df join + norm
     "d17_sequence_packing": 1, # salt re-key only
-    "d18_prep_pipeline": 54,   # static count, inflated like d02 by the
-                               # persisted MinHash subtrees printing inside
-                               # each InMemoryRelation branch; the dedup
-                               # lineage is planned once (packing carries
-                               # quality_score instead of a join back to
-                               # the survivors, which printed it twice: 108)
+    "d18_prep_pipeline": 18,   # static count: the d02 shape plus exact
+                               # dedup, survivor anti-join and the packing
+                               # salt; the dedup lineage is planned once
+                               # (54 while the MinHash verify re-planned it
+                               # per side, 108 with the join back to the
+                               # survivors after packing)
     "x01_shipping_priority": 3,
     "x03_returned_items": 4,
     "d19_decontaminate": 4,    # bench gram distinct + corpus distinct + flag join
