@@ -29,7 +29,7 @@ scope: no codec library ships here.
 
 from __future__ import annotations
 
-from typing import Iterator
+from typing import Iterator, NamedTuple
 
 import pandas as pd
 
@@ -182,18 +182,11 @@ def synth_media_payload(
     by design — this IS the UDF tier of the multimodal surface)."""
 
     import struct
-    import zlib
 
     def png(i: int) -> bytes:
         w, h = 16 + i % 64, 16 + (i * 7) % 64
         ihdr = struct.pack(">IIBBBBB", w, h, 8, 2, 0, 0, 0)
-        chunk = b"IHDR" + ihdr
-        return (
-            b"\x89PNG\r\n\x1a\n"
-            + struct.pack(">I", 13)
-            + chunk
-            + struct.pack(">I", zlib.crc32(chunk) & 0xFFFFFFFF)
-        )
+        return _PNG_MAGIC + _png_chunk(b"IHDR", ihdr)
 
     def box(btype: bytes, payload: bytes) -> bytes:
         return struct.pack(">I", 8 + len(payload)) + btype + payload
@@ -270,22 +263,14 @@ def parse_media_headers(
 
     def parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import struct
-        import zlib
 
         def one(blob) -> tuple:
             b = bytes(blob)
-            if b[:8] == b"\x89PNG\r\n\x1a\n" and len(b) >= 33:
-                (ln,) = struct.unpack(">I", b[8:12])
-                chunk = b[12 : 16 + ln]
-                crc = b[16 + ln : 20 + ln]
-                if (
-                    len(crc) == 4
-                    and chunk[:4] == b"IHDR"
-                    and zlib.crc32(chunk) & 0xFFFFFFFF
-                    == struct.unpack(">I", crc)[0]
-                ):
-                    w, h, depth = struct.unpack(">IIB", chunk[4:13])
-                    return ("png", w, h, depth, None, None, None)
+            # PNG: the first chunk, CRC-checked, must be the IHDR
+            ck = next(_png_chunks(b), None) if len(b) >= 33 else None
+            if ck and ck[0] == b"IHDR" and len(ck[1]) >= 9:
+                w, h, depth = struct.unpack_from(">IIB", ck[1])
+                return ("png", w, h, depth, None, None, None)
             # JPEG: the first start-of-frame (SOF0/1/2) header
             for m, pos, _ in _jpeg_segments(b):
                 if m in (0xC0, 0xC1, 0xC2) and pos + 9 <= len(b):
@@ -469,6 +454,42 @@ _ADAM7 = (
 )
 
 
+_PNG_MAGIC = b"\x89PNG\r\n\x1a\n"
+
+
+def _png_chunk(ctype: bytes, data: bytes) -> bytes:
+    """The one PNG chunk writer: length, type, data, then the CRC-32 of
+    type + data."""
+    import struct
+    import zlib
+
+    body = ctype + data
+    return struct.pack(">I", len(data)) + body + struct.pack(">I", zlib.crc32(body))
+
+
+def _png_chunks(b: bytes):
+    """The one PNG chunk walk: yields ``(type, data)`` per chunk after
+    the signature. A wrong signature, or a chunk cut short or failing
+    its CRC, yields None and ends the walk; a tail shorter than a chunk
+    frame (12 bytes) ends it quietly. Never raises."""
+    import struct
+    import zlib
+
+    if not b.startswith(_PNG_MAGIC):
+        yield None
+        return
+    pos = 8
+    while pos + 12 <= len(b):
+        (ln,) = struct.unpack_from(">I", b, pos)
+        end = pos + 12 + ln
+        body = b[pos + 4 : end - 4]  # type + data
+        if end > len(b) or zlib.crc32(body) != int.from_bytes(b[end - 4 : end], "big"):
+            yield None
+            return
+        yield body[:4], body[4:]
+        pos = end
+
+
 def _png_filter_rows(raw, row_filter, bpp: int = 3) -> bytearray:
     """Filter an (h, stride) uint8 scanline grid into the PNG on-wire
     form — one filter-type byte + filtered bytes per row, the spec's
@@ -539,14 +560,6 @@ def _png_encode_rgb(
 
     import numpy as np
 
-    def chunk(ctype: bytes, payload: bytes) -> bytes:
-        body = ctype + payload
-        return (
-            struct.pack(">I", len(payload))
-            + body
-            + struct.pack(">I", zlib.crc32(body) & 0xFFFFFFFF)
-        )
-
     h, w = rgb.shape[0], rgb.shape[1]
     if palette and depth16:
         raise ValueError("palette entries are 8-bit by spec")
@@ -561,7 +574,7 @@ def _png_encode_rgb(
         if colors.shape[0] > 256:
             raise ValueError(f"palette overflow: {colors.shape[0]} colors")
         plane = inverse.astype(np.uint8).reshape(h, w, 1)
-        plte = chunk(b"PLTE", colors.astype(np.uint8).tobytes())
+        plte = _png_chunk(b"PLTE", colors.astype(np.uint8).tobytes())
         bpp = 1
     elif depth16:
         # 16-bit truecolor (r10, d127): big-endian sample bytes; the
@@ -589,7 +602,7 @@ def _png_encode_rgb(
     else:
         out = _png_filter_rows(plane.reshape(h, w * bpp), row_filter, bpp=bpp)
     stream = zlib.compress(bytes(out), 6)
-    ihdr = chunk(
+    ihdr = _png_chunk(
         b"IHDR",
         struct.pack(
             ">IIBBBBB",
@@ -604,41 +617,33 @@ def _png_encode_rgb(
     )
     if idat_split and len(stream) > 8:
         mid = len(stream) // 2
-        idat = chunk(b"IDAT", stream[:mid]) + chunk(b"IDAT", stream[mid:])
+        idat = _png_chunk(b"IDAT", stream[:mid]) + _png_chunk(b"IDAT", stream[mid:])
     else:
-        idat = chunk(b"IDAT", stream)
-    return b"\x89PNG\r\n\x1a\n" + ihdr + plte + idat + chunk(b"IEND", b"")
+        idat = _png_chunk(b"IDAT", stream)
+    return _PNG_MAGIC + ihdr + plte + idat + _png_chunk(b"IEND", b"")
 
 
 def _png_decode_rgb(b: bytes):
-    """Decode an 8-bit truecolor non-interlaced PNG to (w, h, rgb) with
-    full five-filter unfiltering, or None when out of scope or broken
-    (bad magic/CRC/zlib/length, non-truecolor IHDR, unknown filter)."""
+    """Decode a PNG in scope (8/16-bit truecolor or 8-bit palette, each
+    sequential or Adam7) to (w, h, pixels) with full five-filter
+    unfiltering, or None when out of scope or broken (bad magic, a chunk
+    cut short or failing its CRC, corrupt DEFLATE data, wrong lengths,
+    unknown filter, palette index past the PLTE)."""
     import struct
     import zlib
 
     import numpy as np
 
-    if b[:8] != b"\x89PNG\r\n\x1a\n":
-        return None
-    pos, w = 8, None
-    plte = None
+    w = plte = None
     idat = bytearray()
-    while pos + 12 <= len(b):
-        (ln,) = struct.unpack(">I", b[pos : pos + 4])
-        ctype = b[pos + 4 : pos + 8]
-        body = b[pos + 4 : pos + 8 + ln]
-        if len(body) != 4 + ln:
+    for ck in _png_chunks(b):
+        if ck is None:
             return None
-        (crc,) = struct.unpack(">I", b[pos + 8 + ln : pos + 12 + ln])
-        if zlib.crc32(body) & 0xFFFFFFFF != crc:
-            return None
+        ctype, body = ck
         if ctype == b"IHDR":
-            if ln != 13:
+            if len(body) != 13:
                 return None
-            w, h, depth, ctyp, comp, filt, inter = struct.unpack(
-                ">IIBBBBB", body[4:17]
-            )
+            w, h, depth, ctyp, comp, filt, inter = struct.unpack(">IIBBBBB", body)
             # scope (r10): truecolor at 8 or 16 bits and 8-bit palette,
             # each sequential or Adam7 — anything else degrades to skip
             if (
@@ -646,22 +651,24 @@ def _png_decode_rgb(b: bytes):
                 or comp != 0
                 or filt != 0
                 or inter not in (0, 1)
+                or w <= 0
+                or h <= 0
             ):
                 return None
-            if w <= 0 or h <= 0:
-                return None
         elif ctype == b"PLTE":
-            if ln % 3 != 0 or ln == 0 or ln > 768:
+            if len(body) % 3 != 0 or not 0 < len(body) <= 768:
                 return None
-            plte = np.frombuffer(body[4:], dtype=np.uint8).reshape(-1, 3)
+            plte = np.frombuffer(body, dtype=np.uint8).reshape(-1, 3)
         elif ctype == b"IDAT":
-            idat.extend(body[4:])
+            idat.extend(body)
         elif ctype == b"IEND":
             break
-        pos += 12 + ln
     if w is None or not idat:
         return None
-    raw = zlib.decompress(bytes(idat))
+    try:
+        raw = zlib.decompress(bytes(idat))
+    except zlib.error:
+        return None
     # bytes per pixel of the FILTERED stream; postprocessing below maps
     # the unfiltered byte planes to pixels per layout
     bpp = {(2, 8): 3, (2, 16): 6, (3, 8): 1}[(ctyp, depth)]
@@ -2612,44 +2619,30 @@ def parse_wet(
     """WET parsing — the conversion-record sibling of :func:`parse_warc`
     (Common Crawl ships crawl text as WET files: WARC/1.0 containers
     whose records are ``WARC-Type: conversion`` with a text/plain block
-    of exactly Content-Length bytes).  Same length-driven record walk,
-    same skip-never-error contract; emits one row per conversion
-    record: (id, n_records, target_uri, content_length, text).  Gzip
-    payloads inflate member-by-member first.  Pure mapInPandas, zero
-    shuffles."""
+    of exactly Content-Length bytes).  Same file read, same
+    skip-never-error contract; emits one row per conversion record:
+    (id, n_records, target_uri, content_length, text).  Pure
+    mapInPandas, zero shuffles."""
 
     def parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        inflate_members = _gz_inflate_members
-        records = _warc_split_records
-
         for pdf in batches:
             rows = []
             for i, buf in zip(pdf[id_col], pdf[payload_col]):
                 try:
-                    raw = bytes(buf)
-                    if raw[:2] == b"\x1f\x8b":
-                        raw = inflate_members(raw)
-                    recs = records(raw) if raw is not None else None
+                    recs = _warc_file_records(bytes(buf))
                 except Exception:
                     recs = None
-                if not recs:
-                    continue
-                for headers, block in recs:
-                    try:
-                        if headers.get("warc-type") != "conversion":
-                            continue
-                        clen = headers.get("content-length")
+                for headers, block in recs or ():
+                    if headers.get("warc-type") == "conversion":
                         rows.append(
                             (
                                 int(i),
                                 len(recs),
                                 headers.get("warc-target-uri"),
-                                int(clen) if clen is not None else None,
+                                int(headers["content-length"]),
                                 block.decode("utf-8", "replace"),
                             )
                         )
-                    except Exception:
-                        continue
             yield pd.DataFrame(
                 rows,
                 columns=[
@@ -2722,41 +2715,60 @@ def synth_warc_gz(
     )
 
 
-def _gz_inflate_members(b: bytes):
-    """Inflate a multi-member gzip stream (the ``.warc.gz`` layout):
-    each decompressobj consumes ONE member; unused_data carries the
-    next member's bytes. None on truncation."""
-    import zlib
-
-    out = bytearray()
-    buf = b
-    while buf:
-        d = zlib.decompressobj(wbits=47)  # gzip header + window
-        out.extend(d.decompress(buf))
-        out.extend(d.flush())
-        if not d.eof:  # truncated member
-            return None
-        buf = d.unused_data
-    return bytes(out)
-
-
 def _gz_member_spans(b: bytes):
-    """(offset, length, inflated_bytes) per gzip member — the byte
+    """The one gzip member walk: (offset, length, inflated_bytes) per
+    member of a multi-member stream (the ``.warc.gz`` layout) — the byte
     geometry a CDX index records so one record can be fetched without
-    touching the rest of the file (r10, d129). None on truncation."""
+    touching the rest of the file (r10, d129). Each decompressobj
+    consumes ONE member; what it leaves unused starts the next. None
+    when a member is cut short or corrupt. Never raises."""
     import zlib
 
     spans = []
     pos = 0
     while pos < len(b):
-        d = zlib.decompressobj(wbits=47)
-        chunk = d.decompress(b[pos:]) + d.flush()
+        d = zlib.decompressobj(wbits=47)  # gzip header + window
+        try:
+            chunk = d.decompress(b[pos:]) + d.flush()
+        except zlib.error:
+            return None
         if not d.eof:
             return None
         consumed = len(b) - pos - len(d.unused_data)
         spans.append((pos, consumed, chunk))
         pos += consumed
     return spans
+
+
+def _gz_inflate_members(b: bytes):
+    """The inflated bytes of a multi-member gzip stream, or None."""
+    spans = _gz_member_spans(b)
+    return None if spans is None else b"".join(chunk for _, _, chunk in spans)
+
+
+def _warc_file_records(b: bytes):
+    """The records of a plain or ``.warc.gz`` WARC file (gzip sniffed by
+    magic, inflated member by member), or None — the one read step of
+    :func:`parse_warc` and :func:`parse_wet`."""
+    if b[:2] == b"\x1f\x8b":
+        b = _gz_inflate_members(b)
+    return None if b is None else _warc_split_records(b)
+
+
+def _http_response_head(block: bytes):
+    """The one HTTP status-line reader: ``(status, body_start)`` of a
+    WARC response block, or None when the block does not start with
+    ``HTTP/``. ``status`` is the status line's 3-digit code when it lies
+    in 100–599 (RFC 9110), else None; ``body_start`` is the offset past
+    the blank line that ends the HTTP headers, None when there is none."""
+    if not block.startswith(b"HTTP/"):
+        return None
+    eol = block.find(b"\r\n")
+    parts = block[: eol if eol >= 0 else len(block)].split(b" ")
+    code = parts[1] if len(parts) > 1 else b""
+    ok = len(code) == 3 and code.isdigit() and 100 <= int(code) <= 599
+    end = block.find(b"\r\n\r\n")
+    return (int(code) if ok else None), (end + 4 if end >= 0 else None)
 
 
 def _warc_split_records(b: bytes):
@@ -2805,64 +2817,38 @@ def parse_warc(
     line + remaining bytes). Emits one row per response record:
     (id, n_records, warc_type, target_uri, http_status, body string) —
     body decoded UTF-8 so downstream codegen (html_main_text, quality
-    gates) chains directly. Gzip payloads (the ``.warc.gz`` on-disk
-    layout — one gzip member PER RECORD, members concatenated) are
-    sniffed by magic and inflated member-by-member with a stdlib
-    decompressobj loop before the record walk, so plain and compressed
-    crawls read through the same parser. Structurally broken files
-    degrade to skip. Scale: pure mapInPandas, zero shuffles; at 100 TB
-    one WARC file is one row of a binaryFile/payload table and the
-    fleet is embarrassingly parallel."""
+    gates) chains directly; http_status is null outside 100–599. Gzip
+    payloads (the ``.warc.gz`` on-disk layout — one gzip member PER
+    RECORD) read through the same parser. Structurally broken files,
+    and response blocks with no HTTP header end, degrade to skip.
+    Scale: pure mapInPandas, zero shuffles; at 100 TB one WARC file is
+    one row of a binaryFile/payload table and the fleet is
+    embarrassingly parallel."""
 
     def parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        inflate_members = _gz_inflate_members
-        records = _warc_split_records
-
         for pdf in batches:
             rows = []
             for i, buf in zip(pdf[id_col], pdf[payload_col]):
                 try:
-                    raw = bytes(buf)
-                    if raw[:2] == b"\x1f\x8b":  # gzip magic
-                        raw = inflate_members(raw)
-                    recs = records(raw) if raw is not None else None
+                    recs = _warc_file_records(bytes(buf))
                 except Exception:
                     recs = None
-                if not recs:
-                    continue
-                for headers, block in recs:
-                    # record-level guard (ADVICE r9): the skip-never-error
-                    # contract must hold PER RECORD too — e.g. an all-digit
-                    # status token past int32 range passes isdigit() but
-                    # overflows the declared int schema at Arrow conversion
-                    try:
-                        if headers.get("warc-type") != "response":
-                            continue
-                        http_end = block.find(b"\r\n\r\n")
-                        if http_end < 0 or not block.startswith(b"HTTP/"):
-                            continue
-                        status_line = block[: block.find(b"\r\n")].decode(
-                            "utf-8", "replace"
-                        )
-                        parts = status_line.split(" ")
-                        status = None
-                        if len(parts) > 1 and parts[1].isdigit() and len(parts[1]) == 3:
-                            s = int(parts[1])
-                            if 100 <= s <= 599:  # RFC 9110 status range
-                                status = s
-                        body = block[http_end + 4 :].decode("utf-8", "replace")
-                        rows.append(
-                            (
-                                int(i),
-                                len(recs),
-                                headers.get("warc-type"),
-                                headers.get("warc-target-uri"),
-                                status,
-                                body,
-                            )
-                        )
-                    except Exception:
+                for headers, block in recs or ():
+                    if headers.get("warc-type") != "response":
                         continue
+                    head = _http_response_head(block)
+                    if head is None or head[1] is None:
+                        continue
+                    rows.append(
+                        (
+                            int(i),
+                            len(recs),
+                            "response",
+                            headers.get("warc-target-uri"),
+                            head[0],
+                            block[head[1] :].decode("utf-8", "replace"),
+                        )
+                    )
             yield pd.DataFrame(
                 rows,
                 columns=[
@@ -2895,7 +2881,8 @@ def warc_gz_cdx_stats(
 
     coverage_ok = the member spans tile the file exactly (contiguous,
     ending at EOF); fetch_ok = every random-access fetch reproduced its
-    sequential record AND the response body matched. A geometry slip of
+    sequential record AND the response body matched; http_status is the
+    last response status in 100–599, else null. A geometry slip of
     even one byte breaks the member's gzip header and fails the fetch —
     the property that lets a 100 TB crawl serve single-record reads off
     an index instead of streaming whole files. Structurally broken
@@ -2941,15 +2928,9 @@ def warc_gz_cdx_stats(
                             fetch_ok = 0
                         if hdrs.get("warc-type") == "response":
                             n_resp += 1
-                            http_end = block.find(b"\r\n\r\n")
-                            if http_end >= 0 and block.startswith(b"HTTP/"):
-                                parts = block[: block.find(b"\r\n")].split(b" ")
-                                if (
-                                    len(parts) > 1
-                                    and parts[1].isdigit()
-                                    and len(parts[1]) == 3
-                                ):
-                                    status = int(parts[1])
+                            head = _http_response_head(block)
+                            if head and None not in head:
+                                status = head[0]
                     rows.append(
                         (
                             int(i),
@@ -3012,18 +2993,9 @@ def warc_gz_cdx_index(
                         if rec is None or len(rec) != 1:
                             continue
                         hdrs, block = rec[0]
-                        status = None
-                        if hdrs.get("warc-type") == "response" and block.startswith(
-                            b"HTTP/"
-                        ):
-                            parts = block[: block.find(b"\r\n")].split(b" ")
-                            if (
-                                len(parts) > 1
-                                and parts[1].isdigit()
-                                and len(parts[1]) == 3
-                                and 100 <= int(parts[1]) <= 599
-                            ):
-                                status = int(parts[1])
+                        head = None
+                        if hdrs.get("warc-type") == "response":
+                            head = _http_response_head(block)
                         rows.append(
                             (
                                 int(i),
@@ -3032,7 +3004,7 @@ def warc_gz_cdx_index(
                                 ln,
                                 hdrs.get("warc-type"),
                                 hdrs.get("warc-target-uri"),
-                                status,
+                                head[0] if head else None,
                             )
                         )
                 except Exception:
@@ -3083,27 +3055,19 @@ def warc_gz_indexed_fetch(
                 ok = 0
                 try:
                     raw = bytes(buf)[off : off + ln]
-                    chunk = _gz_inflate_members(raw) if raw[:2] == b"\x1f\x8b" else None
-                    rec = _warc_split_records(chunk) if chunk is not None else None
+                    rec = _warc_file_records(raw) if raw[:2] == b"\x1f\x8b" else None
                     if rec is not None and len(rec) == 1:
                         hdrs, block = rec[0]
                         wtype = hdrs.get("warc-type")
                         uri = hdrs.get("warc-target-uri")
                         ok = 1
-                        if wtype == "response" and block.startswith(b"HTTP/"):
-                            http_end = block.find(b"\r\n\r\n")
-                            parts = block[: block.find(b"\r\n")].split(b" ")
-                            if (
-                                len(parts) > 1
-                                and parts[1].isdigit()
-                                and len(parts[1]) == 3
-                                and 100 <= int(parts[1]) <= 599
-                            ):
-                                status = int(parts[1])
-                            if http_end >= 0:
-                                body = block[http_end + 4 :].decode(
-                                    "utf-8", "replace"
-                                )
+                        head = None
+                        if wtype == "response":
+                            head = _http_response_head(block)
+                        if head:
+                            status, start = head
+                            if start is not None:
+                                body = block[start:].decode("utf-8", "replace")
                 except Exception:
                     ok = 0
                 rows.append((i, off, ok, wtype, uri, status, body))
@@ -3120,6 +3084,74 @@ def warc_gz_indexed_fetch(
         f"{id_col} long, offset long, fetch_ok int, warc_type string, "
         "target_uri string, http_status int, body string",
     )
+
+
+class _Y4m(NamedTuple):
+    """A YUV4MPEG2 stream as :func:`_y4m_read` finds it."""
+
+    tags: list  # the raw header tokens after the magic, in order
+    w: int
+    h: int
+    fps: tuple | None  # the F tag as (num, den); None if absent or bad
+    cw: int  # chroma plane width
+    ch: int  # chroma plane height
+    frames: list  # (marker_start, data_start) of each whole frame
+
+    @property
+    def frame_bytes(self) -> int:
+        return self.w * self.h + 2 * self.cw * self.ch
+
+
+def _y4m_read(b: bytes):
+    """The one YUV4MPEG2 reader: a :class:`_Y4m`, or None when ``b``
+    lacks the magic or the header line, W or H is not a positive
+    integer, or the chroma layout (C tag; 420 when absent) is neither
+    444 nor 420 or leaves an empty plane. The last of a repeated tag
+    wins. The frame walk consumes FRAME parameters to the newline and
+    stops at the first bad marker or cut-short frame, keeping the whole
+    frames before it. Never raises."""
+    nl = b.find(b"\n")
+    if nl < 0 or not b.startswith(b"YUV4MPEG2"):
+        return None
+    tags = b[:nl].split(b" ")[1:]
+    val = {t[:1]: t[1:] for t in tags}
+    try:
+        w, h = int(val[b"W"]), int(val[b"H"])
+    except (KeyError, ValueError):
+        return None
+    chroma = val.get(b"C", b"420")
+    if w <= 0 or h <= 0 or not chroma.startswith((b"444", b"420")):
+        return None
+    cw, ch = (w, h) if chroma.startswith(b"444") else (w // 2, h // 2)
+    if not cw or not ch:
+        return None
+    try:
+        num, den = map(int, val[b"F"].split(b":"))
+        fps = (num, den) if num > 0 and den > 0 else None
+    except (KeyError, ValueError):
+        fps = None
+    vid = _Y4m(tags, w, h, fps, cw, ch, [])
+    pos = nl + 1
+    while b.startswith(b"FRAME", pos):
+        fnl = b.find(b"\n", pos)
+        if fnl < 0 or fnl + 1 + vid.frame_bytes > len(b):
+            break
+        vid.frames.append((pos, fnl + 1))
+        pos = fnl + 1 + vid.frame_bytes
+    return vid
+
+
+def _y4m_header(tags=(b"W", b"H", b"F25:1", b"Ip", b"A1:1", b"C444"), **new) -> bytes:
+    """The one YUV4MPEG2 header writer: the magic, then ``tags`` in
+    order, each tag whose letter is a keyword of ``new`` set to that
+    value (``W=8`` turns b"W16" into b"W8"). The default tags are the
+    fixture header, whose W and H the caller sets."""
+    out = [b"YUV4MPEG2"]
+    for t in tags:
+        k = t[:1].decode("latin-1")
+        out.append(t[:1] + str(new[k]).encode() if k in new else t)
+    return b" ".join(out) + b"\n"
+
 
 def synth_y4m(
     df: DataFrame,
@@ -3147,9 +3179,7 @@ def synth_y4m(
         ybase = (3 * yx + 5 * yy).astype(np.int64)
         cy, cx = np.meshgrid(np.arange(ch), np.arange(cw), indexing="ij")
         cbase = (3 * cx + 5 * cy).astype(np.int64)
-        header = (
-            f"YUV4MPEG2 W{width} H{height} F25:1 Ip A1:1 C{chroma}\n".encode()
-        )
+        header = _y4m_header(W=width, H=height, C=chroma)
         for pdf in batches:
             out = []
             for i in pdf[id_col]:
@@ -3208,9 +3238,7 @@ def synth_textured_y4m(
         )
         quad = (xx * xx + 2 * xx * yy + 3 * yy * yy).astype(np.int64)
         lin = (xx + 7 * yy + 13).astype(np.int64)
-        header = (
-            f"YUV4MPEG2 W{width} H{height} F25:1 Ip A1:1 C444\n".encode()
-        )
+        header = _y4m_header(W=width, H=height)
         for pdf in batches:
             out = []
             for i in pdf[id_col]:
@@ -3238,15 +3266,13 @@ def y4m_frame_sample(
     every_n: int = 2,
 ) -> DataFrame:
     """Y4M frame-sampling + per-frame features — the video tier's
-    decode / frame-sample step over a REAL container: parse the
-    YUV4MPEG2 stream header (W/H/C parameters; C444 and C420 plane
-    geometry both supported), walk the FRAME markers (parameters after
-    FRAME, if any, run to the newline per spec), keep every
-    ``every_n``-th frame, and emit per sampled frame the plane means
-    plus a POSITION-WEIGHTED luma checksum sum(Y[y][x]*(x+1)*(y+2))
-    that a transposed, flipped, or off-by-one-plane parse cannot fake
-    (the d99 certification trick).  Malformed streams (bad magic,
-    truncated frame) skip — a poison stream never kills the fleet.
+    decode / frame-sample step over a REAL container (C444 and C420,
+    read by :func:`_y4m_read`): keep every ``every_n``-th frame and
+    emit per sampled frame the plane means plus a POSITION-WEIGHTED
+    luma checksum sum(Y[y][x]*(x+1)*(y+2)) that a transposed, flipped,
+    or off-by-one-plane parse cannot fake (the d99 certification
+    trick).  Streams the reader rejects skip; a cut-short last frame
+    drops — a poison stream never kills the fleet.
 
     Returns (id, frame_no, width, height, n_frames, y_mean, u_mean,
     v_mean, y_pos_sum).  Scale: frame sampling is the pipeline's data
@@ -3264,39 +3290,11 @@ def y4m_frame_sample(
             rows = []
             for i, buf in zip(pdf[id_col], pdf[payload_col]):
                 b = bytes(buf)
-                nl = b.find(b"\n")
-                if nl < 0 or not b.startswith(b"YUV4MPEG2"):
+                vid = _y4m_read(b)
+                if vid is None:
                     continue
-                w = h = None
-                chroma = "420"  # the spec default when no C tag
-                for tok in b[:nl].split(b" ")[1:]:
-                    if tok[:1] == b"W":
-                        w = int(tok[1:])
-                    elif tok[:1] == b"H":
-                        h = int(tok[1:])
-                    elif tok[:1] == b"C":
-                        chroma = tok[1:].decode("ascii", "replace")
-                if not w or not h:
-                    continue
-                if chroma.startswith("444"):
-                    csize = w * h
-                elif chroma.startswith("420"):
-                    csize = (w // 2) * (h // 2)
-                else:
-                    continue  # 422/mono: not in fixture scope
-                frame_bytes = w * h + 2 * csize
-                # first pass: count frames (n_frames is part of the output)
-                frames = []
-                pos = nl + 1
-                while pos < len(b):
-                    if b[pos : pos + 5] != b"FRAME":
-                        break  # malformed marker: stop, keep prior frames
-                    fnl = b.find(b"\n", pos)
-                    if fnl < 0 or fnl + 1 + frame_bytes > len(b):
-                        break  # truncated frame drops
-                    frames.append(fnl + 1)
-                    pos = fnl + 1 + frame_bytes
-                for f, start in enumerate(frames):
+                w, h, csize = vid.w, vid.h, vid.cw * vid.ch
+                for f, (_, start) in enumerate(vid.frames):
                     if f % every_n:
                         continue
                     y = (
@@ -3318,7 +3316,7 @@ def y4m_frame_sample(
                             f,
                             w,
                             h,
-                            len(frames),
+                            len(vid.frames),
                             round(float(y.sum()) / (w * h), 6),
                             round(float(u.sum()) / csize, 6),
                             round(float(v.sum()) / csize, 6),
@@ -4164,8 +4162,8 @@ def y4m_trim(
     selected FRAME blobs verbatim; no plane decode, no re-encode), the
     video twin of the audio tier's sample-range ops and the d167
     trimmed-copy fixture generator.  ``count=None`` keeps everything
-    from ``start``.  Streams left with zero frames, or malformed
-    streams, skip (poison contract).  Scale: pure Arrow mapInPandas,
+    from ``start``.  Streams left with zero frames, or streams
+    :func:`_y4m_read` rejects, skip (poison contract).  Scale: pure Arrow mapInPandas,
     zero shuffles, output bytes <= input bytes."""
     if start < 0 or (count is not None and count < 1):
         raise ValueError("y4m_trim: start >= 0 and count >= 1 required")
@@ -4175,42 +4173,17 @@ def y4m_trim(
             rows = []
             for i, buf in zip(pdf[id_col], pdf[payload_col]):
                 b = bytes(buf)
-                nl = b.find(b"\n")
-                if nl < 0 or not b.startswith(b"YUV4MPEG2"):
+                vid = _y4m_read(b)
+                if vid is None:
                     continue
-                w = h = None
-                chroma = "420"
-                for tok in b[:nl].split(b" ")[1:]:
-                    if tok[:1] == b"W":
-                        w = int(tok[1:])
-                    elif tok[:1] == b"H":
-                        h = int(tok[1:])
-                    elif tok[:1] == b"C":
-                        chroma = tok[1:].decode("ascii", "replace")
-                if not w or not h:
-                    continue
-                if chroma.startswith("444"):
-                    csize = w * h
-                elif chroma.startswith("420"):
-                    csize = (w // 2) * (h // 2)
-                else:
-                    continue
-                frame_bytes = w * h + 2 * csize
-                frames = []  # (marker_start, data_end) byte ranges
-                pos = nl + 1
-                while pos < len(b):
-                    if b[pos : pos + 5] != b"FRAME":
-                        break
-                    fnl = b.find(b"\n", pos)
-                    if fnl < 0 or fnl + 1 + frame_bytes > len(b):
-                        break
-                    frames.append((pos, fnl + 1 + frame_bytes))
-                    pos = fnl + 1 + frame_bytes
-                stop = len(frames) if count is None else start + count
-                keep = frames[start:stop]
+                stop = None if count is None else start + count
+                keep = vid.frames[start:stop]
                 if not keep:
                     continue
-                out = b[: nl + 1] + b"".join(b[s:e] for s, e in keep)
+                # the header verbatim: it ends where frame 0's marker starts
+                out = b[: vid.frames[0][0]] + b"".join(
+                    b[m : d + vid.frame_bytes] for m, d in keep
+                )
                 rows.append((int(i), out))
             yield pd.DataFrame(rows, columns=[id_col, "payload"])
 
@@ -4336,45 +4309,6 @@ def _warn_unvalved(op_name: str, max_bucket_size: int | None) -> None:
         )
 
 
-def _parse_y4m(b: bytes):
-    """Parse a YUV4MPEG2 stream into (w, h, csize, [frame data starts]).
-    Returns None on bad magic / missing geometry / unsupported chroma;
-    truncated or malformed frames stop the walk (prior frames kept) —
-    the house y4m poison contract."""
-    nl = b.find(b"\n")
-    if nl < 0 or not b.startswith(b"YUV4MPEG2"):
-        return None
-    w = h = None
-    chroma = "420"  # the spec default when no C tag
-    for tok in b[:nl].split(b" ")[1:]:
-        if tok[:1] == b"W":
-            w = int(tok[1:])
-        elif tok[:1] == b"H":
-            h = int(tok[1:])
-        elif tok[:1] == b"C":
-            chroma = tok[1:].decode("ascii", "replace")
-    if not w or not h:
-        return None
-    if chroma.startswith("444"):
-        csize = w * h
-    elif chroma.startswith("420"):
-        csize = (w // 2) * (h // 2)
-    else:
-        return None
-    frame_bytes = w * h + 2 * csize
-    starts = []
-    pos = nl + 1
-    while pos < len(b):
-        if b[pos : pos + 5] != b"FRAME":
-            break
-        fnl = b.find(b"\n", pos)
-        if fnl < 0 or fnl + 1 + frame_bytes > len(b):
-            break
-        starts.append(fnl + 1)
-        pos = fnl + 1 + frame_bytes
-    return w, h, csize, starts
-
-
 def y4m_rescale_area(
     df: DataFrame,
     payload_col: str = "payload",
@@ -4386,10 +4320,11 @@ def y4m_rescale_area(
     rescaled-copy fixture generator: every plane pixel of the output
     is the rounded mean of its ``factor × factor`` source block,
     ``floor((block_sum + factor²/2) / factor²)`` — integer-exact
-    round-half-up, oracle-replayable.  The container is rebuilt with
-    the scaled W/H tags; frame count, chroma layout, and frame order
-    are untouched.  Streams whose plane dimensions are not divisible
-    by ``factor`` skip (poison contract), as do malformed streams.
+    round-half-up, oracle-replayable.  The header keeps every input
+    tag but W and H, which it scales (the F rate survives); frame
+    count, chroma layout, and frame order are untouched.  Streams
+    whose plane dimensions are not divisible by ``factor`` skip
+    (poison contract), as do streams :func:`_y4m_read` rejects.
     Scale: pure Arrow mapInPandas, zero shuffles, output bytes =
     input bytes / factor²."""
     if factor < 2:
@@ -4414,38 +4349,19 @@ def y4m_rescale_area(
             rows = []
             for i, buf in zip(pdf[id_col], pdf[payload_col]):
                 b = bytes(buf)
-                parsed = _parse_y4m(b)
-                if parsed is None:
-                    continue
-                w, h, csize, starts = parsed
-                cw = w if csize == w * h else w // 2
-                chh = h if csize == w * h else h // 2
-                if (
-                    w % factor or h % factor or cw % factor
-                    or chh % factor or not starts
+                vid = _y4m_read(b)
+                if vid is None or not vid.frames or any(
+                    n % factor for n in (vid.w, vid.h, vid.cw, vid.ch)
                 ):
                     continue
-                ctag = "444" if csize == w * h else "420"
-                parts = [
-                    (
-                        f"YUV4MPEG2 W{w // factor} H{h // factor} F25:1 "
-                        f"Ip A1:1 C{ctag}\n"
-                    ).encode()
-                ]
-                for start in starts:
+                w, h, cw, chh = vid.w, vid.h, vid.cw, vid.ch
+                parts = [_y4m_header(vid.tags, W=w // factor, H=h // factor)]
+                for _, start in vid.frames:
                     parts.append(b"FRAME\n")
-                    y = np.frombuffer(b, np.uint8, w * h, start).reshape(
-                        h, w
-                    )
-                    u = np.frombuffer(
-                        b, np.uint8, csize, start + w * h
-                    ).reshape(chh, cw)
-                    v = np.frombuffer(
-                        b, np.uint8, csize, start + w * h + csize
-                    ).reshape(chh, cw)
-                    parts.append(shrink(y))
-                    parts.append(shrink(u))
-                    parts.append(shrink(v))
+                    offs = (start, start + w * h, start + w * h + cw * chh)
+                    for off, (ph, pw) in zip(offs, ((h, w), (chh, cw), (chh, cw))):
+                        plane = np.frombuffer(b, np.uint8, ph * pw, off)
+                        parts.append(shrink(plane.reshape(ph, pw)))
                 rows.append((int(i), b"".join(parts)))
             yield pd.DataFrame(rows, columns=[id_col, payload_col])
 
@@ -4511,14 +4427,12 @@ def y4m_frame_grid_sig(
             rows = []
             for i, buf in zip(pdf[id_col], pdf[payload_col]):
                 b = bytes(buf)
-                parsed = _parse_y4m(b)
-                if parsed is None:
+                vid = _y4m_read(b)
+                if vid is None or vid.w % grid or vid.h % grid:
                     continue
-                w, h, csize, starts = parsed
-                if w % grid or h % grid:
-                    continue
+                w, h = vid.w, vid.h
                 bh, bw = h // grid, w // grid
-                for f, start in enumerate(starts):
+                for f, (_, start) in enumerate(vid.frames):
                     y = np.frombuffer(b, np.uint8, w * h, start).reshape(
                         h, w
                     )
@@ -4529,7 +4443,7 @@ def y4m_frame_grid_sig(
                     )
                     rows.append(
                         (
-                            int(i), f, len(starts), w, h,
+                            int(i), f, len(vid.frames), w, h,
                             _pack_gradient_signs(sums, grid),
                         )
                     )
@@ -4584,26 +4498,6 @@ def video_rescale_near_dup(
     )
 
 
-def _parse_y4m_fps(b: bytes):
-    """Read the YUV4MPEG2 F (frame rate) header tag → (num, den) or
-    None when absent/malformed.  The spec writes the rate as
-    ``F<num>:<den>`` (e.g. F25:1, F30000:1001); streams without it
-    carry no timebase, so the fps-anchored ops skip them (poison
-    contract)."""
-    nl = b.find(b"\n")
-    if nl < 0 or not b.startswith(b"YUV4MPEG2"):
-        return None
-    for tok in b[:nl].split(b" ")[1:]:
-        if tok[:1] == b"F":
-            try:
-                num, den = tok[1:].split(b":")
-                num, den = int(num), int(den)
-            except ValueError:
-                return None
-            return (num, den) if num > 0 and den > 0 else None
-    return None
-
-
 def y4m_decimate(
     df: DataFrame,
     payload_col: str = "payload",
@@ -4615,8 +4509,8 @@ def y4m_decimate(
     tag's denominator (``F25:1`` → ``F25:5`` at every_n=5) so the
     retained frames keep their ORIGINAL timestamps — the frame-rate
     twin of :func:`y4m_rescale_area` and the d177 re-encoded-copy
-    fixture generator.  Streams without an F tag, or malformed
-    streams, skip (poison contract).  Scale: pure Arrow mapInPandas,
+    fixture generator.  Streams without a valid F tag, or streams
+    :func:`_y4m_read` rejects, skip (poison contract).  Scale: pure Arrow mapInPandas,
     zero shuffles, output bytes <= input bytes."""
     if every_n < 1:
         raise ValueError("y4m_decimate: every_n must be >= 1")
@@ -4626,29 +4520,12 @@ def y4m_decimate(
             rows = []
             for i, buf in zip(pdf[id_col], pdf[payload_col]):
                 b = bytes(buf)
-                parsed = _parse_y4m(b)
-                fps = _parse_y4m_fps(b)
-                if parsed is None or fps is None:
+                vid = _y4m_read(b)
+                if vid is None or vid.fps is None or not vid.frames:
                     continue
-                w, h, csize, starts = parsed
-                if not starts:
-                    continue
-                nl = b.find(b"\n")
-                num, den = fps
-                toks = [
-                    b"F%d:%d" % (num, den * every_n)
-                    if tok[:1] == b"F"
-                    else tok
-                    for tok in b[:nl].split(b" ")
-                ]
-                frame_bytes = w * h + 2 * csize
-                # each frame blob runs from its FRAME marker to data
-                # end; the marker begins at the previous data end (or
-                # the header newline for frame 0)
-                marker = [nl + 1] + [s + frame_bytes for s in starts[:-1]]
-                keep = list(range(0, len(starts), every_n))
-                out = b" ".join(toks) + b"\n" + b"".join(
-                    b[marker[f] : starts[f] + frame_bytes] for f in keep
+                num, den = vid.fps
+                out = _y4m_header(vid.tags, F=f"{num}:{den * every_n}") + b"".join(
+                    b[m : d + vid.frame_bytes] for m, d in vid.frames[::every_n]
                 )
                 rows.append((int(i), out))
             yield pd.DataFrame(rows, columns=[id_col, "payload"])
@@ -4693,22 +4570,22 @@ def y4m_tick_grid_sig(
             rows = []
             for i, buf in zip(pdf[id_col], pdf[payload_col]):
                 b = bytes(buf)
-                parsed = _parse_y4m(b)
-                fps = _parse_y4m_fps(b)
-                if parsed is None or fps is None:
+                vid = _y4m_read(b)
+                if (
+                    vid is None or vid.fps is None or not vid.frames
+                    or vid.w % grid or vid.h % grid
+                ):
                     continue
-                w, h, csize, starts = parsed
-                if w % grid or h % grid or not starts:
-                    continue
-                num, den = fps
+                w, h = vid.w, vid.h
+                num, den = vid.fps
                 bh, bw = h // grid, w // grid
                 # ticks whose displayed frame exists: frame index
                 # (k*num) // (den*tick_hz) < n_frames
-                n_ticks = -(-len(starts) * den * tick_hz // num)
+                n_ticks = -(-len(vid.frames) * den * tick_hz // num)
                 for k in range(n_ticks):
                     f = k * num // (den * tick_hz)
                     y = np.frombuffer(
-                        b, np.uint8, w * h, starts[f]
+                        b, np.uint8, w * h, vid.frames[f][1]
                     ).reshape(h, w)
                     sums = (
                         y.reshape(grid, bh, grid, bw)

@@ -141,6 +141,7 @@ def test_example_scripts_run(spark):
         ("release_audit", ("/root/testdata/sf0.001", tempfile.mkdtemp())),
         ("crawl_pipeline", ("/root/testdata/sf0.001",)),
         ("cleaning_ladder", ("/root/testdata/sf0.001",)),
+        ("media_pipeline", ("/root/testdata/sf0.001",)),
     ):
         path = os.path.join(root, "examples", f"{name}.py")
         spec = importlib.util.spec_from_file_location(f"examples_{name}", path)

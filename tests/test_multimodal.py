@@ -231,6 +231,17 @@ def test_png_decode_skips_corrupt_and_out_of_scope(spark):
     assert {r.doc_id for r in out} == {1}
     assert len(out) == 3
 
+    # the decoder itself returns None (no zlib.error, no struct.error)
+    # on an IDAT whose CRC holds but whose DEFLATE data is not, and on
+    # a chunk whose CRC field is cut short
+    head = b"\x89PNG\r\n\x1a\n" + chunk(
+        b"IHDR", struct.pack(">IIBBBBB", 2, 2, 8, 2, 0, 0, 0)
+    )
+    bad_deflate = head + chunk(b"IDAT", b"not deflate") + chunk(b"IEND", b"")
+    cut_crc = head + chunk(b"IDAT", zlib.compress(b"\x00" * 14))[:-2]
+    assert multimodal._png_decode_rgb(bad_deflate) is None
+    assert multimodal._png_decode_rgb(cut_crc) is None
+
 
 def test_bmp_decode_honors_pixel_offset(spark):
     """A BMP whose pixel array does not start at byte 54 (e.g. a color
@@ -1191,6 +1202,30 @@ def test_warc_cdx_random_access_and_guards(spark):
     got = {r.doc_id for r in multimodal.warc_gz_cdx_stats(df, "payload", "doc_id").collect()}
     assert got == {12}, got
 
+    # a status outside 100-599 reads as null in every WARC reader
+    import gzip
+
+    recs = multimodal._warc_records(13, "https://h.com/p/13", "<p>x</p>")
+    recs[1] = recs[1].replace(b"HTTP/1.1 200 OK", b"HTTP/1.1 999 OK")
+    odd = spark.createDataFrame(
+        [(13, bytearray(b"".join(gzip.compress(r, mtime=0) for r in recs)))],
+        "doc_id long, payload binary",
+    )
+    idx = multimodal.warc_gz_cdx_index(odd).filter("warc_type = 'response'")
+    fetch = multimodal.warc_gz_indexed_fetch(
+        odd.join(idx.select("doc_id", "offset", "length"), "doc_id")
+    )
+    statuses = {
+        name: [r.http_status for r in out.collect()]
+        for name, out in (
+            ("parse_warc", multimodal.parse_warc(odd)),
+            ("warc_gz_cdx_stats", multimodal.warc_gz_cdx_stats(odd)),
+            ("warc_gz_cdx_index", idx),
+            ("warc_gz_indexed_fetch", fetch),
+        )
+    }
+    assert statuses == {name: [None] for name in statuses}, statuses
+
 
 def test_cdx_index_write_and_indexed_fetch_via_engine_storage(spark, tmp_path):
     """d135: the index a crawler WRITES during ingest round-trips through
@@ -1411,6 +1446,50 @@ def test_y4m_c420_parse_every_frame_and_poison_skip(spark):
     # doc 5 has 3 + 5 % 4 = 4 frames intact; doc 91 lost its last frame
     assert len(by_doc[5]) == 4
     assert len(by_doc[91]) == 3 and all(r.n_frames == 3 for r in by_doc[91])
+
+    # header poison through EVERY y4m reader in one job: each bad row
+    # skips, the control (doc 5) comes out of every op, and the rows
+    # without a usable frame rate skip only in the ops that need one
+    head_end = good.index(b"\n") + 1
+    first_frame = good[head_end : head_end + 6 + 3 * 16 * 16]
+    bad_header = {
+        92: good.replace(b"W16", b"WABC", 1),
+        93: good.replace(b"W16", b"W0", 1),
+        94: good.replace(b"W16 H16", b"W-16 H-16", 1),
+        95: good.replace(b"C444", b"C422", 1),
+        96: good[:head_end] + first_frame[:-10],  # only frame cut short
+        100: good.replace(b"W16 H16", b"W1 H1", 1).replace(b"C444", b"C420", 1),
+    }
+    bad_fps = {
+        97: good.replace(b"F25:1", b"F25:0", 1),
+        98: good.replace(b"F25:1", b"Fx:1", 1),
+        99: good.replace(b" F25:1", b"", 1),
+    }
+    rows = [(5, good), *bad_header.items(), *bad_fps.items()]
+    streams = spark.createDataFrame(
+        pd.DataFrame(rows, columns=["doc_id", "payload"]),
+        "doc_id long, payload binary",
+    )
+    readers = {
+        "y4m_frame_sample": multimodal.y4m_frame_sample(streams, every_n=1),
+        "y4m_trim": multimodal.y4m_trim(streams),
+        "y4m_rescale_area": multimodal.y4m_rescale_area(streams),
+        "y4m_frame_grid_sig": multimodal.y4m_frame_grid_sig(streams),
+        "y4m_decimate": multimodal.y4m_decimate(streams),
+        "y4m_tick_grid_sig": multimodal.y4m_tick_grid_sig(streams),
+    }
+    kept = functools.reduce(
+        DataFrame.unionByName,
+        [
+            out.select(F.lit(name).alias("op"), "doc_id").distinct()
+            for name, out in readers.items()
+        ],
+    ).collect()
+    need_fps = {"y4m_decimate", "y4m_tick_grid_sig"}
+    want = {(name, 5) for name in readers} | {
+        (name, i) for name in set(readers) - need_fps for i in bad_fps
+    }
+    assert {(r.op, r.doc_id) for r in kept} == want
 
 
 def test_resize_area_geometry_and_rounding(spark):
@@ -2121,6 +2200,22 @@ def test_video_rescale_near_dup_and_grid_sig(spark):
     )
     assert multimodal.y4m_rescale_area(bad).count() == 0
     assert multimodal.y4m_frame_grid_sig(bad).count() == 0
+
+    # the rescaled header keeps every input tag but W and H: an NTSC
+    # frame rate and a chroma siting suffix survive the rescale
+    src = bytes(
+        multimodal.synth_y4m(ids.limit(1), chroma="420").collect()[0].payload
+    )
+    ntsc = src.replace(b"F25:1", b"F30000:1001", 1).replace(
+        b"C420", b"C420jpeg", 1
+    )
+    ntsc_df = spark.createDataFrame(
+        [(2, bytearray(ntsc))], "doc_id long, payload binary"
+    )
+    out = multimodal.y4m_rescale_area(ntsc_df).collect()
+    assert bytes(out[0].payload).split(b"\n", 1)[0] == (
+        b"YUV4MPEG2 W8 H8 F30000:1001 Ip A1:1 C420jpeg"
+    )
     with _pytest.raises(ValueError, match="factor"):
         multimodal.y4m_rescale_area(orig, factor=1)
     with _pytest.raises(ValueError, match="grid"):
