@@ -7,9 +7,11 @@ only flow through stages that touch them (column pruning drops them
 elsewhere — the key to 100 TB pipelines with heavy media columns).
 
 Decode / feature-extraction run as Arrow-batched `mapInPandas` over the
-binary column. No media library ships in this container, so the codecs
-here are implemented FROM FIRST PRINCIPLES and oracle-certified — by
-round 10 the modeled-format ladder is closed:
+binary column, through one row driver (`_map_rows`): a null payload reads
+as b"", which every reader rejects, so it never fails a job. No media
+library ships in this container, so the codecs here are implemented FROM
+FIRST PRINCIPLES and oracle-certified — by round 10 the modeled-format
+ladder is closed:
 
 * containers: PNG/RIFF/MP4 header walks, WARC/1.0 + `.warc.gz`
   (member-per-record) ingestion, CDX-style (offset, length) random
@@ -31,6 +33,7 @@ from __future__ import annotations
 
 from typing import Iterator, NamedTuple
 
+import numpy as np
 import pandas as pd
 
 from pyspark.sql import DataFrame
@@ -51,28 +54,44 @@ def attach_binary_payload(df: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def _synth_payloads(df: DataFrame, id_col: str, make) -> DataFrame:
-    """The (id, payload binary) frame of a ``synth_*`` fixture: one
-    ``make(i) -> bytes`` call per id, as Arrow-batched mapInPandas
-    (binary construction is Python-side by design — the UDF tier of the
-    multimodal surface)."""
+def _ddl_names(schema: str) -> list:
+    """The column names of a flat DDL schema (``"a long, b binary"``)."""
+    return [field.split()[0] for field in schema.split(",")]
 
-    def payloads(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+
+def _payload(v) -> bytes:
+    """A binary cell as bytes. A null payload reads as b"", which every
+    reader treats as malformed, so a null row never fails a job."""
+    return b"" if v is None else bytes(v)
+
+
+def _map_rows(df: DataFrame, cols: list, schema: str, fn) -> DataFrame:
+    """The one Arrow row driver of the payload operators and ``synth_*``
+    fixtures: project ``df`` to ``cols``, call ``fn(*values)`` once per
+    row (binary columns as :func:`_payload` bytes, the rest as Python
+    values; a null int arrives as NaN) and emit every tuple it yields as
+    a row of the DDL ``schema``. Zero shuffles."""
+    from pyspark.sql.types import BinaryType
+
+    names = _ddl_names(schema)
+    binary = [isinstance(df.schema[c].dataType, BinaryType) for c in cols]
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            yield pd.DataFrame(
-                [(int(i), make(int(i))) for i in pdf[id_col]],
-                columns=[id_col, "payload"],
-            )
+            vals = [
+                [_payload(v) for v in pdf[c]] if is_bin else pdf[c].tolist()
+                for c, is_bin in zip(cols, binary)
+            ]
+            rows = [row for v in zip(*vals) for row in fn(*v)]
+            yield pd.DataFrame(rows, columns=names)
 
-    return df.select(id_col).mapInPandas(payloads, f"{id_col} long, payload binary")
+    return df.select(*cols).mapInPandas(run, schema)
 
 
 def _pattern_rgb(i: int, w: int, h: int):
     """The d93 test frame: (h, w, 3) uint8 with pixel (x, y, c) =
     (7·i + 3·x + 5·y + 11·c) mod 256 — shared by the raw, BMP/PPM and
     PNG fixtures, so every image oracle replays one formula."""
-    import numpy as np
-
     y, x, c = np.meshgrid(np.arange(h), np.arange(w), np.arange(3), indexing="ij")
     return ((7 * i + 3 * x + 5 * y + 11 * c) % 256).astype(np.uint8)
 
@@ -122,8 +141,6 @@ def _wav_pcm16_mono(b: bytes):
     """``(sample_rate, int16 samples)`` of a PCM, mono, 16-bit WAV whose
     data chunk is complete (and a whole number of samples), else None —
     the sample reader every audio operator uses."""
-    import numpy as np
-
     got = _wav_chunks(b)
     if got is None:
         return None
@@ -150,8 +167,6 @@ def _int_dft_basis(n_bins: int, frame_len: int):
     int64: Ck[t] = round_half_away(cos(2·pi·k·t/frame_len) · 10^6)
     (resp. sin), so a frame's re/im at bins 0..n_bins-1 are exact int64
     matmuls an oracle replays."""
-    import numpy as np
-
     k = np.arange(n_bins).reshape(-1, 1).astype(np.float64)
     t = np.arange(frame_len).reshape(1, -1).astype(np.float64)
     ang = 2 * np.pi * k * t / frame_len
@@ -178,8 +193,8 @@ def synth_media_payload(
     id arithmetically, an engine-independent oracle can certify the whole
     encode→parse round trip without any codec library.
 
-    Runs as Arrow-batched mapInPandas (binary construction is Python-side
-    by design — this IS the UDF tier of the multimodal surface)."""
+    Binary construction is Python-side by design — this IS the UDF tier
+    of the multimodal surface."""
 
     import struct
 
@@ -235,17 +250,11 @@ def synth_media_payload(
         n_samples = 1000 + i % 100
         return _wav_pcm16(b"\x00" * (n_samples * ch * 2), sr, ch)
 
-    def payload(i: int) -> bytes:
-        if kinds == 3:
-            return png(i) if i % 3 == 0 else wav(i) if i % 3 == 1 else mp4(i)
-        return (
-            png(i) if i % 4 == 0
-            else wav(i) if i % 4 == 1
-            else mp4(i) if i % 4 == 2
-            else jpeg(i)
-        )
+    def payload(i: int):
+        k = i % 3 if kinds == 3 else i % 4
+        yield i, (png, wav, mp4, jpeg)[k](i)
 
-    return _synth_payloads(df, id_col, payload)
+    return _map_rows(df, [id_col], f"{id_col} long, payload binary", payload)
 
 
 def parse_media_headers(
@@ -258,89 +267,73 @@ def parse_media_headers(
     training pipeline runs BEFORE decode — and the one tier that needs no
     codecs.
 
-    Arrow-batched mapInPandas; unparseable payloads degrade to
-    format='unknown' with null fields, never an executor error."""
+    Unparseable payloads degrade to format='unknown' with null fields,
+    never an executor error."""
+    import struct
 
-    def parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import struct
+    def header(b: bytes) -> tuple:
+        # PNG: the first chunk, CRC-checked, must be the IHDR
+        ck = next(_png_chunks(b), None) if len(b) >= 33 else None
+        if ck and ck[0] == b"IHDR" and len(ck[1]) >= 9:
+            w, h, depth = struct.unpack_from(">IIB", ck[1])
+            return ("png", w, h, depth, None, None, None)
+        # JPEG: the first start-of-frame (SOF0/1/2) header
+        for m, pos, _ in _jpeg_segments(b):
+            if m in (0xC0, 0xC1, 0xC2) and pos + 9 <= len(b):
+                prec = b[pos + 4]
+                h, w = struct.unpack(">HH", b[pos + 5 : pos + 9])
+                return ("jpeg", w, h, prec, None, None, None)
+        wav = _wav_chunks(b)
+        if wav is not None:
+            # header only: any codec; duration from the declared
+            # data length, so a cut-short data chunk still reports
+            _, ch, sr, bits, _, data_len = wav
+            if sr and ch and bits >= 8:
+                dur = data_len / (sr * ch * (bits // 8))
+                return ("wav", None, None, None, sr, ch, round(dur, 6))
+        if len(b) >= 12 and b[4:8] == b"ftyp":
+            # ISO-BMFF: walk top-level boxes for moov, then its
+            # children for mvhd (timescale/duration) and trak/tkhd
+            # (16.16 fixed-point dimensions)
+            def walk(lo, hi):
+                out = {}
+                pos = lo
+                while pos + 8 <= hi:
+                    (blen,) = struct.unpack(">I", b[pos : pos + 4])
+                    if blen < 8 or pos + blen > hi:
+                        break
+                    out[b[pos + 4 : pos + 8]] = (pos + 8, pos + blen)
+                    pos += blen
+                return out
 
-        def one(blob) -> tuple:
-            b = bytes(blob)
-            # PNG: the first chunk, CRC-checked, must be the IHDR
-            ck = next(_png_chunks(b), None) if len(b) >= 33 else None
-            if ck and ck[0] == b"IHDR" and len(ck[1]) >= 9:
-                w, h, depth = struct.unpack_from(">IIB", ck[1])
-                return ("png", w, h, depth, None, None, None)
-            # JPEG: the first start-of-frame (SOF0/1/2) header
-            for m, pos, _ in _jpeg_segments(b):
-                if m in (0xC0, 0xC1, 0xC2) and pos + 9 <= len(b):
-                    prec = b[pos + 4]
-                    h, w = struct.unpack(">HH", b[pos + 5 : pos + 9])
-                    return ("jpeg", w, h, prec, None, None, None)
-            wav = _wav_chunks(b)
-            if wav is not None:
-                # header only: any codec; duration from the declared
-                # data length, so a cut-short data chunk still reports
-                _, ch, sr, bits, _, data_len = wav
-                if sr and ch and bits >= 8:
-                    dur = data_len / (sr * ch * (bits // 8))
-                    return ("wav", None, None, None, sr, ch, round(dur, 6))
-            if len(b) >= 12 and b[4:8] == b"ftyp":
-                # ISO-BMFF: walk top-level boxes for moov, then its
-                # children for mvhd (timescale/duration) and trak/tkhd
-                # (16.16 fixed-point dimensions)
-                def walk(lo, hi):
-                    out = {}
-                    pos = lo
-                    while pos + 8 <= hi:
-                        (blen,) = struct.unpack(">I", b[pos : pos + 4])
-                        if blen < 8 or pos + blen > hi:
-                            break
-                        out[b[pos + 4 : pos + 8]] = (pos + 8, pos + blen)
-                        pos += blen
-                    return out
+            top = walk(0, len(b))
+            if b"moov" in top:
+                kids = walk(*top[b"moov"])
+                ts = dur = w = h = None
+                if b"mvhd" in kids:
+                    lo, hi2 = kids[b"mvhd"]
+                    if lo + 20 <= hi2:
+                        ts, dur = struct.unpack(">II", b[lo + 12 : lo + 20])
+                if b"trak" in kids:
+                    tk = walk(*kids[b"trak"])
+                    if b"tkhd" in tk:
+                        lo, hi2 = tk[b"tkhd"]
+                        # width/height end the box: 84 payload bytes
+                        # in version 0, 96 in version 1
+                        need = 96 if b[lo : lo + 1] == b"\x01" else 84
+                        if hi2 - lo >= need:
+                            wfix, hfix = struct.unpack(">II", b[hi2 - 8 : hi2])
+                            w, h = wfix >> 16, hfix >> 16
+                if ts:
+                    return ("mp4", w, h, None, None, None, round(dur / ts, 6))
+        return ("unknown", None, None, None, None, None, None)
 
-                top = walk(0, len(b))
-                if b"moov" in top:
-                    kids = walk(*top[b"moov"])
-                    ts = dur = w = h = None
-                    if b"mvhd" in kids:
-                        lo, hi2 = kids[b"mvhd"]
-                        if lo + 20 <= hi2:
-                            ts, dur = struct.unpack(">II", b[lo + 12 : lo + 20])
-                    if b"trak" in kids:
-                        tk = walk(*kids[b"trak"])
-                        if b"tkhd" in tk:
-                            lo, hi2 = tk[b"tkhd"]
-                            # width/height end the box: 84 payload bytes
-                            # in version 0, 96 in version 1
-                            need = 96 if b[lo : lo + 1] == b"\x01" else 84
-                            if hi2 - lo >= need:
-                                wfix, hfix = struct.unpack(">II", b[hi2 - 8 : hi2])
-                                w, h = wfix >> 16, hfix >> 16
-                    if ts:
-                        return ("mp4", w, h, None, None, None, round(dur / ts, 6))
-            return ("unknown", None, None, None, None, None, None)
-
-        for pdf in batches:
-            parsed = [one(x) for x in pdf[payload_col]]
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col],
-                    "format": [p[0] for p in parsed],
-                    "width": pd.array([p[1] for p in parsed], dtype="Int32"),
-                    "height": pd.array([p[2] for p in parsed], dtype="Int32"),
-                    "bit_depth": pd.array([p[3] for p in parsed], dtype="Int32"),
-                    "sample_rate": pd.array([p[4] for p in parsed], dtype="Int32"),
-                    "n_channels": pd.array([p[5] for p in parsed], dtype="Int32"),
-                    "duration_s": pd.array([p[6] for p in parsed], dtype="float64"),
-                }
-            )
-
-    return df.mapInPandas(
-        parse,
+    return _map_rows(
+        df,
+        [id_col, payload_col],
         f"{id_col} long, format string, width int, height int, bit_depth int, "
         "sample_rate int, n_channels int, duration_s double",
+        lambda i, b: [(i, *header(b))],
     )
 
 
@@ -353,20 +346,13 @@ def synth_raw_rgb(
     pipeline would hand to feature extraction, so the pixel tier below
     can run REAL numpy math end-to-end in this environment (the container
     tier is d48; the codec step proper stays the documented stub).
-    Arrow-batched mapInPandas, same contract as ``synth_media_payload``."""
+    Same contract as ``synth_media_payload``."""
 
-    def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for i in pdf[id_col]:
-                arr = _pattern_rgb(int(i), width, height)
-                out.append((int(i), width, height, arr.tobytes()))
-            yield pd.DataFrame(
-                out, columns=[id_col, "width", "height", "payload"]
-            )
+    def build(i: int):
+        yield i, width, height, _pattern_rgb(i, width, height).tobytes()
 
-    return df.select(id_col).mapInPandas(
-        build, f"{id_col} long, width int, height int, payload binary"
+    return _map_rows(
+        df, [id_col], f"{id_col} long, width int, height int, payload binary", build
     )
 
 
@@ -384,21 +370,15 @@ def synth_raw_rgb_swapped(
     certify near-dup clustering arithmetically — the copy is GUARANTEED
     inside Hamming ≤ 3 of its original, so banding must pair them."""
 
-    def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for i in pdf[id_col]:
-                arr = _pattern_rgb(int(i), width, height)
-                corner = arr[0, 0, :].copy()
-                arr[0, 0, :] = arr[height - 1, width - 1, :]
-                arr[height - 1, width - 1, :] = corner
-                out.append((int(i), width, height, arr.tobytes()))
-            yield pd.DataFrame(
-                out, columns=[id_col, "width", "height", "payload"]
-            )
+    def build(i: int):
+        arr = _pattern_rgb(i, width, height)
+        corner = arr[0, 0, :].copy()
+        arr[0, 0, :] = arr[height - 1, width - 1, :]
+        arr[height - 1, width - 1, :] = corner
+        yield i, width, height, arr.tobytes()
 
-    return df.select(id_col).mapInPandas(
-        build, f"{id_col} long, width int, height int, payload binary"
+    return _map_rows(
+        df, [id_col], f"{id_col} long, width int, height int, payload binary", build
     )
 
 
@@ -414,11 +394,9 @@ def synth_bmp_ppm(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     round trip without any codec library. Widths 5–12 make most BMP rows
     non-4-byte-aligned, so the padding path is genuinely exercised.
 
-    Arrow-batched mapInPandas, same contract as ``synth_media_payload``."""
+    Same contract as ``synth_media_payload``."""
 
     import struct
-
-    import numpy as np
 
     def bmp(i: int, w: int, h: int) -> bytes:
         bgr = _pattern_rgb(i, w, h)[:, :, ::-1]  # BMP stores blue-green-red
@@ -435,11 +413,11 @@ def synth_bmp_ppm(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     def ppm(i: int, w: int, h: int) -> bytes:
         return f"P6\n{w} {h}\n255\n".encode() + _pattern_rgb(i, w, h).tobytes()
 
-    def image(i: int) -> bytes:
+    def image(i: int):
         w, h = 5 + i % 8, 4 + (3 * i) % 8
-        return bmp(i, w, h) if i % 2 == 0 else ppm(i, w, h)
+        yield i, bmp(i, w, h) if i % 2 == 0 else ppm(i, w, h)
 
-    return _synth_payloads(df, id_col, image)
+    return _map_rows(df, [id_col], f"{id_col} long, payload binary", image)
 
 
 # Adam7 pass geometry: (x0, y0, dx, dy) per pass, PNG spec §8.2
@@ -558,8 +536,6 @@ def _png_encode_rgb(
     import struct
     import zlib
 
-    import numpy as np
-
     h, w = rgb.shape[0], rgb.shape[1]
     if palette and depth16:
         raise ValueError("palette entries are 8-bit by spec")
@@ -631,8 +607,6 @@ def _png_decode_rgb(b: bytes):
     unknown filter, palette index past the PLTE)."""
     import struct
     import zlib
-
-    import numpy as np
 
     w = plte = None
     idat = bytearray()
@@ -728,8 +702,6 @@ def _png_unfilter(raw: bytes, offset: int, w: int, h: int, bpp: int = 3):
     (h, w·bpp) reconstruction or None on a bad filter type /
     truncation. Shared by the sequential layout, each Adam7 reduced
     image, and the palette layout (bpp=1)."""
-    import numpy as np
-
     stride = w * bpp
     if offset + h * (1 + stride) > len(raw):
         return None
@@ -794,17 +766,17 @@ def synth_png(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     compress→filter→decode round trip with no codec library (zlib is
     stdlib DEFLATE, not an image codec).
 
-    Arrow-batched mapInPandas, same contract as ``synth_media_payload``."""
+    Same contract as ``synth_media_payload``."""
 
-    def png(i: int) -> bytes:
+    def png(i: int):
         w, h = 6 + i % 7, 5 + (2 * i) % 7
-        return _png_encode_rgb(
+        yield i, _png_encode_rgb(
             _pattern_rgb(i, w, h),
             lambda y: (i + y) % 5,
             idat_split=i % 3 == 0,
         )
 
-    return _synth_payloads(df, id_col, png)
+    return _map_rows(df, [id_col], f"{id_col} long, payload binary", png)
 
 
 def synth_png_adam7(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -813,19 +785,18 @@ def synth_png_adam7(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     the IDAT stream carrying seven independently-filtered reduced
     images in pass order (empty passes omitted entirely).  Interlacing
     must be RESULT-INVISIBLE, so d120 reuses d105's oracle verbatim —
-    a pass-geometry or scatter bug breaks d120 while d105 stays green.
-    Arrow-batched mapInPandas."""
+    a pass-geometry or scatter bug breaks d120 while d105 stays green."""
 
-    def png(i: int) -> bytes:
+    def png(i: int):
         w, h = 6 + i % 7, 5 + (2 * i) % 7
-        return _png_encode_rgb(
+        yield i, _png_encode_rgb(
             _pattern_rgb(i, w, h),
             lambda y: (i + y) % 5,
             idat_split=i % 3 == 0,
             interlace=True,
         )
 
-    return _synth_payloads(df, id_col, png)
+    return _map_rows(df, [id_col], f"{id_col} long, payload binary", png)
 
 
 def synth_png_palette(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -833,19 +804,18 @@ def synth_png_palette(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     pixel content, but IHDR color type 3 with a PLTE of the image's
     unique colors (≤132 pixels ⇒ ≤132 entries, lexicographic order) and
     1-byte-per-pixel filtered index scanlines. Palette indirection must
-    be RESULT-INVISIBLE, so d122 reuses d105's oracle verbatim.
-    Arrow-batched mapInPandas."""
+    be RESULT-INVISIBLE, so d122 reuses d105's oracle verbatim."""
 
-    def png(i: int) -> bytes:
+    def png(i: int):
         w, h = 6 + i % 7, 5 + (2 * i) % 7
-        return _png_encode_rgb(
+        yield i, _png_encode_rgb(
             _pattern_rgb(i, w, h),
             lambda y: (i + y) % 5,
             idat_split=i % 3 == 0,
             palette=True,
         )
 
-    return _synth_payloads(df, id_col, png)
+    return _map_rows(df, [id_col], f"{id_col} long, payload binary", png)
 
 
 def synth_png_16bit(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -855,13 +825,11 @@ def synth_png_16bit(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     bpp=6 per spec; odd ids additionally interlace (Adam7 × 16-bit —
     the combination real screenshots/medical scans ship).  The oracle
     is d105's with every value scaled 257× — bit depth must change the
-    VALUES exactly and nothing else.  Arrow-batched mapInPandas."""
+    VALUES exactly and nothing else."""
 
-    import numpy as np
-
-    def png(i: int) -> bytes:
+    def png(i: int):
         w, h = 6 + i % 7, 5 + (2 * i) % 7
-        return _png_encode_rgb(
+        yield i, _png_encode_rgb(
             _pattern_rgb(i, w, h).astype(np.uint16) * 257,
             lambda y: (i + y) % 5,
             idat_split=i % 3 == 0,
@@ -869,7 +837,7 @@ def synth_png_16bit(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
             depth16=True,
         )
 
-    return _synth_payloads(df, id_col, png)
+    return _map_rows(df, [id_col], f"{id_col} long, payload binary", png)
 
 
 def _image_stats(
@@ -883,62 +851,39 @@ def _image_stats(
     geometry (a row flip permutes pixels within a channel, leaving every
     order-free statistic unchanged); pos_sum is the statistic a
     mis-flipped, mis-padded or mis-strided decode cannot fake.  Integer
-    sums are exact, so an oracle replays them arithmetically.  Pure
-    mapInPandas over Arrow batches, zero shuffles."""
+    sums are exact, so an oracle replays them arithmetically."""
 
-    def stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        for pdf in batches:
-            rows = []
-            for i, buf in zip(pdf[id_col], pdf[payload_col]):
-                # belt-and-braces: ANY parse failure degrades to skip
-                # (the parse_media_headers contract), never an executor
-                # error — the decoders' explicit guards cover the known
-                # malformed shapes; this catches the unknown ones
-                try:
-                    got = decode(bytes(buf))
-                except Exception:
-                    got = None
-                if got is None:
-                    continue
-                fmt, img = got
-                h, w = img.shape[0], img.shape[1]
-                arr = img.astype(np.int64).reshape(h, w, -1)
-                n = w * h
-                xw = np.arange(w) + 1
-                yw = np.arange(h) + 2
-                wgt = yw[:, None] * xw[None, :]
-                for ch in range(arr.shape[2]):
-                    v = arr[:, :, ch]
-                    s, ss = int(v.sum()), int((v * v).sum())
-                    mean = s / n
-                    rows.append(
-                        (
-                            int(i),
-                            fmt,
-                            w,
-                            h,
-                            ch,
-                            round(mean, 6),
-                            int(v.min()),
-                            int(v.max()),
-                            round((ss / n - mean * mean) ** 0.5, 6),
-                            int((v * wgt).sum()),
-                        )
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    id_col, "format", "width", "height", "channel",
-                    "mean", "min", "max", "std", "pos_sum",
-                ],
+    def stats(i, b: bytes):
+        # belt-and-braces: ANY parse failure degrades to skip (the
+        # parse_media_headers contract), never an executor error — the
+        # decoders' explicit guards cover the known malformed shapes;
+        # this catches the unknown ones
+        try:
+            got = decode(b)
+        except Exception:
+            got = None
+        if got is None:
+            return
+        fmt, img = got
+        h, w = img.shape[0], img.shape[1]
+        arr = img.astype(np.int64).reshape(h, w, -1)
+        n = w * h
+        wgt = (np.arange(h) + 2)[:, None] * (np.arange(w) + 1)[None, :]
+        for ch in range(arr.shape[2]):
+            v = arr[:, :, ch]
+            s, ss = int(v.sum()), int((v * v).sum())
+            mean = s / n
+            yield (
+                i, fmt, w, h, ch, round(mean, 6), int(v.min()), int(v.max()),
+                round((ss / n - mean * mean) ** 0.5, 6), int((v * wgt).sum()),
             )
 
-    return df.mapInPandas(
-        stats,
+    return _map_rows(
+        df,
+        [id_col, payload_col],
         f"{id_col} long, format string, width int, height int, channel int, "
         "mean double, min int, max int, std double, pos_sum long",
+        stats,
     )
 
 
@@ -962,9 +907,9 @@ def decode_png_stats(
     recurrences are sequential along a scanline BY SPEC (each pixel
     depends on the reconstructed left neighbor), so unfiltering runs as
     a per-row Python loop over numpy channel vectors — at 100 TB this
-    loop is embarrassingly parallel across images (pure mapInPandas,
-    zero shuffles), which is where the scale lives; a production decoder
-    would swap in a C inner loop behind the same batch contract.
+    loop is embarrassingly parallel across images, which is where the
+    scale lives; a production decoder would swap in a C inner loop
+    behind the same batch contract.
 
     Integer sums are exact, so the oracle replays them arithmetically —
     the d48/d93/d99 certification pattern."""
@@ -992,12 +937,9 @@ def decode_bmp_ppm_stats(
 
     Integer sums are exact (≤ 255·12·13·144 per cell), so the oracle
     replays them arithmetically — the d48/d93 certification pattern.
-    Scale: pure mapInPandas over Arrow batches, zero shuffles, one output
-    row per (image, channel)."""
+    One output row per (image, channel)."""
 
     import struct
-
-    import numpy as np
 
     def decode(b: bytes):
         if b[:2] == b"BM":
@@ -1055,6 +997,16 @@ def decode_bmp_ppm_stats(
     return _image_stats(df, decode, payload_col, id_col)
 
 
+def _rgb_read(b: bytes, w, h):
+    """The one raw RGB888 frame reader: the row-major (y, x, c) pixels
+    of ``b`` as an int64 (h, w, 3) array, or None unless w, h >= 1 and
+    ``b`` holds exactly w·h·3 bytes (a null w or h arrives as NaN and
+    fails the bound)."""
+    if not (w >= 1 and h >= 1) or len(b) != w * h * 3:
+        return None
+    return np.frombuffer(b, np.uint8).reshape(int(h), int(w), 3).astype(np.int64)
+
+
 def raw_pixel_stats(
     df: DataFrame, payload_col: str = "payload", id_col: str = "doc_id"
 ) -> DataFrame:
@@ -1067,47 +1019,25 @@ def raw_pixel_stats(
     sqrt(E[v²]−E[v]²) std use one double division/sqrt each — bit-identical
     to any engine replaying the same arithmetic, which is what lets the
     d93 oracle certify the whole synth→decode→aggregate path without a
-    codec. Scale: pure mapInPandas, zero shuffles; one output row per
-    (frame, channel)."""
+    codec. One output row per (frame, channel); frames :func:`_rgb_read`
+    rejects skip."""
 
-    def stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    def stats(i, w, h, b: bytes):
+        arr = _rgb_read(b, w, h)
+        if arr is None:
+            return
+        n = arr.shape[0] * arr.shape[1]
+        for ch in range(3):
+            v = arr[:, :, ch]
+            mean = int(v.sum()) / n
+            var = int((v * v).sum()) / n - mean * mean
+            yield i, ch, round(mean, 6), int(v.min()), int(v.max()), round(var**0.5, 6)
 
-        for pdf in batches:
-            rows = []
-            for i, w, h, buf in zip(
-                pdf[id_col], pdf["width"], pdf["height"], pdf[payload_col]
-            ):
-                arr = (
-                    np.frombuffer(buf, dtype=np.uint8)
-                    .reshape(int(h), int(w), 3)
-                    .astype(np.int64)
-                )
-                n = int(h) * int(w)
-                for ch in range(3):
-                    v = arr[:, :, ch]
-                    s = int(v.sum())
-                    ss = int((v * v).sum())
-                    mean = s / n
-                    var = ss / n - mean * mean
-                    rows.append(
-                        (
-                            int(i),
-                            ch,
-                            round(mean, 6),
-                            int(v.min()),
-                            int(v.max()),
-                            round(var**0.5, 6),
-                        )
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[id_col, "channel", "mean", "min", "max", "std"],
-            )
-
-    return df.mapInPandas(
-        stats,
+    return _map_rows(
+        df,
+        [id_col, "width", "height", payload_col],
         f"{id_col} long, channel int, mean double, min int, max int, std double",
+        stats,
     )
 
 
@@ -1218,8 +1148,6 @@ def _huff_decode_lut(dht: bytes):
     then empty, preserving unreachability."""
     lut = _HUFF_LUT_CACHE.get(dht)
     if lut is None:
-        import numpy as np
-
         counts = dht[:16]
         syms = dht[16:]
         arr = np.zeros(65536, dtype=np.int32)
@@ -1408,8 +1336,6 @@ def _jpeg_encode(grids, layout, qtables, script, restart_interval: int = 0):
     (1-padded), an RSTm marker (D0–D7, cycling) is written, and the DC
     predictors reset."""
     import struct
-
-    import numpy as np
 
     def seg(marker, payload):
         return bytes([0xFF, marker]) + struct.pack(">H", 2 + len(payload)) + payload
@@ -1733,8 +1659,6 @@ def _idct_plane(coefs, q):
     """Dequantize + separable IDCT + level shift of a (rows, cols, 8, 8)
     quantized-coefficient grid: the (rows·8, cols·8) float plane
     spatial + 128.0, before rounding."""
-    import numpy as np
-
     C = _IDCT_BASIS.get("C")
     if C is None:
         alpha = np.full(8, np.sqrt(2.0 / 8.0))
@@ -1770,8 +1694,6 @@ def _jpeg_decode(b):
     presents Ah = the previous Al and Al = Ah − 1, and the script must
     leave every slot of every component at Al = 0."""
     import struct
-
-    import numpy as np
 
     def ceil(a, d):
         return -(-a // d)
@@ -1969,8 +1891,6 @@ def _jpeg_dc_grid(i: int, rows: int, cols: int):
     """The JPEG fixtures' coefficient grid: (rows, cols, 8, 8) int64
     carrying only a DC per block, dc(x, y) = (5·i + 3·x + 7·y) mod 21 −
     10 — with q0 = 16 each block decodes EXACTLY flat at 128 + 2·dc."""
-    import numpy as np
-
     coefs = np.zeros((rows, cols, 8, 8), dtype=np.int64)
     y, x = np.meshgrid(np.arange(rows), np.arange(cols), indexing="ij")
     coefs[:, :, 0, 0] = (5 * i + 3 * x + 7 * y) % 21 - 10
@@ -1983,15 +1903,13 @@ def _synth_jpeg_gray(
     """The grayscale JPEG fixtures: the id's DC grid — width =
     8·(1 + id%3), height = 8·(1 + (2·id)%3) — against a flat q = 16
     table, encoded with the given scan script."""
-    import numpy as np
-
     q = np.full((8, 8), 16, dtype=np.int64)
 
-    def jpeg(i: int) -> bytes:
+    def jpeg(i: int):
         coefs = _jpeg_dc_grid(i, 1 + (2 * i) % 3, 1 + i % 3)
-        return _jpeg_encode([coefs], _JPEG_GRAY, [q], script, restart_interval)
+        yield i, _jpeg_encode([coefs], _JPEG_GRAY, [q], script, restart_interval)
 
-    return _synth_payloads(df, id_col, jpeg)
+    return _map_rows(df, [id_col], f"{id_col} long, payload binary", jpeg)
 
 
 def _synth_jpeg_color(df: DataFrame, id_col: str, script) -> DataFrame:
@@ -1999,18 +1917,16 @@ def _synth_jpeg_color(df: DataFrame, id_col: str, script) -> DataFrame:
     16·(1 + id%2), height = 16·(1 + (3·id)%2) — with zero (neutral)
     chroma and flat tables ql = 16, qc = 8, encoded with the given scan
     script."""
-    import numpy as np
-
     ql = np.full((8, 8), 16, dtype=np.int64)
     qc = np.full((8, 8), 8, dtype=np.int64)
 
-    def jpeg(i: int) -> bytes:
+    def jpeg(i: int):
         mx, my = 1 + i % 2, 1 + (3 * i) % 2
         chroma = np.zeros((my, mx, 8, 8), dtype=np.int64)
         grids = [_jpeg_dc_grid(i, 2 * my, 2 * mx), chroma, chroma]
-        return _jpeg_encode(grids, _JPEG_YCC420, [ql, qc], script)
+        yield i, _jpeg_encode(grids, _JPEG_YCC420, [ql, qc], script)
 
-    return _synth_payloads(df, id_col, jpeg)
+    return _map_rows(df, [id_col], f"{id_col} long, payload binary", jpeg)
 
 
 def synth_jpeg(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -2026,7 +1942,7 @@ def synth_jpeg(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     The AC run-length path (runs, ZRL, mid-block EOB) is exercised by
     unit tests against a reference IDCT, where exactness is not needed.
 
-    Arrow-batched mapInPandas, same contract as ``synth_media_payload``."""
+    Same contract as ``synth_media_payload``."""
 
     return _synth_jpeg_gray(df, id_col, [((0,), 0, 63, 0, 0)])
 
@@ -2036,7 +1952,7 @@ def synth_jpeg_progressive(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     pixel content, but SOF2 with a DC scan + two spectral-selection AC
     band scans (1–5, 6–63).  The scan structure must be
     RESULT-INVISIBLE, so d121 reuses d108's oracle verbatim (the
-    d118/d120 isolation discipline).  Arrow-batched mapInPandas."""
+    d118/d120 isolation discipline)."""
 
     return _synth_jpeg_gray(
         df, id_col, _jpeg_progressive_script(1, ((1, 5), (6, 63)), 0)
@@ -2047,8 +1963,7 @@ def synth_jpeg_progressive_sa(df: DataFrame, id_col: str = "doc_id") -> DataFram
     """``synth_jpeg`` in the full SUCCESSIVE-APPROXIMATION progressive
     layout (r10, d123): identical pixel content, four scans — DC first
     at Al=1, AC 1–63 first at Al=1, DC refinement, AC refinement.  SA
-    must be RESULT-INVISIBLE, so d123 reuses d108's oracle verbatim.
-    Arrow-batched mapInPandas."""
+    must be RESULT-INVISIBLE, so d123 reuses d108's oracle verbatim."""
 
     return _synth_jpeg_gray(df, id_col, _jpeg_progressive_script(1, ((1, 63),), 1))
 
@@ -2065,7 +1980,7 @@ def synth_jpeg_dri(
     d118 reuses d108's oracle verbatim (the d112/d113 isolation trick):
     a predictor that fails to reset, a mis-consumed RST marker, or a
     broken byte-align breaks d118 while d108 stays green, isolating the
-    restart path.  Arrow-batched mapInPandas."""
+    restart path."""
 
     return _synth_jpeg_gray(df, id_col, [((0,), 0, 63, 0, 0)], restart_interval)
 
@@ -2086,8 +2001,7 @@ def decode_jpeg_stats(
 
     d108 certifies the full chain on DC-only blocks where the IDCT is
     exact integer arithmetic; the AC path is unit-tested against a
-    reference IDCT. Scale: pure mapInPandas over Arrow batches, zero
-    shuffles; the entropy decode is per-image sequential BY SPEC (DC
+    reference IDCT. The entropy decode is per-image sequential BY SPEC (DC
     prediction chains through the scan) — parallelism lives across
     images, which is where 100 TB lives."""
 
@@ -2111,26 +2025,24 @@ def synth_pcm_wav(
     underlying signal).  The fixture generator for
     :func:`resample_pcm_stats`: an engine-independent oracle can
     replay every sample, so the whole parse→resample→aggregate chain
-    hash-certifies with no audio library. Arrow-batched mapInPandas,
-    same contract as ``synth_media_payload``."""
+    hash-certifies with no audio library. Same contract as
+    ``synth_media_payload``."""
     if not (-16 <= gain <= 16 and -1024 <= offset <= 1024):
         raise ValueError(
             "synth_pcm_wav: |gain| <= 16 and |offset| <= 1024 keep "
             "gain*1024 + offset inside int16"
         )
 
-    import numpy as np
-
-    def wav(i: int) -> bytes:
+    def wav(i: int):
         n = 256 + i % 64
         a, b = 3 + i % 5, i % 97
         t = np.arange(n, dtype=np.int64)
         samples = (
             gain * ((a * t + b) % 2048 - 1024) + offset
         ).astype("<i2")
-        return _wav_pcm16(samples.tobytes(), 8000)
+        yield i, _wav_pcm16(samples.tobytes(), 8000)
 
-    return _synth_payloads(df, id_col, wav)
+    return _map_rows(df, [id_col], f"{id_col} long, payload binary", wav)
 
 
 def synth_chirp_wav(
@@ -2164,18 +2076,16 @@ def synth_chirp_wav(
     if extra < 0:
         raise ValueError("synth_chirp_wav: extra must be >= 0")
 
-    import numpy as np
-
-    def wav(i: int) -> bytes:
+    def wav(i: int):
         n = 256 + i % 64 + extra
         a, b = 1 + i % 7, 3 + i % 13
         t = np.arange(n, dtype=np.int64)
         samples = (
             gain * ((a * t * t + b * t + i) % 2048 - 1024) + offset
         ).astype("<i2")
-        return _wav_pcm16(samples.tobytes(), 8000)
+        yield i, _wav_pcm16(samples.tobytes(), 8000)
 
-    return _synth_payloads(df, id_col, wav)
+    return _map_rows(df, [id_col], f"{id_col} long, payload binary", wav)
 
 
 def synth_speech_wav(
@@ -2195,9 +2105,7 @@ def synth_speech_wav(
     if not -16 <= gain <= 16:
         raise ValueError("synth_speech_wav: |gain| <= 16 keeps int16")
 
-    import numpy as np
-
-    def wav(i: int) -> bytes:
+    def wav(i: int):
         n = 512 + (i % 8) * 64
         a, b = 1 + i % 7, 3 + i % 13
         t = np.arange(n, dtype=np.int64)
@@ -2207,9 +2115,9 @@ def synth_speech_wav(
         sil = (3 * t + i) % 16 - 8
         base = np.where(cls == 0, sil, np.where(cls == 3, med, loud))
         samples = (gain * base).astype("<i2")
-        return _wav_pcm16(samples.tobytes(), 8000)
+        yield i, _wav_pcm16(samples.tobytes(), 8000)
 
-    return _synth_payloads(df, id_col, wav)
+    return _map_rows(df, [id_col], f"{id_col} long, payload binary", wav)
 
 
 def vad_segments(
@@ -2241,9 +2149,8 @@ def vad_segments(
     energy by exactly g²) multiplies BOTH sides of each comparison by
     g² — segmentation is EXACTLY volume-invariant (the d165b twin).
     Trailing samples short of a full frame are ignored; files without
-    one full frame (or non-PCM16-mono) skip.  Scale: pure Arrow
-    mapInPandas, zero shuffles, per-file state bounded by file
-    length."""
+    one full frame (or non-PCM16-mono) skip.  Per-file state is
+    bounded by file length."""
     if frame_len < 1:
         raise ValueError("vad_segments: frame_len must be >= 1")
     if min(open_num, open_den, close_num, close_den) < 1:
@@ -2254,65 +2161,70 @@ def vad_segments(
             "open threshold (hysteresis needs a dead band)"
         )
 
-    def segs(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    def segs(i, b: bytes):
+        got = _wav_pcm16_mono(b)
+        if got is None or got[1].size < frame_len:
+            return
+        s = got[1].astype(np.int64)
+        nf = s.size // frame_len
+        e = (s[: nf * frame_len] ** 2).reshape(nf, frame_len).sum(axis=1)
+        peak = int(e.max())
+        # vectorized hysteresis (VERDICT r13 #5): the two threshold masks
+        # are mutually exclusive (the dead-band validation guarantees
+        # open implies not-close), so the state at frame f is the most
+        # recent non-hold event — a forward-fill via running max of
+        # event indices. int64 is exact here: e <= 32768^2 * frame_len
+        # and the ratio factors are small integers.
+        ev = np.where(
+            e * open_den >= peak * open_num,
+            1,
+            np.where(e * close_den < peak * close_num, 0, -1),
+        )
+        idx = np.where(ev >= 0, np.arange(nf), -1)
+        np.maximum.accumulate(idx, out=idx)
+        state = np.where(idx >= 0, ev[np.maximum(idx, 0)], 0)
+        # islands of state==1 (the c57 gaps-and-islands shape,
+        # vectorized): starts/ends from the state delta, exact
+        # per-segment energy from one prefix sum
+        d = np.diff(np.concatenate(([0], state, [0])))
+        starts = np.where(d == 1)[0]
+        ends = np.where(d == -1)[0]  # exclusive
+        csum = np.concatenate(([0], np.cumsum(e)))
+        for seg_no, (a, b) in enumerate(zip(starts, ends), 1):
+            yield i, seg_no, int(a), int(b - 1), int(b - a), int(csum[b] - csum[a])
 
-        for pdf in batches:
-            rows = []
-            for i, buf in zip(pdf[id_col], pdf[payload_col]):
-                got = _wav_pcm16_mono(bytes(buf))
-                if got is None or got[1].size < frame_len:
-                    continue
-                s = got[1].astype(np.int64)
-                nf = s.size // frame_len
-                e = (
-                    (s[: nf * frame_len] ** 2)
-                    .reshape(nf, frame_len)
-                    .sum(axis=1)
-                )
-                peak = int(e.max())
-                # vectorized hysteresis (VERDICT r13 #5): the two
-                # threshold masks are mutually exclusive (the dead-band
-                # validation guarantees open implies not-close), so the
-                # state at frame f is the most recent non-hold event —
-                # a forward-fill via running max of event indices.
-                # int64 is exact here: e <= 32768^2 * frame_len and the
-                # ratio factors are small integers.
-                ev = np.where(
-                    e * open_den >= peak * open_num,
-                    1,
-                    np.where(e * close_den < peak * close_num, 0, -1),
-                )
-                idx = np.where(ev >= 0, np.arange(nf), -1)
-                np.maximum.accumulate(idx, out=idx)
-                state = np.where(idx >= 0, ev[np.maximum(idx, 0)], 0)
-                # islands of state==1 (the c57 gaps-and-islands shape,
-                # vectorized): starts/ends from the state delta, exact
-                # per-segment energy from one prefix sum
-                d = np.diff(np.concatenate(([0], state, [0])))
-                starts = np.where(d == 1)[0]
-                ends = np.where(d == -1)[0]  # exclusive
-                csum = np.concatenate(([0], np.cumsum(e)))
-                for seg_no, (a, b) in enumerate(zip(starts, ends), 1):
-                    rows.append(
-                        (
-                            int(i),
-                            seg_no,
-                            int(a),
-                            int(b - 1),
-                            int(b - a),
-                            int(csum[b] - csum[a]),
-                        )
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[id_col, "seg_no", "f0", "f1", "n_frames", "energy"],
-            )
-
-    return df.mapInPandas(
+    return _map_rows(
+        df,
+        [id_col, payload_col],
+        f"{id_col} long, seg_no int, f0 int, f1 int, n_frames int, energy long",
         segs,
-        f"{id_col} long, seg_no int, f0 int, f1 int, n_frames int,"
-        " energy long",
+    )
+
+
+def _resample_stats(df, payload_col, id_col, up, down, resample) -> DataFrame:
+    """The stats frame of the resample tier: per PCM-16 mono file of at
+    least 2 samples, ``resample(int64 samples) -> (j, y_scaled)``, then
+    one row (id, sr_in, sr_out, n_in, n_out, sum_scaled, min_scaled,
+    max_scaled, pos_sum) — pos_sum = Σ y_scaled[j]·(j+1), the
+    order-sensitive checksum a mis-phased resampler cannot fake."""
+
+    def stats(i, b: bytes):
+        got = _wav_pcm16_mono(b)
+        if got is None or got[1].size < 2:
+            return
+        sr, s = got[0], got[1].astype(np.int64)
+        j, ys = resample(s)
+        yield (
+            i, int(sr), int(sr * up // down), int(s.size), int(j.size),
+            int(ys.sum()), int(ys.min()), int(ys.max()), int((ys * (j + 1)).sum()),
+        )
+
+    return _map_rows(
+        df,
+        [id_col, payload_col],
+        f"{id_col} long, sr_in int, sr_out int, n_in long, n_out long, "
+        "sum_scaled long, min_scaled long, max_scaled long, pos_sum long",
+        stats,
     )
 
 
@@ -2323,8 +2235,6 @@ def _resample_scaled(s, up: int, down: int):
     n_out = ((n−1)·up)//down + 1. Pure integer arithmetic; r > 0
     implies i0 + 1 < n (num ≤ (n−1)·up forces r = 0 at the last
     sample), so the guard index never contributes."""
-    import numpy as np
-
     n = s.size
     n_out = ((n - 1) * up) // down + 1
     j = np.arange(n_out, dtype=np.int64)
@@ -2358,51 +2268,9 @@ def resample_pcm_stats(
     covers exactly the positions inside the input span; when frac = 0
     the s[i0+1] term vanishes, so the final sample never reads past the
     end. Anything non-PCM/mono/16-bit or structurally broken degrades
-    to skip. Scale: pure mapInPandas, zero shuffles, one output row per
-    file.
-
-    Returns (id, sr_in, sr_out, n_in, n_out, sum_scaled, min_scaled,
-    max_scaled, pos_sum) — pos_sum = Σ y_scaled[j]·(j+1), the
-    order-sensitive checksum a mis-phased resampler cannot fake."""
-
-    def stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        for pdf in batches:
-            rows = []
-            for i, buf in zip(pdf[id_col], pdf[payload_col]):
-                got = _wav_pcm16_mono(bytes(buf))
-                if got is None or got[1].size < 2:
-                    continue
-                sr, s = got[0], got[1].astype(np.int64)
-                n = s.size
-                j, ys = _resample_scaled(s, up, down)
-                n_out = j.size
-                rows.append(
-                    (
-                        int(i),
-                        int(sr),
-                        int(sr * up // down),
-                        int(n),
-                        int(n_out),
-                        int(ys.sum()),
-                        int(ys.min()),
-                        int(ys.max()),
-                        int((ys * (j + 1)).sum()),
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    id_col, "sr_in", "sr_out", "n_in", "n_out",
-                    "sum_scaled", "min_scaled", "max_scaled", "pos_sum",
-                ],
-            )
-
-    return df.mapInPandas(
-        stats,
-        f"{id_col} long, sr_in int, sr_out int, n_in long, n_out long, "
-        "sum_scaled long, min_scaled long, max_scaled long, pos_sum long",
+    to skip. One output row per file: :func:`_resample_stats`."""
+    return _resample_stats(
+        df, payload_col, id_col, up, down, lambda s: _resample_scaled(s, up, down)
     )
 
 
@@ -2459,61 +2327,25 @@ def resample_fir_stats(
     the signal. No float arithmetic anywhere past tap construction, so
     the oracle replays every output sample exactly; the checksum
     Σ y_scaled·(j+1) catches phase, boundary, and tap-selection errors.
-    Same output schema as the linear tier. Scale: pure mapInPandas,
-    zero shuffles, one output row per file."""
-    if taps is None:
-        taps = sinc_taps(up, down)
+    Same output schema as the linear tier (:func:`_resample_stats`)."""
+    C = np.asarray(sinc_taps(up, down) if taps is None else taps, dtype=np.int64)
+    half = C.shape[1] // 2  # C is (up, 2*half)
 
-    def stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    def fir(s):
+        n = s.size
+        n_out = ((n - 1) * up) // down + 1
+        j = np.arange(n_out, dtype=np.int64)
+        num = j * down
+        i0 = num // up
+        ph = num % up
+        pad = np.zeros(n + 2 * half - 1, dtype=np.int64)
+        pad[half - 1 : half - 1 + n] = s
+        ys = np.zeros(n_out, dtype=np.int64)
+        for t_idx, m in enumerate(range(-half + 1, half + 1)):
+            ys += C[ph, t_idx] * pad[i0 + m + half - 1]
+        return j, ys
 
-        C = np.asarray(taps, dtype=np.int64)  # (up, 2*half)
-        half = C.shape[1] // 2
-
-        for pdf in batches:
-            rows = []
-            for i, buf in zip(pdf[id_col], pdf[payload_col]):
-                got = _wav_pcm16_mono(bytes(buf))
-                if got is None or got[1].size < 2:
-                    continue
-                sr, s = got[0], got[1].astype(np.int64)
-                n = s.size
-                n_out = ((n - 1) * up) // down + 1
-                j = np.arange(n_out, dtype=np.int64)
-                num = j * down
-                i0 = num // up
-                ph = num % up
-                pad = np.zeros(n + 2 * half - 1, dtype=np.int64)
-                pad[half - 1 : half - 1 + n] = s
-                ys = np.zeros(n_out, dtype=np.int64)
-                for t_idx, m in enumerate(range(-half + 1, half + 1)):
-                    ys += C[ph, t_idx] * pad[i0 + m + half - 1]
-                rows.append(
-                    (
-                        int(i),
-                        int(sr),
-                        int(sr * up // down),
-                        int(n),
-                        int(n_out),
-                        int(ys.sum()),
-                        int(ys.min()),
-                        int(ys.max()),
-                        int((ys * (j + 1)).sum()),
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    id_col, "sr_in", "sr_out", "n_in", "n_out",
-                    "sum_scaled", "min_scaled", "max_scaled", "pos_sum",
-                ],
-            )
-
-    return df.mapInPandas(
-        stats,
-        f"{id_col} long, sr_in int, sr_out int, n_in long, n_out long, "
-        "sum_scaled long, min_scaled long, max_scaled long, pos_sum long",
-    )
+    return _resample_stats(df, payload_col, id_col, up, down, fir)
 
 
 def synth_jpeg_color(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -2528,7 +2360,7 @@ def synth_jpeg_color(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     chroma mis-decode (wrong predictor chain, MCU order, table id, or
     upsampling) shifts the decoded chroma off 128 and the checksum
     catches it; NONZERO chroma is exercised by unit tests against the
-    reference conversion. Arrow-batched mapInPandas."""
+    reference conversion."""
 
     return _synth_jpeg_color(df, id_col, [((0, 1, 2), 0, 63, 0, 0)])
 
@@ -2543,7 +2375,7 @@ def decode_jpeg_color_stats(
     tables, 2×2 sample-replication chroma upsampling, JFIF YCbCr→RGB.
     Emits the standard per-channel stats + position-weighted checksum
     frame (channels 0/1/2 = R/G/B). Grayscale and non-4:2:0 inputs
-    degrade to skip. Scale: pure mapInPandas, zero shuffles."""
+    degrade to skip."""
 
     def decode(b: bytes):
         got = _jpeg_decode(b)
@@ -2556,8 +2388,7 @@ def synth_jpeg_color_progressive(df: DataFrame, id_col: str = "doc_id") -> DataF
     """``synth_jpeg_color`` in the PROGRESSIVE layout (r10, d126):
     identical pixel content — SOF2, one interleaved DC scan, three
     single-component AC scans.  Scan structure must be
-    RESULT-INVISIBLE, so d126 reuses d110's oracle verbatim.
-    Arrow-batched mapInPandas."""
+    RESULT-INVISIBLE, so d126 reuses d110's oracle verbatim."""
 
     return _synth_jpeg_color(df, id_col, _jpeg_progressive_script(3, ((1, 63),), 0))
 
@@ -2566,8 +2397,7 @@ def synth_jpeg_color_progressive_sa(df: DataFrame, id_col: str = "doc_id") -> Da
     """``synth_jpeg_color`` in the FULL eight-scan successive-
     approximation progressive layout (r10, d128): DC/AC first scans at
     Al=1, interleaved one-bit DC refinement, three per-component AC
-    refinements.  Oracle is d110's verbatim.  Arrow-batched
-    mapInPandas."""
+    refinements.  Oracle is d110's verbatim."""
 
     return _synth_jpeg_color(df, id_col, _jpeg_progressive_script(3, ((1, 63),), 1))
 
@@ -2621,39 +2451,29 @@ def parse_wet(
     whose records are ``WARC-Type: conversion`` with a text/plain block
     of exactly Content-Length bytes).  Same file read, same
     skip-never-error contract; emits one row per conversion record:
-    (id, n_records, target_uri, content_length, text).  Pure
-    mapInPandas, zero shuffles."""
+    (id, n_records, target_uri, content_length, text)."""
 
-    def parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for i, buf in zip(pdf[id_col], pdf[payload_col]):
-                try:
-                    recs = _warc_file_records(bytes(buf))
-                except Exception:
-                    recs = None
-                for headers, block in recs or ():
-                    if headers.get("warc-type") == "conversion":
-                        rows.append(
-                            (
-                                int(i),
-                                len(recs),
-                                headers.get("warc-target-uri"),
-                                int(headers["content-length"]),
-                                block.decode("utf-8", "replace"),
-                            )
-                        )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    id_col, "n_records", "target_uri", "content_length", "text",
-                ],
-            )
+    def parse(i, b: bytes):
+        try:
+            recs = _warc_file_records(b)
+        except Exception:
+            recs = None
+        for headers, block in recs or ():
+            if headers.get("warc-type") == "conversion":
+                yield (
+                    i,
+                    len(recs),
+                    headers.get("warc-target-uri"),
+                    int(headers["content-length"]),
+                    block.decode("utf-8", "replace"),
+                )
 
-    return df.mapInPandas(
-        parse,
+    return _map_rows(
+        df,
+        [id_col, payload_col],
         f"{id_col} long, n_records int, target_uri string,"
         " content_length long, text string",
+        parse,
     )
 
 
@@ -2666,20 +2486,12 @@ def synth_warc(
     blank line, HTML body). Content-Length fields are exact byte
     counts, records end with the spec's CRLF CRLF separator, and bodies
     are UTF-8 — so a parser must honor lengths, not delimiters.
-    Arrow-batched mapInPandas, same contract as ``synth_media_payload``."""
-
-    def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                [
-                    (int(i), b"".join(_warc_records(int(i), u, h)))
-                    for i, u, h in zip(pdf[id_col], pdf[uri_col], pdf[html_col])
-                ],
-                columns=[id_col, "payload"],
-            )
-
-    return df.select(id_col, uri_col, html_col).mapInPandas(
-        build, f"{id_col} long, payload binary"
+    Same contract as ``synth_media_payload``."""
+    return _map_rows(
+        df,
+        [id_col, uri_col, html_col],
+        f"{id_col} long, payload binary",
+        lambda i, u, h: [(i, b"".join(_warc_records(i, u, h)))],
     )
 
 
@@ -2691,27 +2503,13 @@ def synth_warc_gz(
     property that lets a crawler index byte offsets and a reader inflate
     one record without touching the rest. Deterministic members
     (mtime=0). Same contract as ``synth_warc``."""
+    import gzip
 
-    def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import gzip
+    def build(i, u, h):
+        yield i, b"".join(gzip.compress(r, mtime=0) for r in _warc_records(i, u, h))
 
-        for pdf in batches:
-            yield pd.DataFrame(
-                [
-                    (
-                        int(i),
-                        b"".join(
-                            gzip.compress(r, mtime=0)
-                            for r in _warc_records(int(i), u, h)
-                        ),
-                    )
-                    for i, u, h in zip(pdf[id_col], pdf[uri_col], pdf[html_col])
-                ],
-                columns=[id_col, "payload"],
-            )
-
-    return df.select(id_col, uri_col, html_col).mapInPandas(
-        build, f"{id_col} long, payload binary"
+    return _map_rows(
+        df, [id_col, uri_col, html_col], f"{id_col} long, payload binary", build
     )
 
 
@@ -2779,7 +2577,7 @@ def _warc_split_records(b: bytes):
     out = []
     pos = 0
     while pos < len(b):
-        if not b[pos:].startswith(b"WARC/"):
+        if not b.startswith(b"WARC/", pos):
             return None
         hdr_end = b.find(b"\r\n\r\n", pos)
         if hdr_end < 0:
@@ -2821,46 +2619,35 @@ def parse_warc(
     payloads (the ``.warc.gz`` on-disk layout — one gzip member PER
     RECORD) read through the same parser. Structurally broken files,
     and response blocks with no HTTP header end, degrade to skip.
-    Scale: pure mapInPandas, zero shuffles; at 100 TB one WARC file is
-    one row of a binaryFile/payload table and the fleet is
-    embarrassingly parallel."""
+    At 100 TB one WARC file is one row of a binaryFile/payload table and
+    the fleet is embarrassingly parallel."""
 
-    def parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for i, buf in zip(pdf[id_col], pdf[payload_col]):
-                try:
-                    recs = _warc_file_records(bytes(buf))
-                except Exception:
-                    recs = None
-                for headers, block in recs or ():
-                    if headers.get("warc-type") != "response":
-                        continue
-                    head = _http_response_head(block)
-                    if head is None or head[1] is None:
-                        continue
-                    rows.append(
-                        (
-                            int(i),
-                            len(recs),
-                            "response",
-                            headers.get("warc-target-uri"),
-                            head[0],
-                            block[head[1] :].decode("utf-8", "replace"),
-                        )
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    id_col, "n_records", "warc_type", "target_uri",
-                    "http_status", "body",
-                ],
+    def parse(i, b: bytes):
+        try:
+            recs = _warc_file_records(b)
+        except Exception:
+            recs = None
+        for headers, block in recs or ():
+            if headers.get("warc-type") != "response":
+                continue
+            head = _http_response_head(block)
+            if head is None or head[1] is None:
+                continue
+            yield (
+                i,
+                len(recs),
+                "response",
+                headers.get("warc-target-uri"),
+                head[0],
+                block[head[1] :].decode("utf-8", "replace"),
             )
 
-    return df.mapInPandas(
-        parse,
+    return _map_rows(
+        df,
+        [id_col, payload_col],
         f"{id_col} long, n_records int, warc_type string, target_uri string, "
         "http_status int, body string",
+        parse,
     )
 
 
@@ -2886,75 +2673,55 @@ def warc_gz_cdx_stats(
     even one byte breaks the member's gzip header and fails the fetch —
     the property that lets a 100 TB crawl serve single-record reads off
     an index instead of streaming whole files. Structurally broken
-    files degrade to skip. Pure mapInPandas, zero shuffles."""
+    files degrade to skip."""
 
-    def stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for i, buf in zip(pdf[id_col], pdf[payload_col]):
-                try:
-                    raw = bytes(buf)
-                    if raw[:2] != b"\x1f\x8b":
-                        continue
-                    spans = _gz_member_spans(raw)
-                    if spans is None:
-                        continue
-                    full = _warc_split_records(
-                        b"".join(chunk for _, _, chunk in spans)
-                    )
-                    if full is None or len(full) != len(spans):
-                        continue
-                    coverage_ok = int(
-                        spans[0][0] == 0
-                        and all(
-                            spans[k][0] + spans[k][1] == spans[k + 1][0]
-                            for k in range(len(spans) - 1)
-                        )
-                        and spans[-1][0] + spans[-1][1] == len(raw)
-                    )
-                    fetch_ok = 1
-                    status = None
-                    n_resp = 0
-                    for (off, ln, chunk), (hdrs, block) in zip(spans, full):
-                        refetched = _gz_inflate_members(raw[off : off + ln])
-                        if refetched != chunk:
-                            fetch_ok = 0
-                            continue
-                        rec = _warc_split_records(refetched)
-                        if rec is None or len(rec) != 1:
-                            fetch_ok = 0
-                            continue
-                        if rec[0][0] != hdrs or rec[0][1] != block:
-                            fetch_ok = 0
-                        if hdrs.get("warc-type") == "response":
-                            n_resp += 1
-                            head = _http_response_head(block)
-                            if head and None not in head:
-                                status = head[0]
-                    rows.append(
-                        (
-                            int(i),
-                            len(spans),
-                            n_resp,
-                            coverage_ok,
-                            fetch_ok,
-                            status,
-                        )
-                    )
-                except Exception:
-                    continue
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    id_col, "n_members", "n_response",
-                    "coverage_ok", "fetch_ok", "http_status",
-                ],
+    def stats(i, raw: bytes):
+        try:
+            if raw[:2] != b"\x1f\x8b":
+                return
+            spans = _gz_member_spans(raw)
+            if spans is None:
+                return
+            full = _warc_split_records(b"".join(chunk for _, _, chunk in spans))
+            if full is None or len(full) != len(spans):
+                return
+            coverage_ok = int(
+                spans[0][0] == 0
+                and all(
+                    spans[k][0] + spans[k][1] == spans[k + 1][0]
+                    for k in range(len(spans) - 1)
+                )
+                and spans[-1][0] + spans[-1][1] == len(raw)
             )
+            fetch_ok = 1
+            status = None
+            n_resp = 0
+            for (off, ln, chunk), (hdrs, block) in zip(spans, full):
+                refetched = _gz_inflate_members(raw[off : off + ln])
+                if refetched != chunk:
+                    fetch_ok = 0
+                    continue
+                rec = _warc_split_records(refetched)
+                if rec is None or len(rec) != 1:
+                    fetch_ok = 0
+                    continue
+                if rec[0][0] != hdrs or rec[0][1] != block:
+                    fetch_ok = 0
+                if hdrs.get("warc-type") == "response":
+                    n_resp += 1
+                    head = _http_response_head(block)
+                    if head and None not in head:
+                        status = head[0]
+            yield i, len(spans), n_resp, coverage_ok, fetch_ok, status
+        except Exception:
+            return
 
-    return df.mapInPandas(
-        stats,
+    return _map_rows(
+        df,
+        [id_col, payload_col],
         f"{id_col} long, n_members int, n_response int, coverage_ok int, "
         "fetch_ok int, http_status int",
+        stats,
     )
 
 
@@ -2971,56 +2738,40 @@ def warc_gz_cdx_index(
     lookup needs nothing else.  Downstream the urlkey is
     ``text.surt_key(target_uri)`` (d125) — kept OUT of this function so
     the key policy stays one codegen expression, not Python.
-    Structurally broken files degrade to skip (no rows).  Scale: pure
-    mapInPandas, zero shuffles — at 100 TB each WARC file is one row of
-    a binaryFile table and indexing is embarrassingly parallel; the
-    emitted index is then a tiny, partitionable table served through the
-    engine's storage layout."""
+    Structurally broken files degrade to skip (no rows).  At 100 TB
+    each WARC file is one row of a binaryFile table and indexing is
+    embarrassingly parallel; the emitted index is then a tiny,
+    partitionable table served through the engine's storage layout."""
 
-    def index(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for i, buf in zip(pdf[id_col], pdf[payload_col]):
-                try:
-                    raw = bytes(buf)
-                    if raw[:2] != b"\x1f\x8b":
-                        continue
-                    spans = _gz_member_spans(raw)
-                    if spans is None:
-                        continue
-                    for k, (off, ln, chunk) in enumerate(spans):
-                        rec = _warc_split_records(chunk)
-                        if rec is None or len(rec) != 1:
-                            continue
-                        hdrs, block = rec[0]
-                        head = None
-                        if hdrs.get("warc-type") == "response":
-                            head = _http_response_head(block)
-                        rows.append(
-                            (
-                                int(i),
-                                k,
-                                off,
-                                ln,
-                                hdrs.get("warc-type"),
-                                hdrs.get("warc-target-uri"),
-                                head[0] if head else None,
-                            )
-                        )
-                except Exception:
+    def index(i, raw: bytes):
+        try:
+            spans = _gz_member_spans(raw) if raw[:2] == b"\x1f\x8b" else None
+            for k, (off, ln, chunk) in enumerate(spans or ()):
+                rec = _warc_split_records(chunk)
+                if rec is None or len(rec) != 1:
                     continue
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    id_col, "member_idx", "offset", "length",
-                    "warc_type", "target_uri", "http_status",
-                ],
-            )
+                hdrs, block = rec[0]
+                head = None
+                if hdrs.get("warc-type") == "response":
+                    head = _http_response_head(block)
+                yield (
+                    i,
+                    k,
+                    off,
+                    ln,
+                    hdrs.get("warc-type"),
+                    hdrs.get("warc-target-uri"),
+                    head[0] if head else None,
+                )
+        except Exception:
+            return
 
-    return df.mapInPandas(
-        index,
+    return _map_rows(
+        df,
+        [id_col, payload_col],
         f"{id_col} long, member_idx int, offset long, length long, "
         "warc_type string, target_uri string, http_status int",
+        index,
     )
 
 
@@ -3040,49 +2791,39 @@ def warc_gz_indexed_fetch(
     rows (geometry slip → broken gzip header, or a slice that is not
     exactly one record) keep their identity columns with NULL content —
     the skip-never-error contract, so one bad index row cannot fail a
-    fleet.  Scale: pure mapInPandas, zero shuffles; the caller joins
-    index→payload however its storage co-locates them."""
+    fleet.  The caller joins index→payload however its storage
+    co-locates them."""
 
-    def fetch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for i, buf, off, ln in zip(
-                pdf[id_col], pdf[payload_col], pdf[offset_col], pdf[length_col]
-            ):
-                i, off, ln = int(i), int(off), int(ln)
-                wtype = uri = body = None
-                status = None
-                ok = 0
-                try:
-                    raw = bytes(buf)[off : off + ln]
-                    rec = _warc_file_records(raw) if raw[:2] == b"\x1f\x8b" else None
-                    if rec is not None and len(rec) == 1:
-                        hdrs, block = rec[0]
-                        wtype = hdrs.get("warc-type")
-                        uri = hdrs.get("warc-target-uri")
-                        ok = 1
-                        head = None
-                        if wtype == "response":
-                            head = _http_response_head(block)
-                        if head:
-                            status, start = head
-                            if start is not None:
-                                body = block[start:].decode("utf-8", "replace")
-                except Exception:
-                    ok = 0
-                rows.append((i, off, ok, wtype, uri, status, body))
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    id_col, "offset", "fetch_ok", "warc_type",
-                    "target_uri", "http_status", "body",
-                ],
-            )
+    def fetch(i, b: bytes, off, ln):
+        off, ln = int(off), int(ln)
+        wtype = uri = body = None
+        status = None
+        ok = 0
+        try:
+            raw = b[off : off + ln]
+            rec = _warc_file_records(raw) if raw[:2] == b"\x1f\x8b" else None
+            if rec is not None and len(rec) == 1:
+                hdrs, block = rec[0]
+                wtype = hdrs.get("warc-type")
+                uri = hdrs.get("warc-target-uri")
+                ok = 1
+                head = None
+                if wtype == "response":
+                    head = _http_response_head(block)
+                if head:
+                    status, start = head
+                    if start is not None:
+                        body = block[start:].decode("utf-8", "replace")
+        except Exception:
+            ok = 0
+        yield i, off, ok, wtype, uri, status, body
 
-    return df.mapInPandas(
-        fetch,
+    return _map_rows(
+        df,
+        [id_col, payload_col, offset_col, length_col],
         f"{id_col} long, offset long, fetch_ok int, warc_type string, "
         "target_uri string, http_status int, body string",
+        fetch,
     )
 
 
@@ -3168,45 +2909,24 @@ def synth_y4m(
     stream; plane value at (frame f, x, y) is ``(7*id + 3x + 5y + 13f
     + k) mod 256`` with k = 0/11/22 for Y/U/V — the d99 pattern, so an
     oracle regenerates every byte arithmetically.  chroma='420' halves
-    both chroma dimensions (C420 subsampling) for parser coverage.
-    Arrow-batched mapInPandas, zero shuffles."""
+    both chroma dimensions (C420 subsampling) for parser coverage."""
+    cw, ch = (width, height) if chroma == "444" else (width // 2, height // 2)
+    yy, yx = np.meshgrid(np.arange(height), np.arange(width), indexing="ij")
+    ybase = (3 * yx + 5 * yy).astype(np.int64)
+    cy, cx = np.meshgrid(np.arange(ch), np.arange(cw), indexing="ij")
+    cbase = (3 * cx + 5 * cy).astype(np.int64)
+    header = _y4m_header(W=width, H=height, C=chroma)
 
-    def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    def build(i: int):
+        parts = [header]
+        for f in range(3 + i % 4):
+            parts.append(b"FRAME\n")
+            for base, k in ((ybase, 0), (cbase, 11), (cbase, 22)):
+                plane = (7 * i + base + 13 * f + k) % 256
+                parts.append(plane.astype(np.uint8).tobytes())
+        yield i, b"".join(parts)
 
-        cw, ch = (width, height) if chroma == "444" else (width // 2, height // 2)
-        yy, yx = np.meshgrid(np.arange(height), np.arange(width), indexing="ij")
-        ybase = (3 * yx + 5 * yy).astype(np.int64)
-        cy, cx = np.meshgrid(np.arange(ch), np.arange(cw), indexing="ij")
-        cbase = (3 * cx + 5 * cy).astype(np.int64)
-        header = _y4m_header(W=width, H=height, C=chroma)
-        for pdf in batches:
-            out = []
-            for i in pdf[id_col]:
-                i = int(i)
-                n_frames = 3 + i % 4
-                parts = [header]
-                for f in range(n_frames):
-                    parts.append(b"FRAME\n")
-                    parts.append(
-                        ((7 * i + ybase + 13 * f) % 256).astype(np.uint8).tobytes()
-                    )
-                    parts.append(
-                        ((7 * i + cbase + 13 * f + 11) % 256)
-                        .astype(np.uint8)
-                        .tobytes()
-                    )
-                    parts.append(
-                        ((7 * i + cbase + 13 * f + 22) % 256)
-                        .astype(np.uint8)
-                        .tobytes()
-                    )
-                out.append((i, b"".join(parts)))
-            yield pd.DataFrame(out, columns=[id_col, "payload"])
-
-    return df.select(id_col).mapInPandas(
-        build, f"{id_col} long, payload binary"
-    )
+    return _map_rows(df, [id_col], f"{id_col} long, payload binary", build)
 
 
 def synth_textured_y4m(
@@ -3228,35 +2948,22 @@ def synth_textured_y4m(
     ``n_frames_base + (id % 4) * n_frames_step`` frames per stream
     (defaults reproduce the d175 fleet byte-for-byte; the d177 fleet
     uses 21 + 5·(id%4) so tick sampling at F25:1 spans 5 + id%4
-    whole ticks), C444.  Arrow-batched mapInPandas, zero shuffles."""
+    whole ticks), C444."""
+    yy, xx = np.meshgrid(np.arange(height), np.arange(width), indexing="ij")
+    quad = (xx * xx + 2 * xx * yy + 3 * yy * yy).astype(np.int64)
+    lin = (xx + 7 * yy + 13).astype(np.int64)
+    header = _y4m_header(W=width, H=height)
 
-    def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    def build(i: int):
+        parts = [header]
+        for f in range(n_frames_base + (i % 4) * n_frames_step):
+            base = 7 * i + quad + f * lin
+            parts.append(b"FRAME\n")
+            for k in (0, 11, 22):
+                parts.append(((base + k) % 256).astype(np.uint8).tobytes())
+        yield i, b"".join(parts)
 
-        yy, xx = np.meshgrid(
-            np.arange(height), np.arange(width), indexing="ij"
-        )
-        quad = (xx * xx + 2 * xx * yy + 3 * yy * yy).astype(np.int64)
-        lin = (xx + 7 * yy + 13).astype(np.int64)
-        header = _y4m_header(W=width, H=height)
-        for pdf in batches:
-            out = []
-            for i in pdf[id_col]:
-                i = int(i)
-                parts = [header]
-                for f in range(n_frames_base + (i % 4) * n_frames_step):
-                    base = 7 * i + quad + f * lin
-                    parts.append(b"FRAME\n")
-                    for k in (0, 11, 22):
-                        parts.append(
-                            ((base + k) % 256).astype(np.uint8).tobytes()
-                        )
-                out.append((i, b"".join(parts)))
-            yield pd.DataFrame(out, columns=[id_col, "payload"])
-
-    return df.select(id_col).mapInPandas(
-        build, f"{id_col} long, payload binary"
-    )
+    return _map_rows(df, [id_col], f"{id_col} long, payload binary", build)
 
 
 def y4m_frame_sample(
@@ -3277,72 +2984,44 @@ def y4m_frame_sample(
     Returns (id, frame_no, width, height, n_frames, y_mean, u_mean,
     v_mean, y_pos_sum).  Scale: frame sampling is the pipeline's data
     EXCLUSION valve — the unsampled frames never leave this operator,
-    so downstream stages see 1/every_n of the bytes; pure Arrow
-    mapInPandas, zero shuffles, embarrassingly parallel."""
+    so downstream stages see 1/every_n of the bytes."""
 
     if every_n < 1:
         raise ValueError("y4m_frame_sample: every_n must be >= 1")
 
-    def sample(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        for pdf in batches:
-            rows = []
-            for i, buf in zip(pdf[id_col], pdf[payload_col]):
-                b = bytes(buf)
-                vid = _y4m_read(b)
-                if vid is None:
-                    continue
-                w, h, csize = vid.w, vid.h, vid.cw * vid.ch
-                for f, (_, start) in enumerate(vid.frames):
-                    if f % every_n:
-                        continue
-                    y = (
-                        np.frombuffer(b, np.uint8, w * h, start)
-                        .reshape(h, w)
-                        .astype(np.int64)
-                    )
-                    u = np.frombuffer(
-                        b, np.uint8, csize, start + w * h
-                    ).astype(np.int64)
-                    v = np.frombuffer(
-                        b, np.uint8, csize, start + w * h + csize
-                    ).astype(np.int64)
-                    xs = np.arange(1, w + 1, dtype=np.int64)
-                    ys = np.arange(2, h + 2, dtype=np.int64)
-                    rows.append(
-                        (
-                            int(i),
-                            f,
-                            w,
-                            h,
-                            len(vid.frames),
-                            round(float(y.sum()) / (w * h), 6),
-                            round(float(u.sum()) / csize, 6),
-                            round(float(v.sum()) / csize, 6),
-                            int((y * xs[None, :] * ys[:, None]).sum()),
-                        )
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    id_col,
-                    "frame_no",
-                    "width",
-                    "height",
-                    "n_frames",
-                    "y_mean",
-                    "u_mean",
-                    "v_mean",
-                    "y_pos_sum",
-                ],
+    def sample(i, b: bytes):
+        vid = _y4m_read(b)
+        if vid is None:
+            return
+        w, h, csize = vid.w, vid.h, vid.cw * vid.ch
+        xs = np.arange(1, w + 1, dtype=np.int64)
+        ys = np.arange(2, h + 2, dtype=np.int64)
+        for f in range(0, len(vid.frames), every_n):
+            start = vid.frames[f][1]
+            y = np.frombuffer(b, np.uint8, w * h, start).reshape(h, w).astype(np.int64)
+            u = np.frombuffer(b, np.uint8, csize, start + w * h).astype(np.int64)
+            v = np.frombuffer(b, np.uint8, csize, start + w * h + csize)
+            v = v.astype(np.int64)
+            yield (
+                i,
+                f,
+                w,
+                h,
+                len(vid.frames),
+                round(float(y.sum()) / (w * h), 6),
+                round(float(u.sum()) / csize, 6),
+                round(float(v.sum()) / csize, 6),
+                int((y * xs[None, :] * ys[:, None]).sum()),
             )
 
-    return df.mapInPandas(
-        sample,
+    return _map_rows(
+        df,
+        [id_col, payload_col],
         f"{id_col} long, frame_no int, width int, height int, n_frames int,"
         " y_mean double, u_mean double, v_mean double, y_pos_sum long",
+        sample,
     )
+
 
 def resize_area(
     df: DataFrame,
@@ -3362,63 +3041,39 @@ def resize_area(
     area in INTEGER math (round-half-up), block_sum emitted alongside so
     the oracle certifies the actual summation, not just the quotient.
     Long output layout (id, cell_x, cell_y, channel, block_sum, pixel)
-    keeps arrays out of the hash compare.  Scale: pure Arrow
-    mapInPandas, zero shuffles; the resized frame is out_w*out_h/(w*h)
-    of the input bytes — like frame sampling, a data valve."""
+    keeps arrays out of the hash compare.  Scale: the resized frame is
+    out_w*out_h/(w*h) of the input bytes — like frame sampling, a data
+    valve. Frames :func:`_rgb_read` rejects skip."""
 
     if out_w < 1 or out_h < 1:
         raise ValueError("resize_area: output grid must be >= 1x1")
 
-    def resize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    def resize(i, w, h, b: bytes):
+        arr = _rgb_read(b, w, h)
+        if arr is None:
+            return
+        h, w, _ = arr.shape
+        if w % out_w or h % out_h:
+            return
+        bh, bw = h // out_h, w // out_w
+        area = bh * bw
+        sums = arr.reshape(out_h, bh, out_w, bw, 3).sum(axis=(1, 3))
+        px = (sums + area // 2) // area
+        for cy in range(out_h):
+            for cx in range(out_w):
+                for c in range(3):
+                    yield i, cx, cy, c, int(sums[cy, cx, c]), int(px[cy, cx, c])
 
-        for pdf in batches:
-            rows = []
-            for i, w, h, buf in zip(
-                pdf[id_col], pdf["width"], pdf["height"], pdf[payload_col]
-            ):
-                w, h = int(w), int(h)
-                if w == 0 or h == 0 or w % out_w or h % out_h:
-                    continue
-                try:
-                    arr = (
-                        np.frombuffer(bytes(buf), dtype=np.uint8)
-                        .reshape(h, w, 3)
-                        .astype(np.int64)
-                    )
-                except ValueError:
-                    continue
-                bh, bw = h // out_h, w // out_w
-                area = bh * bw
-                sums = arr.reshape(out_h, bh, out_w, bw, 3).sum(axis=(1, 3))
-                px = (sums + area // 2) // area
-                for cy in range(out_h):
-                    for cx in range(out_w):
-                        for c in range(3):
-                            rows.append(
-                                (
-                                    int(i),
-                                    cx,
-                                    cy,
-                                    c,
-                                    int(sums[cy, cx, c]),
-                                    int(px[cy, cx, c]),
-                                )
-                            )
-            yield pd.DataFrame(
-                rows,
-                columns=[id_col, "cell_x", "cell_y", "channel", "block_sum", "pixel"],
-            )
-
-    return df.mapInPandas(
-        resize,
+    return _map_rows(
+        df,
+        [id_col, "width", "height", payload_col],
         f"{id_col} long, cell_x int, cell_y int, channel int,"
         " block_sum long, pixel long",
+        resize,
     )
 
-def _pow2_u64():
-    import numpy as np
 
+def _pow2_u64():
     return np.uint64(1) << np.arange(64, dtype=np.uint64)
 
 
@@ -3435,8 +3090,6 @@ def _band_energy_limbs(re_m, im_m):
     the vectorized replacement for the arbitrary-precision Python-int
     energy loops (guide §4.2): bit-identical decisions, no per-frame
     Python."""
-    import numpy as np
-
     mask = (1 << 21) - 1
     out = None
     for x in (re_m, im_m):
@@ -3489,8 +3142,6 @@ def _limb_argmax_first(e):
     CANONICAL-izable non-negative limb numbers — the exact integer
     replacement for ``np.argmax`` over object-dtype big-int energies
     (ties break to the lowest index, np.argmax's rule)."""
-    import numpy as np
-
     e = e.copy()
     last = e.shape[-1] - 1
     for i in range(last):
@@ -3511,6 +3162,50 @@ def _limb_argmax_first(e):
             best[gt] = cand[gt]
             besti[gt] = bi
     return besti
+
+
+def _map_wav_frames(
+    df: DataFrame,
+    payload_col: str,
+    id_col: str,
+    schema: str,
+    frame_len: int,
+    hop: int,
+    n_bins: int,
+    emit,
+) -> DataFrame:
+    """The batch pass of the three DFT operators: per Arrow batch, frame
+    every PCM-16 mono file of at least ``frame_len`` samples
+    (``frame_len`` window, ``hop`` stride, tail dropped), take ONE exact
+    int64 DFT at bins 0..n_bins-1 over all the batch's frames (one
+    matmul and one limb pass amortize the fixed numpy call overhead a
+    per-file pass pays per file), then ``emit(files, re, im)`` -> rows
+    of the DDL ``schema`` (tuples or a 2-D int array); ``files`` lists
+    (id, n_frames) in frame order. Payloads as in :func:`_map_rows`."""
+    names = _ddl_names(schema)
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        cos_i, sin_i = _int_dft_basis(n_bins, frame_len)
+        for pdf in batches:
+            files, wins = [], []
+            for i, buf in zip(pdf[id_col].tolist(), pdf[payload_col]):
+                got = _wav_pcm16_mono(_payload(buf))
+                if got is None or got[1].size < frame_len:
+                    continue
+                win = np.lib.stride_tricks.sliding_window_view(
+                    got[1].astype(np.int64), frame_len
+                )[::hop]
+                files.append((i, win.shape[0]))
+                wins.append(win)
+            rows = []
+            if files:
+                # one stacked int64 matmul: exact, the frame_len guard
+                # bounds the linear accumulator
+                allw = np.concatenate(wins, axis=0)
+                rows = emit(files, allw @ cos_i.T, allw @ (-sin_i.T))
+            yield pd.DataFrame(rows, columns=names)
+
+    return df.select(id_col, payload_col).mapInPandas(run, schema)
 
 
 def stft_frame_features(
@@ -3536,9 +3231,8 @@ def stft_frame_features(
     integer power compare (re^2 + im^2 in arbitrary-precision Python /
     HUGEINT SQL; ties break to the lowest bin).  Non-PCM / broken
     containers skip.  Returns (id, frame_no, bin, re_scaled,
-    im_scaled, is_peak).  Scale: pure Arrow mapInPandas, zero
-    shuffles; frames x bins rows per file, independent of corpus
-    size."""
+    im_scaled, is_peak).  Scale: frames x bins rows per file,
+    independent of corpus size."""
 
     if frame_len < 1 or hop < 1 or n_bins < 2 or n_bins > frame_len:
         raise ValueError(
@@ -3548,83 +3242,39 @@ def stft_frame_features(
         )
     _check_dft_frame_len("stft_frame_features", frame_len)
 
-    def feats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    def emit(files, re, im):
+        # dominant non-DC bin via EXACT int64-limb power compare (re²
+        # overflows int64, so energies live as five 21-bit limb
+        # coefficients — _band_energy_limbs); first-max IS the
+        # lowest-bin tie-break. Frames are independent, so one
+        # batch-wide argmax is exactly the per-file result.
+        peaks = 1 + _limb_argmax_first(_band_energy_limbs(re[:, 1:], im[:, 1:]))
+        n = np.array([nf for _, nf in files])
+        frame_no = np.arange(n.sum()) - np.repeat(np.cumsum(n) - n, n)
+        bins = np.tile(np.arange(n_bins), n.sum())
+        # one row per frame × bin, assembled as columns (per-element
+        # Python tuples dominated this map)
+        return np.column_stack(
+            [
+                np.repeat([i for i, _ in files], n * n_bins),
+                np.repeat(frame_no, n_bins),
+                bins,
+                re.ravel(),
+                im.ravel(),
+                bins == np.repeat(peaks, n_bins),
+            ]
+        )
 
-        cos_i, sin_i = _int_dft_basis(n_bins, frame_len)
-        bin_idx = np.arange(n_bins, dtype=np.int32)
-        for pdf in batches:
-            # pass 1: parse + frame every file; the DFT and the exact
-            # peak compare then run ONCE over the whole batch's frames
-            # (one big matmul + one limb pass amortizes the fixed numpy
-            # call overhead that a per-file pass would pay ~50x per file)
-            metas: list = []
-            wins: list = []
-            for i, buf in zip(pdf[id_col], pdf[payload_col]):
-                got = _wav_pcm16_mono(bytes(buf))
-                if got is None or got[1].size < frame_len:
-                    continue
-                s = got[1].astype(np.int64)
-                win = np.lib.stride_tricks.sliding_window_view(
-                    s, frame_len
-                )[::hop]
-                metas.append((int(i), win.shape[0]))
-                wins.append(win)
-            cid, cf, cb, cre, cim, cpk = [], [], [], [], [], []
-            if metas:
-                allw = np.concatenate(wins, axis=0)
-                # stacked DFT (one int64 matmul, exact — bit-identical
-                # to the per-frame loop it replaces)
-                re_all = allw @ cos_i.T
-                im_all = allw @ (-sin_i.T)
-                # dominant non-DC bin via EXACT int64-limb power compare
-                # (re² overflows int64, so energies live as five 21-bit
-                # limb coefficients — _band_energy_limbs); first-max IS
-                # the lowest-bin tie-break the object-dtype np.argmax
-                # implemented, without per-element Python big ints.
-                # Frames are per-frame independent, so one batch-wide
-                # argmax is exactly the per-file result.
-                peaks_all = 1 + _limb_argmax_first(
-                    _band_energy_limbs(re_all[:, 1:], im_all[:, 1:])
-                ).astype(np.int32)
-            off = 0
-            for ii, n_frames in metas:
-                re_m = re_all[off : off + n_frames]
-                im_m = im_all[off : off + n_frames]
-                peaks = peaks_all[off : off + n_frames]
-                off += n_frames
-                # vectorized row assembly (one row per frame × bin): the
-                # per-element Python tuple building dominated this map
-                cid.append(np.full(n_frames * n_bins, ii, dtype=np.int64))
-                cf.append(np.repeat(np.arange(n_frames, dtype=np.int32), n_bins))
-                cb.append(np.tile(bin_idx, n_frames))
-                cre.append(re_m.ravel())
-                cim.append(im_m.ravel())
-                cpk.append(
-                    (np.tile(bin_idx, n_frames) == np.repeat(peaks, n_bins))
-                    .astype(np.int32)
-                )
-
-            def cat(parts, dt):
-                return (
-                    np.concatenate(parts) if parts else np.array([], dtype=dt)
-                )
-
-            yield pd.DataFrame(
-                {
-                    id_col: cat(cid, np.int64),
-                    "frame_no": cat(cf, np.int32),
-                    "bin": cat(cb, np.int32),
-                    "re_scaled": cat(cre, np.int64),
-                    "im_scaled": cat(cim, np.int64),
-                    "is_peak": cat(cpk, np.int32),
-                }
-            )
-
-    return df.mapInPandas(
-        feats,
+    return _map_wav_frames(
+        df,
+        payload_col,
+        id_col,
         f"{id_col} long, frame_no int, bin int, re_scaled long,"
         " im_scaled long, is_peak int",
+        frame_len,
+        hop,
+        n_bins,
+        emit,
     )
 
 
@@ -3667,7 +3317,7 @@ def audio_fingerprint(
     long audio must compare n_frames vs n_frames_used (or chunk tracks
     to ≤ n_frames_used frames first) instead of trusting the 64-bit
     signature alone.  Files shorter than one frame (or non-PCM) skip.
-    Scale: pure Arrow mapInPandas, zero shuffles, one row per file."""
+    One row per file."""
     if frame_len < 1 or hop < 1 or n_bands < 2 or n_bands + 1 > frame_len:
         raise ValueError(
             "audio_fingerprint needs frame_len >= 1, hop >= 1 and "
@@ -3675,72 +3325,60 @@ def audio_fingerprint(
             "1..n_bands; the gradient needs two adjacent bands)"
         )
     _check_dft_frame_len("audio_fingerprint", frame_len)
+    max_f = 63 // (n_bands - 1)  # double-diff frames that fit 64 bits
 
-    def fps(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        cos_i, sin_i = _int_dft_basis(n_bands + 1, frame_len)  # DC + bands
-        max_f = 63 // (n_bands - 1)  # double-diff frames that fit 64 bits
-
-        for pdf in batches:
-            # batch-wide DFT + exact limb double-difference pass (one
-            # matmul + one bit grid for ALL files; per-file numpy call
-            # overhead was the cost — guide §4.2), then per-file packing
-            metas: list = []
-            wins: list = []
-            for i, buf in zip(pdf[id_col], pdf[payload_col]):
-                got = _wav_pcm16_mono(bytes(buf))
-                if got is None or got[1].size < frame_len:
-                    continue
-                s = got[1].astype(np.int64)
-                n_frames = (s.size - frame_len) // hop + 1
-                nf_used = min(n_frames, max_f + 1)
-                win = np.lib.stride_tricks.sliding_window_view(
-                    s, frame_len
-                )[::hop][:nf_used]
-                metas.append((int(i), n_frames, nf_used))
-                wins.append(win)
-            rows = []
-            if metas:
-                allw = np.concatenate(wins, axis=0)
-                re_all = allw @ cos_i.T
-                im_all = allw @ (-sin_i.T)
-                # one bit grid over the concatenated frames; rows that
-                # pair the last frame of one file with the first of the
-                # next are sliced away below (exact double-difference
-                # bits — int64 limbs replace the per-frame Python
-                # big-int energy loop, decisions bit-identical)
-                bits_all = _chroma_ddiff_bits(re_all, im_all)
-            off = 0
-            for ii, n_frames, nf_used in metas:
-                bits = bits_all[off : off + nf_used - 1].ravel()
-                off += nf_used
-                # bit (n_bands-1)·(f-1)+p is bits[(f-1)·(n_bands-1)+p]:
-                # frame-major ravel order matches the bit layout, and
-                # nf_used caps the count at 63 bits
-                val = int(bits.astype(np.uint64) @ _POW2[: bits.size])
-                rows.append(
-                    (
-                        ii,
-                        int(n_frames),
-                        int(nf_used),
-                        int(bits.sum()),
-                        int(val & 0xFFFFFFFF),
-                        int(val >> 32),
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    id_col, "n_frames", "n_frames_used", "n_ones",
-                    "fp_lo", "fp_hi",
-                ],
+    def emit(files, re, im):
+        # one exact bit grid over the concatenated frames; rows that
+        # pair the last frame of one file with the first of the next
+        # are sliced away below
+        bits_all = _chroma_ddiff_bits(re, im)
+        rows, off = [], 0
+        for i, n_frames in files:
+            nf_used = min(n_frames, max_f + 1)
+            # bit (n_bands-1)·(f-1)+p is bits[(f-1)·(n_bands-1)+p]:
+            # frame-major ravel order matches the bit layout, and
+            # nf_used caps the count at 63 bits
+            bits = bits_all[off : off + nf_used - 1].ravel()
+            off += n_frames
+            val = int(bits.astype(np.uint64) @ _POW2[: bits.size])
+            rows.append(
+                (i, n_frames, nf_used, int(bits.sum()), val & 0xFFFFFFFF, val >> 32)
             )
+        return rows
 
-    return df.mapInPandas(
-        fps,
+    return _map_wav_frames(
+        df,
+        payload_col,
+        id_col,
         f"{id_col} long, n_frames long, n_frames_used long, n_ones int,"
         " fp_lo long, fp_hi long",
+        frame_len,
+        hop,
+        n_bands + 1,  # DC + bands
+        emit,
+    )
+
+
+def _rgb_hash64(df: DataFrame, payload_col: str, id_col: str, bits_of) -> DataFrame:
+    """The perceptual-hash trio's frame: per raw RGB frame
+    (:func:`_rgb_read`; rejected frames skip), ``bits_of(int64 (h, w, 3)
+    pixels)`` -> an 8×8 bool grid whose cell (y, x) is hash bit 8·y + x,
+    or None to skip; one row (id, n_ones, hash_lo, hash_hi) per hash,
+    hash_lo bits 0–31 and hash_hi bits 32–63."""
+
+    def hashes(i, w, h, b: bytes):
+        arr = _rgb_read(b, w, h)
+        bits = None if arr is None else bits_of(arr)
+        if bits is None:
+            return
+        val = int(bits.ravel().astype(np.uint64) @ _POW2)
+        yield i, int(bits.sum()), val & 0xFFFFFFFF, val >> 32
+
+    return _map_rows(
+        df,
+        [id_col, "width", "height", payload_col],
+        f"{id_col} long, n_ones int, hash_lo long, hash_hi long",
+        hashes,
     )
 
 
@@ -3761,48 +3399,19 @@ def dhash_64(
     (resp. (j * h) // 8) — pure integer ops, so the oracle replays
     every comparison.  Emitted as the (n_ones, hash_lo, hash_hi)
     layout shared by the trio; Hamming clustering rides
-    dedup.hamming_clusters.  Zero shuffles (mapInPandas)."""
+    dedup.hamming_clusters."""
 
-    def hashes(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    def bits_of(arr):
+        h, w, _ = arr.shape
+        if w < 9 or h < 8:
+            return None
+        gray = arr.sum(axis=2)
+        xs = (np.arange(9) * w) // 9
+        ys = (np.arange(8) * h) // 8
+        grid = gray[np.ix_(ys, xs)]  # 8 rows x 9 cols
+        return grid[:, :-1] > grid[:, 1:]
 
-        for pdf in batches:
-            rows = []
-            for i, w, h, buf in zip(
-                pdf[id_col], pdf["width"], pdf["height"], pdf[payload_col]
-            ):
-                w, h = int(w), int(h)
-                if w < 9 or h < 8:
-                    continue
-                try:
-                    arr = (
-                        np.frombuffer(bytes(buf), dtype=np.uint8)
-                        .reshape(h, w, 3)
-                        .astype(np.int64)
-                    )
-                except ValueError:
-                    continue
-                gray = arr.sum(axis=2)
-                xs = (np.arange(9) * w) // 9
-                ys = (np.arange(8) * h) // 8
-                grid = gray[np.ix_(ys, xs)]  # 8 rows x 9 cols
-                bits = grid[:, :-1] > grid[:, 1:]
-                val = 0
-                for y in range(8):
-                    for x in range(8):
-                        if bits[y, x]:
-                            val |= 1 << (8 * y + x)
-                rows.append(
-                    (int(i), int(bits.sum()), int(val & 0xFFFFFFFF), int(val >> 32))
-                )
-            yield pd.DataFrame(
-                rows, columns=[id_col, "n_ones", "hash_lo", "hash_hi"]
-            )
-
-    return df.mapInPandas(
-        hashes,
-        f"{id_col} long, n_ones int, hash_lo long, hash_hi long",
-    )
+    return _rgb_hash64(df, payload_col, id_col, bits_of)
 
 
 def phash_64(
@@ -3830,71 +3439,41 @@ def phash_64(
     a 128x128 frame hashes correctly instead of silently wrapping.
     Emitted as two unsigned 32-bit halves (hash_lo bits 0-31, hash_hi
     bits 32-63) + the AC popcount.  Frames smaller than 8x8 skip.
-    Scale: pure Arrow mapInPandas, zero shuffles; Hamming clustering
-    rides dedup.hamming_clusters."""
+    Hamming clustering rides dedup.hamming_clusters."""
 
-    def hashes(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    def cos_table(n: int) -> "np.ndarray":
+        k = np.arange(n).reshape(-1, 1).astype(np.float64)
+        i = np.arange(n).reshape(1, -1).astype(np.float64)
+        c = np.cos(np.pi * (2 * i + 1) * k / (2 * n)) * 1e6
+        return (np.sign(c) * np.floor(np.abs(c) + 0.5)).astype(np.int64)
 
-        def cos_table(n: int) -> "np.ndarray":
-            k = np.arange(n).reshape(-1, 1).astype(np.float64)
-            i = np.arange(n).reshape(1, -1).astype(np.float64)
-            c = np.cos(np.pi * (2 * i + 1) * k / (2 * n)) * 1e6
-            return (np.sign(c) * np.floor(np.abs(c) + 0.5)).astype(np.int64)
+    # |t1| <= 765e6 * w never overflows; |coef| <= 765e12 * w * h
+    # overflows int64 once w*h exceeds this bound
+    INT64_SAFE_PIXELS = (2**63 - 1) // (765 * 10**12)
+    tables: dict = {}  # cosine table per side length, filled per worker
 
-        # |t1| <= 765e6 * w never overflows; |coef| <= 765e12 * w * h
-        # overflows int64 once w*h exceeds this bound
-        INT64_SAFE_PIXELS = (2**63 - 1) // (765 * 10**12)
+    def bits_of(arr):
+        h, w, _ = arr.shape
+        if w < 8 or h < 8:
+            return None
+        gray = arr.sum(axis=2)  # r+g+b, unscaled (affine-safe)
+        if w not in tables:
+            tables[w] = cos_table(w)
+        if h not in tables:
+            tables[h] = cos_table(h)
+        # coef[v][u] = sum_y sum_x gray[y][x] * Ch[v][y] * Cw[u][x]
+        t1 = gray @ tables[w][:8, :].T  # h x 8, |.| <= 765e6*w
+        if w * h <= INT64_SAFE_PIXELS:
+            coef = tables[h][:8, :] @ t1
+        else:
+            # exact big-int path: 8 x h @ h x 8 = 64h Python ops
+            coef = tables[h][:8, :].astype(object) @ t1.astype(object)
+        med = np.sort(np.delete(coef.ravel(), 0))[31]  # exact middle of 63 AC
+        bits = (coef > med).astype(bool)
+        bits[0, 0] = False  # the DC term carries no bit
+        return bits
 
-        tables: dict = {}
-        for pdf in batches:
-            rows = []
-            for i, w, h, buf in zip(
-                pdf[id_col], pdf["width"], pdf["height"], pdf[payload_col]
-            ):
-                w, h = int(w), int(h)
-                if w < 8 or h < 8:
-                    continue
-                try:
-                    arr = (
-                        np.frombuffer(bytes(buf), dtype=np.uint8)
-                        .reshape(h, w, 3)
-                        .astype(np.int64)
-                    )
-                except ValueError:
-                    continue
-                gray = arr.sum(axis=2)  # r+g+b, unscaled (affine-safe)
-                if w not in tables:
-                    tables[w] = cos_table(w)
-                if h not in tables:
-                    tables[h] = cos_table(h)
-                # coef[v][u] = sum_y sum_x gray[y][x] * Ch[v][y] * Cw[u][x]
-                t1 = gray @ tables[w][:8, :].T  # h x 8, |.| <= 765e6*w
-                if w * h <= INT64_SAFE_PIXELS:
-                    coef = tables[h][:8, :] @ t1
-                else:
-                    # exact big-int path: 8 x h @ h x 8 = 64h Python ops
-                    coef = tables[h][:8, :].astype(object) @ t1.astype(object)
-                ac = np.delete(coef.ravel(), 0)  # drop DC at (v=0,u=0)
-                med = int(np.sort(ac)[31])  # exact middle of 63
-                val = 0
-                pop = 0
-                for v in range(8):
-                    for u in range(8):
-                        if (u or v) and int(coef[v, u]) > med:
-                            val |= 1 << (8 * v + u)
-                            pop += 1
-                rows.append(
-                    (int(i), pop, int(val & 0xFFFFFFFF), int(val >> 32))
-                )
-            yield pd.DataFrame(
-                rows, columns=[id_col, "n_ones", "hash_lo", "hash_hi"]
-            )
-
-    return df.mapInPandas(
-        hashes,
-        f"{id_col} long, n_ones int, hash_lo long, hash_hi long",
-    )
+    return _rgb_hash64(df, payload_col, id_col, bits_of)
 
 
 def ahash_64(
@@ -3915,55 +3494,18 @@ def ahash_64(
     32-bit halves in BIGINTs (``hash_lo`` bits 0–31, ``hash_hi`` bits
     32–63) plus the popcount. Frames must be divisible into the 8×8
     grid (others skip); input shape is ``synth_raw_rgb``'s
-    (id, width, height, payload). Scale: pure mapInPandas, zero
-    shuffles; downstream near-dup clustering rides the existing
-    SimHash/banding machinery over the emitted bits."""
+    (id, width, height, payload). Downstream near-dup clustering rides
+    the existing SimHash/banding machinery over the emitted bits."""
 
-    def hashes(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    def bits_of(arr):
+        h, w, _ = arr.shape
+        if w % 8 or h % 8:
+            return None
+        gray = arr.sum(axis=2)  # r+g+b, unscaled
+        blocks = gray.reshape(8, h // 8, 8, w // 8).sum(axis=(1, 3))
+        return 64 * blocks > int(gray.sum())
 
-        for pdf in batches:
-            rows = []
-            for i, w, h, buf in zip(
-                pdf[id_col], pdf["width"], pdf["height"], pdf[payload_col]
-            ):
-                w, h = int(w), int(h)
-                if w % 8 or h % 8 or w == 0 or h == 0:
-                    continue
-                try:
-                    arr = (
-                        np.frombuffer(bytes(buf), dtype=np.uint8)
-                        .reshape(h, w, 3)
-                        .astype(np.int64)
-                    )
-                except ValueError:
-                    continue
-                gray = arr.sum(axis=2)  # r+g+b, unscaled
-                by, bx = h // 8, w // 8
-                blocks = gray.reshape(8, by, 8, bx).sum(axis=(1, 3))
-                total = int(gray.sum())
-                bits = (64 * blocks > total).astype(np.int64)
-                val = 0
-                for yy in range(8):
-                    for xx in range(8):
-                        if bits[yy, xx]:
-                            val |= 1 << (8 * yy + xx)
-                rows.append(
-                    (
-                        int(i),
-                        int(bits.sum()),
-                        int(val & 0xFFFFFFFF),
-                        int(val >> 32),
-                    )
-                )
-            yield pd.DataFrame(
-                rows, columns=[id_col, "n_ones", "hash_lo", "hash_hi"]
-            )
-
-    return df.mapInPandas(
-        hashes,
-        f"{id_col} long, n_ones int, hash_lo long, hash_hi long",
-    )
+    return _rgb_hash64(df, payload_col, id_col, bits_of)
 
 
 def _exif_app1(i: int) -> bytes:
@@ -4008,17 +3550,12 @@ def synth_jpeg_exif(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     d159 EXIF tier.  Because the segment is INSERTED into the plain
     synth_jpeg byte stream, ``exif_strip ∘ synth_jpeg_exif`` must
     reproduce ``synth_jpeg`` byte-exactly (the d159b guarantee)."""
-    plain = synth_jpeg(df, id_col)
-
-    def add(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for i, buf in zip(pdf[id_col], pdf["payload"]):
-                b = bytes(buf)
-                rows.append((int(i), b[:2] + _exif_app1(int(i)) + b[2:]))
-            yield pd.DataFrame(rows, columns=[id_col, "payload"])
-
-    return plain.mapInPandas(add, f"{id_col} long, payload binary")
+    return _map_rows(
+        synth_jpeg(df, id_col),
+        [id_col, "payload"],
+        f"{id_col} long, payload binary",
+        lambda i, b: [(i, b[:2] + _exif_app1(i) + b[2:])],
+    )
 
 
 def exif_extract(
@@ -4033,7 +3570,7 @@ def exif_extract(
     byte_order, make, model, orientation, datetime).  Files without
     EXIF emit has_exif = 0 with NULL fields — the audit view, never a
     dropped row.  Broken containers skip per the codec-ladder
-    contract.  Scale: pure Arrow mapInPandas, zero shuffles."""
+    contract."""
     import struct
 
     def parse_tiff(t: bytes):
@@ -4072,44 +3609,33 @@ def exif_extract(
                 (out["orientation"],) = struct.unpack(e + "H", raw[:2])
         return out
 
-    def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for i, buf in zip(pdf[id_col], pdf[payload_col]):
-                b = bytes(buf)
-                if b[:2] != b"\xff\xd8":
-                    continue
-                meta = None
-                for marker, s, epos in _jpeg_segments(b):
-                    if marker == 0xE1 and b[s + 4 : s + 10] == b"Exif\x00\x00":
-                        meta = parse_tiff(b[s + 10 : epos])
-                        break
-                if meta is None:
-                    rows.append((int(i), 0, None, None, None, None, None))
-                else:
-                    rows.append(
-                        (
-                            int(i),
-                            1,
-                            meta.get("byte_order"),
-                            meta.get("make"),
-                            meta.get("model"),
-                            meta.get("orientation"),
-                            meta.get("datetime"),
-                        )
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    id_col, "has_exif", "byte_order", "make", "model",
-                    "orientation", "datetime",
-                ],
+    def extract(i, b: bytes):
+        if b[:2] != b"\xff\xd8":
+            return
+        meta = None
+        for marker, s, epos in _jpeg_segments(b):
+            if marker == 0xE1 and b[s + 4 : s + 10] == b"Exif\x00\x00":
+                meta = parse_tiff(b[s + 10 : epos])
+                break
+        if meta is None:
+            yield i, 0, None, None, None, None, None
+        else:
+            yield (
+                i,
+                1,
+                meta.get("byte_order"),
+                meta.get("make"),
+                meta.get("model"),
+                meta.get("orientation"),
+                meta.get("datetime"),
             )
 
-    return df.mapInPandas(
-        extract,
+    return _map_rows(
+        df,
+        [id_col, payload_col],
         f"{id_col} long, has_exif int, byte_order string, make string,"
         " model string, orientation int, datetime string",
+        extract,
     )
 
 
@@ -4120,33 +3646,27 @@ def exif_strip(
     tier's PII redact d44): remove every APP1 ``Exif\\0\\0`` segment
     from the JPEG byte stream, leaving all other bytes untouched, so
     image content (and every other segment) survives byte-exactly.
-    Returns (id, payload, n_stripped).  Scale: pure Arrow mapInPandas,
-    zero shuffles."""
+    Returns (id, payload, n_stripped); non-JPEG payloads skip."""
 
-    def strip(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for i, buf in zip(pdf[id_col], pdf[payload_col]):
-                b = bytes(buf)
-                if b[:2] != b"\xff\xd8":
-                    continue
-                cuts = [
-                    (s, e)
-                    for marker, s, e in _jpeg_segments(b)
-                    if marker == 0xE1 and b[s + 4 : s + 10] == b"Exif\x00\x00"
-                ]
-                out, pos = b"", 0
-                for s, e in cuts:
-                    out += b[pos:s]
-                    pos = e
-                out += b[pos:]
-                rows.append((int(i), out, len(cuts)))
-            yield pd.DataFrame(
-                rows, columns=[id_col, "payload", "n_stripped"]
-            )
+    def strip(i, b: bytes):
+        if b[:2] != b"\xff\xd8":
+            return
+        cuts = [
+            (s, e)
+            for marker, s, e in _jpeg_segments(b)
+            if marker == 0xE1 and b[s + 4 : s + 10] == b"Exif\x00\x00"
+        ]
+        out, pos = b"", 0
+        for s, e in cuts:
+            out += b[pos:s]
+            pos = e
+        yield i, out + b[pos:], len(cuts)
 
-    return df.mapInPandas(
-        strip, f"{id_col} long, payload binary, n_stripped int"
+    return _map_rows(
+        df,
+        [id_col, payload_col],
+        f"{id_col} long, payload binary, n_stripped int",
+        strip,
     )
 
 
@@ -4163,31 +3683,22 @@ def y4m_trim(
     video twin of the audio tier's sample-range ops and the d167
     trimmed-copy fixture generator.  ``count=None`` keeps everything
     from ``start``.  Streams left with zero frames, or streams
-    :func:`_y4m_read` rejects, skip (poison contract).  Scale: pure Arrow mapInPandas,
-    zero shuffles, output bytes <= input bytes."""
+    :func:`_y4m_read` rejects, skip (poison contract).  Output bytes <=
+    input bytes."""
     if start < 0 or (count is not None and count < 1):
         raise ValueError("y4m_trim: start >= 0 and count >= 1 required")
+    stop = None if count is None else start + count
 
-    def trim(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for i, buf in zip(pdf[id_col], pdf[payload_col]):
-                b = bytes(buf)
-                vid = _y4m_read(b)
-                if vid is None:
-                    continue
-                stop = None if count is None else start + count
-                keep = vid.frames[start:stop]
-                if not keep:
-                    continue
-                # the header verbatim: it ends where frame 0's marker starts
-                out = b[: vid.frames[0][0]] + b"".join(
-                    b[m : d + vid.frame_bytes] for m, d in keep
-                )
-                rows.append((int(i), out))
-            yield pd.DataFrame(rows, columns=[id_col, "payload"])
+    def trim(i, b: bytes):
+        vid = _y4m_read(b)
+        keep = [] if vid is None else vid.frames[start:stop]
+        if keep:
+            # the header verbatim: it ends where frame 0's marker starts
+            yield i, b[: vid.frames[0][0]] + b"".join(
+                b[m : d + vid.frame_bytes] for m, d in keep
+            )
 
-    return df.mapInPandas(trim, f"{id_col} long, payload binary")
+    return _map_rows(df, [id_col, payload_col], f"{id_col} long, payload binary", trim)
 
 
 def video_shingle_near_dup(
@@ -4325,49 +3836,49 @@ def y4m_rescale_area(
     count, chroma layout, and frame order are untouched.  Streams
     whose plane dimensions are not divisible by ``factor`` skip
     (poison contract), as do streams :func:`_y4m_read` rejects.
-    Scale: pure Arrow mapInPandas, zero shuffles, output bytes =
-    input bytes / factor²."""
+    Output bytes = input bytes / factor²."""
     if factor < 2:
         raise ValueError("y4m_rescale_area: factor must be >= 2")
+    half = factor * factor // 2
 
-    def rescale(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    def shrink(plane: "np.ndarray") -> bytes:
+        h, w = plane.shape
+        blocks = plane.reshape(h // factor, factor, w // factor, factor)
+        sums = blocks.astype(np.int64).sum(axis=(1, 3))
+        return ((sums + half) // (factor * factor)).astype(np.uint8).tobytes()
 
-        half = factor * factor // 2
+    def rescale(i, b: bytes):
+        vid = _y4m_read(b)
+        if vid is None or not vid.frames or any(
+            n % factor for n in (vid.w, vid.h, vid.cw, vid.ch)
+        ):
+            return
+        w, h, cw, chh = vid.w, vid.h, vid.cw, vid.ch
+        parts = [_y4m_header(vid.tags, W=w // factor, H=h // factor)]
+        for _, start in vid.frames:
+            parts.append(b"FRAME\n")
+            offs = (start, start + w * h, start + w * h + cw * chh)
+            for off, (ph, pw) in zip(offs, ((h, w), (chh, cw), (chh, cw))):
+                plane = np.frombuffer(b, np.uint8, ph * pw, off)
+                parts.append(shrink(plane.reshape(ph, pw)))
+        yield i, b"".join(parts)
 
-        def shrink(plane: "np.ndarray") -> bytes:
-            h, w = plane.shape
-            blocks = plane.reshape(
-                h // factor, factor, w // factor, factor
-            ).astype(np.int64)
-            sums = blocks.sum(axis=(1, 3))
-            return ((sums + half) // (factor * factor)).astype(
-                np.uint8
-            ).tobytes()
-
-        for pdf in batches:
-            rows = []
-            for i, buf in zip(pdf[id_col], pdf[payload_col]):
-                b = bytes(buf)
-                vid = _y4m_read(b)
-                if vid is None or not vid.frames or any(
-                    n % factor for n in (vid.w, vid.h, vid.cw, vid.ch)
-                ):
-                    continue
-                w, h, cw, chh = vid.w, vid.h, vid.cw, vid.ch
-                parts = [_y4m_header(vid.tags, W=w // factor, H=h // factor)]
-                for _, start in vid.frames:
-                    parts.append(b"FRAME\n")
-                    offs = (start, start + w * h, start + w * h + cw * chh)
-                    for off, (ph, pw) in zip(offs, ((h, w), (chh, cw), (chh, cw))):
-                        plane = np.frombuffer(b, np.uint8, ph * pw, off)
-                        parts.append(shrink(plane.reshape(ph, pw)))
-                rows.append((int(i), b"".join(parts)))
-            yield pd.DataFrame(rows, columns=[id_col, payload_col])
-
-    return df.select(id_col, payload_col).mapInPandas(
-        rescale, f"{id_col} long, {payload_col} binary"
+    return _map_rows(
+        df, [id_col, payload_col], f"{id_col} long, {payload_col} binary", rescale
     )
+
+
+def _grid_sig(b: bytes, vid: _Y4m, start: int, grid: int) -> int:
+    """The block-gradient signature of the luma plane at ``start``: sums
+    over a ``grid × grid`` lattice (w and h divisible by grid), packed by
+    :func:`_pack_gradient_signs`."""
+    y = np.frombuffer(b, np.uint8, vid.w * vid.h, start)
+    sums = (
+        y.reshape(grid, vid.h // grid, grid, vid.w // grid)
+        .astype(np.int64)
+        .sum(axis=(1, 3))
+    )
+    return _pack_gradient_signs(sums, grid)
 
 
 def _pack_gradient_signs(sums, grid: int) -> int:
@@ -4415,50 +3926,24 @@ def y4m_frame_grid_sig(
     plane dimensions are not divisible by ``grid`` skip (the
     proportional lattice would need fractional boundaries).
 
-    Returns (id, frame_no, n_frames, width, height, grid_sig).
-    Scale: pure Arrow mapInPandas, zero shuffles, one row per frame."""
+    Returns (id, frame_no, n_frames, width, height, grid_sig), one row
+    per frame."""
     if grid < 2:
         raise ValueError("y4m_frame_grid_sig: grid must be >= 2")
 
-    def sig(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    def sig(i, b: bytes):
+        vid = _y4m_read(b)
+        if vid is None or vid.w % grid or vid.h % grid:
+            return
+        for f, (_, start) in enumerate(vid.frames):
+            yield i, f, len(vid.frames), vid.w, vid.h, _grid_sig(b, vid, start, grid)
 
-        for pdf in batches:
-            rows = []
-            for i, buf in zip(pdf[id_col], pdf[payload_col]):
-                b = bytes(buf)
-                vid = _y4m_read(b)
-                if vid is None or vid.w % grid or vid.h % grid:
-                    continue
-                w, h = vid.w, vid.h
-                bh, bw = h // grid, w // grid
-                for f, (_, start) in enumerate(vid.frames):
-                    y = np.frombuffer(b, np.uint8, w * h, start).reshape(
-                        h, w
-                    )
-                    sums = (
-                        y.reshape(grid, bh, grid, bw)
-                        .astype(np.int64)
-                        .sum(axis=(1, 3))
-                    )
-                    rows.append(
-                        (
-                            int(i), f, len(vid.frames), w, h,
-                            _pack_gradient_signs(sums, grid),
-                        )
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    id_col, "frame_no", "n_frames", "width", "height",
-                    "grid_sig",
-                ],
-            )
-
-    return df.select(id_col, payload_col).mapInPandas(
-        sig,
+    return _map_rows(
+        df,
+        [id_col, payload_col],
         f"{id_col} long, frame_no long, n_frames long, width int,"
         " height int, grid_sig long",
+        sig,
     )
 
 
@@ -4510,27 +3995,21 @@ def y4m_decimate(
     retained frames keep their ORIGINAL timestamps — the frame-rate
     twin of :func:`y4m_rescale_area` and the d177 re-encoded-copy
     fixture generator.  Streams without a valid F tag, or streams
-    :func:`_y4m_read` rejects, skip (poison contract).  Scale: pure Arrow mapInPandas,
-    zero shuffles, output bytes <= input bytes."""
+    :func:`_y4m_read` rejects, skip (poison contract).  Output bytes <=
+    input bytes."""
     if every_n < 1:
         raise ValueError("y4m_decimate: every_n must be >= 1")
 
-    def dec(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for i, buf in zip(pdf[id_col], pdf[payload_col]):
-                b = bytes(buf)
-                vid = _y4m_read(b)
-                if vid is None or vid.fps is None or not vid.frames:
-                    continue
-                num, den = vid.fps
-                out = _y4m_header(vid.tags, F=f"{num}:{den * every_n}") + b"".join(
-                    b[m : d + vid.frame_bytes] for m, d in vid.frames[::every_n]
-                )
-                rows.append((int(i), out))
-            yield pd.DataFrame(rows, columns=[id_col, "payload"])
+    def dec(i, b: bytes):
+        vid = _y4m_read(b)
+        if vid is None or vid.fps is None or not vid.frames:
+            return
+        num, den = vid.fps
+        yield i, _y4m_header(vid.tags, F=f"{num}:{den * every_n}") + b"".join(
+            b[m : d + vid.frame_bytes] for m, d in vid.frames[::every_n]
+        )
 
-    return df.mapInPandas(dec, f"{id_col} long, payload binary")
+    return _map_rows(df, [id_col, payload_col], f"{id_col} long, payload binary", dec)
 
 
 def y4m_tick_grid_sig(
@@ -4555,61 +4034,34 @@ def y4m_tick_grid_sig(
     not divisible by ``grid`` skip as in :func:`y4m_frame_grid_sig`.
 
     Returns (id, tick, n_ticks, fps_num, fps_den, grid_sig) — one row
-    per tick, ticks 0..⌈n_frames·den·tick_hz/num⌉−1.  Scale: pure
-    Arrow mapInPandas, zero shuffles, ≤ one decoded frame resident
-    per tick."""
+    per tick, ticks 0..⌈n_frames·den·tick_hz/num⌉−1.  Scale: ≤ one
+    decoded frame resident per tick."""
     if tick_hz < 1:
         raise ValueError("y4m_tick_grid_sig: tick_hz must be >= 1")
     if grid < 2:
         raise ValueError("y4m_tick_grid_sig: grid must be >= 2")
 
-    def sig(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    def sig(i, b: bytes):
+        vid = _y4m_read(b)
+        if (
+            vid is None or vid.fps is None or not vid.frames
+            or vid.w % grid or vid.h % grid
+        ):
+            return
+        num, den = vid.fps
+        # ticks whose displayed frame exists: frame index
+        # (k*num) // (den*tick_hz) < n_frames
+        n_ticks = -(-len(vid.frames) * den * tick_hz // num)
+        for k in range(n_ticks):
+            start = vid.frames[k * num // (den * tick_hz)][1]
+            yield i, k, n_ticks, num, den, _grid_sig(b, vid, start, grid)
 
-        for pdf in batches:
-            rows = []
-            for i, buf in zip(pdf[id_col], pdf[payload_col]):
-                b = bytes(buf)
-                vid = _y4m_read(b)
-                if (
-                    vid is None or vid.fps is None or not vid.frames
-                    or vid.w % grid or vid.h % grid
-                ):
-                    continue
-                w, h = vid.w, vid.h
-                num, den = vid.fps
-                bh, bw = h // grid, w // grid
-                # ticks whose displayed frame exists: frame index
-                # (k*num) // (den*tick_hz) < n_frames
-                n_ticks = -(-len(vid.frames) * den * tick_hz // num)
-                for k in range(n_ticks):
-                    f = k * num // (den * tick_hz)
-                    y = np.frombuffer(
-                        b, np.uint8, w * h, vid.frames[f][1]
-                    ).reshape(h, w)
-                    sums = (
-                        y.reshape(grid, bh, grid, bw)
-                        .astype(np.int64)
-                        .sum(axis=(1, 3))
-                    )
-                    rows.append(
-                        (
-                            int(i), k, n_ticks, num, den,
-                            _pack_gradient_signs(sums, grid),
-                        )
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    id_col, "tick", "n_ticks", "fps_num", "fps_den",
-                    "grid_sig",
-                ],
-            )
-
-    return df.select(id_col, payload_col).mapInPandas(
-        sig,
+    return _map_rows(
+        df,
+        [id_col, payload_col],
         f"{id_col} long, tick long, n_ticks long, fps_num int,"
         " fps_den int, grid_sig long",
+        sig,
     )
 
 
@@ -4695,10 +4147,9 @@ def audio_chunk_fingerprints(
     ``chunk_no`` is then ``start_frame // chunk_hop`` and chunks
     overlap, so Σ n_frames_used exceeds n_frames (the coverage
     contract applies to the default layout only); rows scale by
-    chunk_size / chunk_hop.  Scale: pure Arrow mapInPandas, zero
-    shuffles, rows = frames / chunk_hop per file; the per-frame DFT is
-    ONE stacked integer matmul (frames × frame_len @ frame_len × bins,
-    exact int64)."""
+    chunk_size / chunk_hop.  Scale: rows = frames / chunk_hop per file;
+    the per-frame DFT is ONE stacked integer matmul (frames × frame_len
+    @ frame_len × bins, exact int64)."""
     if frame_len < 1 or hop < 1 or n_bands < 2 or n_bands + 1 > frame_len:
         raise ValueError(
             "audio_chunk_fingerprints needs frame_len >= 1, hop >= 1 and "
@@ -4707,102 +4158,54 @@ def audio_chunk_fingerprints(
     if chunk_hop is not None and chunk_hop < 1:
         raise ValueError("audio_chunk_fingerprints: chunk_hop must be >= 1")
     _check_dft_frame_len("audio_chunk_fingerprints", frame_len)
+    chunk = 63 // (n_bands - 1) + 1  # frames per 64-bit signature
+    step = chunk if chunk_hop is None else chunk_hop
+    nb1 = n_bands - 1
+    wlen = (chunk - 1) * nb1
 
-    def fps(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        cos_i, sin_i = _int_dft_basis(n_bands + 1, frame_len)
-        chunk = 63 // (n_bands - 1) + 1  # frames per 64-bit signature
-        step = chunk if chunk_hop is None else chunk_hop
-
-        nb1 = n_bands - 1
-        for pdf in batches:
-            # batch-wide DFT + ONE exact limb double-difference bit grid
-            # for every file (boundary rows sliced away per file); the
-            # grid is also SHARED by overlapping chunk layouts
-            # (chunk_hop < chunk) instead of recomputing each frame pair
-            # up to chunk/chunk_hop times — guide §4.2
-            metas: list = []
-            wins: list = []
-            for i, buf in zip(pdf[id_col], pdf[payload_col]):
-                got = _wav_pcm16_mono(bytes(buf))
-                if got is None or got[1].size < frame_len:
-                    continue
-                s = got[1].astype(np.int64)
-                win = np.lib.stride_tricks.sliding_window_view(
-                    s, frame_len
-                )[::hop]
-                metas.append((int(i), win.shape[0]))
-                wins.append(win)
-            rows = []
-            if metas:
-                allw = np.concatenate(wins, axis=0)
-                # stacked DFT: ONE (frames x frame_len) @ (frame_len x
-                # bins) integer matmul — int64 matmul is exact (the
-                # frame_len guard bounds the linear accumulator);
-                # energies live as int64 LIMBS, not Python big ints
-                re_all = allw @ cos_i.T
-                im_all = allw @ (-sin_i.T)
-                bits_all = _chroma_ddiff_bits(re_all, im_all)
-            boff = 0
-            for ii, n_frames in metas:
-                flat = (
-                    bits_all[boff : boff + n_frames - 1]
-                    .reshape(-1)
-                    .astype(np.uint64)
+    def emit(files, re, im):
+        # ONE exact limb double-difference bit grid for every file
+        # (boundary rows sliced away per file); the grid is also SHARED
+        # by overlapping chunk layouts (chunk_hop < chunk) instead of
+        # recomputing each frame pair up to chunk/chunk_hop times
+        bits_all = _chroma_ddiff_bits(re, im)
+        rows, boff = [], 0
+        for i, n_frames in files:
+            flat = bits_all[boff : boff + n_frames - 1].reshape(-1).astype(np.uint64)
+            boff += n_frames
+            tail0 = 0
+            if n_frames >= chunk:
+                # all FULL chunks at once: frame-major windows over the
+                # flattened grid, one matvec packs every 64-bit signature
+                wins = np.lib.stride_tricks.sliding_window_view(flat, wlen)[
+                    :: step * nb1
+                ]
+                vals = wins @ _POW2[:wlen]
+                ones = wins.sum(axis=1)
+                for k in range(vals.shape[0]):
+                    v = int(vals[k])
+                    # chunk_no = c0 // step with c0 = k·step
+                    rows.append((i, k, chunk, int(ones[k]), v & 0xFFFFFFFF, v >> 32))
+                tail0 = vals.shape[0] * step
+            for c0 in range(tail0, n_frames, step):
+                used = min(chunk, n_frames - c0)
+                blk = flat[c0 * nb1 : (c0 + used - 1) * nb1]
+                v = int(blk @ _POW2[: blk.size])
+                rows.append(
+                    (i, c0 // step, used, int(blk.sum()), v & 0xFFFFFFFF, v >> 32)
                 )
-                boff += n_frames
-                wlen = (chunk - 1) * nb1
-                if n_frames >= chunk:
-                    # all FULL chunks at once: frame-major windows over
-                    # the flattened grid, one matvec packs every 64-bit
-                    # signature
-                    wins = np.lib.stride_tricks.sliding_window_view(
-                        flat, wlen
-                    )[:: step * nb1]
-                    vals = wins @ _POW2[:wlen]
-                    ones = wins.sum(axis=1)
-                    for k in range(vals.shape[0]):
-                        v = int(vals[k])
-                        rows.append(
-                            (
-                                ii,
-                                k,  # chunk_no = c0 // step with c0 = k·step
-                                chunk,
-                                int(ones[k]),
-                                int(v & 0xFFFFFFFF),
-                                int(v >> 32),
-                            )
-                        )
-                    tail0 = vals.shape[0] * step
-                else:
-                    tail0 = 0
-                for c0 in range(tail0, n_frames, step):
-                    used = min(chunk, n_frames - c0)
-                    blk = flat[c0 * nb1 : (c0 + used - 1) * nb1]
-                    v = int(blk @ _POW2[: blk.size])
-                    rows.append(
-                        (
-                            ii,
-                            c0 // step,
-                            used,
-                            int(blk.sum()),
-                            int(v & 0xFFFFFFFF),
-                            int(v >> 32),
-                        )
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    id_col, "chunk_no", "n_frames_used", "n_ones",
-                    "fp_lo", "fp_hi",
-                ],
-            )
+        return rows
 
-    return df.mapInPandas(
-        fps,
+    return _map_wav_frames(
+        df,
+        payload_col,
+        id_col,
         f"{id_col} long, chunk_no long, n_frames_used long, n_ones int,"
         " fp_lo long, fp_hi long",
+        frame_len,
+        hop,
+        n_bands + 1,
+        emit,
     )
 
 
@@ -4839,44 +4242,28 @@ def wav_extract_segments(
         F.col(f1_col).alias("__f1"),
     ).join(df.select(id_col, payload_col), id_col)
 
-    def ext(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    def ext(i, seg, f0, f1, b: bytes):
+        parsed = _wav_pcm16_mono(b)
+        if parsed is None:
+            return
+        sr, s = parsed
+        lo, hi = int(f0) * frame_len, (int(f1) + 1) * frame_len
+        if f0 < 0 or f1 < f0 or hi > s.size:
+            return
+        clip = s[lo:hi]
+        c64 = clip.astype(np.int64)
+        yield (
+            i, seg, _wav_pcm16(clip.astype("<i2").tobytes(), sr), int(clip.size),
+            int(c64.sum()), int(c64[0]), int(c64[-1]),
+        )
 
-        for pdf in batches:
-            rows = []
-            for i, seg, f0, f1, buf in zip(
-                pdf[id_col], pdf["__seg"], pdf["__f0"], pdf["__f1"],
-                pdf[payload_col],
-            ):
-                parsed = _wav_pcm16_mono(bytes(buf))
-                if parsed is None:
-                    continue
-                sr, s = parsed
-                lo, hi = int(f0) * frame_len, (int(f1) + 1) * frame_len
-                if f0 < 0 or f1 < f0 or hi > s.size:
-                    continue
-                clip = s[lo:hi]
-                out = _wav_pcm16(clip.astype("<i2").tobytes(), sr)
-                c64 = clip.astype(np.int64)
-                rows.append(
-                    (
-                        int(i), int(seg), out, int(clip.size),
-                        int(c64.sum()), int(c64[0]), int(c64[-1]),
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    id_col, seg_col, payload_col, "n_samples",
-                    "sample_sum", "first_sample", "last_sample",
-                ],
-            )
-
-    return j.mapInPandas(
-        ext,
+    return _map_rows(
+        j,
+        [id_col, "__seg", "__f0", "__f1", payload_col],
         f"{id_col} long, {seg_col} int, {payload_col} binary,"
         " n_samples int, sample_sum long, first_sample int,"
         " last_sample int",
+        ext,
     )
 
 
@@ -4898,34 +4285,22 @@ def wav_trim(
     trimmed-copy fixture generator for :func:`audio_chunk_near_dup`.
 
     Rows with malformed payloads or a start past the end of the data
-    skip (poison contract).  Scale: zero-shuffle Arrow map, output
-    bytes <= input bytes."""
+    skip (poison contract).  Output bytes <= input bytes."""
     if start_sample < 0 or (n_samples is not None and n_samples < 1):
         raise ValueError(
             "wav_trim: start_sample must be >= 0 and n_samples >= 1"
         )
 
-    def trim(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for i, buf in zip(pdf[id_col], pdf[payload_col]):
-                parsed = _wav_pcm16_mono(bytes(buf))
-                if parsed is None:
-                    continue
-                sr, s = parsed
-                if start_sample >= s.size:
-                    continue
-                end = (
-                    s.size
-                    if n_samples is None
-                    else min(s.size, start_sample + n_samples)
-                )
-                clip = s[start_sample:end].astype("<i2").tobytes()
-                rows.append((int(i), _wav_pcm16(clip, sr)))
-            yield pd.DataFrame(rows, columns=[id_col, payload_col])
+    def trim(i, b: bytes):
+        parsed = _wav_pcm16_mono(b)
+        if parsed is None or start_sample >= parsed[1].size:
+            return
+        sr, s = parsed
+        end = s.size if n_samples is None else min(s.size, start_sample + n_samples)
+        yield i, _wav_pcm16(s[start_sample:end].astype("<i2").tobytes(), sr)
 
-    return df.select(id_col, payload_col).mapInPandas(
-        trim, f"{id_col} long, {payload_col} binary"
+    return _map_rows(
+        df, [id_col, payload_col], f"{id_col} long, {payload_col} binary", trim
     )
 
 
