@@ -3550,14 +3550,13 @@ _ED_CTE = """w AS (SELECT doc_id AS id, string_split(text, ' ') AS ws FROM docum
 def d94(spark, sf_dir):
     """Graph tier (r7): connected components over the d65 rare-token
     co-occurrence graph — the transitive dedup-cluster primitive as a
-    STANDALONE certified operator (``dedup.connected_components``:
-    min-label propagation with per-round path compression, O(log
-    diameter) rounds of node-sized joins, localCheckpoint lineage). The
-    oracle is a DuckDB RECURSIVE CTE computing each node's full reachable
-    set and taking the min — O(Σ component²) single-node transitive
-    closure vs the engine's O(E log diam) label propagation; identical
-    labels certify the iterative distributed algorithm against a
-    declarative fixpoint."""
+    STANDALONE certified operator (``dedup.connected_components`` at its
+    default gate: the edge table fits under ``local_threshold``, so it
+    is solved by driver-side union-find; d137 pins the distributed star
+    contraction on the same fixture). The oracle is a DuckDB RECURSIVE
+    CTE computing each node's full reachable set and taking the min —
+    O(Σ component²) single-node transitive closure; identical labels
+    certify the operator against a declarative fixpoint."""
     from .. import dedup, graph
 
     d = tables(spark, sf_dir)("documents")
@@ -3584,9 +3583,9 @@ def d94(spark, sf_dir):
 def d95(spark, sf_dir):
     """Graph tier (r7): minimum hop distance from a seed set (doc_id %
     23 == 0 within the d65 rare-token graph) — the influence-radius /
-    contamination-spread primitive (``graph.bfs_hops``: Pregel-style
-    frontier relaxation; each round joins only the just-settled DELTA
-    against the edges, state stays node-sized, rounds = seed-set
+    contamination-spread primitive (``graph.bfs_hops``: d100's
+    ``graph.shortest_paths`` with every weight 1 — Bellman–Ford frontier
+    relaxation, delta-only joins, node-sized state, rounds = seed-set
     eccentricity). The oracle is a depth-bounded DuckDB RECURSIVE CTE
     enumerating all ≤30-hop walks and taking the min — safe because the
     engine RAISES if any frontier survives 30 rounds (BFS settles level
@@ -6309,22 +6308,19 @@ def d130d(spark, sf_dir):
 )
 def d137(spark, sf_dir):
     """Graph tier (r11, VERDICT r10 #6): connected components via
-    two-phase LARGE/SMALL-STAR contraction (Kiveris et al.) — the
-    distributed CC path for when the PAIR TABLE is the 100-TB object:
-    unlike min-label propagation (d94 — edge⋈label joins stay edge-sized
-    every round), star contraction rewires the edge set itself, so
-    per-round volume shrinks as components collapse, with exact
-    star-ness termination (``dedup._cc_star_fixpoint``).  Same pair
-    fixture and IDENTICAL recursive-CTE oracle as d94, pinned at
-    ``local_threshold=0`` so the driver certifies the distributed star
-    fixpoint itself, not the count-gated local shortcut."""
+    two-phase LARGE/SMALL-STAR contraction (Kiveris et al.) — the one
+    distributed path of ``dedup.connected_components``, for when the
+    PAIR TABLE is the 100-TB object: star contraction rewires the edge
+    set itself, so per-round volume shrinks as components collapse,
+    with exact star-ness termination (``dedup._cc_star_fixpoint``).
+    Same pair fixture and IDENTICAL recursive-CTE oracle as d94, pinned
+    at ``local_threshold=0`` so the driver certifies the distributed
+    star fixpoint itself, not the count-gated union-find d94 runs."""
     from .. import dedup, graph
 
     d = tables(spark, sf_dir)("documents")
     edges = graph.rare_token_edges(d, "doc_id", "text", min_df=2, max_df=3, shingle=3)
-    out = dedup.connected_components(
-        edges, "id_a", "id_b", local_threshold=0, method="star"
-    )
+    out = dedup.connected_components(edges, "id_a", "id_b", local_threshold=0)
     return out.select(
         F.col("id").alias("doc_id"), F.col("cluster").cast("long").alias("cluster")
     )

@@ -15,6 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from ._localrel import local_rows_df
+from ._scratch import scratch_persist
 
 # Exact accumulation type for rank mass: per-node neighbor sums are
 # order-dependent in double; routing every contribution through decimal
@@ -22,6 +23,39 @@ from ._localrel import local_rows_df
 # trick as corpus/_util.dsum), so a single-node oracle can replay the
 # unrolled recurrence exactly.
 _RDEC = "decimal(28,14)"
+
+
+def _size_gate(df: DataFrame, slot: str, threshold: int):
+    """The one driver-side size gate of the iterative graph operators:
+    persist ``df`` once through the scratch pool, then collect it when it
+    holds at most ``threshold`` rows (probed with an early-stopping limit
+    count, never a full count on the big path). Returns ``(persisted df,
+    rows)``; rows is None past the gate or at ``threshold=0``, which pins
+    the distributed path. That path reads the same persisted frame, so
+    the input is evaluated once whichever path runs."""
+    df = scratch_persist(df, slot)
+    if threshold > 0 and df.limit(threshold + 1).count() <= threshold:
+        return df, df.collect()
+    return df, None
+
+
+def _simple_edges(edges: DataFrame, a: str, b: str) -> DataFrame:
+    """``(a, b)`` without NULL endpoints and self-loops: the input hygiene
+    of :func:`kcore` and :func:`label_propagation_communities`."""
+    return edges.select(a, b).filter(
+        F.col(a).isNotNull() & F.col(b).isNotNull() & (F.col(a) != F.col(b))
+    )
+
+
+def _both_directions(edges: DataFrame, a: str, b: str, *extra: str) -> DataFrame:
+    """The distinct both-direction edge table ``(s, d, *extra)``: every
+    edge contributes a→b and b→a, so duplicates and reversed duplicates
+    collapse."""
+    return (
+        edges.select(F.col(a).alias("s"), F.col(b).alias("d"), *extra)
+        .union(edges.select(F.col(b).alias("s"), F.col(a).alias("d"), *extra))
+        .distinct()
+    )
 
 
 def pagerank(
@@ -47,10 +81,11 @@ def pagerank(
     accumulate through DECIMAL (bit-deterministic; oracle-replayable) and
     each iteration rounds to 12 dp so the fixed point is engine-exact.
     """
-    e = edges.select(F.col(src).alias("s"), F.col(dst).alias("d"))
-    if not directed:
-        e = e.union(edges.select(F.col(dst).alias("s"), F.col(src).alias("d")))
-    e = e.distinct().localCheckpoint(eager=False)
+    if directed:
+        e = edges.select(F.col(src).alias("s"), F.col(dst).alias("d")).distinct()
+    else:
+        e = _both_directions(edges, src, dst)
+    e = e.localCheckpoint(eager=False)
 
     deg = e.groupBy("s").agg(F.count("*").alias("deg"))
     # every endpoint is a node: in the directed case pure SINKS have no
@@ -125,8 +160,6 @@ def rare_token_edges(
         .agg(F.collect_set("id").alias("ids"))
         .filter((F.size("ids") >= min_df) & (F.size("ids") <= max_df))
     )
-    from ._scratch import scratch_persist
-
     # slot-pooled scratch (r10): the edge list is consumed several times
     # by every caller — the adaptive gate's probe + collect, seed
     # derivation, and the iterative loop's own edge cache — and across
@@ -171,60 +204,58 @@ def hierarchy_depth(
     parent walk (exact integers, identical cycle raise);
     ``local_threshold=0`` pins the distributed path.
     """
-    if local_threshold > 0:
-        probe = parents.select(id_col, parent_col).limit(
-            local_threshold + 1
-        ).count()
-        if probe <= local_threshold:
-            rows = parents.select(id_col, parent_col).collect()
-            parent = {r[0]: r[1] for r in rows if r[1] is not None}
-            roots_l = [r[0] for r in rows if r[1] is None]
-            depth: dict = {}
-            # shared raise contract (ADVICE r10): the local walk enforces
-            # the SAME depth budget the doubling loop implies (resolvable
-            # depth <= 2^max_iter) and raises the SAME mechanism-neutral
-            # message on either trigger — previously the local path
-            # accepted arbitrarily deep acyclic chains the distributed
-            # path would reject, and its message misdescribed the walk.
-            bound = 1 << max_iter
+    p, rows = _size_gate(
+        parents.select(
+            F.col(id_col).alias("id"), F.col(parent_col).alias("parent")
+        ),
+        "hierarchy_depth/parents",
+        local_threshold,
+    )
+    if rows is not None:
+        parent = {r[0]: r[1] for r in rows if r[1] is not None}
+        roots_l = [r[0] for r in rows if r[1] is None]
+        depth: dict = {}
+        # shared raise contract (ADVICE r10): the local walk enforces
+        # the SAME depth budget the doubling loop implies (resolvable
+        # depth <= 2^max_iter) and raises the SAME mechanism-neutral
+        # message on either trigger — previously the local path
+        # accepted arbitrarily deep acyclic chains the distributed
+        # path would reject, and its message misdescribed the walk.
+        bound = 1 << max_iter
 
-            def resolve(x):
-                chain = []
-                cur = x
-                while cur in parent and cur not in depth:
-                    if cur in seen_on_path:
-                        raise RuntimeError(_hier_budget_msg(max_iter))
-                    seen_on_path.add(cur)
-                    chain.append(cur)
-                    cur = parent[cur]
-                base = depth.get(cur, 0)
-                for node in reversed(chain):
-                    base += 1
-                    if base > bound:
-                        raise RuntimeError(_hier_budget_msg(max_iter))
-                    depth[node] = base
+        def resolve(x):
+            chain = []
+            cur = x
+            while cur in parent and cur not in depth:
+                if cur in seen_on_path:
+                    raise RuntimeError(_hier_budget_msg(max_iter))
+                seen_on_path.add(cur)
+                chain.append(cur)
+                cur = parent[cur]
+            base = depth.get(cur, 0)
+            for node in reversed(chain):
+                base += 1
+                if base > bound:
+                    raise RuntimeError(_hier_budget_msg(max_iter))
+                depth[node] = base
 
-            for r in rows:
-                if r[1] is not None and r[0] not in depth:
-                    seen_on_path: set = set()
-                    resolve(r[0])
-            out = [(x, 0) for x in roots_l] + [
-                (x, depth[x]) for x in (r[0] for r in rows) if x in depth
-            ]
-            return local_rows_df(parents.sparkSession,
-                out, f"id {dict(parents.dtypes)[id_col]}, depth int"
-            )
+        for r in rows:
+            if r[1] is not None and r[0] not in depth:
+                seen_on_path: set = set()
+                resolve(r[0])
+        out = [(x, 0) for x in roots_l] + [
+            (x, depth[x]) for x in (r[0] for r in rows) if x in depth
+        ]
+        return local_rows_df(parents.sparkSession,
+            out, f"id {dict(parents.dtypes)[id_col]}, depth int"
+        )
 
-    roots = parents.filter(F.col(parent_col).isNull()).select(
-        F.col(id_col).alias("id"), F.lit(0).alias("depth")
+    roots = p.filter(F.col("parent").isNull()).select(
+        "id", F.lit(0).alias("depth")
     )
     state = (
-        parents.filter(F.col(parent_col).isNotNull())
-        .select(
-            F.col(id_col).alias("id"),
-            F.col(parent_col).alias("anc"),
-            F.lit(1).alias("d"),
-        )
+        p.filter(F.col("parent").isNotNull())
+        .select("id", F.col("parent").alias("anc"), F.lit(1).alias("d"))
         .localCheckpoint(eager=False)
     )
     for _ in range(max_iter):
@@ -281,8 +312,6 @@ def triangle_count(edges: DataFrame, a: str = "id_a", b: str = "id_b") -> DataFr
     normalized to distinct undirected pairs first. Returns one row:
     (n_edges, n_triangles).
     """
-    from ._scratch import scratch_persist
-
     # both consumed >=2x (degrees + orientation + edge count; wedge x2 +
     # closing probe): persist so the normalize/orient subtrees run once —
     # without this every reference replays the full upstream plan
@@ -331,38 +360,21 @@ def triangle_count(edges: DataFrame, a: str = "id_a", b: str = "id_b") -> DataFr
     return n_e.crossJoin(F.broadcast(n_tri))
 
 
-def _local_frontier_relax(edge_rows, seed_ids, max_iter, step, algo_name):
-    """Driver-side frontier relaxation shared by the count-gated local
-    paths of :func:`bfs_hops` (step = constant 1) and
-    :func:`shortest_paths` (step = edge weight) — the SAME round-based
-    Bellman–Ford the distributed loop runs, including the round budget:
-    convergence past ``max_iter`` live rounds raises with the
-    distributed path's message, so local and distributed agree not just
-    on values but on the depth-bound contract the recursive-CTE oracles
-    rely on. Exact integer arithmetic throughout."""
+def _local_frontier_relax(edge_rows, seed_ids, max_iter):
+    """Driver-side twin of the :func:`shortest_paths` round loop: the
+    SAME round-based Bellman–Ford over undirected ``(s, d, w)`` rows,
+    with the same round budget, in exact integer arithmetic. Returns
+    ``(dist, live)``; ``live`` is True when a frontier survives
+    ``max_iter`` rounds, and the caller raises on it."""
     adj: dict = {}
-    for row in edge_rows:
-        s, d = row[0], row[1]
-        w = int(row[2]) if step is None else step
+    for s, d, w in edge_rows:
         adj.setdefault(s, []).append((d, w))
         adj.setdefault(d, []).append((s, w))
-    messages = {
-        "shortest_paths": (
-            f"shortest_paths did not converge in {max_iter} rounds — some "
-            "shortest path uses more edges; raise max_iter for this graph"
-        ),
-        "bfs_hops": (
-            f"bfs_hops did not converge in {max_iter} rounds — seed-set "
-            f"eccentricity exceeds max_iter; raise it for this graph"
-        ),
-    }
     dist = {sd: 0 for sd in seed_ids}
     frontier = set(seed_ids)
-    rounds = 0
-    while frontier:
-        rounds += 1
-        if rounds > max_iter:
-            raise RuntimeError(messages[algo_name])
+    for _ in range(max_iter):
+        if not frontier:
+            break
         nxt = set()
         for u in frontier:
             du = dist[u]
@@ -372,7 +384,7 @@ def _local_frontier_relax(edge_rows, seed_ids, max_iter, step, algo_name):
                     dist[v] = nd
                     nxt.add(v)
         frontier = nxt
-    return dist
+    return dist, bool(frontier)
 
 
 def shortest_paths(
@@ -386,105 +398,96 @@ def shortest_paths(
 ) -> DataFrame:
     """Single-source-set WEIGHTED shortest paths over an undirected edge
     list — Bellman–Ford frontier relaxation as pure DataFrame rounds; the
-    weighted generalization of :func:`bfs_hops` (hop counts are the
-    all-weights-1 special case).
+    weighted generalization of BFS (:func:`bfs_hops` is this operator
+    with every weight 1).
 
     ``seeds`` is a one-column DataFrame of source node ids (distance 0);
     ``weight`` must be a NON-NEGATIVE integer-typed column (distances
     accumulate in long, so sums are exact and the result is
     hash-certifiable against a declarative oracle — float weights would
-    reintroduce order-dependent rounding). Returns (id, dist long) for
-    every node reachable from a seed; unreachable nodes are absent.
+    reintroduce order-dependent rounding). Null-weight edges are ignored
+    on both execution paths. Returns (id, dist long) for every node
+    reachable from a seed; unreachable nodes are absent (their distance
+    is undefined, and a sentinel would poison downstream minimums).
 
-    Scale shape (the bfs_hops discipline): state is one row per REACHED
-    node; each round relaxes only the just-improved DELTA against the
-    edge table (one equi-join + one min-aggregate — map-side partial, so
-    the shuffle carries node-sized data), then min-merges into the
-    state; localCheckpoint per round keeps lineage O(1). Bellman–Ford
-    settles every shortest path that uses ≤ k edges by round k, so
-    convergence within ``max_iter`` PROVES no shortest path is longer
-    than max_iter hops — which is exactly the bound a depth-limited
-    recursive-CTE oracle needs to be exhaustive. Raises after
-    ``max_iter`` rounds with a live frontier instead of returning
-    silently-truncated distances.
+    Scale shape: state is one row per REACHED node; each round relaxes
+    only the just-improved DELTA against the edge table (one equi-join +
+    one min-aggregate — map-side partial, so the shuffle carries
+    node-sized data), then min-merges into the state; localCheckpoint per
+    round keeps lineage O(1). Bellman–Ford settles every shortest path
+    that uses ≤ k edges by round k, so convergence within ``max_iter``
+    PROVES no shortest path is longer than max_iter hops — which is
+    exactly the bound a depth-limited recursive-CTE oracle needs to be
+    exhaustive. Raises after ``max_iter`` rounds with a live frontier
+    instead of returning silently-truncated distances.
 
     ADAPTIVE (r10, the connected_components discipline): at most
-    ``local_threshold`` edges — probed with an early-stopping limit
-    count — solve driver-side with the SAME round-counting Bellman–Ford
-    (exact long arithmetic, identical raise contract), replacing
-    rounds × 2 driver actions of distributed fixpoint with one bounded
-    collect. ``local_threshold=0`` pins the distributed path.
+    ``local_threshold`` edges (:func:`_size_gate`) solve driver-side with
+    the SAME round-counting Bellman–Ford (exact long arithmetic,
+    identical raise contract), replacing rounds × 2 driver actions of
+    distributed fixpoint with one bounded collect.
+    ``local_threshold=0`` pins the distributed path.
     """
-    from ._scratch import scratch_persist
-
-    # NULL-weight contract (ADVICE r10): both paths IGNORE null-weight
-    # edges.  The distributed min-aggregate already drops them (null
-    # distances never win a min); the local path must filter them out
-    # BEFORE the collect or int(None) crashes the driver — one explicit
-    # filter on each path keeps the contract shared and visible.
-    if local_threshold > 0:
-        probe = edges.select(a, b).limit(local_threshold + 1).count()
-        if probe <= local_threshold:
-            edge_rows = edges.filter(F.col(weight).isNotNull()).select(
-                a, b, F.col(weight).cast("long")
-            ).collect()
-            seed_ids = [r[0] for r in seeds.distinct().collect()]
-            dist = _local_frontier_relax(
-                edge_rows, seed_ids, max_iter, None, "shortest_paths"
-            )
-            return local_rows_df(edges.sparkSession,
-                list(dist.items()), f"id {dict(edges.dtypes)[a]}, dist long"
-            )
-
-    ew = edges.filter(F.col(weight).isNotNull())
-    e = scratch_persist(
-        ew.select(
-            F.col(a).alias("s"), F.col(b).alias("d"), F.col(weight).cast("long").alias("w")
-        ).union(
-            ew.select(
-                F.col(b).alias("s"), F.col(a).alias("d"), F.col(weight).cast("long").alias("w")
-            )
-        ).distinct(),
-        "shortest_paths/edges",
+    weighted, rows = _size_gate(
+        edges.filter(F.col(weight).isNotNull()).select(
+            F.col(a).alias("s"),
+            F.col(b).alias("d"),
+            F.col(weight).cast("long").alias("w"),
+        ),
+        "shortest_paths/weighted",
+        local_threshold,
     )
-    seed_col = seeds.columns[0]
-    state = (
-        seeds.select(F.col(seed_col).alias("id"))
-        .distinct()
-        .withColumn("dist", F.lit(0).cast("long"))
-        .localCheckpoint(eager=False)
-    )
-    frontier = state
-    for _ in range(max_iter):
-        if frontier.isEmpty():
-            break
-        relaxed = (
-            e.join(frontier.withColumnRenamed("id", "s"), "s")
-            .groupBy(F.col("d").alias("id"))
-            .agg(F.min(F.col("dist") + F.col("w")).alias("dist"))
+    if rows is not None:
+        seed_ids = [r[0] for r in seeds.distinct().collect()]
+        dist, live = _local_frontier_relax(rows, seed_ids, max_iter)
+        out = local_rows_df(edges.sparkSession,
+            list(dist.items()), f"id {dict(edges.dtypes)[a]}, dist long"
         )
-        # ONE aggregate yields both the merged state (min over old+new)
-        # and the old value needed to detect the delta — so each round is
-        # one exchange and ONE localCheckpoint; a separate merged-vs-state
-        # join would double both (r8 bench: halves per-round driver jobs)
-        merged = (
-            state.withColumn("__old", F.col("dist"))
-            .unionByName(relaxed.withColumn("__old", F.lit(None).cast("long")))
-            .groupBy("id")
-            .agg(F.min("dist").alias("dist"), F.min("__old").alias("__old"))
+    else:
+        e = scratch_persist(
+            _both_directions(weighted, "s", "d", "w"), "shortest_paths/edges"
+        )
+        state = (
+            seeds.select(F.col(seeds.columns[0]).alias("id"))
+            .distinct()
+            .withColumn("dist", F.lit(0).cast("long"))
             .localCheckpoint(eager=False)
         )
-        frontier = merged.filter(
-            F.col("__old").isNull() | (F.col("dist") < F.col("__old"))
-        ).select("id", "dist")
-        state = merged.select("id", "dist")
-    else:
-        if not frontier.isEmpty():
-            raise RuntimeError(
-                f"shortest_paths did not converge in {max_iter} rounds — some "
-                "shortest path uses more edges; raise max_iter for this graph"
+        frontier = state
+        live = False
+        for _ in range(max_iter):
+            if frontier.isEmpty():
+                break
+            relaxed = (
+                e.join(frontier.withColumnRenamed("id", "s"), "s")
+                .groupBy(F.col("d").alias("id"))
+                .agg(F.min(F.col("dist") + F.col("w")).alias("dist"))
             )
-    return state.select("id", F.col("dist").cast("long").alias("dist"))
+            # ONE aggregate yields both the merged state (min over
+            # old+new) and the old value needed to detect the delta — so
+            # each round is one exchange and ONE localCheckpoint; a
+            # separate merged-vs-state join would double both (r8 bench:
+            # halves per-round driver jobs)
+            merged = (
+                state.withColumn("__old", F.col("dist"))
+                .unionByName(relaxed.withColumn("__old", F.lit(None).cast("long")))
+                .groupBy("id")
+                .agg(F.min("dist").alias("dist"), F.min("__old").alias("__old"))
+                .localCheckpoint(eager=False)
+            )
+            frontier = merged.filter(
+                F.col("__old").isNull() | (F.col("dist") < F.col("__old"))
+            ).select("id", "dist")
+            state = merged.select("id", "dist")
+        else:
+            live = not frontier.isEmpty()
+        out = state.select("id", F.col("dist").cast("long").alias("dist"))
+    if live:
+        raise RuntimeError(
+            f"shortest_paths did not converge in {max_iter} rounds — some "
+            "shortest path uses more edges; raise max_iter for this graph"
+        )
+    return out
 
 
 def bfs_hops(
@@ -495,87 +498,23 @@ def bfs_hops(
     max_iter: int = 30,
     local_threshold: int = 100_000,
 ) -> DataFrame:
-    """Minimum hop distance from a seed set over an undirected edge list —
-    Pregel-style frontier relaxation as pure DataFrame rounds.
+    """Minimum hop distance from a seed set over an undirected edge list:
+    :func:`shortest_paths` with every edge weight 1, so both share one
+    relaxation loop, one size gate and one raise contract (rounds = seed-
+    set eccentricity; a frontier still live after ``max_iter`` rounds
+    raises instead of returning truncated distances).
 
     ``seeds`` is a one-column DataFrame of seed node ids (distance 0).
     Returns (id, hops int) for every node REACHABLE from a seed;
-    unreachable nodes are absent (their distance is undefined, and
-    emitting a sentinel would poison downstream minimums).
-
-    Scale shape: state is one row per REACHED node; each round joins the
-    newly-settled frontier (only rows improved last round — the delta,
-    never the full state) against the edge table, then min-merges into
-    the state. Rounds = eccentricity of the seed set, which for the
-    small-world graphs this targets (co-occurrence, near-dup, citation)
-    is tens, not thousands; localCheckpoint per round keeps lineage O(1).
-    Raises after ``max_iter`` rounds with a live frontier instead of
-    returning silently-truncated distances (the connected_components
-    discipline — truncation is a correctness bug, not a degraded mode).
-
-    ADAPTIVE (r10): sub-``local_threshold`` edge tables solve
-    driver-side with the same round-counting relaxation (identical
-    raise contract); ``local_threshold=0`` pins the distributed path.
+    unreachable nodes are absent. ``local_threshold=0`` pins the
+    distributed path.
     """
-    from ._scratch import scratch_persist
-
-    if local_threshold > 0:
-        probe = edges.select(a, b).limit(local_threshold + 1).count()
-        if probe <= local_threshold:
-            edge_rows = edges.select(a, b).collect()
-            seed_ids = [r[0] for r in seeds.distinct().collect()]
-            dist = _local_frontier_relax(
-                edge_rows, seed_ids, max_iter, 1, "bfs_hops"
-            )
-            return local_rows_df(edges.sparkSession,
-                list(dist.items()), f"id {dict(edges.dtypes)[a]}, hops int"
-            )
-
-    # slot-pooled scratch: the doubled edge table is consumed every round
-    # and across re-invocations (the connected_components discipline)
-    e = scratch_persist(
-        edges.select(F.col(a).alias("s"), F.col(b).alias("d"))
-        .union(edges.select(F.col(b).alias("s"), F.col(a).alias("d")))
-        .distinct(),
-        "bfs_hops/edges",
+    unit = edges.select(
+        F.col(a).alias("s"), F.col(b).alias("d"), F.lit(1).alias("w")
     )
-    seed_col = seeds.columns[0]
-    state = (
-        seeds.select(F.col(seed_col).alias("id"))
-        .distinct()
-        .withColumn("hops", F.lit(0))
-        .localCheckpoint(eager=False)
-    )
-    frontier = state
-    for _ in range(max_iter):
-        if frontier.isEmpty():
-            break
-        reached = (
-            e.join(frontier.withColumnRenamed("id", "s"), "s")
-            .groupBy(F.col("d").alias("id"))
-            .agg((F.min("hops") + 1).alias("hops"))
-        )
-        # one aggregate yields the merged state AND the pre-round value
-        # needed to detect the just-settled delta — one exchange and ONE
-        # localCheckpoint per round (the shortest_paths r8 shape)
-        merged = (
-            state.withColumn("__old", F.col("hops"))
-            .unionByName(reached.withColumn("__old", F.lit(None).cast("int")))
-            .groupBy("id")
-            .agg(F.min("hops").alias("hops"), F.min("__old").alias("__old"))
-            .localCheckpoint(eager=False)
-        )
-        frontier = merged.filter(
-            F.col("__old").isNull() | (F.col("hops") < F.col("__old"))
-        ).select("id", "hops")
-        state = merged.select("id", "hops")
-    else:
-        if not frontier.isEmpty():
-            raise RuntimeError(
-                f"bfs_hops did not converge in {max_iter} rounds — seed-set "
-                "eccentricity exceeds max_iter; raise it for this graph"
-            )
-    return state.select("id", F.col("hops").cast("int").alias("hops"))
+    return shortest_paths(
+        unit, seeds, "s", "d", "w", max_iter, local_threshold
+    ).select("id", F.col("dist").cast("int").alias("hops"))
 
 
 def kcore(
@@ -613,79 +552,60 @@ def kcore(
     ADAPTIVE: sub-``local_threshold`` edge tables peel driver-side
     (identical cascade, identical raise contract);
     ``local_threshold=0`` pins the distributed path."""
-    from ._scratch import scratch_persist
-
-    # one materialization for probe, collect AND the distributed
-    # fall-through's edge doubling (the connected_components ADVICE-r10
-    # discipline: an unpersisted plan recomputes between the two actions
-    # and its row count can drift past the bound)
-    clean = scratch_persist(
-        edges.select(F.col(a), F.col(b)).filter(
-            F.col(a).isNotNull() & F.col(b).isNotNull() & (F.col(a) != F.col(b))
-        ),
-        "kcore/clean_edges",
+    clean, rows = _size_gate(
+        _simple_edges(edges, a, b), "kcore/clean_edges", local_threshold
     )
-    id_type = dict(edges.dtypes)[a]
-
-    if local_threshold > 0:
-        probe = clean.limit(local_threshold + 1).count()
-        if probe <= local_threshold:
-            adj: dict = {}
-            for r in clean.collect():
-                u, v = r[0], r[1]
-                adj.setdefault(u, set()).add(v)
-                adj.setdefault(v, set()).add(u)
-            for _ in range(max_iter):
-                victims = [u for u, nb in adj.items() if len(nb) < k]
-                if not victims:
-                    break
-                for u in victims:
-                    for v in adj.pop(u):
-                        if v in adj:
-                            adj[v].discard(u)
-            else:
-                if any(len(nb) < k for nb in adj.values()):
-                    raise RuntimeError(
-                        f"kcore did not converge in {max_iter} rounds — "
-                        "peeling depth exceeds max_iter; raise it for "
-                        "this graph"
-                    )
-            return local_rows_df(edges.sparkSession,
-                [(u, len(nb)) for u, nb in adj.items()],
-                f"id {id_type}, core_degree int",
-            )
-
-    e = scratch_persist(
-        clean.select(F.col(a).alias("s"), F.col(b).alias("d"))
-        .union(clean.select(F.col(b).alias("s"), F.col(a).alias("d")))
-        .distinct(),
-        "kcore/edges",
-    )
-    for _ in range(max_iter):
-        deg = e.groupBy("s").agg(F.count("*").alias("__deg"))
-        victims = deg.filter(F.col("__deg") < k).select("s")
-        if victims.isEmpty():
-            break
-        # the victim set is bounded by this round's casualties — AQE
-        # broadcasts it; both anti-joins prune the SAME shrinking edge set
-        e = (
-            e.join(victims, "s", "left_anti")
-            .join(victims.withColumnRenamed("s", "d"), "d", "left_anti")
-            .localCheckpoint(eager=False)
+    if rows is not None:
+        adj: dict = {}
+        for u, v in rows:
+            adj.setdefault(u, set()).add(v)
+            adj.setdefault(v, set()).add(u)
+        for _ in range(max_iter):
+            victims = [u for u, nb in adj.items() if len(nb) < k]
+            if not victims:
+                break
+            for u in victims:
+                for v in adj.pop(u):
+                    if v in adj:
+                        adj[v].discard(u)
+        live = any(len(nb) < k for nb in adj.values())
+        out = local_rows_df(edges.sparkSession,
+            [(u, len(nb)) for u, nb in adj.items()],
+            f"id {dict(edges.dtypes)[a]}, core_degree int",
         )
     else:
-        if not e.groupBy("s").agg(F.count("*").alias("__deg")).filter(
-            F.col("__deg") < k
-        ).isEmpty():
-            raise RuntimeError(
-                f"kcore did not converge in {max_iter} rounds — peeling "
-                "depth exceeds max_iter; raise it for this graph"
+        e = scratch_persist(_both_directions(clean, a, b), "kcore/edges")
+
+        def victims_of(e):
+            deg = e.groupBy("s").agg(F.count("*").alias("__deg"))
+            return deg.filter(F.col("__deg") < k).select("s")
+
+        live = False
+        for _ in range(max_iter):
+            victims = victims_of(e)
+            if victims.isEmpty():
+                break
+            # the victim set is bounded by this round's casualties — AQE
+            # broadcasts it; both anti-joins prune the SAME shrinking
+            # edge set
+            e = (
+                e.join(victims, "s", "left_anti")
+                .join(victims.withColumnRenamed("s", "d"), "d", "left_anti")
+                .localCheckpoint(eager=False)
             )
-    return (
-        e.groupBy("s")
-        .agg(F.count("*").cast("int").alias("core_degree"))
-        .select(F.col("s").alias("id"), "core_degree")
-    )
+        else:
+            live = not victims_of(e).isEmpty()
+        out = (
+            e.groupBy("s")
+            .agg(F.count("*").cast("int").alias("core_degree"))
+            .select(F.col("s").alias("id"), "core_degree")
+        )
+    if live:
+        raise RuntimeError(
+            f"kcore did not converge in {max_iter} rounds — peeling depth "
+            "exceeds max_iter; raise it for this graph"
+        )
+    return out
 
 
 def label_propagation_communities(
@@ -702,8 +622,8 @@ def label_propagation_communities(
     ``rounds`` synchronous updates (the d98c unrolled-replay
     precedent).
 
-    Input hygiene matches kcore/bfs: NULL endpoints and self-loops
-    drop, duplicates and reversed duplicates collapse.  Returns
+    Input hygiene matches kcore (:func:`_simple_edges`): NULL endpoints
+    and self-loops drop, duplicates and reversed duplicates collapse.  Returns
     (id, community) for every node that appears in an edge.
 
     Scale: per round ONE label-lookup equi-join (labels are
@@ -711,16 +631,8 @@ def label_propagation_communities(
     (node, label)-keyed partial+final count + one node-keyed
     min(struct) argmax — no collect_list, so hub neighborhoods never
     materialize; localCheckpoint per round keeps lineage O(1)."""
-    from ._scratch import scratch_persist
-
-    clean = edges.select(F.col(a), F.col(b)).filter(
-        F.col(a).isNotNull() & F.col(b).isNotNull() & (F.col(a) != F.col(b))
-    )
     e = scratch_persist(
-        clean.select(F.col(a).alias("s"), F.col(b).alias("d"))
-        .union(clean.select(F.col(b).alias("s"), F.col(a).alias("d")))
-        .distinct(),
-        "lpa/edges",
+        _both_directions(_simple_edges(edges, a, b), a, b), "lpa/edges"
     )
     labels = (
         e.select(F.col("s").alias("id"))

@@ -2586,8 +2586,8 @@ def _warc_split_records(b: bytes):
         headers = {}
         for ln in lines:
             k, _, v = ln.partition(b":")
-            headers[k.strip().lower().decode()] = v.strip().decode(
-                "utf-8", "replace"
+            headers[k.strip().lower().decode("utf-8", "replace")] = (
+                v.strip().decode("utf-8", "replace")
             )
         try:
             clen = int(headers.get("content-length", ""))
@@ -2738,15 +2738,15 @@ def warc_gz_cdx_index(
     lookup needs nothing else.  Downstream the urlkey is
     ``text.surt_key(target_uri)`` (d125) — kept OUT of this function so
     the key policy stays one codegen expression, not Python.
-    Structurally broken files degrade to skip (no rows).  At 100 TB
-    each WARC file is one row of a binaryFile table and indexing is
+    Structurally broken files degrade to skip (no rows); a broken
+    member skips only itself.  At 100 TB each WARC file is one row of a binaryFile table and indexing is
     embarrassingly parallel; the emitted index is then a tiny,
     partitionable table served through the engine's storage layout."""
 
     def index(i, raw: bytes):
-        try:
-            spans = _gz_member_spans(raw) if raw[:2] == b"\x1f\x8b" else None
-            for k, (off, ln, chunk) in enumerate(spans or ()):
+        spans = _gz_member_spans(raw) if raw[:2] == b"\x1f\x8b" else None
+        for k, (off, ln, chunk) in enumerate(spans or ()):
+            try:  # a bad member skips itself, never its siblings
                 rec = _warc_split_records(chunk)
                 if rec is None or len(rec) != 1:
                     continue
@@ -2754,17 +2754,17 @@ def warc_gz_cdx_index(
                 head = None
                 if hdrs.get("warc-type") == "response":
                     head = _http_response_head(block)
-                yield (
-                    i,
-                    k,
-                    off,
-                    ln,
-                    hdrs.get("warc-type"),
-                    hdrs.get("warc-target-uri"),
-                    head[0] if head else None,
-                )
-        except Exception:
-            return
+            except Exception:
+                continue
+            yield (
+                i,
+                k,
+                off,
+                ln,
+                hdrs.get("warc-type"),
+                hdrs.get("warc-target-uri"),
+                head[0] if head else None,
+            )
 
     return _map_rows(
         df,
@@ -2788,19 +2788,19 @@ def warc_gz_indexed_fetch(
     INDEPENDENTLY (never touching the rest of the file), parse it as a
     standalone WARC record, and emit what was served: (id, offset,
     fetch_ok, warc_type, target_uri, http_status, body).  fetch_ok=0
-    rows (geometry slip → broken gzip header, or a slice that is not
-    exactly one record) keep their identity columns with NULL content —
+    rows (geometry slip → broken gzip header, a slice that is not
+    exactly one record, or a null offset or length) keep their identity columns with NULL content —
     the skip-never-error contract, so one bad index row cannot fail a
     fleet.  The caller joins index→payload however its storage
     co-locates them."""
 
     def fetch(i, b: bytes, off, ln):
-        off, ln = int(off), int(ln)
+        off = None if pd.isna(off) else int(off)
         wtype = uri = body = None
         status = None
         ok = 0
-        try:
-            raw = b[off : off + ln]
+        try:  # a null offset or length lands here: fetch_ok = 0
+            raw = b[off : off + int(ln)]
             rec = _warc_file_records(raw) if raw[:2] == b"\x1f\x8b" else None
             if rec is not None and len(rec) == 1:
                 hdrs, block = rec[0]
@@ -4230,8 +4230,8 @@ def wav_extract_segments(
     Returns (id, seg_no, payload, n_samples, sample_sum, first_sample,
     last_sample) — the integer invariants make the slice
     oracle-checkable without shipping bytes through the compare.
-    Rows whose payload is malformed, or whose frame range falls
-    outside the file, skip (poison contract).  Scale: one equi-join
+    Rows whose payload is malformed, whose f0 or f1 is null, or whose
+    frame range falls outside the file, skip (poison contract).  Scale: one equi-join
     of the segment list against payloads, then a zero-shuffle Arrow
     map; output bytes <= input bytes."""
 
@@ -4244,7 +4244,7 @@ def wav_extract_segments(
 
     def ext(i, seg, f0, f1, b: bytes):
         parsed = _wav_pcm16_mono(b)
-        if parsed is None:
+        if parsed is None or pd.isna(f0) or pd.isna(f1):
             return
         sr, s = parsed
         lo, hi = int(f0) * frame_len, (int(f1) + 1) * frame_len

@@ -87,7 +87,7 @@ def test_connected_components_transitive(spark):
         "id_a long, id_b long",
     )
     # both execution paths must agree: the count-gated driver-side
-    # union-find (default) and the distributed label propagation
+    # union-find (default) and the distributed star contraction
     for thr in (100_000, 0):
         comp = {
             r.id: r.cluster
@@ -527,46 +527,39 @@ def test_prefix_ceil_is_float_safe(spark):
 
 
 def test_connected_components_star_matches_label_method(spark):
-    """r11 (VERDICT r10 #6): the large/small-star contraction path must
-    produce IDENTICAL labels to min-label propagation on transitive
-    chains, disjoint clusters, heterogeneous types, and self-loops —
-    at local_threshold=0 so the distributed fixpoint itself is pinned."""
+    """The one distributed path (large/small-star contraction, pinned at
+    local_threshold=0) returns the SAME labels as the driver-side
+    union-find on transitive chains, disjoint clusters and a
+    self-loop-only vertex."""
     pairs = spark.createDataFrame(
         [(2, 1), (2, 3), (10, 11), (5, 4), (6, 5), (7, 6), (8, 7), (20, 20)],
         "id_a long, id_b long",
     )
-    label = {
-        r.id: r.cluster
-        for r in dedup.connected_components(
-            pairs, local_threshold=0, method="label"
-        ).collect()
-    }
-    star = {
-        r.id: r.cluster
-        for r in dedup.connected_components(
-            pairs, local_threshold=0, method="star"
-        ).collect()
-    }
-    assert star == label
+    local, star = (
+        {
+            r.id: r.cluster
+            for r in dedup.connected_components(
+                pairs, local_threshold=thr
+            ).collect()
+        }
+        for thr in (100_000, 0)
+    )
+    assert star == local
     assert star[20] == 20  # self-loop-only vertex labels itself
 
 
 def test_connected_components_star_long_chain_and_raise(spark):
     """Star contraction converges on a 300-vertex path well inside the
     default budget and raises (never truncates) when max_iter is too
-    tight; unknown methods are rejected."""
+    tight."""
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(300)], "id_a long, id_b long"
     )
-    comp = dedup.connected_components(pairs, local_threshold=0, method="star")
+    comp = dedup.connected_components(pairs, local_threshold=0)
     assert comp.select(F.countDistinct("cluster")).first()[0] == 1
     assert comp.filter(F.col("cluster") != 0).count() == 0
     with pytest.raises(RuntimeError, match="star"):
-        dedup.connected_components(
-            pairs, max_iter=1, local_threshold=0, method="star"
-        )
-    with pytest.raises(ValueError, match="unknown"):
-        dedup.connected_components(pairs, local_threshold=0, method="nope")
+        dedup.connected_components(pairs, max_iter=1, local_threshold=0)
 
 
 def _kcore_fixture_edges(spark):

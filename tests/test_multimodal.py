@@ -1247,6 +1247,27 @@ def test_warc_cdx_random_access_and_guards(spark):
     }
     assert statuses == {name: [None] for name in statuses}, statuses
 
+    # a header NAME that is not UTF-8 reads with replacement characters,
+    # as values do, and one member never drops its siblings from the index
+    bad = b"WARC/1.0\r\n\xff\xfe: x\r\nContent-Length: 0\r\n\r\n\r\n\r\n"
+    assert multimodal._warc_split_records(bad) == [
+        ({"\ufffd\ufffd": "x", "content-length": "0"}, b"")
+    ]
+    info, resp = multimodal._warc_records(5, "https://h.com/p/5", "<p>x</p>")
+    three = spark.createDataFrame(
+        [(5, bytearray(b"".join(gzip.compress(r, mtime=0) for r in (info, bad, resp))))],
+        "doc_id long, payload binary",
+    )
+    got = {
+        r.member_idx: (r.warc_type, r.target_uri, r.http_status)
+        for r in multimodal.warc_gz_cdx_index(three).collect()
+    }
+    assert got == {
+        0: ("warcinfo", None, None),
+        1: (None, None, None),  # parses: one record with no WARC-Type
+        2: ("response", "https://h.com/p/5", 200),
+    }
+
 
 def test_cdx_index_write_and_indexed_fetch_via_engine_storage(spark, tmp_path):
     """d135: the index a crawler WRITES during ingest round-trips through
@@ -1307,11 +1328,19 @@ def test_indexed_fetch_geometry_slip_flags_not_raises(spark):
     ).select("doc_id", "payload", "offset", "length")
     rows = multimodal.warc_gz_indexed_fetch(slipped).collect()
     assert len(rows) == 1 and rows[0].fetch_ok == 0 and rows[0].body is None
+    good = files.join(idx.select("doc_id", "offset", "length"), "doc_id").first()
     null = spark.createDataFrame(
-        [(2, None, 0, 10)], "doc_id long, payload binary, offset long, length long"
+        [
+            (2, None, 0, 10),
+            (3, good.payload, None, good.length),  # null offset
+            (4, good.payload, good.offset, None),  # null length
+        ],
+        "doc_id long, payload binary, offset long, length long",
     )
     rows = multimodal.warc_gz_indexed_fetch(null).collect()
-    assert [(r.doc_id, r.offset, r.fetch_ok, r.body) for r in rows] == [(2, 0, 0, None)]
+    assert sorted((r.doc_id, r.offset, r.fetch_ok, r.body) for r in rows) == [
+        (2, 0, 0, None), (3, None, 0, None), (4, good.offset, 0, None),
+    ]
 
 
 def test_phash_affine_invariance_and_ahash_contrast_sensitivity(spark):
@@ -2102,9 +2131,9 @@ def test_wav_extract_segments_slices_and_roundtrip(spark):
         fp = multimodal.audio_fingerprint(clip).collect()[0]
         assert fp.n_frames == r.f1 - r.f0 + 1
 
-    # out-of-range segment row skips, valid one survives
+    # out-of-range and null-frame segment rows skip, valid one survives
     bogus = spark.createDataFrame(
-        [(2, 1, 0, 999), (2, 2, 0, 0)],
+        [(2, 1, 0, 999), (2, 2, 0, 0), (2, 3, None, 0), (2, 4, 0, None)],
         "doc_id long, seg_no int, f0 int, f1 int",
     )
     kept = multimodal.wav_extract_segments(wavs, bogus).collect()

@@ -517,6 +517,49 @@ def test_shortest_paths_null_weight_contract_shared(spark):
         assert got == {1: 0}
 
 
+def test_every_size_gate_runs_its_input_once(spark):
+    """Every count-gated graph operator persists its input before the
+    size probe, so under the default threshold the probe and the collect
+    share ONE evaluation: an accumulator in a Python UDF filter of a
+    200-row input must count exactly 200. (An unpersisted probe runs the
+    input again for the collect: 400.)"""
+    from pandas_db_sdk_spark import dedup, graph
+
+    n = 200
+    chain = spark.range(n).select(
+        F.col("id").alias("id_a"),
+        (F.col("id") + 1).alias("id_b"),
+        F.lit(1).alias("w"),
+    )
+    parents = spark.range(n).select(
+        "id", F.when(F.col("id") > 0, F.col("id") - 1).alias("parent")
+    )
+    seeds = spark.range(1).select("id")
+    runs = {
+        "hierarchy_depth": (parents, "id", graph.hierarchy_depth),
+        "shortest_paths": (
+            chain, "id_a",
+            lambda e: graph.shortest_paths(e, seeds, max_iter=n + 1),
+        ),
+        "bfs_hops": (
+            chain, "id_a", lambda e: graph.bfs_hops(e, seeds, max_iter=n + 1)
+        ),
+        "kcore": (chain, "id_a", lambda e: graph.kcore(e, k=1)),
+        "connected_components": (chain, "id_a", dedup.connected_components),
+    }
+    evals = {}
+    for name, (frame, col, op) in runs.items():
+        acc = spark.sparkContext.accumulator(0)
+
+        def keep(x, acc=acc):
+            acc.add(1)
+            return True
+
+        op(frame.filter(F.udf(keep, "boolean")(col))).collect()
+        evals[name] = acc.value
+    assert evals == {name: n for name in runs}, evals
+
+
 def test_shortest_paths_hub_star_settles_in_two_rounds(spark):
     """Adversarial skew: a 5000-leaf star seeded at one leaf routes every
     relaxation through the hub — the frontier join is maximally skewed on
